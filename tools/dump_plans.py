@@ -1,21 +1,52 @@
-"""Generate PLANS.md: formatted physical plans of the headline queries with
-commentary hooks — the evidence that each plan has the shape we want at
-scale (pushdown, pruning, broadcasts, bounded shuffles).
+"""Dump formatted physical plans.
 
-Usage: python tools/dump_plans.py [sf_dir]
+Without ``--label`` it regenerates PLANS.md: the plans of the showcase
+queries with commentary hooks — the evidence that each plan has the shape
+we want at scale (pushdown, pruning, broadcasts, bounded shuffles).
+
+With ``--label rNN`` it writes ``plans/rNN/<query>_<tag>.txt`` for the
+named queries (default: bench.py's HEADLINE set, minus the lifecycle
+queries below) — an optimization round's before/after plan evidence.
+Expression ids, RDD ids and temp-directory names are normalised
+(``normalise_plan``) so that two dumps of an unchanged plan are identical
+and ``diff`` shows only real changes (a ``TABLESAMPLE`` without a seed
+still draws a new one per run).
+
+Usage:
+    python tools/dump_plans.py [--sf DIR]
+    python tools/dump_plans.py --label rNN [--tag before|after] [--sf DIR] [query|pattern ...]
+
+``--sf`` defaults to ``$SPARK_GRAFT_SF_DIR``.
 """
 
 from __future__ import annotations
 
+import argparse
+import fnmatch
 import os
 import re
 import sys
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from ytsaurus_spark.plans import formatted_plan
 from ytsaurus_spark.queries import all_queries
 from ytsaurus_spark.session import get_spark
+
+# Queries whose implementation runs the computation inside the function
+# (lifecycle scenarios materializing via collect) — explain() of the
+# returned frame would re-run the scenario and show only the trivial
+# localtable plan; a --label dump skips them unless named explicitly.
+LIFECYCLE = {
+    "stream_match_recognize",
+    "dyn_mvcc_timestamped_read",
+    "stream_incremental_agg",
+    "stream_tumbling",
+    "dyn_merge_into",
+    "match_recognize_funnel",
+}
 
 SHOWCASE = {
     "ql_group_agg": "TPC-H Q1 shape: filter pushed to parquet, 7/11 columns read, partial+final hash agg, ONE exchange.",
@@ -115,9 +146,43 @@ Project [est_union, est_intersect, k_overlap, jaccard]
 """
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark("plans")
+def normalise_plan(plan: str) -> str:
+    """Drop what differs between two runs of an unchanged plan: expression
+    ids, RDD ids and the random suffix of the query's temp directories."""
+    plan = re.sub(r"#\d+L?", "#", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD[#]", plan)
+    return re.sub(re.escape(tempfile.gettempdir()) + r"/[\w.-]+", "<tmp>", plan)
+
+
+def dump_labelled(spark, sf_dir: str, label: str, tag: str,
+                  patterns: list[str]) -> None:
+    """``patterns`` are query names or fnmatch patterns (``'chyt_*'``);
+    lifecycle queries are dumped only when named exactly."""
+    from bench import HEADLINE
+
+    queries = all_queries()
+    names = []
+    for pat in patterns or HEADLINE:
+        matched = fnmatch.filter(sorted(queries), pat)
+        if not matched:
+            raise SystemExit(f"no registered query matches {pat!r}")
+        for q in matched:
+            if q not in names and (q not in LIFECYCLE or q in patterns):
+                names.append(q)
+    out_dir = os.path.join(REPO, "plans", label)
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        try:
+            txt = normalise_plan(formatted_plan(queries[name](spark, sf_dir)))
+        except Exception as e:  # noqa: BLE001
+            txt = f"ERROR building plan: {e}"
+        p = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(p, "w") as f:
+            f.write(txt + "\n")
+        print("wrote", p)
+
+
+def write_plans_md(spark, sf_dir: str) -> None:
     qs = all_queries()
     out = [
         "# PLANS — physical plans of headline queries (generated by tools/dump_plans.py)",
@@ -146,10 +211,32 @@ def main() -> None:
             out.extend(sorted(detail_bits))
             out.append("```\n")
     out.append(EXTRA)
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
-    spark.stop()
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR"),
+                    help="scale-factor dir (default: $SPARK_GRAFT_SF_DIR)")
+    ap.add_argument("--label", help="write plans/<label>/ instead of PLANS.md")
+    ap.add_argument("--tag", default="after",
+                    help="file suffix for --label dumps (default: after)")
+    ap.add_argument("queries", nargs="*", help="query names or fnmatch patterns for --label dumps")
+    args = ap.parse_args()
+    if not args.sf:
+        ap.error("pass --sf DIR or set $SPARK_GRAFT_SF_DIR")
+    if args.queries and not args.label:
+        ap.error("query names need --label")
+    spark = get_spark(f"plans-{args.label}" if args.label else "plans")
+    try:
+        if args.label:
+            dump_labelled(spark, args.sf, args.label, args.tag, args.queries)
+        else:
+            write_plans_md(spark, args.sf)
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":

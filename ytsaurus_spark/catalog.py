@@ -13,10 +13,14 @@ from __future__ import annotations
 
 import os
 import re
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLE_NAMES = (
     "region",
@@ -304,6 +308,131 @@ def _with_global_row_index(df: DataFrame, col: str = "__row_index") -> DataFrame
     )
 
 
+# -- parquet schema memo -------------------------------------------------
+#
+# ``spark.read.parquet(path)`` without a schema runs a one-stage Spark job
+# that reads footers to infer it. Every isolated YQL/CHYT child session
+# re-registers the ten fixture views, and every LogTxTable/TxTable/queue
+# read re-resolves directories the engine itself just wrote, so that job
+# ran again and again for schemas that had not changed. The memo keeps the
+# inferred (or, for a fresh write, the written) schema per file listing
+# and schema-relevant session confs; a hit plans the same relation through
+# ``spark.read.schema(...)`` with no job. Only temp views stay per session.
+
+# Session confs that change what parquet schema inference returns.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+# Entries are a few hundred bytes; the bound only matters for a process
+# that writes segment directories for hours (each write adds one entry).
+_SCHEMA_MEMO_MAX = 4096
+_schema_memo: OrderedDict = OrderedDict()
+_schema_lock = threading.Lock()
+
+
+def _local_listing(path: str):
+    """``(abs path, ((relative name, size, mtime_ns), ...))`` of a local
+    file or directory tree, or None when ``path`` is not a local file
+    (another filesystem scheme, a glob, or missing) — those keep Spark's
+    own inference."""
+    u = urlparse(path)
+    if u.scheme not in ("", "file"):
+        return None
+    local = os.path.abspath(u.path if u.scheme else path)
+    try:
+        if os.path.isfile(local):
+            st = os.stat(local)
+            return local, (("", st.st_size, st.st_mtime_ns),)
+        if not os.path.isdir(local):
+            return None
+        files = []
+        for d, _, names in os.walk(local):
+            for n in names:
+                st = os.stat(os.path.join(d, n))
+                files.append((os.path.relpath(os.path.join(d, n), local),
+                              st.st_size, st.st_mtime_ns))
+    except OSError:
+        return None
+    return local, tuple(sorted(files))
+
+
+def _as_nullable(dt):
+    """What Spark's file relations do to every schema (``asNullable``):
+    all fields, array elements and map values become nullable."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType),
+                         _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _schema_keys(spark: SparkSession, paths) -> list | None:
+    """One memo key per path (listing + session confs), None if any path
+    is not local."""
+    listings = [_local_listing(p) for p in paths]
+    if not listings or any(li is None for li in listings):
+        return None
+    confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
+    return [(li, confs) for li in listings]
+
+
+def _memo_get(key):
+    with _schema_lock:
+        schema = _schema_memo.get(key)
+        if schema is not None:
+            _schema_memo.move_to_end(key)
+        return schema
+
+
+def _memo_put(key, schema) -> None:
+    with _schema_lock:
+        _schema_memo[key] = schema
+        _schema_memo.move_to_end(key)
+        while len(_schema_memo) > _SCHEMA_MEMO_MAX:
+            _schema_memo.popitem(last=False)
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` that infers each schema once per
+    process. A multi-path read reuses the per-path entries when they all
+    agree (inference over same-schema files returns that schema);
+    otherwise it infers once and memoizes the path tuple."""
+    keys = _schema_keys(spark, paths)
+    if keys is None:
+        return spark.read.parquet(*paths)
+    whole = tuple(keys) if len(keys) > 1 else keys[0]
+    schema = _memo_get(whole)
+    if schema is None and len(keys) > 1:
+        parts = [_memo_get(k) for k in keys]
+        if parts[0] is not None and all(p == parts[0] for p in parts):
+            schema = parts[0]
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    _memo_put(whole, df.schema)
+    return df
+
+
+def record_parquet_schema(spark: SparkSession, path: str, schema) -> None:
+    """Seed the memo for a directory ``path`` that was just written from a
+    frame with ``schema``: Spark stores the frame's schema in every
+    footer, so inference would return it, made nullable."""
+    keys = _schema_keys(spark, (path,))
+    if keys is not None:
+        _memo_put(keys[0], _as_nullable(schema))
+
+
 @dataclass
 class Catalog:
     """Registers every ``<name>.parquet`` under ``root`` as a temp view.
@@ -339,7 +468,7 @@ class Catalog:
         if plain is not None:
             return plain
         rp = RichPath.parse(name_or_rich)
-        df = self.spark.read.parquet(self.table_path(rp.path))
+        df = read_parquet(self.spark, self.table_path(rp.path))
         df = self._fix_nanos(rp.path, df)
         # Row-index addressing on a static table uses a TRUE global index
         # (one count-only pre-pass, broadcast offsets — see
@@ -371,8 +500,6 @@ class Catalog:
         # before the relation was resolved, µs-without-UTC-flag columns come
         # back as TIMESTAMP_NTZ, which forbids epoch arithmetic. Coerce to
         # TimestampType (session zone is UTC, so the wall time is unchanged).
-        from pyspark.sql import types as T
-
         for f in df.schema.fields:
             if isinstance(f.dataType, T.TimestampNTZType):
                 df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
@@ -437,10 +564,12 @@ class Catalog:
         """Create (write) a table node under the catalog root — Cypress
         `create table` + commit. ``mode='error'`` refuses to clobber,
         matching the reference's default create semantics."""
-        df.write.mode(mode).parquet(self.table_path(name))
+        path = self.table_path(name)
+        df.write.mode(mode).parquet(path)
+        record_parquet_schema(df.sparkSession, path, df.schema)
         self._df_cache.pop(name, None)  # relation (file listing) changed
         self._nanos_cache.pop(name, None)
-        df.sparkSession.read.parquet(self.table_path(name)).createOrReplaceTempView(name)
+        read_parquet(df.sparkSession, path).createOrReplaceTempView(name)
 
     def remove_table(self, name: str) -> None:
         import shutil
@@ -484,13 +613,14 @@ def load_tables(spark: SparkSession, sf_dir: str) -> Catalog:
 
     Memoized per session object: a long-lived session (the bench harness,
     the driver, a user REPL) calls this before EVERY query, and
-    re-registering ten parquet views is pure driver-side overhead
-    (schema resolution + catalog round trips per table). The cached
-    Catalog is reused while (session, sf_dir) are unchanged — the exact
-    contract of a metastore. Any code path that replaces arbitrary-named
-    temp views (YQL/CHYT/client table registration) calls
-    :func:`invalidate_table_cache` so the next load re-registers the
-    base views.
+    re-registering ten parquet views costs catalog round trips per table.
+    The cached Catalog is reused while (session, sf_dir) are unchanged —
+    the exact contract of a metastore. YQL/CHYT statements run in fresh
+    child sessions, so they always register their own views. Resolving a
+    view's relation without a schema runs Spark's one-stage
+    schema-inference job per table; :func:`read_parquet` memoizes the
+    schema per process, so that job runs once per table, not once per
+    session.
     """
     root = os.path.abspath(sf_dir)
     cached = getattr(spark, "_ytsaurus_catalog_cache", None)
@@ -500,14 +630,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> Catalog:
     cat.register_all()
     spark._ytsaurus_catalog_cache = (root, cat)
     return cat
-
-
-def invalidate_table_cache(spark: SparkSession) -> None:
-    """Drop the memoized Catalog for ``spark`` — called by every code path
-    that registers temp views under caller-controlled names (which may
-    shadow a base table view), so the next ``load_tables`` restores them."""
-    if getattr(spark, "_ytsaurus_catalog_cache", None) is not None:
-        spark._ytsaurus_catalog_cache = None
 
 
 def _schema_to_json(schema) -> dict:

@@ -46,8 +46,11 @@ def _dot(a: str, b: str) -> str:
 # closure, and the numpy accumulation is FOLD-ORDER-IDENTICAL to the SQL
 # expression — vectorized across rows, sequential over dims, one IEEE
 # multiply and one add per element in the same order — so every score is
-# bit-identical to the fold (differential-tested in
-# tests/test_fold_equivalence.py and strict-oracle-checked).
+# meant to be bit-identical to the fold. No differential test pins the
+# kernel against the fold yet (tests/test_fold_equivalence.py covers the
+# q58/q83 conditional-sum folds, not this kernel); the sim_* consumer
+# queries are strict-oracle-checked by tools/check_oracle.py, and
+# tests/test_llm_ops.py exercises the top-k operators on fixture vectors.
 #
 # Top-k consumers additionally emit only the BATCH-LOCAL top-k per query,
 # under exactly the rank window's ordering (score desc with Spark's

@@ -38,6 +38,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ytsaurus_spark.catalog import read_parquet, record_parquet_schema
 from ytsaurus_spark.operators.keyed_tables import KeyedTable, _AGG_FOLDS, _check_folds
 
 
@@ -82,6 +83,7 @@ class TxTable:
         new_v = self.current_version() + 1
         snap_dir = os.path.join(self.path, f"v{new_v}")
         df.write.mode("overwrite").parquet(snap_dir)
+        record_parquet_schema(self.spark, snap_dir, df.schema)
         manifest = {"versions": self._versions() + [new_v]}
         fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".json.tmp")
         with os.fdopen(fd, "w") as f:
@@ -98,7 +100,7 @@ class TxTable:
         v = vs[-1] if version is None else version
         if v not in vs:
             raise ValueError(f"version {v} not in committed set {vs}")
-        return self.spark.read.parquet(os.path.join(self.path, f"v{v}"))
+        return read_parquet(self.spark, os.path.join(self.path, f"v{v}"))
 
     def lookup_rows(self, keys: DataFrame) -> DataFrame:
         return self._keyed().lookup_rows(keys)
@@ -255,6 +257,7 @@ class LogTxTable:
             v = self.current_version() + 1
         seg_dir = os.path.join(self.path, f"s{v}")
         df.write.mode("overwrite").parquet(seg_dir)
+        record_parquet_schema(self.spark, seg_dir, df.schema)
         return {"v": v, "kind": kind, "ts": time.time(),
                 "range": self._footer_key_range(seg_dir)}
 
@@ -528,7 +531,7 @@ class LogTxTable:
         cache = self.__dict__.setdefault("_seg_cache", {})
         df = cache.get(v)
         if df is None:
-            df = self.spark.read.parquet(os.path.join(self.path, f"s{v}"))
+            df = read_parquet(self.spark, os.path.join(self.path, f"s{v}"))
             cache[v] = df
         return df
 

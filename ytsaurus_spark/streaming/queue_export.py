@@ -38,6 +38,7 @@ import os
 import tempfile
 import uuid
 
+from ytsaurus_spark.catalog import read_parquet
 from ytsaurus_spark.streaming.queues import DurableQueue
 
 __all__ = ["QueueStaticExporter", "format_export_table_name"]
@@ -187,7 +188,7 @@ class QueueStaticExporter:
                 )
             dirs = [os.path.join(self.queue.path, s["dir"])
                     for s in by_slot[slot_end]]
-            df = self.queue.spark.read.parquet(*dirs)
+            df = read_parquet(self.queue.spark, *dirs)
             self.client.write_table(dst, df, append=False)
             if self.export_ttl:
                 exp = datetime.datetime.fromtimestamp(

@@ -26,6 +26,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ytsaurus_spark.catalog import read_parquet, record_parquet_schema
+
 
 @dataclass
 class QueueConsumer:
@@ -204,7 +206,8 @@ class DurableQueue:
             segs = [s for s in segs if s["lo"] < hi]
         if not segs:
             return self.spark.createDataFrame([], schema="`$row_index` long")
-        df = self.spark.read.parquet(*[os.path.join(self.path, s["dir"]) for s in segs])
+        df = read_parquet(
+            self.spark, *[os.path.join(self.path, s["dir"]) for s in segs])
         if lo is not None:
             df = df.filter(F.col("$row_index") >= lo)
         if hi is not None:
@@ -297,7 +300,9 @@ class ProducerSession:
         lo = state["next_row_index"]
         hi = lo + n - 1
         seg_dir = f"seg_{lo}_{hi}"
-        fresh.write.mode("overwrite").parquet(os.path.join(self.queue.path, seg_dir))
+        seg_path = os.path.join(self.queue.path, seg_dir)
+        fresh.write.mode("overwrite").parquet(seg_path)
+        record_parquet_schema(self.queue.spark, seg_path, fresh.schema)
         # Re-check the fence AFTER the (slow) write, right before publish:
         # a writer fenced mid-write must not land its manifest entry.
         latest = self.queue._state()
