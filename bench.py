@@ -30,7 +30,7 @@ HEADLINE = [
     "op_map_reduce",         # mapInPandas + partial-agg combiner
     "dedup_minhash_lsh",     # wide minhash signatures + LSH band join
     "dedup_exact",           # hash groupBy over documents
-    "sim_cosine_topk",       # brute-force vector math (HOF exprs)
+    "sim_cosine_topk",       # brute-force pairs (Arrow pair kernel)
     "sim_ann_lsh_topk",      # LSH-bucketed ANN path
     "sim_ivf_topk",          # IVF-cell ANN path
     "text_quality",          # string/array scan ops

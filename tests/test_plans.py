@@ -484,3 +484,42 @@ def test_range_plans_only_matching_scans(spark, sf_dir):
     df = yql_text_range(spark, sf_dir)
     scans = executed_scan_tables(df)
     assert sum(scans.values()) == 7, scans
+
+
+def _plan_ancestors(plan: str, node: str) -> list[str]:
+    """Names of ``node``'s ancestors in a formatted plan's tree, nearest
+    first (the first ``node`` line counts)."""
+    tree = []
+    for line in plan.split("\n\n")[0].splitlines()[1:]:
+        name = line.lstrip(" :+-")
+        tree.append((len(line) - len(name), name.split(" ")[0]))
+    i = next(i for i, (_, n) in enumerate(tree) if n == node)
+    out, depth = [], tree[i][0]
+    for d, n in reversed(tree[:i]):
+        if d < depth:
+            out.append(n)
+            depth = d
+    return out
+
+
+@_pytest.mark.parametrize(
+    "name", ["sim_cosine_topk", "sim_mips_topk", "sim_ann_lsh_topk", "sim_ivf_topk"]
+)
+def test_similarity_topk_runs_the_pair_kernel(spark, sf_dir, name):
+    """The Arrow pair kernel is the only scoring path: MapInArrow feeds
+    the batch-local top-k (WindowGroupLimit) through Sort/Project only."""
+    from ytsaurus_spark.plans import formatted_plan
+    from ytsaurus_spark.queries import all_queries
+
+    ups = _plan_ancestors(formatted_plan(all_queries()[name](spark, sf_dir)), "MapInArrow")
+    assert "WindowGroupLimit" in ups, ups
+    assert set(ups[: ups.index("WindowGroupLimit")]) <= {"Sort", "Project"}, ups
+
+
+def test_range_search_runs_the_pair_kernel(spark, sf_dir):
+    from ytsaurus_spark.plans import formatted_plan
+    from ytsaurus_spark.queries import all_queries
+
+    plan = formatted_plan(all_queries()["sim_range_search"](spark, sf_dir))
+    assert "MapInArrow" in plan
+    assert "Join" not in plan and "CartesianProduct" not in plan

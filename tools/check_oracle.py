@@ -19,12 +19,16 @@ strict failure is type-level (lenient passes) or value-level (both fail).
 The strict pass also audits output types: a Spark Decimal paired with a
 DuckDB float is reported even if some rows happen to str-match.
 
-Usage: python tools/check_oracle.py [--lenient] [--vanilla] [sf_dir] [query ...]
+Usage: python tools/check_oracle.py [--lenient] [--vanilla] [sf_dir] [query|pattern ...]
+
+Queries are names or fnmatch patterns (``'sim_*'``); a pattern that
+matches no registered query is an error.
 """
 
 from __future__ import annotations
 
 import decimal
+import fnmatch
 import math
 import os
 import sys
@@ -103,8 +107,16 @@ def main() -> int:
     lenient = "--lenient" in args
     args = [a for a in args if a not in ("--vanilla", "--lenient")]
     sf_dir = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.01"
-    only = set(args[1:]) if args and os.path.isdir(args[0]) else set(args)
+    patterns = args[1:] if args and os.path.isdir(args[0]) else args
     norm = lenient_normalize if lenient else strict_normalize
+    queries, oracles = all_queries(), all_oracles()
+    only = set()
+    for pat in patterns:
+        matched = fnmatch.filter(queries, pat)
+        if not matched:
+            raise SystemExit(f"no registered query matches {pat!r}")
+        only.update(matched)
+    names = [n for n in queries if not only or n in only]
 
     if vanilla:
         # The driver-harness condition: a FOREIGN session with none of our
@@ -128,8 +140,6 @@ def main() -> int:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    queries, oracles = all_queries(), all_oracles()
-    names = [n for n in queries if not only or n in only]
     passed, failed, warned = [], [], []
     for name in names:
         t0 = time.time()

@@ -53,7 +53,7 @@ SHOWCASE = {
     "ql_join_inner": "5-table star: dims broadcast (no dim shuffle), fact-side SMJ only where required.",
     "ql_order_limit": "Top-k compiles to TakeOrderedAndProject (bounded heap), never a global sort.",
     "dedup_minhash_lsh": "Shingle scan once (wide signatures), band bucket self-join; no Python.",
-    "sim_ann_lsh_topk": "ANN candidates restricted to LSH bucket; queries broadcast.",
+    "sim_ann_lsh_topk": "ANN: queries collected; the Arrow pair kernel buckets candidates in-batch and pairs them only with queries of the same LSH bucket, keeping each batch's top-k ahead of the per-query window.",
     "op_reduce": "SortedReduce: one hash shuffle + in-partition sort feeding Arrow-batched Python.",
     "curation_pack_sequences": "Two-phase prefix sum: ONE data exchange (per-block window); block offsets partial-agg'd and broadcast; no rangepartitioning.",
     "curation_contamination": "Benchmark shingle set broadcast; training corpus never shuffled by shingle.",
@@ -77,7 +77,7 @@ SHOWCASE = {
     "text_textrank_keywords": "TextRank (round 6): doc-keyed window-banded positional self-join over the persisted token stream builds vocabulary-grain edges; the pagerank passes exchange token-grain rows only; final keyword window is vocabulary-sized.",
     "ts_lag_corr": "Lagged cross-correlation (round 6): the corpus reduces to a persisted per-day frame in ONE shuffle; the lag self-join broadcasts a tiny frame; r comes from exact BIGINT moments in the final projection.",
     "ts_seasonal_decompose": "Weekly decomposition (round 6): per-day frame persisted; centered 7-row window + phase-mean broadcast both run at day grain — the unpartitioned window sorts days, not corpus rows.",
-    "sim_mips_topk": "MIPS top-k (round 6): queries broadcast, candidates never shuffle, sequential-fold dot in the scan projection; per-query top-k window.",
+    "sim_mips_topk": "MIPS top-k: queries collected, candidates never shuffle; the Arrow pair kernel scores the fold-order-identical dot and keeps each batch's top-k ahead of the per-query window.",
     "analytics_rfm_segmentation": "RFM quartiles (round 6): three histogram+prefix-sum tile maps instead of global ntiles; bounded-cardinality maps broadcast, the cents map joins keyed; customer frame persisted for its four consumers.",
     "curation_dsir_select": "DSIR (round 7): ONE explode to (doc, bucket) counts (persisted), two B-row bucket aggregates broadcast back; score sum is doc-grain, selection a bounded top-k — no vocabulary shuffle at any corpus size.",
     "dyn_xdelta_patch_fold": "xdelta fold (round 7): BASE/PATCH states built in Arrow-batched scan-stage UDFs; the fold runs inside the keyed upsert's single shuffle — at scale the exchange carries O(edit)-sized patches, not documents.",

@@ -5,8 +5,10 @@ Brute-force cosine top-k as the exact baseline, and an LSH-bucketed
 products — fine when the query set is small or broadcastable; the LSH path
 buckets both sides so the join only compares within-bucket candidates.
 
-All math is built-in higher-order functions (zip_with/aggregate) evaluated
-JVM-side in index order, so results are bit-deterministic and
+Pair scoring for the top-k and range operators runs in one Arrow kernel
+(below) that folds in the same index order as the SQL expressions; the
+rest of the math is built-in higher-order functions (zip_with/aggregate)
+evaluated JVM-side in index order. Results are bit-deterministic and
 engine-portable (the DuckDB oracle reproduces them exactly).
 
 At 100 TB: the candidate side partitions by bucket; queries broadcast. For
@@ -34,64 +36,42 @@ def _dot(a: str, b: str) -> str:
     )
 
 
-# --- Arrow-vectorized pair kernels (guide §4.2) ------------------------------
+# --- Arrow pair kernel -------------------------------------------------------
 #
-# The per-pair dot/cosine above is a higher-order-function fold evaluated
-# INTERPRETED per element (zip_with/aggregate lambdas do not enter
-# whole-stage codegen), and the pair grid then carries every scored row
-# through the rank window's shuffle. The kernel below moves pair scoring
-# into ONE mapInArrow stage: candidates stream through as Arrow batches,
-# the query side (small/broadcastable by these operators' contract — the
-# fold path already collected it into a broadcast relation) rides the task
-# closure, and the numpy accumulation is FOLD-ORDER-IDENTICAL to the SQL
-# expression — vectorized across rows, sequential over dims, one IEEE
-# multiply and one add per element in the same order — so every score is
-# meant to be bit-identical to the fold. No differential test pins the
-# kernel against the fold yet (tests/test_fold_equivalence.py covers the
-# q58/q83 conditional-sum folds, not this kernel); the sim_* consumer
-# queries are strict-oracle-checked by tools/check_oracle.py, and
-# tests/test_llm_ops.py exercises the top-k operators on fixture vectors.
+# cosine_topk, ann_topk_lsh, unrefined ivf_topk, mips_topk and range_search
+# score pairs in ONE mapInArrow stage and in no other way: candidates
+# stream through as Arrow batches, the collected query set rides the task
+# closure (one kernel frame per _ARROW_QUERY_CAP queries, unioned), and the
+# numpy accumulation is fold-order-identical to ``_dot`` — vectorized across
+# rows, sequential over dims, one IEEE multiply and one add per element in
+# the same order — so every score is bit-identical to the SQL fold.
 #
-# Top-k consumers additionally emit only the BATCH-LOCAL top-k per query,
-# under exactly the rank window's ordering (score desc with Spark's
-# NaN-first / NULL-last semantics, candidate id asc on ties): the top-k of
-# a union is the top-k of the per-batch top-k, so the window input shrinks
-# from |q|x|candidates| rows to k rows per query per batch (§2.3 — shuffle
-# decisions, not payloads). Exotic inputs the vectorized path cannot
-# reproduce exactly (ragged/null query vectors, non-primitive id types,
-# oversized query sets) fall back to the original fold plan, which remains
-# the semantic reference.
+# The kernel is total. Its semantic reference is that fold evaluated with
+# spark.sql.ansi.enabled=false (with ANSI on, the fold raises on a zero norm
+# or an out-of-range LSH element); tests/test_similarity_kernel.py compares
+# the two row for row on adversarial inputs. Under that reference:
+#   - a pair whose vector lengths differ, or that holds a NULL vector or
+#     element, scores NULL (zip_with pads with NULL), and so does a zero
+#     cosine denominator (x / 0 is NULL); NaN elements give NaN;
+#   - a pair with a NULL id never forms (``q_id != c_id`` is NULL);
+#   - NaN orders above every number, as Spark compares doubles: it ranks
+#     first under desc, passes ``>= threshold`` and signs LSH bit '1';
+#     NULL ranks last under desc and fails the threshold;
+#   - ids of every atomic type compare and order through Arrow dense ranks.
+#
+# Top-k consumers emit only the BATCH-LOCAL top-k per query, under exactly
+# the rank window's ordering (score desc, candidate id asc on ties): the
+# top-k of a union is the top-k of the per-batch top-k, so the window input
+# shrinks from |q|x|candidates| rows to k rows per query per batch: the
+# shuffle carries decisions, not payloads. Query slices compose the same way.
 
-_ARROW_QUERY_CAP = 65536  # closure-shipped queries; beyond this, fold path
-
-_SAFE_ID_TYPES = (
-    "tinyint", "smallint", "int", "bigint", "float", "double", "string"
-)
+_ARROW_QUERY_CAP = 65536  # closure-shipped queries per kernel frame
 
 
 def _np():
     import numpy as np
 
     return np
-
-
-def _query_matrix(vecs):
-    """(m, dim) float64 matrix from collected query vectors, or None when
-    the set is ragged / null-bearing (fold fallback keeps exact
-    semantics)."""
-    np = _np()
-    if any(v is None for v in vecs):
-        return None
-    dims = {len(v) for v in vecs}
-    if len(dims) > 1:
-        return None
-    dim = dims.pop() if dims else 0
-    if any(e is None for v in vecs for e in v):
-        return None
-    out = np.empty((len(vecs), dim), dtype=np.float64)
-    for i, v in enumerate(vecs):
-        out[i, :] = v
-    return out
 
 
 def _self_dots(M):
@@ -118,7 +98,7 @@ def _plane_coefs(num_planes: int, dim: int):
 def _bucket_strings(M, coefs):
     """LSH bucket per row of ``M`` — the numpy twin of ``_bucket_expr``:
     per plane, a sequential fold over dims of v[d]*coef, sign bit '1' iff
-    the fold is >= 0 (NaN compares false, like the SQL CASE)."""
+    the fold is >= 0, which a NaN fold is in Spark."""
     np = _np()
     n = M.shape[0]
     planes, dim = coefs.shape
@@ -128,28 +108,8 @@ def _bucket_strings(M, coefs):
         row = coefs[h]
         for d in range(dim):
             acc += M[:, d] * row[d]
-        bits[:, h] = np.where(acc >= 0, "1", "0")
+        bits[:, h] = np.where((acc >= 0) | np.isnan(acc), "1", "0")
     return np.array(["".join(r) for r in bits], dtype=object)
-
-
-def _cell_argmin(M, cents):
-    """Nearest-cell ids per row of ``M`` against the (cells asc) centroid
-    matrix — the numpy twin of ``_cell_argmin_expr`` with no rounding:
-    d2 folds sequentially over dims ((x-y)*(x-y) then add, same IEEE op
-    order), argmin ties break to the smaller cell (np.argmin keeps the
-    first index; columns are cell-ascending)."""
-    np = _np()
-    cell_ids, C = cents
-    n = M.shape[0]
-    D2 = np.empty((n, len(cell_ids)), dtype=np.float64)
-    for j in range(len(cell_ids)):
-        acc = np.zeros(n, dtype=np.float64)
-        cv = C[j]
-        for d in range(M.shape[1]):
-            diff = M[:, d] - cv[d]
-            acc += diff * diff
-        D2[:, j] = acc
-    return np.asarray(cell_ids)[np.argmin(D2, axis=1)]
 
 
 def _decode_list_col(col, np):
@@ -173,12 +133,14 @@ def _decode_list_col(col, np):
     return values, offs, lens, row_null, elem_null
 
 
-def _rows_matrix(values, offs, lens, row_null, elem_null, dim, np):
-    """(good_mask, C) — C holds the good rows' elements gathered to
-    (n, dim); bad rows (null entry, length != dim, null element) keep
-    zeros and are masked out by ``good_mask``."""
+def _rows_matrix(dec, dim, np, prefix=False):
+    """(good_mask, C) for a decoded list column — C holds each good row's
+    first ``dim`` elements as (n, dim). A row is good when it is not NULL,
+    has length ``dim`` (at least ``dim`` with ``prefix``) and no NULL among
+    those elements; bad rows keep zeros."""
+    values, offs, lens, row_null, elem_null = dec
     n = len(lens)
-    good = (lens == dim) & ~row_null
+    good = ((lens >= dim) if prefix else (lens == dim)) & ~row_null
     C = np.zeros((n, dim), dtype=np.float64)
     if dim == 0 or not good.any():
         return good, C
@@ -196,9 +158,206 @@ def _rows_matrix(values, offs, lens, row_null, elem_null, dim, np):
     return good, C
 
 
+def _lsh_keys(dec, coefs, np):
+    """LSH bucket per decoded row. ``_bucket_expr`` reads the first
+    plane-dim elements; when one is missing or NULL every plane folds to
+    NULL, which its CASE maps to '0'."""
+    planes, dim = coefs.shape
+    good, M = _rows_matrix(dec, dim, np, prefix=True)
+    keys = np.full(len(good), "0" * planes, dtype=object)
+    if good.any():
+        keys[good] = _bucket_strings(M[good], coefs)
+    return keys
+
+
+def _cell_d2(dec, cents, np):
+    """(D2, null): the squared L2 distance of every decoded row to every
+    (cell, centv) entry of ``cents``, folded over dims in the order of
+    ``_cell_argmin_expr``'s unrounded d2; ``null`` marks the pairs that
+    fold gives NULL (lengths differ, a NULL vector or element)."""
+    n = len(dec[2])
+    D2 = np.zeros((n, len(cents)), dtype=np.float64)
+    null = np.ones((n, len(cents)), dtype=bool)
+    mats: dict = {}
+    for j, (_, cv) in enumerate(cents):
+        if cv is None or any(e is None for e in cv):
+            continue
+        if len(cv) not in mats:
+            mats[len(cv)] = _rows_matrix(dec, len(cv), np)
+        good, M = mats[len(cv)]
+        for d, y in enumerate(cv):
+            diff = M[:, d] - y
+            D2[:, j] += diff * diff
+        null[:, j] = ~good
+    return D2, null
+
+
+def _d2_keys(D2, null, cells, np, nulls_first):
+    """np.lexsort keys (least significant first) ordering d2 entries by
+    (d2 asc, cell) the way Spark orders doubles: NaN after every number,
+    NULL first or last (NULL entries tie on d2 and order by cell)."""
+    nan = np.isnan(D2) & ~null
+    return [
+        np.broadcast_to(cells, D2.shape), np.where(nan | null, 0.0, D2), nan,
+        ~null if nulls_first else null,
+    ]
+
+
+def _cell_argmin(D2, null, cells, np):
+    """Entry index ``_cell_argmin_expr``'s fold keeps per row: the least
+    (d2, cell). Its CASE treats a NULL comparison as false, so NULL d2s
+    are skipped, except at entry 0, which the fold then never replaces."""
+    order = np.lexsort(_d2_keys(D2, null, cells, np, False), axis=-1)
+    return np.where(null[:, 0], 0, order[:, 0])
+
+
+def _ivf_probes(dec, q_ids, cents, nprobe, np):
+    """(slot, cell) pairs: the IVF cells each query probes. One cell is
+    the ``_cell_argmin`` fold; ``nprobe`` > 1 cells follow the fold plan's
+    row_number() over (q_id; d2 asc NULLS FIRST, cell), in which duplicate
+    query ids share one window."""
+    import pyarrow.compute as pc
+
+    cells = np.asarray([int(c) for c, _ in cents])
+    D2, null = _cell_d2(dec, cents, np)
+    if nprobe <= 1:
+        return list(enumerate(cells[_cell_argmin(D2, null, cells, np)]))
+    qrank = pc.rank(q_ids, tiebreaker="dense").to_numpy()
+    slot = np.repeat(np.arange(len(q_ids)), len(cells))
+    keys = [x.ravel() for x in _d2_keys(D2, null, cells, np, True)]
+    order = np.lexsort(keys + [qrank[slot]])
+    _, first, inv = np.unique(
+        qrank[slot][order], return_index=True, return_inverse=True
+    )
+    top = order[np.arange(order.size) - first[inv] < nprobe]
+    return list(zip(slot[top], cells[top % len(cells)]))
+
+
+def _query_groups(dec, picks, np):
+    """[(key, dim, slots, Q, qq)] from the decoded query vectors and the
+    (slot, key) ``picks``: the query slots that meet the candidates of
+    grouping key ``key``, split by vector length ``dim``. ``dim`` None
+    holds the queries whose every pair scores NULL (a NULL vector or
+    element); a slot picked twice is scored twice, as the fold joins it."""
+    qdim: dict = {}
+    qvec: dict = {}
+    for d in np.unique(dec[2][~dec[3]]):
+        good, Qd = _rows_matrix(dec, int(d), np)
+        for j in np.flatnonzero(good):
+            qdim[j], qvec[j] = int(d), Qd[j]
+    groups: dict = {}
+    for j, key in picks:
+        groups.setdefault((key, qdim.get(j)), []).append(j)
+    out = []
+    for (key, dim), slots in groups.items():
+        Q = None if dim is None else np.array([qvec[j] for j in slots]).reshape(
+            len(slots), dim
+        )
+        qq = None if Q is None else _self_dots(Q)
+        out.append((key, dim, np.asarray(slots), Q, qq))
+    return out
+
+
+def _pair_kernel(q_ids, groups, cand_key, mode, k, threshold):
+    """The mapInArrow function scoring (c_id, cv) batches against the
+    query ``groups`` (``_query_groups``; slots index ``q_ids``).
+    ``cand_key`` maps a decoded candidate column to grouping keys (None:
+    every query meets every candidate)."""
+    m = len(q_ids)
+    chunk_rows = max(1, (1 << 22) // max(1, m))
+
+    def fn(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        for batch in batches:
+            if batch.num_rows == 0 or not groups:
+                continue
+            ids = batch.column(0)
+            qids = q_ids.cast(ids.type)
+            # dense ranks over query and candidate ids: equal ids share a
+            # rank, and rank order is the c_id ASC tie-break order
+            rank = pc.rank(
+                pa.concat_arrays([qids, ids]), tiebreaker="dense"
+            ).to_numpy()
+            q_rank, c_rank = rank[:m], rank[m:]
+            live = ids.is_valid().to_numpy(zero_copy_only=False)
+            dec = _decode_list_col(batch.column(1), np)
+            ckey = None if cand_key is None else cand_key(dec)
+            mats: dict = {}
+            out_rows, out_slots, out_scores, out_null = [], [], [], []
+            for key, dim, slots, Q, qq in groups:
+                rows_g = np.flatnonzero(
+                    live if ckey is None else live & (ckey == key)
+                )
+                if rows_g.size == 0:
+                    continue
+                if dim is not None and dim not in mats:
+                    good, C = _rows_matrix(dec, dim, np)
+                    mats[dim] = (good, C, _self_dots(C))
+                for lo in range(0, rows_g.size, chunk_rows):
+                    rows = rows_g[lo: lo + chunk_rows]
+                    shape = (rows.size, slots.size)
+                    if dim is None:
+                        score = np.zeros(shape)
+                        null = np.ones(shape, dtype=bool)
+                    else:
+                        good, C, cc = mats[dim]
+                        Cc = C[rows]
+                        score = np.zeros(shape)
+                        for d in range(dim):
+                            score += np.multiply.outer(Cc[:, d], Q[:, d])
+                        null = np.zeros(shape, dtype=bool)
+                        if mode == "cosine":
+                            den = np.sqrt(np.multiply.outer(cc[rows], qq))
+                            with np.errstate(divide="ignore", invalid="ignore"):
+                                score = score / den
+                            null = den == 0
+                        null |= ~good[rows][:, None]
+                    nan = np.isnan(score)
+                    # window order: NaN, numbers desc, NULL
+                    cls = np.where(null, 2, np.where(nan, 0, 1))
+                    desc = np.where(cls == 1, -score, 0.0)
+                    crank = c_rank[rows]
+                    for si, j in enumerate(slots):
+                        sel = crank != q_rank[j]
+                        if threshold is not None:
+                            sel &= ~null[:, si] & (
+                                nan[:, si] | (score[:, si] >= threshold)
+                            )
+                        keep = np.flatnonzero(sel)
+                        if k is not None:
+                            keep = keep[np.lexsort(
+                                (crank[keep], desc[keep, si], cls[keep, si])
+                            )[:k]]
+                        out_rows.append(rows[keep])
+                        out_slots.append(np.full(keep.size, j))
+                        out_scores.append(score[keep, si])
+                        out_null.append(null[keep, si])
+            rows = np.concatenate(out_rows) if out_rows else np.zeros(0, int)
+            if rows.size == 0:
+                continue
+            yield pa.RecordBatch.from_arrays(
+                [
+                    qids.take(pa.array(np.concatenate(out_slots))),
+                    ids.take(pa.array(rows)),
+                    pa.array(
+                        np.concatenate(out_scores),
+                        mask=np.concatenate(out_null),
+                    ),
+                ],
+                names=["q_id", "c_id", "score"],
+            )
+
+    return fn
+
+
 def _arrow_pair_scores(
-    cand: DataFrame,
-    q_rows: list,
+    emb: DataFrame,
+    q: DataFrame,
+    id_col: str,
+    vec_col: str,
     *,
     mode: str = "cosine",
     k: int | None = None,
@@ -206,59 +365,53 @@ def _arrow_pair_scores(
     planes: int | None = None,
     plane_dim: int | None = None,
     centroids: list | None = None,
-    q_cells: list | None = None,
-) -> "DataFrame | None":
-    """(q_id, c_id, score) pairs via one mapInArrow stage, or None when
-    the vectorized path cannot reproduce the fold exactly.
+    nprobe: int = 1,
+) -> DataFrame:
+    """(q_id, c_id, score) pairs of the collected (q_id, qv) frame ``q``
+    against every (``id_col``, ``vec_col``) row of ``emb``, scored by one
+    mapInArrow stage per ``_ARROW_QUERY_CAP`` queries.
 
-    ``cand`` must be exactly (c_id, cv). ``q_rows`` = collected (q_id, qv)
-    rows. Grouping: ``planes``/``plane_dim`` pairs only within equal LSH
-    buckets (computed in-kernel for both sides); ``centroids`` (list of
-    (cell, centv), unrounded-argmin IVF) pairs only within equal cells,
-    with query cells from ``q_cells`` (parallel list of per-query cell
-    lists). ``k``: batch-local top-k per query under the rank window's
-    exact ordering; ``threshold``: keep score >= threshold (NULL/NaN
-    drop, like the SQL filter)."""
-    np = _np()
+    Ids may be of any atomic type; a struct, array or map id column raises
+    TypeError. ``mode``: "cosine" or "dot". ``k``: batch-local top-k per
+    query under the rank window's exact ordering; ``threshold``: keep
+    score >= threshold (NaN kept, NULL dropped, like the SQL filter).
+    Grouping: ``planes``/``plane_dim`` pair only within equal LSH buckets;
+    ``centroids`` (collected (cell, centv) rows) pair only within the
+    query's ``nprobe`` nearest unrounded-argmin IVF cells."""
+    from functools import reduce
+
+    import pyarrow.compute as pc
     from pyspark.sql import types as T
 
-    id_dt = cand.schema[0].dataType
-    if id_dt.simpleString() not in _SAFE_ID_TYPES:
-        return None
-    if len(q_rows) > _ARROW_QUERY_CAP:
-        return None
-    Q = _query_matrix([r[1] for r in q_rows])
-    if Q is None:
-        return None
-    q_ids = [r[0] for r in q_rows]
-    m, dim = Q.shape
-    qq = _self_dots(Q) if mode == "cosine" else None
-
-    # query-side groups: list of (group_key, [query slots]) — None = all
+    np = _np()
+    id_dt = emb.schema[id_col].dataType
+    if not isinstance(id_dt, T.AtomicType):
+        raise TypeError(
+            f"similarity id column {id_col!r} has type "
+            f"{id_dt.simpleString()}; ids must be of an atomic type"
+        )
+    cand = emb.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("cv"))
+    q_tbl = q.toArrow()
+    q_tbl = q_tbl.filter(pc.is_valid(q_tbl.column(0)))  # NULL ids never pair
+    q_ids = q_tbl.column(0).combine_chunks()
+    dec = _decode_list_col(q_tbl.column(1), np)
     if planes is not None:
         coefs = _plane_coefs(planes, plane_dim)
-        if dim < plane_dim:
-            return None  # out-of-range plane dots go NULL in SQL; fold path
-        qbuckets = _bucket_strings(Q, coefs)
-        groups: dict = {}
-        for j, b in enumerate(qbuckets):
-            groups.setdefault(b, []).append(j)
-    elif centroids is not None:
-        cells = sorted(int(c) for c, _ in centroids)
-        cmat = {int(c): np.asarray(v, dtype=np.float64) for c, v in centroids}
-        if any(len(v) != dim for v in cmat.values()) or any(
-            e is None for _, v in centroids for e in v
-        ):
-            return None
-        cents = (cells, [cmat[c] for c in cells])
-        groups = {}
-        for j, qc in enumerate(q_cells):
-            for cell in qc:
-                groups.setdefault(int(cell), []).append(j)
-    else:
-        coefs = cents = None
-        groups = {None: list(range(m))}
 
+        def cand_key(d):
+            return _lsh_keys(d, coefs, np)
+
+        picks = list(enumerate(cand_key(dec)))
+    elif centroids is not None:
+        cells = np.asarray([int(c) for c, _ in centroids])
+
+        def cand_key(d):
+            return cells[_cell_argmin(*_cell_d2(d, centroids, np), cells, np)]
+
+        picks = _ivf_probes(dec, q_ids, centroids, nprobe, np) if centroids else []
+    else:
+        cand_key, picks = None, [(j, None) for j in range(len(q_ids))]
+    groups = _query_groups(dec, picks, np)
     schema = T.StructType(
         [
             T.StructField("q_id", id_dt),
@@ -266,125 +419,39 @@ def _arrow_pair_scores(
             T.StructField("score", T.DoubleType()),
         ]
     )
-    chunk_rows = max(1, (1 << 22) // max(1, m))
+    frames = []
+    for lo in range(0, max(1, len(q_ids)), _ARROW_QUERY_CAP):
+        hi = lo + _ARROW_QUERY_CAP
+        part = []
+        for key, dim, slots, Q, qq in groups:
+            s = (slots >= lo) & (slots < hi)
+            if s.any():
+                part.append((key, dim, slots[s] - lo, None if Q is None else Q[s],
+                             None if qq is None else qq[s]))
+        fn = _pair_kernel(q_ids.slice(lo, _ARROW_QUERY_CAP), part, cand_key,
+                          mode, k, threshold)
+        frames.append(cand.mapInArrow(fn, schema))
+    return reduce(DataFrame.union, frames)
 
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
 
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0 or not groups:
-                continue
-            ids_pa = batch.column(0)
-            try:
-                ids = ids_pa.to_numpy(zero_copy_only=False)
-            except Exception:
-                ids = np.asarray(ids_pa.to_pylist(), dtype=object)
-            values, offs, lens, row_null, elem_null = _decode_list_col(
-                batch.column(1), np
-            )
-            good, C = _rows_matrix(
-                values, offs, lens, row_null, elem_null, dim, np
-            )
-            if centroids is not None:
-                # bucket rows by nearest cell; rows the fold cannot score
-                # deterministically (wrong length/null) keep the smallest
-                # cell (they pair to NULL scores either way)
-                cand_grp = np.full(n, cents[0][0] if cents[0] else -1)
-                if good.any():
-                    cand_grp[good] = _cell_argmin(C[good], cents)
-            elif planes is not None:
-                # bucket over the first plane_dim dims; rows shorter than
-                # plane_dim (or null-bearing there) fold to all-'0' bits
-                bgood = (lens >= plane_dim) & ~row_null
-                if elem_null is not None and bgood.any():
-                    bidx = offs[:-1][bgood][:, None] + np.arange(plane_dim)[None, :]
-                    bbad = elem_null[bidx].any(axis=1)
-                    t = bgood.copy()
-                    t[np.flatnonzero(bgood)[bbad]] = False
-                    bgood = t
-                cand_grp = np.full(n, "0" * planes, dtype=object)
-                if bgood.any():
-                    bidx = offs[:-1][bgood][:, None] + np.arange(plane_dim)[None, :]
-                    cand_grp[bgood] = _bucket_strings(values[bidx], coefs)
-            else:
-                cand_grp = None
-            if mode == "cosine":
-                cc = np.zeros(n, dtype=np.float64)
-                if good.any():
-                    cc[good] = _self_dots(C[good])
-            out_rows: list = []
-            out_qids: list = []
-            out_scores: list = []
-            out_null: list = []
-            for gkey, slots in groups.items():
-                if cand_grp is None:
-                    rows_g = np.arange(n)
-                else:
-                    rows_g = np.flatnonzero(cand_grp == gkey)
-                if rows_g.size == 0:
-                    continue
-                for lo in range(0, rows_g.size, chunk_rows):
-                    rows_c = rows_g[lo: lo + chunk_rows]
-                    nc = rows_c.size
-                    Cc = C[rows_c]
-                    goodc = good[rows_c]
-                    acc = np.zeros((nc, len(slots)), dtype=np.float64)
-                    for si, j in enumerate(slots):
-                        a = np.zeros(nc, dtype=np.float64)
-                        qv = Q[j]
-                        for d in range(dim):
-                            a += Cc[:, d] * qv[d]
-                        acc[:, si] = a
-                    if mode == "cosine":
-                        den = np.sqrt(
-                            cc[rows_c][:, None] * qq[np.asarray(slots)][None, :]
-                        )
-                        with np.errstate(divide="ignore", invalid="ignore"):
-                            score = acc / den
-                        isnull = ~goodc[:, None] | (den == 0)
-                    else:
-                        score = acc
-                        isnull = ~goodc[:, None] & np.ones(
-                            (nc, len(slots)), dtype=bool
-                        )
-                    key = np.where(np.isnan(score), np.inf, score)
-                    key = np.where(isnull, -np.inf, key)
-                    ids_c = ids[rows_c]
-                    for si, j in enumerate(slots):
-                        sel = ids_c != q_ids[j]
-                        if threshold is not None:
-                            sel &= ~isnull[:, si] & (score[:, si] >= threshold)
-                            keep = np.flatnonzero(sel)
-                        elif k is not None:
-                            kcol = np.where(sel, key[:, si], -np.inf)
-                            order = np.lexsort((ids_c, -kcol))
-                            keep = [
-                                i for i in order[: k + 1] if sel[i]
-                            ][:k]
-                        else:
-                            keep = np.flatnonzero(sel)
-                        for i in keep:
-                            out_rows.append(int(rows_c[i]))
-                            out_qids.append(q_ids[j])
-                            out_scores.append(float(score[i, si]))
-                            out_null.append(bool(isnull[i, si]))
-            if not out_rows:
-                continue
-            c_arr = ids_pa.take(pa.array(out_rows, type=pa.int64()))
-            q_arr = pa.array(out_qids, type=ids_pa.type)
-            s_np = np.asarray(out_scores, dtype=np.float64)
-            s_arr = pa.array(
-                np.where(out_null, np.nan, s_np),
-                type=pa.float64(),
-                mask=np.asarray(out_null, dtype=bool),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [q_arr, c_arr, s_arr], names=["q_id", "c_id", "score"]
-            )
+def _ranked(scored: DataFrame, k: int, name: str) -> DataFrame:
+    """Top-``k`` rows per q_id of a (q_id, c_id, score) frame, ordered by
+    score desc then c_id, as (q_id, c_id, ``name`` rounded to 4, rank); a
+    frame that already names its score ``name`` is ranked as it is."""
+    from pyspark.sql import Window as W
 
-    return cand.mapInArrow(fn, schema)
+    w = W.partitionBy("q_id").orderBy(F.col(name).desc(), F.col("c_id"))
+    return (
+        scored.withColumnRenamed("score", name)
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "q_id",
+            "c_id",
+            F.round(name, 4).alias(name),
+            F.col("rank").cast("int").alias("rank"),
+        )
+    )
 
 
 def cosine_topk(
@@ -396,46 +463,20 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors of each query vector.
 
-    ``queries`` (small) is broadcast; candidates never shuffle. Returns
-    (q_id, c_id, cosine, rank) with rank 1..k, ties broken by c_id.
+    ``queries`` (small) is collected; candidates never shuffle. Returns
+    (q_id, c_id, cosine, rank) with rank 1..k, ties broken by c_id. Ids may
+    be of any atomic type; a struct, array or map id column raises
+    TypeError.
 
-    The pair scoring runs as an Arrow kernel (``_arrow_pair_scores``):
+    The pair scoring runs as the Arrow kernel (``_arrow_pair_scores``):
     candidates stream through mapInArrow, the collected query set rides
-    the closure (the fold path collected it into a broadcast relation
-    anyway), scores come from the fold-order-identical numpy loop, and
-    only each batch's local top-k per query reaches the rank window.
-    Exotic query shapes fall back to the HOF-fold broadcast-join plan,
-    which remains the semantic reference."""
-    from pyspark.sql import Window as W
-
+    the closure, scores come from the fold-order-identical numpy loop, and
+    only each batch's local top-k per query reaches the rank window."""
     q = queries.select(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv")
     )
-    cand = emb.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("cv"))
-    scored = _arrow_pair_scores(cand, q.collect(), mode="cosine", k=k)
-    if scored is not None:
-        scored = scored.withColumnRenamed("score", "cosine")
-    else:
-        qn = q.withColumn("_qq", F.expr(_dot("qv", "qv")))
-        c = spread_scan(cand).withColumn("_cc", F.expr(_dot("cv", "cv")))
-        scored = (
-            c.join(F.broadcast(qn))
-            .filter(F.col("q_id") != F.col("c_id"))
-            .withColumn(
-                "cosine",
-                F.expr(f"{_dot('qv', 'cv')} / sqrt(_qq * _cc)"),
-            )
-        )
-    w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "c_id",
-            F.round("cosine", 4).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
-        )
+    return _ranked(
+        _arrow_pair_scores(emb, q, id_col, vec_col, k=k), k, "cosine"
     )
 
 
@@ -478,73 +519,21 @@ def ann_topk_lsh(
 ) -> DataFrame:
     """Approximate top-k: candidates limited to the query's LSH bucket.
 
-    The equi-join on bucket replaces the full cross join — the scale path.
-    Recall < 1 by construction; raise planes/probes for tighter recall.
+    Bucketing replaces the full cross product — the scale path. Recall < 1
+    by construction; raise planes/probes for tighter recall. Ids may be of
+    any atomic type; a struct, array or map id column raises TypeError.
 
-    Pair scoring AND the bucket sign-bit folds run as one Arrow kernel
-    (``_arrow_pair_scores`` with ``planes``): both were interpreted HOF
-    folds, and the kernel pairs each candidate batch only against the
-    collected queries sharing its bucket, emitting the batch-local top-k.
-    Exotic query shapes fall back to the fold plan below."""
-    from pyspark.sql import Window as W
-
-    q_rows = (
-        emb.join(queries.select(id_col), id_col, "left_semi")
-        .select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv"))
-        .collect()
+    Pair scoring AND the bucket sign-bit folds run as the Arrow kernel
+    (``_arrow_pair_scores`` with ``planes``): it pairs each candidate batch
+    only against the collected queries sharing its bucket (the twin of
+    ``_bucket_expr``), emitting the batch-local top-k."""
+    q = emb.join(queries.select(id_col), id_col, "left_semi").select(
+        F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv")
     )
-    cand = emb.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("cv"))
     scored = _arrow_pair_scores(
-        cand, q_rows, mode="cosine", k=k, planes=num_planes, plane_dim=dim
+        emb, q, id_col, vec_col, k=k, planes=num_planes, plane_dim=dim
     )
-    if scored is not None:
-        w = W.partitionBy("q_id").orderBy(
-            F.col("cosine").desc(), F.col("c_id")
-        )
-        return (
-            scored.withColumnRenamed("score", "cosine")
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "q_id",
-                "c_id",
-                F.round("cosine", 4).alias("cosine"),
-                F.col("rank").cast("int").alias("rank"),
-            )
-        )
-    # bucket + self-norm attach as scan-stage projections (the former
-    # emb ⋈ lsh_bucket(emb) id-self-join re-derived the same rows through
-    # a join for nothing); per-pair work is then ONE fold, not three.
-    with_b = spread_scan(emb).withColumn(
-        "bucket", F.expr(_bucket_expr(num_planes, dim, vec_col))
-    )
-    q = with_b.join(queries.select(id_col), id_col, "left_semi").select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("qv"),
-        F.col("bucket"),
-    ).withColumn("_qq", F.expr(_dot("qv", "qv")))
-    c = with_b.select(
-        F.col(id_col).alias("c_id"), F.col(vec_col).alias("cv"), "bucket"
-    ).withColumn("_cc", F.expr(_dot("cv", "cv")))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .withColumn(
-            "cosine",
-            F.expr(f"{_dot('qv', 'cv')} / sqrt(_qq * _cc)"),
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "c_id",
-            F.round("cosine", 4).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _ranked(scored, k, "cosine")
 
 
 def _lloyd_refine(
@@ -755,79 +744,23 @@ def ivf_topk(
         refine_iterations=refine_iterations,
     )
     if refine_iterations == 0:
-        # Arrow kernel path: centroids and queries are collected (both
-        # bounded — cells by num_cells, queries by the broadcast
-        # contract), the candidate cell argmin AND the pair cosine run as
-        # the fold-order-identical numpy loops inside one mapInArrow
-        # stage, and only batch-local top-k rows reach the rank window.
-        # The refined path keeps the JVM plan: its distances round with
-        # Spark's HALF_UP round(), which numpy does not reproduce.
-        cent_rows = [
-            (r[0], list(r[1])) for r in centroids.select("cell", "centv").collect()
+        # Arrow kernel: the centroids (bounded by num_cells) and the
+        # queries are collected; the query and candidate cells (the
+        # unrounded argmin) and the pair cosine run in one mapInArrow stage.
+        cents = [
+            (r[0], r[1]) for r in centroids.select("cell", "centv").collect()
         ]
-        q_rows = [
-            (r[0], r[1])
-            for r in emb.join(queries.select(id_col), id_col, "left_semi")
-            .select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv"))
-            .collect()
-        ]
-        Qm = _query_matrix([r[1] for r in q_rows])
-        cents_ok = cent_rows and not any(
-            v is None or any(e is None for e in v) for _, v in cent_rows
+        q = emb.join(queries.select(id_col), id_col, "left_semi").select(
+            F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv")
         )
-        if Qm is not None and cents_ok and (
-            not cent_rows or all(len(v) == Qm.shape[1] for _, v in cent_rows)
-        ):
-            np = _np()
-            cells_sorted = sorted(int(c) for c, _ in cent_rows)
-            cmat = {int(c): np.asarray(v, dtype=np.float64) for c, v in cent_rows}
-            D2 = np.empty((len(q_rows), len(cells_sorted)), dtype=np.float64)
-            for j, cell in enumerate(cells_sorted):
-                cv = cmat[cell]
-                acc = np.zeros(len(q_rows), dtype=np.float64)
-                for d in range(Qm.shape[1]):
-                    diff = Qm[:, d] - cv[d]
-                    acc += diff * diff
-                D2[:, j] = acc
-            q_cells = [
-                [
-                    cells_sorted[j]
-                    for j in sorted(
-                        range(len(cells_sorted)),
-                        key=lambda j: (D2[i, j], cells_sorted[j]),
-                    )[: max(1, nprobe)]
-                ]
-                for i in range(len(q_rows))
-            ]
-            cand = emb.select(
-                F.col(id_col).alias("c_id"), F.col(vec_col).alias("cv")
-            )
-            scored = _arrow_pair_scores(
-                cand, q_rows, mode="cosine", k=k,
-                centroids=cent_rows, q_cells=q_cells,
-            )
-            if scored is not None:
-                w = W.partitionBy("q_id").orderBy(
-                    F.col("cosine").desc(), F.col("c_id")
-                )
-                return (
-                    scored.withColumnRenamed("score", "cosine")
-                    .withColumn("rank", F.row_number().over(w))
-                    .filter(F.col("rank") <= k)
-                    .select(
-                        "q_id",
-                        "c_id",
-                        F.round("cosine", 4).alias("cosine"),
-                        F.col("rank").cast("int").alias("rank"),
-                    )
-                )
-    # attach the cell as a scan-stage fold against the broadcast centroid
-    # array — the former emb ⋈ assignments id-self-join re-derived the same
-    # rows through a join (and the assignment itself through a window)
-    with_cell = _with_cell(
-        spread_scan(emb), centroids, vec_col,
-        round_digits=6 if refine_iterations > 0 else None,
-    )
+        scored = _arrow_pair_scores(
+            emb, q, id_col, vec_col, k=k, centroids=cents, nprobe=nprobe
+        )
+        return _ranked(scored, k, "cosine")
+    # Refined IVF keeps the JVM plan: its distances round with Spark's
+    # HALF_UP round(), which numpy does not reproduce. The cell attaches as
+    # a scan-stage fold against the broadcast centroid array.
+    with_cell = _with_cell(spread_scan(emb), centroids, vec_col, round_digits=6)
     if nprobe <= 1:
         q = with_cell.join(queries.select(id_col), id_col, "left_semi").select(
             F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv"), "cell"
@@ -838,12 +771,10 @@ def ivf_topk(
             F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv")
         )
         d2 = (
-            "aggregate(zip_with(qv, centv, (x, y) -> "
+            "round(aggregate(zip_with(qv, centv, (x, y) -> "
             "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-            "0D, (acc, d) -> acc + d)"
+            "0D, (acc, d) -> acc + d), 6)"
         )
-        if refine_iterations > 0:
-            d2 = f"round({d2}, 6)"
         wq = W.partitionBy("q_id").orderBy(F.col("d2").asc(), F.col("cell"))
         q = (
             qv.join(F.broadcast(centroids))
@@ -865,17 +796,7 @@ def ivf_topk(
             F.expr(f"{_dot('qv', 'cv')} / sqrt(_qq * _cc)"),
         )
     )
-    w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "c_id",
-            F.round("cosine", 4).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _ranked(scored, k, "cosine")
 
 
 def kmeans_iterations(
@@ -1247,36 +1168,18 @@ def range_search(
     """Radius (range) similarity search: ALL candidates within a cosine
     threshold of each query — the fixed-radius complement of
     :func:`cosine_topk` (dedup wants "everything closer than r", not a
-    fixed k). Queries broadcast, candidates stream through the scan
-    stage with a codegen'd HOF dot product; no window, no shuffle of the
-    candidate side. The threshold compares the UNROUNDED cosine — both
-    engines fold the arrays in the same order, so the cut is exact (the
-    Arrow kernel applies the identical >= comparison to the identical
-    fold value inside the batch, so only passing pairs are emitted)."""
+    fixed k). Queries are collected, candidates stream through the Arrow
+    kernel (``_arrow_pair_scores``); no window, no join, no shuffle of the
+    candidate side. The threshold compares the UNROUNDED cosine, the
+    identical fold value the SQL filter ``cosine >= threshold`` sees, so
+    the cut is exact: NaN passes, NULL does not, and only passing pairs
+    leave the batch. Ids may be of any atomic type; a struct, array or
+    map id column raises TypeError."""
     q = queries.select(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv")
     )
-    c = emb.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("cv"))
-    scored = _arrow_pair_scores(
-        c, q.collect(), mode="cosine", threshold=threshold
-    )
-    if scored is not None:
-        return scored.select(
-            "q_id", "c_id", F.round("score", 4).alias("cosine")
-        )
-    qn = q.withColumn("_qq", F.expr(_dot("qv", "qv")))
-    cn = c.withColumn("_cc", F.expr(_dot("cv", "cv")))
-    return (
-        cn.join(F.broadcast(qn))
-        .filter(F.col("q_id") != F.col("c_id"))
-        .withColumn(
-            "cosine",
-            # self-norms pre-folded per vector (bit-identical; 3 folds → 1)
-            F.expr(f"{_dot('qv', 'cv')} / sqrt(_qq * _cc)"),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("q_id", "c_id", F.round("cosine", 4).alias("cosine"))
-    )
+    scored = _arrow_pair_scores(emb, q, id_col, vec_col, threshold=threshold)
+    return scored.select("q_id", "c_id", F.round("score", 4).alias("cosine"))
 
 
 def scalar_quantize_int8(
@@ -1396,34 +1299,15 @@ def mips_topk(
     sqrt(1 − ‖x‖²/M²)] with M ≥ max‖x‖ (Bachrach et al. 2014, the
     Xbox/ALS trick), after which the existing LSH/IVF bucketed indexes
     apply unchanged; this operator is the exact baseline those indexes
-    are audited against. Queries broadcast; candidates never shuffle;
-    the dot is the same sequential zip_with fold as cosine_topk, so the
-    score is engine-identical."""
-    from pyspark.sql import Window as W
-
+    are audited against. Queries are collected; candidates never shuffle;
+    the dot is the Arrow kernel's fold-order-identical twin of ``_dot``, so
+    the score is engine-identical. Ids may be of any atomic type; a struct,
+    array or map id column raises TypeError."""
     q = queries.select(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv")
     )
-    c = emb.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("cv"))
-    scored = _arrow_pair_scores(c, q.collect(), mode="dot", k=k)
-    if scored is not None:
-        scored = scored.withColumnRenamed("score", "dot")
-    else:
-        scored = (
-            c.join(F.broadcast(q))
-            .filter(F.col("q_id") != F.col("c_id"))
-            .withColumn("dot", F.expr(_dot("qv", "cv")))
-        )
-    w = W.partitionBy("q_id").orderBy(F.col("dot").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "c_id",
-            F.round("dot", 4).alias("dot"),
-            F.col("rank").cast("int").alias("rank"),
-        )
+    return _ranked(
+        _arrow_pair_scores(emb, q, id_col, vec_col, mode="dot", k=k), k, "dot"
     )
 
 
