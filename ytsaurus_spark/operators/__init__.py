@@ -10,11 +10,9 @@ def conf_bytes(spark, key: str, default: int) -> int:
     """Byte-valued Spark conf with k/m/g/t suffix support.
 
     ``spark.sql.files.maxPartitionBytes`` may be set as a plain number,
-    ``...b``, or a unit-suffixed string like ``128m``; the former
-    ``int(conf.rstrip('b'))`` copies silently fell back to their defaults
-    on suffixed values (and ``_small_star_input`` returned False), so the
-    width/spread heuristics quietly ignored the operator's real split
-    size. One shared parser, used by every byte-derived decision."""
+    ``...b``, or a unit-suffixed string like ``128m``. One shared parser,
+    used by every byte-derived decision, so a suffixed value is never
+    mistaken for an unset one."""
     raw = str(spark.conf.get(key, str(default))).strip().lower()
     try:
         if raw.endswith("b"):
@@ -28,26 +26,56 @@ def conf_bytes(spark, key: str, default: int) -> int:
             raw = raw[:-1]
         val = int(float(raw) * mult) if "." in raw else int(raw) * mult
         return val if val > 0 else default
-    except Exception:
+    except ValueError:
         return default
 
 
-def _local_input_bytes(df: DataFrame) -> int | None:
-    """Total bytes of ``df``'s file-backed inputs, or None when the
-    lineage has no files or any source is non-local (remote storage plans
-    its own splits; byte-deriving from it needs a real listing, not a
-    stat call)."""
-    import os
+def split_bytes(spark) -> int:
+    """The session's scan split size (``maxPartitionBytes``): the byte
+    unit every width rule divides input bytes by."""
+    return conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 134217728)
 
-    files = df.inputFiles()
-    if not files:
+
+def local_input_bytes(paths) -> int | None:
+    """Total bytes of the files under ``paths`` — local paths or ``file:``
+    URIs (percent-decoded, as ``DataFrame.inputFiles()`` lists them);
+    a directory, such as a Spark output table, counts every file below
+    it. The one input-size measurement behind every width rule.
+
+    None when the size is unknowable here: a path on non-local storage
+    (it plans its own splits; sizing it needs a real listing, not a stat
+    call), a path that cannot be stat()ed, or no file at all (a
+    file-less lineage such as ``spark.range``)."""
+    import os
+    from urllib.parse import unquote, urlparse
+
+    total, found = 0, False
+    try:
+        for p in paths:
+            url = urlparse(p)
+            if url.scheme == "file":
+                p = unquote(url.path)
+            elif url.scheme:
+                return None
+            if not os.path.isdir(p):
+                total += os.path.getsize(p)
+                found = True
+                continue
+            for root, _dirs, files in os.walk(p):
+                for f in files:
+                    total += os.path.getsize(os.path.join(root, f))
+                    found = True
+    except OSError:
         return None
-    total = 0
-    for f in files:
-        if not f.startswith("file:"):
-            return None
-        total += os.path.getsize(f[len("file:"):])
-    return total
+    return total if found else None
+
+
+def input_splits(spark, paths) -> int | None:
+    """ceil(local input bytes / maxPartitionBytes), at least 1 — Spark's
+    own scan split count bound — or None when the bytes are unknowable
+    (``local_input_bytes``)."""
+    total = local_input_bytes(paths)
+    return None if total is None else max(1, -(-total // split_bytes(spark)))
 
 
 def spread_scan(df: DataFrame) -> DataFrame:
@@ -64,20 +92,11 @@ def spread_scan(df: DataFrame) -> DataFrame:
     the decision derives from input size, never a constant.
     """
     spark = df.sparkSession
-    try:
-        target = spark.sparkContext.defaultParallelism
-        total = _local_input_bytes(df)
-        if total is None:
-            return df  # non-local/unknown source: trust its split planning
-        max_split = conf_bytes(
-            spark, "spark.sql.files.maxPartitionBytes", 134217728
-        )
-        splits = max(1, -(-total // max_split))  # Spark's own split count bound
-        if splits < target:
-            return df.repartition(target)
-    except Exception:
-        pass
-    return df
+    target = spark.sparkContext.defaultParallelism
+    splits = input_splits(spark, df.inputFiles())
+    if splits is None or splits >= target:
+        return df  # unknown size (trust its split planning), or wide enough
+    return df.repartition(target)
 
 
 def keyed_cache_width(df: DataFrame) -> int:
@@ -89,26 +108,18 @@ def keyed_cache_width(df: DataFrame) -> int:
     bench scale every downstream iteration inherits a far-too-wide plan
     (measured 2× wall on pagerank at sf0.1), while a plain persist's
     ENSURE_REQUIREMENTS exchange would have been byte-coalesced. This is
-    AQE's own rule applied where AQE cannot reach (the same derivation as
-    streaming's ``_state_width``): ceil(lineage input bytes /
-    maxPartitionBytes), clamped to [1, session shuffle width]. At 100 TB
-    the clamp binds and the width IS the cluster width; locally it tracks
-    the data. The lineage-bytes proxy undercounts frames that expand
+    AQE's own rule applied where AQE cannot reach (``input_splits``, the
+    derivation streaming's ``_state_width`` shares): ceil(lineage input
+    bytes / maxPartitionBytes), clamped to [1, session shuffle width]. At
+    100 TB the clamp binds and the width IS the cluster width; locally it
+    tracks the data. The lineage-bytes proxy undercounts frames that expand
     their source (exploded co-occurrence); the clamp keeps that error
     bounded by the session width. Non-local/unknown sources keep the
     session width (their true size is not stat()-able here)."""
     spark = df.sparkSession
     width = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    try:
-        total = _local_input_bytes(df)
-        if total is None:
-            return width  # non-local source: keep the session width
-        max_split = conf_bytes(
-            spark, "spark.sql.files.maxPartitionBytes", 134217728
-        )
-        return max(1, min(width, -(-total // max_split)))
-    except Exception:
-        return width
+    splits = input_splits(spark, df.inputFiles())
+    return width if splits is None else min(width, splits)
 
 
 def python_stage_width(df: DataFrame) -> int | None:
@@ -136,13 +147,5 @@ def python_stage_width(df: DataFrame) -> int | None:
     single-input sorted reduce: pinning width was ~1.5x slower)."""
     spark = df.sparkSession
     floor = spark.sparkContext.defaultParallelism
-    try:
-        total = _local_input_bytes(df)
-        if total is None:
-            return None
-        max_split = conf_bytes(
-            spark, "spark.sql.files.maxPartitionBytes", 134217728
-        )
-        return max(floor, -(-total // max_split))
-    except Exception:
-        return None
+    splits = input_splits(spark, df.inputFiles())
+    return None if splits is None else max(floor, splits)

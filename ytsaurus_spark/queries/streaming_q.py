@@ -10,6 +10,8 @@ batch oracle.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -19,9 +21,6 @@ from ytsaurus_spark.streaming.queues import QueueConsumer, pull_and_advance
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
-
-
-from contextlib import contextmanager
 
 
 @contextmanager
@@ -36,44 +35,66 @@ def _state_width(spark: SparkSession, *paths: str):
     coalesces BATCH exchanges by size but cannot touch stateful streaming
     exchanges (the partition count is pinned into the checkpoint at query
     start), so this derives the width the same way AQE would: one
-    partition per ``maxPartitionBytes`` of stream input, never above the
-    session's configured width. At 100 TB the byte-derived count exceeds
-    any configured width, so this is a no-op (exactly like spread_scan's
-    converse decision); locally a KB-scale stream stops paying for dozens
-    of idle state stores per micro-batch. Keyed-state results are
-    partitioning-independent (hash-partitioned state, per-key logic), so
-    outputs are identical at any width — every wrapped query stays
-    oracle-checked. The width respects (never exceeds) whatever core
-    count the bench was launched with.
+    partition per ``maxPartitionBytes`` of stream input (``input_splits``
+    over ``paths``, the derivation ``keyed_cache_width`` shares), never
+    above the session's configured width. At 100 TB the byte-derived
+    count exceeds any configured width, so this is a no-op (exactly like
+    spread_scan's converse decision); locally a KB-scale stream stops
+    paying for dozens of idle state stores per micro-batch. An input of
+    unknowable size (non-local or file-less) keeps the configured width.
+    Keyed-state results are partitioning-independent (hash-partitioned
+    state, per-key logic), so outputs are identical at any width — every
+    wrapped query stays oracle-checked. The width respects (never
+    exceeds) whatever core count the bench was launched with.
     """
-    import os
-
-    from ytsaurus_spark.operators import conf_bytes
+    from ytsaurus_spark.operators import input_splits
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        total = 0
-        for p in paths:
-            if os.path.isdir(p):
-                for root, _dirs, files in os.walk(p):
-                    total += sum(
-                        os.path.getsize(os.path.join(root, f)) for f in files
-                    )
-            elif os.path.exists(p):
-                total += os.path.getsize(p)
-        max_split = conf_bytes(
-            spark, "spark.sql.files.maxPartitionBytes", 134217728
-        )
-        width = max(1, -(-total // max_split))
+    splits = input_splits(spark, paths)
+    if splits is not None:
         spark.conf.set(
-            "spark.sql.shuffle.partitions", str(min(width, int(old)))
+            "spark.sql.shuffle.partitions", str(min(splits, int(old)))
         )
-    except Exception:
-        pass
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _drain_to_memory(
+    spark: SparkSession, name: str, build, paths, mode: str = "append",
+    read=None,
+) -> DataFrame:
+    """Run a streaming query to completion into the memory sink ``name``
+    and return the sink's rows as a local frame.
+
+    ``build()`` makes the streaming frame INSIDE the ``_state_width``
+    context over ``paths``: a build-time read of the shuffle width
+    (match_recognize_stream's key buckets) then sees the byte-derived
+    state width. ``read`` maps the sink table before the collect; the
+    rows are materialized before the sink table goes away."""
+    import tempfile
+
+    # re-runnable in one session: a previous sink view of this name goes
+    # (dropTempView returns False, not raises, when there is none)
+    spark.catalog.dropTempView(name)
+    with tempfile.TemporaryDirectory() as ckpt, _state_width(spark, *paths):
+        q = (
+            build().writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        out = spark.table(name)
+        if read is not None:
+            out = read(out)
+        rows = out.collect()
+    return local_result(spark, rows, out.schema)
 
 
 _EVENTS_RAW_SCHEMA: dict = {}
@@ -262,39 +283,19 @@ def stream_queue_pull(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_tumbling_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     load_tables(spark, sf_dir)
-    src = _events_stream(spark, sf_dir)
-    agg = (
-        src.withWatermark("ts", "1 hour")
+    return _drain_to_memory(
+        spark,
+        "stream_tumbling_live_out",
+        lambda: _events_stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.date_format("w.start", _TS_FMT_SPARK).alias("win_start"), "n")
+        .select(F.date_format("w.start", _TS_FMT_SPARK).alias("win_start"), "n"),
+        [os.path.join(sf_dir, "events.parquet")],
+        mode="complete",
     )
-    name = "stream_tumbling_live_out"
-    # re-runnable in one session: clear any previous sink view of this name
-    try:
-        spark.catalog.dropTempView(name)
-    except Exception:
-        pass
-    with tempfile.TemporaryDirectory() as ckpt, _state_width(
-        spark, os.path.join(sf_dir, "events.parquet")
-    ):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    # Materialize before the memory sink table goes away.
-    rows = spark.table(name).collect()
-    return local_result(spark, rows, spark.table(name).schema)
 
 
 # --- incremental processing: queue pulls folded into a keyed table ---------
@@ -492,26 +493,19 @@ def stream_match_recognize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch regex over each user's full ordered sequence — which is
     exactly what the DuckDB oracle computes."""
     import os
-    import tempfile
 
     from ytsaurus_spark.operators.match_recognize import match_recognize_stream
 
     load_tables(spark, sf_dir)
-    name = "stream_match_recognize_out"
-    try:
-        spark.catalog.dropTempView(name)
-    except Exception:
-        pass
-    # width context opens BEFORE the stream builds: key_buckets derives
-    # from the shuffle width at build time, so the per-group Python round
-    # trips shrink with the state width (both byte-derived, both capped
-    # at the configured width)
-    with tempfile.TemporaryDirectory() as ckpt, _state_width(
-        spark, os.path.join(sf_dir, "events.parquet")
-    ):
-        src = _events_stream(spark, sf_dir)
-        matches = match_recognize_stream(
-            src,
+    # built inside the drain's width context: key_buckets derives from the
+    # shuffle width at build time, so the per-group Python round trips
+    # shrink with the state width (both byte-derived, both capped at the
+    # configured width)
+    return _drain_to_memory(
+        spark,
+        "stream_match_recognize_out",
+        lambda: match_recognize_stream(
+            _events_stream(spark, sf_dir),
             partition_by=["user_id"],
             order_col="event_id",
             symbols=[
@@ -520,26 +514,12 @@ def stream_match_recognize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ("b", F.col("value") > 200),
             ],
             pattern="va+b",
-        )
-        q = (
-            matches.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        result = (
-            spark.table(name)
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n_matches"))
-            .orderBy("user_id")
-        )
-        rows = result.collect()
-    return local_result(spark, rows, result.schema)
+        ),
+        [os.path.join(sf_dir, "events.parquet")],
+        read=lambda sink: sink.groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n_matches"))
+        .orderBy("user_id"),
+    )
 
 
 @register(
@@ -569,7 +549,6 @@ def stream_time_order_recover(spark: SparkSession, sf_dir: str) -> DataFrame:
     per key, rows at or below (max ts - delay), event-time ordered with a
     0-based emit sequence."""
     import os
-    import tempfile
 
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -577,43 +556,26 @@ def stream_time_order_recover(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ytsaurus_spark.streaming.stateful import time_order_recover
 
     load_tables(spark, sf_dir)
-    src = _events_stream(spark, sf_dir).filter(F.col("user_id") < 40).select(
-        "user_id", F.unix_micros("ts").alias("ts_us"), "event_id"
-    )
     fn, out_schema, state_schema = time_order_recover(
         "user_id", ts_col="ts_us", delay_us=30 * 60 * 1_000_000,
         payload_cols=("event_id",),
         output_schema="user_id bigint, ts_us bigint, event_id bigint, emit_seq bigint",
     )
-    out = src.groupBy("user_id").applyInPandasWithState(
-        fn,
-        T._parse_datatype_string(out_schema),
-        T._parse_datatype_string(state_schema),
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-    name = "stream_time_order_recover_out"
-    try:
-        spark.catalog.dropTempView(name)
-    except Exception:
-        pass
-    with tempfile.TemporaryDirectory() as ckpt, _state_width(
-        spark, os.path.join(sf_dir, "events.parquet")
-    ):
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    rows = spark.table(name).collect()
-    return local_result(
-        spark, rows, "user_id bigint, ts_us bigint, event_id bigint, emit_seq bigint"
+    return _drain_to_memory(
+        spark,
+        "stream_time_order_recover_out",
+        lambda: _events_stream(spark, sf_dir)
+        .filter(F.col("user_id") < 40)
+        .select("user_id", F.unix_micros("ts").alias("ts_us"), "event_id")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            fn,
+            T._parse_datatype_string(out_schema),
+            T._parse_datatype_string(state_schema),
+            "append",
+            GroupStateTimeout.NoTimeout,
+        ),
+        [os.path.join(sf_dir, "events.parquet")],
     )
 
 
@@ -647,7 +609,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     on time, so the emitted set equals the batch join, giving an exact
     DuckDB oracle. Delay flows as exact integer microseconds."""
     import os
-    import tempfile
 
     load_tables(spark, sf_dir)
 
@@ -685,27 +646,10 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("delay_us"),
         F.round("p_value", 4).alias("amount"),
     )
-    name = "stream_stream_join_out"
-    try:
-        spark.catalog.dropTempView(name)
-    except Exception:
-        pass
-    with tempfile.TemporaryDirectory() as ckpt, _state_width(
-        spark, os.path.join(sf_dir, "events.parquet")
-    ):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    rows = spark.table(name).collect()
-    return local_result(spark, rows, spark.table(name).schema)
+    return _drain_to_memory(
+        spark, "stream_stream_join_out", lambda: joined,
+        [os.path.join(sf_dir, "events.parquet")],
+    )
 
 
 # --- composite: stream-stream join folded into a keyed table ---------------
@@ -910,27 +854,13 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("purchase_id").cast("long").alias("purchase_id"),
         F.round("p_value", 4).alias("amount"),
     )
-    name = "stream_stream_left_join_out"
     try:
-        spark.catalog.dropTempView(name)
-    except Exception:
-        pass
-    with tempfile.TemporaryDirectory() as ckpt, _state_width(spark, stage):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
+        return _drain_to_memory(
+            spark, "stream_stream_left_join_out", lambda: joined, [stage],
+            read=lambda sink: sink.filter(F.col("user_id") != -1),
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    rows = spark.table(name).filter(F.col("user_id") != -1).collect()
-    out = local_result(spark, rows, spark.table(name).schema)
-    shutil.rmtree(stage, ignore_errors=True)
-    return out.filter(F.col("user_id") != -1)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
 
 
 # --- Flow pipeline: persistent source → map chain → persistent sink --------
@@ -1017,7 +947,6 @@ def stream_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     running minimum) — exact integers on both sides, so the streamed
     fold must match row-for-row."""
     import os
-    import tempfile
 
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -1025,49 +954,29 @@ def stream_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ytsaurus_spark.streaming.stateful import cusum_monitor
 
     load_tables(spark, sf_dir)
-    src = (
-        _events_stream(spark, sf_dir)
+    fn, out_schema, state_schema = cusum_monitor(
+        "event_type", order_col="event_id", val_col="cents",
+        reference=10_500, threshold=100_000,
+    )
+    return _drain_to_memory(
+        spark,
+        "stream_cusum_monitor_out",
+        lambda: _events_stream(spark, sf_dir)
         .filter(F.col("event_type").isin("purchase", "error"))
         .select(
             "event_type",
             F.col("event_id").cast("long").alias("event_id"),
             F.round(F.col("value") * 100).cast("long").alias("cents"),
         )
-    )
-    fn, out_schema, state_schema = cusum_monitor(
-        "event_type", order_col="event_id", val_col="cents",
-        reference=10_500, threshold=100_000,
-    )
-    out = src.groupBy("event_type").applyInPandasWithState(
-        fn,
-        T._parse_datatype_string(out_schema),
-        T._parse_datatype_string(state_schema),
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-    name = "stream_cusum_monitor_out"
-    try:
-        spark.catalog.dropTempView(name)
-    except Exception:
-        pass
-    with tempfile.TemporaryDirectory() as ckpt, _state_width(
-        spark, os.path.join(sf_dir, "events.parquet")
-    ):
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        rows = spark.table(name).collect()
-    return local_result(
-        spark, rows,
-        "event_type string, event_id bigint, cents bigint, s bigint, alarm boolean",
+        .groupBy("event_type")
+        .applyInPandasWithState(
+            fn,
+            T._parse_datatype_string(out_schema),
+            T._parse_datatype_string(state_schema),
+            "append",
+            GroupStateTimeout.NoTimeout,
+        ),
+        [os.path.join(sf_dir, "events.parquet")],
     )
 
 
@@ -1147,16 +1056,17 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     bracket cut over the window's bins (agg_quantile_sketch's
     selection)."""
     import os
-    import tempfile
 
     load_tables(spark, sf_dir)
-    src = _events_stream(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("long")
     binc = F.when(cents < 1, F.lit(-1).cast("long")).otherwise(
         (F.length(F.conv(cents.cast("string"), 10, 2)) - 1).cast("long")
     )
-    agg = (
-        src.withWatermark("ts", "1 hour")
+    return _drain_to_memory(
+        spark,
+        "stream_quantile_sketch_out",
+        lambda: _events_stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
         .withColumn("bin", binc)
         .groupBy(F.window("ts", "1 hour").alias("w"), "bin")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -1164,29 +1074,10 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("w.start", _TS_FMT_SPARK).alias("win_start"),
             "bin",
             "c",
-        )
+        ),
+        [os.path.join(sf_dir, "events.parquet")],
+        mode="complete",
     )
-    name = "stream_quantile_sketch_out"
-    try:
-        spark.catalog.dropTempView(name)
-    except Exception:
-        pass
-    with tempfile.TemporaryDirectory() as ckpt, _state_width(
-        spark, os.path.join(sf_dir, "events.parquet")
-    ):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    rows = spark.table(name).collect()
-    return local_result(spark, rows, spark.table(name).schema)
 
 
 # --- consumer registrations + vital-gated trim (queue_client.h:56-151) ------

@@ -31,23 +31,18 @@ def _small_star_input(spark, sf_dir: str) -> bool:
     the regime where AQE's per-exchange stage materialization is pure
     fixed cost (nothing to coalesce: every shuffle is already under one
     advisory partition). Byte-derived, never a constant: at production
-    scale this is False and the wide-plan routing below is a no-op."""
+    scale this is False and the wide-plan routing below is a no-op. The
+    input is every ``*.parquet`` table of ``sf_dir``, a single file or a
+    Spark output directory alike; an unknowable size is not small."""
+    import glob
     import os
 
-    from ytsaurus_spark.operators import conf_bytes
+    from ytsaurus_spark.operators import local_input_bytes, split_bytes
 
-    try:
-        total = sum(
-            os.path.getsize(os.path.join(sf_dir, f))
-            for f in os.listdir(sf_dir)
-            if f.endswith(".parquet")
-        )
-        max_split = conf_bytes(
-            spark, "spark.sql.files.maxPartitionBytes", 134217728
-        )
-        return total < max_split * spark.sparkContext.defaultParallelism
-    except Exception:
-        return False
+    tables = glob.glob(os.path.join(glob.escape(sf_dir), "*.parquet"))
+    total = local_input_bytes(tables)
+    dp = spark.sparkContext.defaultParallelism
+    return total is not None and total < split_bytes(spark) * dp
 
 
 def _star_session(spark, sf_dir: str, cached: bool = True,
