@@ -1,22 +1,27 @@
 """Eager-job gate: work that runs Spark jobs while a query is still being
 built (before its action) is counted here, the way test_plan_audit.py
-gates plan shapes. Each isolated YQL/CHYT statement registers the fixture
-views in its own child session; once the process has seen those tables,
-that registration must not run Spark's schema-inference job again."""
+gates plan shapes. Each isolated YQL/CHYT statement runs in a clone of a
+template that registered the fixture views (and the YSON UDFs) once
+(``catalog.statement_session``): a warm statement registers nothing, and
+a template (re)build reads each fixture schema from the process memo
+with no Spark job."""
 
 from __future__ import annotations
 
 import uuid
 
 import pytest
+from pyspark.sql.udf import UDFRegistration
 
-from ytsaurus_spark.catalog import load_tables
+from ytsaurus_spark.catalog import Catalog, load_tables
 from ytsaurus_spark.queries import all_queries
 
-# query -> Spark jobs its build may run once the schema memo is warm
+# query -> Spark jobs its build may run on the main thread once the
+# schema memo and the statement templates are warm
 BUILD_JOB_BUDGET = {
     "chyt_agg_report": 0,
     "yql_text_reduce": 0,
+    "pipeline_cdc_replica": 32,
 }
 
 
@@ -45,3 +50,23 @@ def test_statement_build_job_budget(spark, sf_dir, name):
         f"{name} ran {jobs} Spark jobs before its action "
         f"(budget {BUILD_JOB_BUDGET[name]})"
     )
+
+
+@pytest.mark.parametrize("name", ["chyt_agg_report", "yql_text_reduce"])
+def test_warm_statement_registers_nothing(spark, sf_dir, name, monkeypatch):
+    fn = all_queries()[name]
+    fn(spark, sf_dir)
+    calls = {"udf": 0, "views": 0}
+
+    def counted(key, orig):
+        def wrapper(*args, **kwargs):
+            calls[key] += 1
+            return orig(*args, **kwargs)
+        return wrapper
+
+    monkeypatch.setattr(UDFRegistration, "register",
+                        counted("udf", UDFRegistration.register))
+    monkeypatch.setattr(Catalog, "register_all",
+                        counted("views", Catalog.register_all))
+    fn(spark, sf_dir)
+    assert calls == {"udf": 0, "views": 0}

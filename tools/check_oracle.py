@@ -19,7 +19,12 @@ strict failure is type-level (lenient passes) or value-level (both fail).
 The strict pass also audits output types: a Spark Decimal paired with a
 DuckDB float is reported even if some rows happen to str-match.
 
-Usage: python tools/check_oracle.py [--lenient] [--vanilla] [sf_dir] [query|pattern ...]
+``--repeat`` runs every selected query twice in one process, in an order
+shuffled with a fixed seed, so the oracle also checks state one statement
+leaves for the next: statement-session templates, persisted star views,
+pragmas. A second execution reports as ``name#2``.
+
+Usage: python tools/check_oracle.py [--lenient] [--vanilla] [--repeat] [sf_dir] [query|pattern ...]
 
 Queries are names or fnmatch patterns (``'sim_*'``); a pattern that
 matches no registered query is an error.
@@ -31,6 +36,7 @@ import decimal
 import fnmatch
 import math
 import os
+import random
 import sys
 import time
 import traceback
@@ -42,6 +48,8 @@ import duckdb
 from ytsaurus_spark.catalog import TABLE_NAMES
 from ytsaurus_spark.queries import all_oracles, all_queries
 from ytsaurus_spark.session import get_spark
+
+REPEAT_SEED = 0  # the --repeat order; fixed, so a failing order reruns as is
 
 
 def lenient_normalize(v):
@@ -105,7 +113,8 @@ def main() -> int:
     args = sys.argv[1:]
     vanilla = "--vanilla" in args
     lenient = "--lenient" in args
-    args = [a for a in args if a not in ("--vanilla", "--lenient")]
+    repeat = "--repeat" in args
+    args = [a for a in args if a not in ("--vanilla", "--lenient", "--repeat")]
     sf_dir = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.01"
     patterns = args[1:] if args and os.path.isdir(args[0]) else args
     norm = lenient_normalize if lenient else strict_normalize
@@ -117,6 +126,10 @@ def main() -> int:
             raise SystemExit(f"no registered query matches {pat!r}")
         only.update(matched)
     names = [n for n in queries if not only or n in only]
+    runs = [(n, n) for n in names]
+    if repeat:
+        runs += [(n, f"{n}#2") for n in names]
+        random.Random(REPEAT_SEED).shuffle(runs)
 
     if vanilla:
         # The driver-harness condition: a FOREIGN session with none of our
@@ -141,24 +154,24 @@ def main() -> int:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
     passed, failed, warned = [], [], []
-    for name in names:
+    for name, label in runs:
         t0 = time.time()
         try:
             sdf = queries[name](spark, sf_dir)
             s_cols = sdf.columns
             s_raw = [tuple(r) for r in sdf.collect()]
         except Exception:
-            failed.append((name, "SPARK ERROR:\n" + traceback.format_exc()))
+            failed.append((label, "SPARK ERROR:\n" + traceback.format_exc()))
             continue
         if name not in oracles:
-            passed.append((name, f"rows-only: {len(s_raw)} rows", time.time() - t0))
+            passed.append((label, f"rows-only: {len(s_raw)} rows", time.time() - t0))
             continue
         try:
             cur = con.execute(oracles[name])
             d_cols = [d[0] for d in cur.description]
             d_raw = cur.fetchall()
         except Exception:
-            failed.append((name, "DUCKDB ERROR:\n" + traceback.format_exc()))
+            failed.append((label, "DUCKDB ERROR:\n" + traceback.format_exc()))
             continue
         sc, sr = canonical_rows(s_cols, s_raw, norm)
         dc, dr = canonical_rows(d_cols, d_raw, norm)
@@ -166,23 +179,23 @@ def main() -> int:
             ts = type_split(s_raw, d_raw)
             if ts:
                 warned.append(
-                    (name, f"DECIMAL-vs-DOUBLE split in columns {ts} "
+                    (label, f"DECIMAL-vs-DOUBLE split in columns {ts} "
                      f"(driver hash hazard even if strs match)")
                 )
         if sc != dc:
-            failed.append((name, f"column mismatch: spark={sc} duck={dc}"))
+            failed.append((label, f"column mismatch: spark={sc} duck={dc}"))
         elif len(sr) != len(dr):
             failed.append(
-                (name, f"row count mismatch: spark={len(sr)} duck={len(dr)}")
+                (label, f"row count mismatch: spark={len(sr)} duck={len(dr)}")
             )
         elif sr != dr:
             diffs = [
                 (a, b) for a, b in zip(sr, dr) if a != b
             ][:3]
             extra = f" first diffs: {diffs}" if diffs else " (ordering-level diff)"
-            failed.append((name, f"value mismatch ({len(sr)} rows).{extra}"))
+            failed.append((label, f"value mismatch ({len(sr)} rows).{extra}"))
         else:
-            passed.append((name, f"{len(sr)} rows", time.time() - t0))
+            passed.append((label, f"{len(sr)} rows", time.time() - t0))
 
     for name, info, dt in passed:
         print(f"PASS {name:32s} {info} [{dt:.1f}s]")
@@ -191,6 +204,8 @@ def main() -> int:
     for name, info in failed:
         print(f"FAIL {name:32s} {info}")
     mode = "lenient" if lenient else "strict"
+    if repeat:
+        mode += f", repeat seed={REPEAT_SEED}"
     print(
         f"\n{len(passed)} passed, {len(failed)} failed, "
         f"{len(warned)} type-warned, mode={mode}, sf_dir={sf_dir}"

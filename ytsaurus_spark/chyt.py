@@ -2086,8 +2086,12 @@ def chyt_query(spark, text: str, client=None, sf_dir: str | None = None,
     """Execute CHYT-style SQL and return the DataFrame. ``client`` (a
     YtClient) resolves cypress paths and the table functions
     (concatYtTables*/ytTables/ytList*/ytNodeAttributes/ytListLogTables/
-    numbers) against its tree; ``sf_dir`` registers the fixture views in
-    an isolated session (basename resolution, like yql_select). The
+    numbers) against its tree; ``sf_dir`` provides the fixture views
+    (basename resolution, like yql_select). Each statement runs in an
+    isolated clone of a template that registered those views and the
+    YSON functions once per process and fixture listing
+    (``catalog.statement_session``); a nested statement (a ``ytTables``
+    subquery) shares its parent's session. The
     ``$table_index/$table_path/$table_name`` virtual columns and
     ``toTypeName``/``DESCRIBE`` introspection are supported. ``DESCRIBE``
     and the node-listing functions are driver-side metadata ops; data
@@ -2098,15 +2102,13 @@ def chyt_query(spark, text: str, client=None, sf_dir: str | None = None,
     test_yt_dictionaries.py) enabling dictGet*/dictHas/dictGetOrDefault;
     user functions persisted by ``CREATE FUNCTION`` (chyt_execute) are
     inlined at call sites."""
-    s2 = spark.newSession() if not getattr(spark, "_chyt_session", False) else spark
-    s2._chyt_session = True
-    from ytsaurus_spark.functions.chyt_yson import register_yson_functions
+    if getattr(spark, "_chyt_session", False):
+        s2 = spark
+    else:
+        from ytsaurus_spark.catalog import statement_session
 
-    register_yson_functions(s2)
-    if sf_dir is not None:
-        from ytsaurus_spark.catalog import load_tables
-
-        load_tables(s2, sf_dir)
+        s2 = statement_session(spark, sf_dir, "chyt")
+        s2._chyt_session = True
 
     text = text.strip().rstrip(";")
     exec_client = (

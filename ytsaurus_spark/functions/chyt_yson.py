@@ -474,11 +474,9 @@ def _convert_yson(vs: pd.Series, fmts: pd.Series) -> pd.Series:
 def register_yson_functions(spark) -> None:
     """Register the CHYT YSON function family in ``spark``'s UDF registry
     (lower-cased internal names; the translator maps CHYT spellings).
-    Idempotent per session — ~34 registrations are py4j round-trips, so
-    repeat calls on the same session short-circuit."""
-    if getattr(spark, "_chyt_yson_registered", False):
-        return
-    spark._chyt_yson_registered = True
+    The registrations are py4j round-trips, so CHYT statements do not call
+    this: they clone a template session that called it once
+    (``catalog.statement_session``)."""
     from pyspark.sql.functions import pandas_udf
 
     def reg(name: str, fn, ret: str) -> None:

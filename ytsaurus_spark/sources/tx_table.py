@@ -305,6 +305,20 @@ class LogTxTable:
         return None if lo is None else [lo, hi]
 
     @staticmethod
+    def _delta_key_bounds(segs: list[dict]):
+        """``(lo, hi)`` of the first key column over ``segs``, from their
+        manifest ranges: every key a delta touches lies in its range, so
+        the union bounds the touched keys with no Spark job. ``(None,
+        None)`` (unprunable) for no segment; None when a segment has no
+        usable range."""
+        if not segs:
+            return None, None
+        ranges = [s.get("range") for s in segs]
+        if any(r is None or None in r for r in ranges):
+            return None
+        return min(r[0] for r in ranges), max(r[1] for r in ranges)
+
+    @staticmethod
     def _overlaps(seg: dict, lo, hi) -> bool:
         """Conservative range test: unprunable segments always overlap."""
         rng = seg.get("range")
@@ -747,9 +761,12 @@ class LogTxTable:
                 # lookups below (and every downstream consumer of the
                 # diff) otherwise re-derive the distinct-union per action
                 touched = u.select(*self.key_cols).distinct().localCheckpoint()
-            k0 = self.key_cols[0]
-            b = touched.agg(F.min(k0).alias("lo"), F.max(k0).alias("hi")).first()
-            bounds = (b["lo"], b["hi"])
+            bounds = self._delta_key_bounds(in_range)
+            if bounds is None:
+                k0 = self.key_cols[0]
+                b = touched.agg(F.min(k0).alias("lo"),
+                                F.max(k0).alias("hi")).first()
+                bounds = (b["lo"], b["hi"])
             new_state = self.lookup_rows(touched, version=v2, key_bounds=bounds)
             old_state = self.lookup_rows(touched, version=v1, key_bounds=bounds)
         newer = new_state.select(

@@ -20,12 +20,6 @@ from ytsaurus_spark.yql.tpcds_star import (  # noqa: F401
 )
 
 
-# isolated star sessions, one per (base session, sf_dir): the star views
-# are read-only derivations, so yql queries in one process share the
-# isolated session instead of rebuilding 24 temp views per call
-_STAR_SESSIONS: dict[tuple[int, str, bool, bool], object] = {}
-
-
 def _small_star_input(spark, sf_dir: str) -> bool:
     """True when the star fixture is below one scan split per core —
     the regime where AQE's per-exchange stage materialization is pure
@@ -47,7 +41,12 @@ def _small_star_input(spark, sf_dir: str) -> bool:
 
 def _star_session(spark, sf_dir: str, cached: bool = True,
                   wide_plan: bool = False):
-    """``cached=False`` returns a parallel memoized session whose star
+    """An isolated session over the TPC-DS star views of ``sf_dir``: a
+    clone of the star template (``catalog.statement_session``), so the
+    24 views register once per process and fixture listing, and confs a
+    statement sets stay in its own clone.
+
+    ``cached=False`` clones a parallel template whose star
     views are NOT persisted: every reference re-derives from parquet, so
     predicate pushdown and scan-level size estimates stay alive. Most
     statements are far faster on the cached views; a statement whose
@@ -67,15 +66,15 @@ def _star_session(spark, sf_dir: str, cached: bool = True,
     pays for its stage barriers, so the flag degrades to the plain
     cached session. Physical-plan-only in both directions — values are
     oracle-identical."""
-    wide_plan = wide_plan and cached and _small_star_input(spark, sf_dir)
-    key = (id(spark.sparkContext), sf_dir, cached, wide_plan)
-    s2 = _STAR_SESSIONS.get(key)
-    if s2 is None:
-        s2 = register_star_views(spark.newSession(), sf_dir, persist=cached)
-        if wide_plan:
-            s2.conf.set("spark.sql.adaptive.enabled", "false")
-        _STAR_SESSIONS[key] = s2
-    return s2
+    from ytsaurus_spark.catalog import statement_session
+
+    if not cached:
+        flavour = "star_uncached"
+    elif wide_plan and _small_star_input(spark, sf_dir):
+        flavour = "star_wide"
+    else:
+        flavour = "star"
+    return statement_session(spark, sf_dir, flavour)
 
 
 def _resolve_source_schema(src: str, s2, client):
@@ -95,24 +94,22 @@ def yql_select(spark, text: str, sf_dir: str | None = None,
                params: dict | None = None, client=None):
     """Execute one YQL script and return the result DataFrame.
 
-    Runs in an ISOLATED ``spark.newSession()`` (own temp-view namespace +
-    SQL conf) so the star views and any pragma-implied confs never leak
-    into the caller's session. ``sf_dir`` registers the fixture tables
-    (and, with ``star``, the derived TPC-DS views) first; pass
-    ``sf_dir=None`` to run against views the caller already registered.
-    ``client`` (a YtClient) resolves backticked cypress paths for the
-    RANGE/CONCAT/EACH/LIKE/REGEXP table functions. Star sessions are
-    cached per (base session, sf_dir).
+    Runs in an ISOLATED session (own temp-view namespace + SQL conf) so
+    the star views and any pragma-implied confs never leak into the
+    caller's session or the next statement. The session is a clone of a
+    template that registered the fixture tables of ``sf_dir`` (and, with
+    ``star``, the derived TPC-DS views) once per process and fixture
+    listing (``catalog.statement_session``); with ``sf_dir=None`` the
+    template has no views, and backticked paths resolve through
+    ``client`` (a YtClient), which also serves the
+    RANGE/CONCAT/EACH/LIKE/REGEXP table functions.
     """
     if sf_dir is not None and star:
         s2 = _star_session(spark, sf_dir)
     else:
-        s2 = spark.newSession()
-        s2.conf.set("spark.sql.ansi.enabled", "false")  # YQL total arithmetic
-        if sf_dir is not None:
-            from ytsaurus_spark.catalog import load_tables
+        from ytsaurus_spark.catalog import statement_session
 
-            load_tables(s2, sf_dir)
+        s2 = statement_session(spark, sf_dir, "yql")
     if client is not None:
         from ytsaurus_spark.client import YtClient
 
@@ -177,16 +174,13 @@ def yql_execute(spark, text: str, client=None, sf_dir: str | None = None,
     None if the script is writes-only.
 
     Each statement sees the tables as of the previous statement's commit
-    (views re-register per statement), matching YQL's sequential script
-    semantics."""
+    (client paths re-register per statement), matching YQL's sequential
+    script semantics. The script runs in one clone of the ``yql``
+    statement template (``catalog.statement_session``)."""
+    from ytsaurus_spark.catalog import statement_session
     from ytsaurus_spark.yql.dialect import translate_yql_script
 
-    s2 = spark.newSession()
-    s2.conf.set("spark.sql.ansi.enabled", "false")  # YQL total arithmetic
-    if sf_dir is not None:
-        from ytsaurus_spark.catalog import load_tables
-
-        load_tables(s2, sf_dir)
+    s2 = statement_session(spark, sf_dir, "yql")
 
     # views are session-scoped: re-root the client onto the isolated
     # execution session so registrations land where the SQL runs

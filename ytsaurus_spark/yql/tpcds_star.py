@@ -664,11 +664,11 @@ def oracle_with_star(sql: str) -> str:
 
 
 def register_star_views(spark, sf_dir: str, persist: bool = True):
-    """Register the TPC-DS star views in an ISOLATED session (the caller
-    passes ``spark.newSession()``) over the base fixture views. All star
-    frames are built BEFORE any is registered, so the TPC-DS ``customer``
-    dim can shadow the TPC-H ``customer`` view without a resolution cycle.
-    Returns the isolated session.
+    """Register the TPC-DS star views in an ISOLATED session (the star
+    template of ``catalog.statement_session``) over the base fixture
+    views. All star frames are built BEFORE any is registered, so the
+    TPC-DS ``customer`` dim can shadow the TPC-H ``customer`` view without
+    a resolution cycle. Returns the isolated session.
 
     ``persist=False`` registers the same view definitions UNCACHED: every
     reference re-derives from parquet, which keeps predicate pushdown and
@@ -693,13 +693,14 @@ def register_star_views(spark, sf_dir: str, persist: bool = True):
     }
     for name, df in frames.items():
         # LAZY persist: the star views are deterministic fixture
-        # DERIVATIONS (inputs, not results) and the star session is
-        # already cached per (context, sf_dir) — without the persist
+        # DERIVATIONS (inputs, not results) and the star template is
+        # resident per (context, sf_dir, listing) — without the persist
         # every reference re-runs the fact derivation (a 600k-row join
         # plus a wall of date arithmetic; q14a alone references the
         # three sales facts ~3× each, ~20 s per query at sf0.1).
         # Process-scoped only: a fresh driver run recomputes from
-        # parquet, same as the memoized Catalog.
+        # parquet, same as the memoized Catalog, and a replaced template
+        # unpersists its views (``catalog._release``).
         if persist:
             df = df.persist()
         df.createOrReplaceTempView(name)
