@@ -1,0 +1,156 @@
+"""Cache ownership: every engine cache goes through
+``operators.materialize``, and a registry query owns what its build
+materialized (``operators.owned``) — the caches live exactly as long as
+the returned frame. Counts are CacheManager entries
+(``numCachedEntries``), the unit an uncache removes."""
+
+from __future__ import annotations
+
+import gc
+import os
+import re
+
+import pytest
+from pyspark.sql import functions as F
+
+from ytsaurus_spark.operators import materialize, owned
+from ytsaurus_spark.queries import all_queries
+
+ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                    "ytsaurus_spark")
+
+
+def _entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def _cached(df) -> bool:
+    cache = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    return cache.lookupCachedData(df._jdf).isDefined()
+
+
+def _dropped(spark, before: int) -> bool:
+    gc.collect()
+    return _entries(spark) == before
+
+
+def test_returned_frame_is_materialized_and_released_on_drop(spark):
+    before = _entries(spark)
+
+    def build(spark):
+        base = materialize(spark.range(200).selectExpr("id % 7 AS k", "id AS v"))
+        return materialize(base.groupBy("k").agg(F.sum("v").alias("s")))
+
+    out = owned(build, spark)
+    assert _cached(out)
+    assert _entries(spark) == before + 2
+    assert len(out.collect()) == 7
+    del out
+    assert _dropped(spark, before)
+
+
+@pytest.mark.parametrize("name", ["graph_bfs_layers", "graph_label_propagation"])
+def test_registry_query_releases_on_drop(spark, sf_dir, name):
+    # both return a frame their own loop materialized
+    before = _entries(spark)
+    df = all_queries()[name](spark, sf_dir)
+    assert _cached(df)
+    assert _entries(spark) > before
+    df.collect()
+    del df
+    assert _dropped(spark, before)
+
+
+def test_nested_operator_call_is_owned_by_the_outer_query(spark):
+    before = _entries(spark)
+    seen = {}
+
+    def inner(spark):
+        return materialize(spark.range(60).selectExpr("id AS v", "id % 5 AS g"))
+
+    def outer(spark):
+        rows = owned(inner, spark)
+        out = materialize(rows.groupBy("g").agg(F.count("v").alias("n")))
+        del rows  # the inner frame goes; its cache belongs to the outer scope
+        gc.collect()
+        seen["inside"] = _entries(spark)
+        return out
+
+    out = owned(outer, spark)
+    assert seen["inside"] == before + 2
+    assert _entries(spark) == before + 2
+    assert sorted(r.n for r in out.collect()) == [12] * 5
+    del out
+    assert _dropped(spark, before)
+
+
+def test_exception_mid_build_releases_what_was_materialized(spark):
+    before = _entries(spark)
+
+    def build(spark):
+        a = materialize(spark.range(40).selectExpr("id * 2 AS x"))
+        materialize(a.selectExpr("x + 1 AS y"))
+        assert _entries(spark) == before + 2
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        owned(build, spark)
+    assert _entries(spark) == before
+
+
+def test_existing_identical_entry_keeps_its_owner(spark):
+    mine = spark.range(30).selectExpr("id * 11 AS z").persist()
+    try:
+        before = _entries(spark)
+
+        def build(spark):
+            same = materialize(spark.range(30).selectExpr("id * 11 AS z"))
+            return same.selectExpr("z + 1 AS w")
+
+        out = owned(build, spark)
+        assert _entries(spark) == before
+        del out
+        assert _dropped(spark, before)
+        assert _cached(mine)
+    finally:
+        mine.unpersist()
+
+
+def test_derived_frame_outliving_the_result_keeps_its_rows(spark, sf_dir):
+    before = _entries(spark)
+    res = all_queries()["graph_label_propagation"](spark, sf_dir)
+    derived = res.filter(F.col("node").isNotNull())
+    expected = sorted(res.collect())
+    del res
+    assert _dropped(spark, before)
+    assert sorted(derived.collect()) == expected
+    assert _entries(spark) == before
+
+
+def test_outside_a_scope_materialize_is_a_plain_persist(spark):
+    df = materialize(spark.range(25).selectExpr("id - 3 AS q"))
+    try:
+        gc.collect()
+        assert _cached(df)
+    finally:
+        df.unpersist()
+
+
+def test_every_engine_cache_goes_through_materialize():
+    call = re.compile(r"\.(persist\(|cache\(\))")
+    allowed = {
+        os.path.join(ROOT, "operators", "__init__.py"),  # the helper itself
+        # the star-template views belong to catalog.statement_session
+        os.path.join(ROOT, "yql", "tpcds_star.py"),
+    }
+    offenders = []
+    for dirpath, _dirs, files in os.walk(ROOT):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            if not f.endswith(".py") or path in allowed:
+                continue
+            with open(path, encoding="utf-8") as fh:
+                for i, line in enumerate(fh, 1):
+                    if call.search(line):
+                        offenders.append(f"{os.path.relpath(path, ROOT)}:{i}")
+    assert not offenders, offenders

@@ -13,10 +13,19 @@ pre-AQE size estimation (yql_q77). Engine-authored queries must never
 need the cartesian list. Queries that execute work at plan-build time
 (streaming drains, durable-commit pipelines) run sf0.001-sized work —
 the sweep stays test-budget-sized.
+
+The same loop is the registry's cache-leak gate: once a query's frame is
+dropped, the CacheManager must hold exactly the entries it held before
+the query was built (``operators.owned`` releases what the build
+materialized). The persisted star-view templates belong to the catalog
+(``catalog.statement_session``), so they are built before the loop.
 """
 
 from __future__ import annotations
 
+import gc
+
+from ytsaurus_spark.catalog import statement_session
 from ytsaurus_spark.plans import (
     ALLOWED_CARTESIAN,
     ALLOWED_GLOBAL_WINDOWS,
@@ -26,8 +35,12 @@ from ytsaurus_spark.queries import all_queries
 
 
 def test_registry_plan_audit(spark, sf_dir):
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for flavour in ("star", "star_wide"):
+        statement_session(spark, sf_dir, flavour)
     failures = []
     for name, fn in sorted(all_queries().items()):
+        before = cache.numCachedEntries()
         try:
             df = fn(spark, sf_dir)
             findings = plan_audit_findings(
@@ -40,8 +53,15 @@ def test_registry_plan_audit(spark, sf_dir):
             continue
         if findings:
             failures.append(f"{name}: {'; '.join(findings)}")
+        del df
+        if cache.numCachedEntries() != before:
+            gc.collect()  # a frame held only by a reference cycle
+        leaked = cache.numCachedEntries() - before
+        if leaked:
+            failures.append(f"{name}: {leaked} cache entries outlive the frame")
     assert not failures, (
         "plan audit flagged queries (fix the plan or, for a dim-sized "
         "global window, add to plans.ALLOWED_GLOBAL_WINDOWS with the "
-        "bounded-input contract):\n" + "\n".join(failures)
+        "bounded-input contract; release every cache the build "
+        "creates):\n" + "\n".join(failures)
     )

@@ -3,7 +3,73 @@ LLM-data-pipeline operators, all expressed as DataFrame transforms."""
 
 from __future__ import annotations
 
+import weakref
+from contextvars import ContextVar
+
 from pyspark.sql import DataFrame
+
+# the open owner scope: JVM handles of the cache entries ``materialize``
+# created in it, in creation order; None outside every scope
+_OWNED: ContextVar[list | None] = ContextVar("materialize_owner", default=None)
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """``df.persist()`` (MEMORY_AND_DISK): the engine's one way to cache a
+    frame that several consumers read (SCALE.md, "fold, push, or
+    persist"). Lazy, like persist: the first action fills the cache.
+
+    Inside an owner scope (``owned``) the call records the CacheManager
+    entry it created — the JVM handle, never the Python frame, so a
+    scope whose result IS a materialized frame can still be released.
+    An identical plan that is already cached (a star view, the caller's
+    own persist) is not recorded: it stays with its first owner. Outside
+    every scope (an operator called directly) this is a plain persist
+    and the cache is the caller's to release."""
+    entries = _OWNED.get()
+    if entries is None:
+        return df.persist()
+    cache = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    created = not cache.lookupCachedData(df._jdf).isDefined()
+    df = df.persist()
+    if created:
+        entries.append(df._jdf)
+    return df
+
+
+def _release(entries: list) -> None:
+    """Unpersist ``entries`` newest first: an uncache replans every
+    dependent entry that is not loaded yet, and the newest entries are
+    the dependents. Non-blocking; nothing to do once the context is
+    stopped (its caches went with it)."""
+    from pyspark import SparkContext
+
+    if SparkContext._active_spark_context is None:
+        return
+    while entries:
+        entries.pop().unpersist(False)
+
+
+def owned(build, *args):
+    """``build(*args)`` as the owner of every cache ``materialize``
+    creates while it runs, nested operator calls included. The caches
+    live exactly as long as the returned frame: they are released when
+    that frame is garbage-collected (run the action, drop the frame), or
+    at once if ``build`` raises. A call inside an open scope adds to that
+    scope instead of opening its own."""
+    if _OWNED.get() is not None:
+        return build(*args)
+    entries: list = []
+    token = _OWNED.set(entries)
+    try:
+        out = build(*args)
+    except BaseException:
+        _release(entries)
+        raise
+    finally:
+        _OWNED.reset(token)
+    if entries:
+        weakref.finalize(out, _release, entries).atexit = False
+    return out
 
 
 def conf_bytes(spark, key: str, default: int) -> int:

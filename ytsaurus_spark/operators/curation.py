@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ytsaurus_spark.operators import materialize
+
 # A deterministic per-row hash in [0, 100) that DuckDB reproduces exactly:
 # first 4 hex chars of md5 of the stringified id. Used for sampling so the
 # "same rows on re-run" guarantee holds across engines and cluster sizes
@@ -458,7 +460,7 @@ def select_to_budget(
             f"(CAST(size(array_distinct(split(`{text_col}`, ' '))) AS BIGINT)"
             f" * 1000000) div size(split(`{text_col}`, ' '))"
         ).cast("long").alias("priority"),
-    ).persist()
+    ).transform(materialize)
     # integer ordering key: priority DESC, doc_id ASC
     keyed = stats.withColumn(
         "__k",
@@ -528,7 +530,7 @@ def balanced_shards(
     est = docs.select(
         F.col(id_col),
         F.expr(f"CAST(({chars_col} + 3) div 4 AS BIGINT)").alias("est_tokens"),
-    ).persist()  # consumed by prefix_sum (twice) and the corpus total
+    ).transform(materialize)  # consumed by prefix_sum (twice) and the corpus total
     with_prefix = prefix_sum(est, id_col, "est_tokens", out_col="__prefix")
     total = est.agg(F.sum("est_tokens").cast("long").alias("__total"))
     # all-integer: shard_size = ceil(total / S) via (total + S - 1) div S —
@@ -646,7 +648,7 @@ def source_cap(
     # both union branches consume the ranked frame; persist the narrow
     # (id, source, order, salt, rk1) projection so the corpus is scanned
     # and salt-shuffled once, not once per branch
-    phase1 = salted.withColumn("__rk1", F.row_number().over(w1)).persist()
+    phase1 = salted.withColumn("__rk1", F.row_number().over(w1)).transform(materialize)
     early_dropped = phase1.filter(F.col("__rk1") > cap).select(
         id_col, source_col, order_col, F.lit(False).alias("kept")
     )
@@ -813,7 +815,7 @@ def dsir_select(
     cx = (
         feat.groupBy(id_col, "__is_t", "b")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
+        .transform(materialize)
     )
     tb = cx.groupBy("b").agg(
         F.sum(F.when(F.col("__is_t"), F.col("c")).otherwise(0)).alias("tc"),

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ytsaurus_spark.operators import materialize
+
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact duplicate groups: md5(text) → (hash, canonical id, count).
@@ -213,7 +215,7 @@ def minhash_lsh_incremental(
     # two-or-three evaluations of the minhash scan pipeline.
     new_sigs = band_signatures(
         new_docs, text_col, id_col, num_hashes, band_rows, shingle_k
-    ).persist()
+    ).transform(materialize)
     updated = stored_sigs.unionByName(new_sigs)
     right = updated
     if max_bucket is not None:
@@ -273,7 +275,7 @@ def cluster_pairs(
 
     sym = edges.union(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).repartition(keyed_cache_width(pairs), F.col("v")).persist()
+    ).repartition(keyed_cache_width(pairs), F.col("v")).transform(materialize)
     labels = (
         sym.select(F.col("u").alias("node"))
         .distinct()
@@ -492,7 +494,7 @@ def semantic_dedup(
     # reuse intact — the EAGER checkpoint tried earlier defeated it and
     # was ~1.7× slower (see kmeans_iterations note). Values unchanged:
     # same plan, materialized once per invocation.
-    withn = withc.withColumn("_nn", F.expr(_dot("v", "v"))).persist()
+    withn = withc.withColumn("_nn", F.expr(_dot("v", "v"))).transform(materialize)
     withc = withn.drop("_nn")
     a = withn.select(
         F.col(id_col).alias("a_id"), F.col("v").alias("av"), "cell",
@@ -723,7 +725,7 @@ def incremental_minhash_dedup(
     # persists: MEMORY_AND_DISK, LRU-evicted, optimization-only.
     sigs = band_signatures(
         new_docs, text_col, id_col, num_hashes, band_rows, shingle_k
-    ).persist()
+    ).transform(materialize)
     # duplicates of history: any band collides with the index
     dup_hist = (
         sigs.join(
@@ -829,7 +831,7 @@ def exact_substring_coverage(
                 f"ELSE array() END"
             )
         ).alias("pos", "g"),
-    ).persist()
+    ).transform(materialize)
     dup_grams = (
         grams.groupBy("g")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -929,7 +931,7 @@ def containment_pairs(
     inter·den ≥ num·min(|A|, |B|); the reported ratio takes one
     half-up floor. Returns (doc_a, doc_b, inter, n_a, n_b,
     containment_small)."""
-    sh = _shingles(docs, text_col, id_col, shingle_k).distinct().persist()
+    sh = _shingles(docs, text_col, id_col, shingle_k).distinct().transform(materialize)
     rare = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).cast("long").alias("__f"))

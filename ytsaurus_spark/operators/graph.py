@@ -15,18 +15,24 @@ shuffles per iteration at any scale, dominated by the edge list — the
 canonical distributed PageRank plan. Dangling mass (nodes without
 out-edges) redistributes uniformly, so total rank stays 1.
 
-Persist lifecycle: these operators persist their loop-invariant inputs
-(edge lists, adjacency) because every propagation round re-reads them;
-the caches are MEMORY_AND_DISK and LRU-evicted, and live for the
-returned plan's lifetime. A session running many graph queries
-back-to-back can reclaim storage eagerly by unpersisting after the
-result is materialized — the cache is an optimization, never a
-correctness dependency."""
+Cache ownership: these operators cache their loop-invariant inputs
+(edge lists, adjacency) through ``operators.materialize`` because every
+propagation round re-reads them. A registry query owns every cache its
+build creates (``operators.owned``) and releases them all when the
+caller drops the returned frame. The only releases written here are
+the per-round unpersists of label_propagation and kcore, each dropping
+the previous iterate; connected_components and _min_plus_rounds keep
+every round cached until the owner releases them (see
+_min_plus_rounds). Called directly, outside a registry query, an
+operator's caches are the caller's to release; the cache is an
+optimization, never a correctness dependency."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ytsaurus_spark.operators import materialize
 
 __all__ = ["pagerank", "connected_components", "triangle_count", "bfs_layers"]
 
@@ -78,19 +84,19 @@ def pagerank(
         edges.groupBy(src_col, dst_col)
         .agg(F.count(F.lit(1)).alias("__w"))
         .repartition(width, F.col(src_col))
-        .persist()
+        .transform(materialize)
     )
     nodes = (
         edges.select(F.col(src_col).alias("node"))
         .union(edges.select(F.col(dst_col).alias("node")))
         .distinct()
-        .persist()
+        .transform(materialize)
     )
     n_nodes = nodes.agg(F.count(F.lit(1)).alias("n"))
     # out-degree (parallel edges counted) per source
     outdeg = edges.groupBy(F.col(src_col).alias("node")).agg(
         F.sum("__w").alias("deg")
-    ).persist()
+    ).transform(materialize)
     ranks = nodes.crossJoin(F.broadcast(n_nodes)).select(
         "node", (F.lit(1.0) / F.col("n")).alias("rank")
     )
@@ -160,7 +166,7 @@ def _symmetrize(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
         # once per round (guide §2.4); width byte-derived so the cache
         # stays as narrow as AQE would have made a plain persist
         .repartition(width, F.col("u"))
-        .persist()
+        .transform(materialize)
     )
 
 
@@ -193,7 +199,7 @@ def connected_components(
         sym.select(F.col("u").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("comp"))
-        .persist()
+        .transform(materialize)
     )
     # converge mode: the cap must exceed the graph diameter (min-label
     # propagation needs ~diameter rounds); raise rather than silently
@@ -219,7 +225,8 @@ def connected_components(
             # checkpoint dir instead (same call shape).
             nxt = nxt.localCheckpoint()
         else:
-            nxt = nxt.persist()
+            # kept until the owner releases it, see _min_plus_rounds
+            nxt = materialize(nxt)
         if converge:
             changed = (
                 nxt.join(labels.withColumnRenamed("comp", "old"), "node")
@@ -227,11 +234,9 @@ def connected_components(
                 .count()
             )
             if changed == 0:
-                labels.unpersist()
                 labels = nxt
                 converged = True
                 break
-        labels.unpersist()
         labels = nxt
     if not converged:
         raise RuntimeError(
@@ -264,7 +269,7 @@ def triangle_count(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .persist()  # referenced 3× below (directly + twice via deg)
+        .transform(materialize)  # referenced 3× below (directly + twice via deg)
     )
     deg = (
         und.select(F.explode(F.array("a", "b")).alias("node"))
@@ -287,7 +292,7 @@ def triangle_count(
             .alias("e")
         )
         .select("e.u", "e.v")
-        .persist()
+        .transform(materialize)
     )
     e1 = oriented.select(F.col("u").alias("x"), F.col("v").alias("y"))
     e2 = oriented.select(F.col("u").alias("y"), F.col("v").alias("z"))
@@ -327,11 +332,14 @@ def _min_plus_rounds(sym, sources, rounds: int, step) -> DataFrame:
     (step = dist + 1) and ``sssp_weighted`` (step = dist + w): each
     synchronous round is one node-keyed equi-join + one min-aggregate
     over the persisted adjacency ``sym`` (columns u, v, and whatever
-    ``step`` references), |V|+|E| rows per round, frontier persisted and
-    the previous round's cache released."""
+    ``step`` references), |V|+|E| rows per round. Every round's frontier
+    stays cached until the query's owner releases them all: releasing
+    the previous round first would replan the not-yet-filled next round
+    from source, and a round reads its input twice (the union), so the
+    recomputation doubles per round."""
     dist = sources.select(F.col(sources.columns[0]).alias("node")).distinct().select(
         "node", F.lit(0).cast("long").alias("dist")
-    ).persist()
+    ).transform(materialize)
     for _ in range(rounds):
         nxt = (
             dist.select("node", "dist")
@@ -341,9 +349,8 @@ def _min_plus_rounds(sym, sources, rounds: int, step) -> DataFrame:
             )
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .persist()
+            .transform(materialize)
         )
-        dist.unpersist()
         dist = nxt
     return dist
 
@@ -390,7 +397,7 @@ def sssp_weighted(
         # pre-partition on u like _symmetrize: every relaxation round
         # joins on u, so the edge-scale exchange happens once at build
         .repartition(keyed_cache_width(edges), F.col("u"))
-        .persist()
+        .transform(materialize)
     )
     return _min_plus_rounds(sym, sources, rounds, F.col("dist") + F.col("w"))
 
@@ -415,12 +422,12 @@ def label_propagation(
     global. The symmetrized edge list is persisted once and reused
     every round; labels re-persist per round and unpersist the previous
     iterate. Returns (node, label)."""
-    sym = _symmetrize(edges, src_col, dst_col).persist()
+    sym = _symmetrize(edges, src_col, dst_col)
     labels = (
         sym.select(F.col("u").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
-        .persist()
+        .transform(materialize)
     )
     pick_w = Window.partitionBy("node").orderBy(
         F.col("c").desc(), F.col("label")
@@ -434,8 +441,10 @@ def label_propagation(
             .withColumn("__rk", F.row_number().over(pick_w))
             .filter(F.col("__rk") == 1)
             .select("node", "label")
-            .persist()
+            .transform(materialize)
         )
+        # a round reads labels once, so the replan this uncache causes
+        # stays linear; measured flat against keeping every round
         labels.unpersist()
         labels = nxt
     return labels
@@ -474,7 +483,7 @@ def jaccard_link_prediction(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .persist()  # consumed by sym (twice via union) and the anti-join
+        .transform(materialize)  # consumed by sym (twice via union) and the anti-join
     )
     sym = und.select(
         F.col("a").alias("w"), F.col("b").alias("n")
@@ -543,8 +552,11 @@ def kcore(
     Per round: ONE node-keyed equi-join of the symmetric edge list
     against the alive set (both endpoints must survive) + one count
     aggregate — |E|+|V| rows per round, never materializing the induced
-    subgraph. The alive frames are node-sized and localCheckpoint-free;
-    the symmetric edge list persists once.
+    subgraph. The symmetric edge list persists once. Each round's
+    node-sized alive frame is filled by one count before the previous
+    round's cache is dropped: left lazy, the rounds run no build job but
+    their work moves into the action, which then takes twice as long
+    (SCALE.md, "fold, push, or persist", 2026-10-18).
 
     Returns (node, deg) for nodes alive after ``rounds`` peels; deg is
     measured in the last peel's input subgraph (the round-``rounds``
@@ -552,7 +564,7 @@ def kcore(
     oracle CTEs round for round."""
     if rounds < 1:
         raise ValueError(f"kcore requires rounds >= 1, got {rounds}")
-    sym = _symmetrize(edges, src_col, dst_col).persist()
+    sym = _symmetrize(edges, src_col, dst_col)
     alive = sym.select(F.col("u").alias("node")).distinct()
     out = prev = None
     for _ in range(rounds):
@@ -564,7 +576,7 @@ def kcore(
             .groupBy(F.col("u").alias("node"))
             .agg(F.count(F.lit(1)).cast("long").alias("deg"))
         )
-        out = deg.filter(F.col("deg") >= k).persist()
+        out = materialize(deg.filter(F.col("deg") >= k))
         out.count()  # materialize before dropping the prior round's cache
         if prev is not None:
             prev.unpersist()
@@ -605,11 +617,11 @@ def modularity(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .persist()  # edge count, intra join, and degrees share it
+        .transform(materialize)  # edge count, intra join, and degrees share it
     )
     comm = communities.select(
         F.col(node_col).alias("__n"), F.col(label_col).alias("__lab")
-    ).persist()
+    ).transform(materialize)
     m = und.agg(F.count(F.lit(1)).cast("long").alias("m"))
     ca = comm.select(F.col("__n").alias("a"), F.col("__lab").alias("lab_a"))
     cb = comm.select(F.col("__n").alias("b"), F.col("__lab").alias("lab_b"))
@@ -646,7 +658,7 @@ def modularity(
                 - F.col("degree_sum") * F.col("degree_sum")
             ).cast("long"),
         )
-        .persist()  # the global Q and the per-community rows share it
+        .transform(materialize)  # the global Q and the per-community rows share it
     )
     tot = per.agg(
         F.sum("q_num").cast("long").alias("qn"),

@@ -39,6 +39,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ytsaurus_spark.operators import materialize
+
 MapFn = Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]
 ReduceFn = Callable[[pd.DataFrame], pd.DataFrame]
 KeyedReduceFn = Callable[[tuple, pd.DataFrame], pd.DataFrame]
@@ -105,7 +107,7 @@ def run_map_multi_output(
     yt/yt/ytlib/scheduler/config.h:1975). The mapper emits a ``tag_col``
     table index per row; each output is a filtered view of ONE mapped
     pass — Spark caches the mapped frame so the map runs once, not N times."""
-    mapped = run_map(df, mapper, output_schema).cache()
+    mapped = run_map(df, mapper, output_schema).transform(materialize)
     return [
         mapped.filter(F.col(tag_col) == i).drop(tag_col) for i in range(num_outputs)
     ]

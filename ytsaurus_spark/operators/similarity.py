@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ytsaurus_spark.operators import spread_scan
+from ytsaurus_spark.operators import materialize, spread_scan
 
 # Deterministic pseudo-random hyperplane coefficient for (plane h, dim d):
 # integer formula, identical in any engine. Values in [-3, 3].
@@ -1368,14 +1368,14 @@ def _pc1_centered(emb, quant, id_col, vec_col):
         "vid",
         "i",
         F.round(F.col("xv").cast("double") * quant).cast("long").alias("c"),
-    ).persist()  # per-dim stats + the centering join both read it
+    ).transform(materialize)  # per-dim stats + the centering join both read it
     stats = el.groupBy("i").agg(
         F.sum("c").cast("long").alias("m"),
         F.count(F.lit(1)).cast("long").alias("n"),
     )
     return el.join(F.broadcast(stats), "i").select(
         "vid", "i", (F.col("n") * F.col("c") - F.col("m")).cast("long").alias("y")
-    ).persist()  # both legs of the covariance self-join + any projection
+    ).transform(materialize)  # both legs of the covariance self-join + any projection
 
 
 def _pc1_iterates(y, iterations: int, scale: int):
@@ -1515,7 +1515,7 @@ def label_centroid_similarity(
     ).select("lab", "i", F.round(F.col("xv") * quant).cast("long").alias("c"))
     cent = el.groupBy("lab", "i").agg(
         F.sum("c").cast("long").alias("s")
-    ).persist()  # labels×dims; consumed by norms and both pair legs
+    ).transform(materialize)  # labels×dims; consumed by norms and both pair legs
     norms = cent.groupBy("lab").agg(
         F.sum(F.col("s") * F.col("s")).cast("long").alias("n2")
     )
@@ -1591,7 +1591,7 @@ def labeled_retrieval_eval(
     )
     base = emb.select(
         F.col(id_col), codes.alias("__codes"), F.col(label_col).alias("__lab")
-    ).persist()  # one code projection serves queries, candidates, and the
+    ).transform(materialize)  # one code projection serves queries, candidates, and the
     # per-label relevant counts (one corpus scan total)
     q = base.filter(F.col(id_col) % stride == 0).select(
         F.col(id_col).alias("q_id"),
@@ -1687,7 +1687,7 @@ def centroid_silhouette(
         F.col(id_col),
         F.col(label_col).alias("own"),
         F.posexplode(codes).alias("i", "c"),
-    ).persist()  # one decode of the element stream feeds centroids, counts,
+    ).transform(materialize)  # one decode of the element stream feeds centroids, counts,
     # and the distance aggregate (keeps the query at ONE corpus scan)
     nl = el.filter(F.col("i") == 0).groupBy(F.col("own").alias("lab")).agg(
         F.count(F.lit(1)).cast("long").alias("n")
@@ -1896,7 +1896,7 @@ def labeled_ndcg_at_k(
     )
     base = emb.select(
         F.col(id_col), codes.alias("__codes"), F.col(label_col).alias("__lab")
-    ).persist()  # one code projection: queries, candidates, label counts
+    ).transform(materialize)  # one code projection: queries, candidates, label counts
     q = base.filter(F.col(id_col) % stride == 0).select(
         F.col(id_col).alias("q_id"),
         F.col("__codes").alias("qc"),
@@ -2097,7 +2097,7 @@ def embedding_outliers(
         F.col(id_col),
         F.col(label_col).alias("lab"),
         F.posexplode(codes).alias("i", "c"),
-    ).persist()  # centroids and the distance pass share one decode
+    ).transform(materialize)  # centroids and the distance pass share one decode
     cent = el.groupBy("lab", "i").agg(F.sum("c").cast("long").alias("s"))
     nl = el.filter(F.col("i") == 0).groupBy("lab").agg(
         F.count(F.lit(1)).cast("long").alias("n")
@@ -2111,7 +2111,7 @@ def embedding_outliers(
             F.sum(diff * diff).cast("long").alias("qq"),
             F.first("n").alias("n"),
         )
-    ).persist()  # label means and the flag projection share it
+    ).transform(materialize)  # label means and the flag projection share it
     means = q.groupBy("lab").agg(F.sum("qq").cast("long").alias("sq"))
     flagged = q.join(F.broadcast(means), "lab").select(
         "lab",

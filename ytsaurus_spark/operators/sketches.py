@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ytsaurus_spark.operators import materialize
+
 __all__ = ["kmv_build", "kmv_estimate", "kmv_merge", "kmv_intersect_estimate"]
 
 _H = float(1 << 32)  # hash space size
@@ -213,7 +215,7 @@ def log2_quantile_sketch(
         df.select(binc.alias("bin"))
         .groupBy("bin")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()  # <=64 rows; prefix sum + total share it
+        .transform(materialize)  # <=64 rows; prefix sum + total share it
     )
     cum = prefix_sum(h, "bin", "c", out_col="__below").select(
         "bin", "c", (F.col("__below") + F.col("c")).cast("long").alias("cum")

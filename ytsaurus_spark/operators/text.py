@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ytsaurus_spark.operators import materialize
+
 # Tiny function-word list for the ratio features (synthetic corpus is
 # English-like; real pipelines plug in per-language lists).
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
@@ -309,7 +311,7 @@ def lm_score(
     # aggregates each re-scanned and re-exploded the corpus; with the
     # lazy persist the corpus is scanned exactly twice (train + score),
     # the documented scale posture.
-    joint = bg.groupBy("bg").agg(F.count(F.lit(1)).alias("c_bg")).persist()
+    joint = bg.groupBy("bg").agg(F.count(F.lit(1)).alias("c_bg")).transform(materialize)
     prefix = joint.groupBy(F.substring("bg", 1, 1).alias("c1")).agg(
         F.sum("c_bg").alias("c_pre")
     )
@@ -594,7 +596,7 @@ def unigram_surprisal(
     words = docs.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("w")
     )
-    dw = words.groupBy(id_col, "w").agg(F.count(F.lit(1)).alias("c")).persist()
+    dw = materialize(words.groupBy(id_col, "w").agg(F.count(F.lit(1)).alias("c")))
     wc = dw.groupBy("w").agg(F.sum("c").alias("cnt"))
     total = wc.agg(F.sum("cnt").alias("total"))
 
@@ -680,7 +682,7 @@ def bigram_surprisal(
     dbg = (
         grams.groupBy(id_col, "w1", "w2")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
+        .transform(materialize)
     )
     bg_counts = dbg.groupBy("w1", "w2").agg(F.sum("c").alias("bg_cnt"))
     ctx_counts = bg_counts.groupBy("w1").agg(F.sum("bg_cnt").alias("ctx_cnt"))
@@ -809,7 +811,7 @@ def cooccurrence_lift(
     toks = docs.select(
         F.col(id_col),
         F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok"),
-    ).filter(F.length("tok") > 0).persist()
+    ).filter(F.length("tok") > 0).transform(materialize)
     right = toks.select(
         F.col(id_col).alias("__rid"),
         F.col("pos").alias("rpos"),
@@ -866,7 +868,7 @@ def oov_rate(
     of exact integer counts."""
     words = docs.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok")
-    ).filter(F.length("tok") > 0).persist()  # vocab + scoring consumers
+    ).filter(F.length("tok") > 0).transform(materialize)  # vocab + scoring consumers
     vocab = (
         words.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("__c"))
@@ -923,7 +925,7 @@ def langid_ngram(
     words = docs.select(
         F.col(id_col), F.col(label_col).alias("__lab"),
         F.explode(F.split(F.col(text_col), " ")).alias("tok"),
-    ).filter(F.length("tok") > 0).persist()
+    ).filter(F.length("tok") > 0).transform(materialize)
 
     lp_w = W.partitionBy("__lab").orderBy(F.col("__c").desc(), "tok")
     lang_prof = (
@@ -1005,7 +1007,7 @@ def bm25_topk(
 
     words = docs.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok")
-    ).filter(F.length("tok") > 0).persist()  # tf + dl consumers
+    ).filter(F.length("tok") > 0).transform(materialize)  # tf + dl consumers
     tf = words.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("tf"))
     dl = words.groupBy(id_col).agg(F.count(F.lit(1)).alias("dl"))
     stats = dl.agg(
@@ -1105,7 +1107,7 @@ def auc(
         F.sum(F.when(F.col(label_col), 0).otherwise(1))
         .cast("long")
         .alias("neg_g"),
-    ).persist()  # score-grain (tiny); prefix_sum fans out into several
+    ).transform(materialize)  # score-grain (tiny); prefix_sum fans out into several
     # consumers of its input, and without this each one re-runs the
     # full corpus scan + feature chain
     cum = prefix_sum(g, score_col, "neg_g", out_col="__neg_below")
@@ -1163,7 +1165,7 @@ def zipf_fit(
         vocab.groupBy("c")
         .agg(F.count(F.lit(1)).cast("long").alias("nw"))
         .withColumn("negc", -F.col("c"))
-        .persist()  # band-grain (tiny); prefix_sum fans out consumers
+        .transform(materialize)  # band-grain (tiny); prefix_sum fans out consumers
     )
     ranked = prefix_sum(bands, "negc", "nw", out_col="__above")
 
@@ -1244,7 +1246,7 @@ def calibration_ece(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("pos").cast("long").alias("n_pos"),
         F.sum("conf_micro").cast("long").alias("conf_micros"),
-    ).persist()  # <=bins rows; the ECE total and the bin table both consume it
+    ).transform(materialize)  # <=bins rows; the ECE total and bin table read it
     tot = g.agg(
         F.sum("n").cast("long").alias("__n_total"),
         F.sum(F.abs(F.col("n_pos") * 1000000 - F.col("conf_micros")))
@@ -1427,7 +1429,7 @@ def vocab_divergence(
         F.explode(F.split(F.col(text_col), " ")).alias("w"),
     ).filter(F.length("w") > 0)
     gc = words.groupBy("g", "w").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    gc = gc.persist()  # totals + pivot share the (group, token) counts
+    gc = materialize(gc)  # totals + pivot share the (group, token) counts
     piv = (
         gc.groupBy("w")
         .agg(
@@ -1488,7 +1490,7 @@ def boilerplate_line_stats(
         F.col(id_col).alias("__id"),
         F.col(group_col).alias("grp"),
         F.explode(F.split(F.col(text_col), "\n")).alias("line"),
-    ).filter(F.length("line") > 0).persist()  # df count + removal scan
+    ).filter(F.length("line") > 0).transform(materialize)  # df count + removal scan
     df_t = (
         lines.select("__id", "line")
         .distinct()

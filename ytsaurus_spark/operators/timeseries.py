@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ytsaurus_spark.operators import materialize
+
 __all__ = ["gap_fill", "resample", "mad_outliers", "interval_join", "ewma", "holt_linear", "lag_corr", "seasonal_decompose", "cusum_changepoint", "rolling_median"]
 
 
@@ -325,7 +327,7 @@ def lag_corr(
     # Both sides of the lag join read ``daily``; persist so the upstream
     # per-day corpus aggregation materializes once (the frame itself is
     # one-row-per-day tiny — the cache is the plan dedup, not capacity).
-    daily = daily.persist()
+    daily = materialize(daily)
     lags = (
         daily.sparkSession.range(max_lag + 1)
         .select(F.col("id").cast("int").alias("lag"))
@@ -420,7 +422,7 @@ def seasonal_decompose(
     ).withColumn(
         "detr_p",
         (F.lit(period) * F.col("x") - F.col("trend_p")).cast("long"),
-    ).persist()  # phase means + final projection both read it
+    ).transform(materialize)  # phase means + final projection both read it
     phase_means = base.filter(F.col("detr_p").isNotNull()).groupBy(
         *keys, "phase"
     ).agg(
@@ -475,7 +477,7 @@ def cusum_changepoint(
     whose input contract is the aggregate-sized per-day frame (one
     corpus shuffle upstream). BIGINT bound: n·Σ|x| < 2^63."""
     keys = [key_col] if key_col else []
-    daily = daily.persist()  # totals + the cusum pass both read it
+    daily = materialize(daily)  # totals + the cusum pass both read it
     tot = daily.groupBy(*keys).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(x_col).cast("long").alias("s"),
@@ -598,7 +600,7 @@ def lttb_downsample(
             F.expr(f"(mx - mn) div {n_buckets}") + 1,
         ).alias("span"),
     )
-    pts = spanned.withColumn("bucket", F.expr("x div span")).persist()
+    pts = spanned.withColumn("bucket", F.expr("x div span")).transform(materialize)
     bag = pts.groupBy("series", "bucket").agg(
         F.count(F.lit(1)).cast("long").alias("c"),
         F.sum("yc").cast("long").alias("sy"),
@@ -672,7 +674,7 @@ def theilsen_trend(
     from pyspark.sql import Window as W
 
     keys = [key_col] if key_col else []
-    daily = daily.persist()  # both pair-join legs, the residual pass, and
+    daily = materialize(daily)  # both pair-join legs, the residual pass, and
     # the count all re-read the (small) grid frame
     a = daily.select(
         *keys, F.col(x_col).alias("xi"), F.col(y_col).alias("yi")
@@ -693,7 +695,7 @@ def theilsen_trend(
             (F.col("yj") - F.col("yi")).cast("double")
             / (F.col("xj") - F.col("xi")).cast("double")
         ).alias("slope"),
-    ).persist()  # pair frame (grid-bounded); count + rank share it
+    ).transform(materialize)  # pair frame (grid-bounded); count + rank share it
     np_ = pairs.groupBy(*keys).agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs")
     )
@@ -761,7 +763,7 @@ def binary_segmentation(
     keys = [key_col] if key_col else []
     daily = daily.select(
         *keys, F.col(x_col).alias("d"), F.col(y_col).alias("y")
-    ).persist()
+    ).transform(materialize)
 
     def seg_peaks(segged: DataFrame, level: int) -> DataFrame:
         stats = segged.groupBy(*keys, "seg").agg(
@@ -798,7 +800,7 @@ def binary_segmentation(
             )
         )
 
-    l1 = seg_peaks(daily.withColumn("seg", F.lit(0)), 1).persist()
+    l1 = seg_peaks(daily.withColumn("seg", F.lit(0)), 1).transform(materialize)
     cp1 = l1.select(*keys, F.col("cp").alias("cp1"))
     segged2 = _join_small(daily, cp1, keys).withColumn(
         "seg", F.when(F.col("d") <= F.col("cp1"), 1).otherwise(2)

@@ -68,15 +68,20 @@ def _with_session_bootstrap(fn: SparkQuery) -> SparkQuery:
     """Wrap a query so a caller-provided session is self-configured first
     (nanosAsLong / UTC / Arrow confs) — see session.ensure_runtime_confs.
     Catalog.__post_init__ does the same; this covers queries that build
-    inputs without going through the catalog."""
+    inputs without going through the catalog.
+
+    The wrapper also owns the query's caches (``operators.owned``): every
+    frame the build materializes is released once the caller drops the
+    returned frame, so no cached block outlives its query."""
     import functools
 
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from ytsaurus_spark.operators import owned
         from ytsaurus_spark.session import ensure_runtime_confs
 
         ensure_runtime_confs(spark)
-        return fn(spark, sf_dir)
+        return owned(fn, spark, sf_dir)
 
     return wrapped
 

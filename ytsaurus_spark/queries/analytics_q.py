@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ytsaurus_spark.catalog import load_tables
+from ytsaurus_spark.operators import materialize
 from ytsaurus_spark.queries import register
 
 
@@ -1210,7 +1211,7 @@ def graph_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     are absent on both sides."""
     from ytsaurus_spark.operators.graph import bfs_layers
 
-    edges = _copurchase_edges(spark, sf_dir).persist()
+    edges = _copurchase_edges(spark, sf_dir).transform(materialize)
     sym_nodes = (
         edges.select(F.explode(F.array("src", "dst")).alias("node")).distinct()
     )
@@ -1275,7 +1276,7 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("pa", "pb").alias("dst"),
         )
         .agg(F.min(F.col("qa") + F.col("qb")).cast("long").alias("w"))
-        .persist()
+        .transform(materialize)
     )
     sym_nodes = edges.select(
         F.explode(F.array("src", "dst")).alias("node")
@@ -1583,7 +1584,7 @@ def analytics_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
         .cast("long")
         .alias("mon"),
-    ).persist()  # customer grain; feeds the anchor aggregate and c2
+    ).transform(materialize)  # customer grain; feeds the anchor aggregate and c2
     # anchor = max over per-customer maxima == global max: no second orders scan
     anch = cust.agg(F.max("last_d").alias("ad"))
     c2 = cust.crossJoin(F.broadcast(anch)).select(
@@ -1591,7 +1592,7 @@ def analytics_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.col("ad"), F.col("last_d")).cast("long").alias("rec"),
         "freq",
         "mon",
-    ).persist()  # consumed by three histograms + the final join
+    ).transform(materialize)  # consumed by three histograms + the final join
     tot = c2.agg(F.count(F.lit(1)).cast("long").alias("n"))
 
     def tile_map(key: str, descending: bool) -> DataFrame:
@@ -1715,7 +1716,7 @@ def analytics_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
         cat.read("lineitem")
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
         .distinct()
-        .persist()  # basket grain; pair join + supports + order count
+        .transform(materialize)  # basket grain; pair join + supports + order count
     )
     b2 = b.select(F.col("ok").alias("ok2"), F.col("pk").alias("pk2"))
     pairs = (
@@ -1819,7 +1820,7 @@ def analytics_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .withColumn("band_rev", (F.col("rev_tt") * F.col("n")).cast("long"))
         .withColumn("__negr", -F.col("rev_tt"))
-        .persist()  # band grain; prefix_sum + total share it
+        .transform(materialize)  # band grain; prefix_sum + total share it
     )
     cum = prefix_sum(h, "__negr", "band_rev", out_col="rev_above")
     tot = h.agg(F.sum("band_rev").cast("long").alias("t"))

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ytsaurus_spark.catalog import load_tables
-from ytsaurus_spark.operators import curation
+from ytsaurus_spark.operators import curation, materialize
 from ytsaurus_spark.queries import register
 
 PACK_BUDGET = 2048
@@ -320,7 +320,7 @@ def pipeline_training_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         train.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
-        .persist()
+        .transform(materialize)
     )
     dirty = curation.contamination_check(dd, bench, k=5).select("doc_id")
     clean = (
@@ -490,7 +490,7 @@ def curation_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "lang", "source",
         F.md5("text").alias("h"),
         F.size(F.split("text", " ")).alias("n_toks"),
-    ).persist()  # top_lang + main aggregate consumers
+    ).transform(materialize)  # top_lang + main aggregate consumers
     top_lang = (
         docs.groupBy("lang")
         .agg(F.count(F.lit(1)).alias("__c"))

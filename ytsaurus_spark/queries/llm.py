@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ytsaurus_spark.catalog import load_tables
-from ytsaurus_spark.operators import dedup, similarity, text, timeseries
+from ytsaurus_spark.operators import dedup, materialize, similarity, text, timeseries
 from ytsaurus_spark.queries import local_result, register
 
 
@@ -495,7 +495,7 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
-        .persist()
+        .transform(materialize)
     )
     pairs = dedup.minhash_lsh_pairs(canon_docs, num_hashes=8, band_rows=2, shingle_k=3)
     near_dup_ids = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
@@ -2398,7 +2398,7 @@ def dedup_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets / shingle buckets); the eval itself is a pair-keyed full
     outer join. At 100 TB the exact-truth leg runs on a sampled slice —
     the detector leg is the production path being audited."""
-    docs = load_tables(spark, sf_dir).read("documents").persist()
+    docs = load_tables(spark, sf_dir).read("documents").transform(materialize)
     pred = dedup.minhash_lsh_pairs(
         docs, num_hashes=8, band_rows=2, shingle_k=3,
     ).select("doc_a", "doc_b")
@@ -2549,7 +2549,7 @@ def pipeline_refinedweb(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the passage-grain chain. One chunk-hash shuffle, one doc
     reassembly shuffle, the rest scan-stage; the summary partial-aggs."""
     cat = load_tables(spark, sf_dir)
-    docs = cat.read("documents").persist()  # dedup chunking + source join
+    docs = cat.read("documents").transform(materialize)  # dedup chunking + source join
     from ytsaurus_spark.operators.curation import paragraph_dedup
 
     cleaned = paragraph_dedup(docs, chunk_chars=160).filter(
@@ -2924,7 +2924,7 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # otherwise re-derive the token stream 4x from the corpus scan
     toks = cat.read("documents").select(
         "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "tok")
-    ).filter(F.length("tok") > 0).select("doc_id", "tok", "pos").persist()
+    ).filter(F.length("tok") > 0).select("doc_id", "tok", "pos").transform(materialize)
     a = toks.select(
         F.col("doc_id").alias("da"), F.col("tok").alias("ta"),
         F.col("pos").alias("pa"),
@@ -4413,7 +4413,7 @@ def eval_spearman_quality_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = text.classifier_score(docs, extra_cols=("n_chars",)).select(
         F.col("n_chars").cast("long").alias("x"),
         F.round(F.col("quality_logit") * 10000).cast("long").alias("y"),
-    ).persist()  # histograms (x, y) + the moment aggregate share it
+    ).transform(materialize)  # histograms (x, y) + the moment aggregate share it
 
     def rank_map(col: str) -> DataFrame:
         h = scored.groupBy(col).agg(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ytsaurus_spark.catalog import load_tables
+from ytsaurus_spark.operators import materialize
 from ytsaurus_spark.queries import local_result, register
 
 
@@ -782,7 +783,7 @@ def ql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS next_k
         FROM orders
         """
-    ).persist()
+    ).transform(materialize)
     nxt.createOrReplaceTempView("__ql_rec_nxt")
     return spark.sql(
         """

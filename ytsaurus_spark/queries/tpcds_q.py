@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ytsaurus_spark.catalog import load_tables
+from ytsaurus_spark.operators import materialize
 from ytsaurus_spark.queries import register
 
 # channel derivation shared by every query (see module docstring)
@@ -178,7 +179,7 @@ def tpcds_q14_cross_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("amt").alias("__s"),
             F.count(F.lit(1)).cast("long").alias("__n"),
         )
-        .persist()
+        .transform(materialize)
     )
     cross_items = (
         cells.groupBy("brand", "class")
@@ -261,7 +262,7 @@ def tpcds_q23_frequent_best(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("__oym"),
             _amt().alias("__amt"),
         )
-        .persist()
+        .transform(materialize)
     )
     freq = (
         fact.filter(
