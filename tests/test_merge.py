@@ -177,9 +177,9 @@ def test_keyed_table_merge_rows(spark):
 
 
 def test_tx_table_merge_rows(spark, tmp_path):
-    from ytsaurus_spark.sources.tx_table import TxTable
+    from ytsaurus_spark.sources.tx_table import LogTxTable
 
-    t = TxTable(spark, str(tmp_path / "m"), key_cols=["k"])
+    t = LogTxTable(spark, str(tmp_path / "m"), key_cols=["k"])
     t.init(spark.createDataFrame([(1, 10.0), (2, 20.0)], "k bigint, v double"))
     s = spark.createDataFrame([(1, -1.0), (3, 3.0)], "k bigint, v double")
     v = t.merge_rows(

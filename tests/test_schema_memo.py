@@ -96,7 +96,7 @@ def _typed_frame(spark):
 
 
 def test_writer_seeded_entries_equal_inference(spark, tmp_path):
-    from ytsaurus_spark.sources.tx_table import LogTxTable, TxTable
+    from ytsaurus_spark.sources.tx_table import LogTxTable
     from ytsaurus_spark.streaming.queues import DurableQueue
 
     df = _typed_frame(spark)
@@ -105,10 +105,6 @@ def test_writer_seeded_entries_equal_inference(spark, tmp_path):
     log = LogTxTable(spark, str(tmp_path / "log"), key_cols=["k"])
     log.init(df)
     written.append(str(tmp_path / "log" / "s0"))
-
-    tx = TxTable(spark, str(tmp_path / "tx"), key_cols=["k"])
-    tx.init(df)
-    written.append(str(tmp_path / "tx" / "v0"))
 
     q = DurableQueue(spark, str(tmp_path / "q"))
     q.create_session("p").push_batch(df)
@@ -125,7 +121,7 @@ def test_writer_seeded_entries_equal_inference(spark, tmp_path):
         assert memo == spark.read.parquet(path).schema, path
 
     # the routed reads plan without inference and return the rows
-    for read in (log.read, tx.read, q.read, lambda: cat.read("typed")):
+    for read in (log.read, q.read, lambda: cat.read("typed")):
         out, jobs = _jobs(spark, read)
         assert jobs == 0
         assert out.count() == 3

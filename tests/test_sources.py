@@ -203,9 +203,9 @@ def test_log_tx_table_timestamp_read(spark, tmp):
 def test_tx_table_commit_timetravel(spark, tmp):
     import os
 
-    from ytsaurus_spark.sources.tx_table import TxTable
+    from ytsaurus_spark.sources.tx_table import LogTxTable
 
-    t = TxTable(spark, os.path.join(tmp, "txt"), key_cols=["k"], aggregates={"cnt": "sum"})
+    t = LogTxTable(spark, os.path.join(tmp, "txt"), key_cols=["k"], aggregates={"cnt": "sum"})
     base = spark.createDataFrame([(1, 10), (2, 20)], "k bigint, cnt bigint")
     v0 = t.init(base)
     v1 = t.insert_rows(spark.createDataFrame([(1, 5), (3, 7)], "k bigint, cnt bigint"))
@@ -216,7 +216,7 @@ def test_tx_table_commit_timetravel(spark, tmp):
     v2 = t.delete_rows(spark.createDataFrame([(2,)], "k bigint"))
     assert v2 == 2 and rows_set(t.read()) == {(1, 15), (3, 7)}
     # reopening from disk sees the same committed state
-    t2 = TxTable(spark, os.path.join(tmp, "txt"), key_cols=["k"], aggregates={"cnt": "sum"})
+    t2 = LogTxTable(spark, os.path.join(tmp, "txt"), key_cols=["k"], aggregates={"cnt": "sum"})
     assert t2.current_version() == 2
     assert rows_set(t2.read(1)) == {(1, 15), (2, 20), (3, 7)}
     import pytest as _pytest
@@ -447,6 +447,25 @@ def test_replicated_table_sync_async_fallback(spark, tmp):
     assert {r.k for r in rt2.read().collect()} == {9}
 
 
+def test_async_replica_ships_post_trim_base_across_a_version_gap(spark, tmp):
+    # The main log trims history down to a compaction base; a replica still
+    # at [s0] must accept s2 although s1 never reaches it (shipping has no
+    # stale-version check, unlike a transaction publish).
+    import time
+
+    from ytsaurus_spark.sources.replicas import ReplicatedTable
+
+    rt = ReplicatedTable(spark, os.path.join(tmp, "repl_gap"), key_cols=["k"])
+    rt.init(spark.createDataFrame([(1, 10)], "k bigint, v bigint"))
+    lag = rt.add_replica("lag", "async")
+    rt.insert_rows(spark.createDataFrame([(2, 20)], "k bigint, v bigint"))
+    rt.main.compact()
+    assert rt.main.trim_history(time.time() + 60) == 2
+    assert rt.tick() == {"lag": 1}
+    assert [s["v"] for s in lag.table._segments()] == [0, 2]
+    assert rows_set(lag.table.read()) == rows_set(rt.main.read()) == {(1, 10), (2, 20)}
+
+
 def test_log_tx_table_segment_range_pruning(spark, tmp):
     """Segments whose manifest key range cannot contain the requested keys
     are never opened: we MOVE a non-overlapping delta's directory away and
@@ -591,6 +610,7 @@ def test_multi_table_transaction_crash_recovery(spark, tmp):
     import os as _os
 
     from ytsaurus_spark.sources import transactions as T
+    from ytsaurus_spark.sources import tx_table as TT
 
     a, b = _two_tables(spark, tmp)
     coord = f"{tmp}/coord2"
@@ -598,13 +618,13 @@ def test_multi_table_transaction_crash_recovery(spark, tmp):
     tx.insert_rows(a, spark.createDataFrame([(5, 50)], "k bigint, v bigint"))
     tx.insert_rows(b, spark.createDataFrame([(5, 500)], "k bigint, v bigint"))
     # run prepare+intent by hand (commit minus the publish loop)
-    real_publish = T._publish_entry
+    real_publish = TT.publish_entry
     published = []
     try:
-        T._publish_entry = lambda p, e: published.append((p, e))  # swallow
+        TT.publish_entry = lambda p, e: published.append((p, e))  # swallow
         tx.commit()
     finally:
-        T._publish_entry = real_publish
+        TT.publish_entry = real_publish
     # "crash": intent exists (commit() removed it - recreate from captured)
     intent = {"tx_id": tx.tx_id,
               "participants": [{"table_path": p, "entry": e} for p, e in published]}
@@ -621,37 +641,37 @@ def test_multi_table_transaction_crash_recovery(spark, tmp):
 
 def test_multi_table_transaction_conflict_detection(spark, tmp):
     # A writer that lands BETWEEN staging and publish must make the
-    # publish fail loudly, never corrupt the log. Drive _publish_entry
+    # publish fail loudly, never corrupt the log. Drive publish_entry
     # directly (the commit path calls it) with the two conflict shapes.
-    from ytsaurus_spark.sources import transactions as T
+    from ytsaurus_spark.sources import tx_table as T
 
     a, _ = _two_tables(spark, tmp)
     staged = {"v": a.current_version() + 1, "kind": "delta",
               "ts": 0.0, "range": None}
     a.compact()  # interleaved commit takes that version (as a base)
     with pytest.raises(RuntimeError, match="conflicting commit"):
-        T._publish_entry(a.path, staged)
+        T.publish_entry(a.path, staged)
     # a staged version that is neither present nor exactly next is stale
     gap = dict(staged, v=a.current_version() + 2)
     with pytest.raises(RuntimeError, match="stale"):
-        T._publish_entry(a.path, gap)
+        T.publish_entry(a.path, gap)
 
 
 def test_multi_table_transaction_foreign_delta_conflict(spark, tmp):
     # A foreign writer's DELTA landing on the staged version between
     # stage and publish must raise, not be mistaken for our own publish
     # (identity = the entry's tx tag, not just kind).
-    from ytsaurus_spark.sources import transactions as T
+    from ytsaurus_spark.sources import tx_table as T
 
     a, _ = _two_tables(spark, tmp)
     staged = {"v": a.current_version() + 1, "kind": "delta",
               "ts": 0.0, "range": None, "tx": "me"}
     a.insert_rows(spark.createDataFrame([(9, 90)], "k bigint, v bigint"))
     with pytest.raises(RuntimeError, match="conflicting commit"):
-        T._publish_entry(a.path, staged)
+        T.publish_entry(a.path, staged)
     # re-publishing our OWN entry stays a no-op
     mine = dict(a._segments()[-1])
-    T._publish_entry(a.path, {**mine, "tx": mine.get("tx")})
+    T.publish_entry(a.path, {**mine, "tx": mine.get("tx")})
 
 
 def test_multi_table_transaction_update_same_table_refused(spark, tmp):
@@ -781,3 +801,102 @@ def test_freeze_unfreeze_tablet(spark, tmp):
     t.unfreeze()
     t.insert_rows(spark.createDataFrame([(2, 20)], "k bigint, v bigint"))
     assert t.read().count() == 2
+
+
+def _segment_dirs(path: str) -> set[str]:
+    import re
+
+    return {d for d in os.listdir(path) if re.fullmatch(r"s\d+", d)}
+
+
+def _manifest_dirs(t) -> set[str]:
+    return {f"s{s['v']}" for s in t._segments()}
+
+
+def test_frozen_insert_leaves_no_orphan_segment(spark, tmp):
+    # The mount gate runs before the segment write: a rejected insert
+    # must not leave an s{v} directory the manifest never names.
+    from ytsaurus_spark.sources.tx_table import FrozenTabletError, LogTxTable
+
+    t = LogTxTable(spark, f"{tmp}/frozen_orphan", ["k"])
+    t.init(spark.createDataFrame([(1, 10)], "k bigint, v bigint"))
+    t.insert_rows(spark.createDataFrame([(2, 20)], "k bigint, v bigint"))
+    t.freeze()
+    with pytest.raises(FrozenTabletError):
+        t.insert_rows(spark.createDataFrame([(3, 30)], "k bigint, v bigint"))
+    assert t.current_version() == 1
+    assert _segment_dirs(t.path) == _manifest_dirs(t) == {"s0", "s1"}
+
+
+def test_transaction_on_frozen_participant_aborts(spark, tmp):
+    # A frozen participant fails the transaction at staging, before the
+    # intent is written: both tables keep their state and the other
+    # participant's staged segment is removed.
+    from ytsaurus_spark.sources.transactions import MultiTableTransaction
+    from ytsaurus_spark.sources.tx_table import FrozenTabletError
+
+    a, b = _two_tables(spark, tmp)
+    b.freeze()
+    coord = f"{tmp}/coord_frozen"
+    tx = MultiTableTransaction(coord)
+    tx.insert_rows(a, spark.createDataFrame([(2, 20)], "k bigint, v bigint"))
+    tx.insert_rows(b, spark.createDataFrame([(2, 200)], "k bigint, v bigint"))
+    with pytest.raises(FrozenTabletError):
+        tx.commit()
+    tx.abort()
+    assert (a.current_version(), b.current_version()) == (0, 0)
+    assert rows_set(a.read()) == {(1, 10)} and rows_set(b.read()) == {(1, 100)}
+    for t in (a, b):
+        assert _segment_dirs(t.path) == {"s0"}
+    assert not [n for n in os.listdir(coord) if n.startswith("tx_")]
+
+
+def test_frozen_trim_history_is_rejected(spark, tmp):
+    # Frozen tablets suspend compaction, and retention trimming is
+    # compaction: nothing may be reclaimed while frozen.
+    import time
+
+    from ytsaurus_spark.sources.tx_table import FrozenTabletError, LogTxTable
+
+    t = LogTxTable(spark, f"{tmp}/frozen_trim", ["k"])
+    t.init(spark.createDataFrame([(1, 10)], "k bigint, v bigint"))
+    t.insert_rows(spark.createDataFrame([(2, 20)], "k bigint, v bigint"))
+    t.insert_rows(spark.createDataFrame([(3, 30)], "k bigint, v bigint"))
+    t.compact()
+    t.freeze()
+    with pytest.raises(FrozenTabletError):
+        t.trim_history(time.time() + 60)
+    assert _segment_dirs(t.path) == _manifest_dirs(t) == {"s0", "s1", "s2", "s3"}
+    assert rows_set(t.read(version=0)) == {(1, 10)}
+
+
+def test_recover_rolls_forward_once_participant_unfrozen(spark, tmp, monkeypatch):
+    # A decided transaction (intent written) whose participant is frozen
+    # before its publish stays decided: recover() fails while the table
+    # is frozen and rolls the transaction forward after unfreeze().
+    from ytsaurus_spark.sources import transactions as T
+    from ytsaurus_spark.sources import tx_table as TT
+
+    a, b = _two_tables(spark, tmp)
+    coord = f"{tmp}/coord_refreeze"
+    tx = T.MultiTableTransaction(coord)
+    tx.insert_rows(a, spark.createDataFrame([(3, 30)], "k bigint, v bigint"))
+    tx.insert_rows(b, spark.createDataFrame([(3, 300)], "k bigint, v bigint"))
+    real_publish = TT.publish_entry
+
+    def freeze_b_then_publish(path, entry):
+        b.freeze()  # frozen after the decision, before any publish
+        real_publish(path, entry)
+
+    monkeypatch.setattr(TT, "publish_entry", freeze_b_then_publish)
+    with pytest.raises(TT.FrozenTabletError):
+        tx.commit()
+    monkeypatch.undo()
+    assert b.current_version() == 0
+    with pytest.raises(RuntimeError, match="unrecoverable"):
+        T.recover(coord)
+    assert b.current_version() == 0
+    b.unfreeze()
+    assert T.recover(coord) == 1
+    assert rows_set(a.read()) == {(1, 10), (3, 30)}
+    assert rows_set(b.read()) == {(1, 100), (3, 300)}

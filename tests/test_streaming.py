@@ -295,14 +295,14 @@ def test_queue_to_txtable_durable_pipeline(spark, stream_dir):
     intermediate version is time-travel readable."""
     import datetime as _dt
 
-    from ytsaurus_spark.sources.tx_table import TxTable
+    from ytsaurus_spark.sources.tx_table import LogTxTable
     from ytsaurus_spark.streaming.queues import QueueConsumer, pull_and_advance
 
     ev = spark.createDataFrame(
         [(i, _dt.datetime(2024, 1, 1, 10, 0, i), i % 3, float(i)) for i in range(30)],
         EVENTS_SCHEMA,
     )
-    t = TxTable(
+    t = LogTxTable(
         spark,
         os.path.join(stream_dir, "agg"),
         key_cols=["user_id"],

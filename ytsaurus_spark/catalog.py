@@ -313,7 +313,7 @@ def _with_global_row_index(df: DataFrame, col: str = "__row_index") -> DataFrame
 # ``spark.read.parquet(path)`` without a schema runs a one-stage Spark job
 # that reads footers to infer it. Every statement-session template (see
 # ``statement_session``) registers the ten fixture views, and every
-# LogTxTable/TxTable/queue read re-resolves directories the engine itself
+# LogTxTable/queue read re-resolves directories the engine itself
 # just wrote, so that job ran again and again for schemas that had not
 # changed. The memo keeps the inferred (or, for a fresh write, the
 # written) schema per file listing and schema-relevant session confs; a

@@ -4,8 +4,8 @@ declarative DataFrame plan.
 Reference context: the reference's keyed dynamic tables expose upsert /
 delete primitives (yt/yt/server/node/tablet_node/sorted_dynamic_store.h:203)
 and its batch engine composes them; vendor lakehouse formats express the
-same composite as MERGE INTO. COVERAGE.md documents TxTable/LogTxTable as
-the parquet-native stand-ins "API shaped so MERGE INTO drops in" — this
+same composite as MERGE INTO. COVERAGE.md documents LogTxTable as
+the parquet-native stand-in "API shaped so MERGE INTO drops in" — this
 module is that drop-in, implemented engine-side instead of waiting for
 vendor jars.
 

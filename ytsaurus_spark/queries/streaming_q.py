@@ -15,7 +15,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ytsaurus_spark.catalog import load_tables
+from ytsaurus_spark.catalog import load_tables, read_parquet
 from ytsaurus_spark.queries import local_result, register
 from ytsaurus_spark.streaming.queues import QueueConsumer, pull_and_advance
 
@@ -97,9 +97,6 @@ def _drain_to_memory(
     return local_result(spark, rows, out.schema)
 
 
-_EVENTS_RAW_SCHEMA: dict = {}
-
-
 def _events_stream(spark: SparkSession, sf_dir: str):
     """readStream over the events fixture with the raw on-disk schema
     (older fixture generations stored ts as int64 nanos — readStream
@@ -107,21 +104,12 @@ def _events_stream(spark: SparkSession, sf_dir: str):
     file source wants a directory, so the sf dir is streamed with a glob
     for this one table. Single definition: every live-streaming query
     reads events through here so a fixture ts-encoding change lands in
-    ONE place. The raw-schema probe (a file listing + footer read,
-    ~0.13 s) is memoized per (context, sf_dir) — the same immutable-
-    fixture contract as the memoized Catalog. Keyed by (applicationId,
-    startTime, sf_dir): an ``id()`` key could be reused by CPython after
-    a stopped context is garbage-collected and serve a stale schema."""
+    ONE place. The raw schema comes from ``catalog.read_parquet``'s memo
+    (keyed by the file listing and the schema-relevant confs), so a
+    warm call reads no footer."""
     import os
 
-    sc = spark.sparkContext
-    key = (sc.applicationId, sc.startTime, sf_dir)
-    raw_schema = _EVENTS_RAW_SCHEMA.get(key)
-    if raw_schema is None:
-        raw_schema = spark.read.parquet(
-            os.path.join(sf_dir, "events.parquet")
-        ).schema
-        _EVENTS_RAW_SCHEMA[key] = raw_schema
+    raw_schema = read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     src = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")

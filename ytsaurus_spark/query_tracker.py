@@ -26,8 +26,8 @@ Spark re-expression:
   outlive the submitting thread (the reference writes results into
   tracker tables the same way). Result metadata carries row count and
   schema JSON (TQueryResult, query_tracker_client.h:119-128).
-- **records**: one JSON manifest with atomic ``os.replace`` publishes —
-  the same protocol as sources/tx_table.py; record mutation goes through
+- **records**: one JSON manifest with atomic publishes
+  (``jsonio.publish_json``); record mutation goes through
   one lock so state transitions are serialized.
 
 At scale the tracker itself is metadata-only (a row per query); the
@@ -47,6 +47,8 @@ import uuid
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ytsaurus_spark.jsonio import load_json, publish_json
 
 STATES = (
     "draft",
@@ -118,23 +120,17 @@ class QueryTracker:
         sql = resolve_length(sql, analyze=_spark_analyze(spark))
         return spark.sql(sql)
 
-    # -- record store (atomic manifest, tx_table.py protocol) -----------
+    # -- record store (atomic manifest, jsonio.publish_json) ------------
 
     @property
     def _manifest(self) -> str:
         return os.path.join(self.root, "_queries.json")
 
     def _load(self) -> dict:
-        if not os.path.exists(self._manifest):
-            return {}
-        with open(self._manifest) as f:
-            return json.load(f)
+        return load_json(self._manifest, {})
 
     def _publish(self, records: dict) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".json.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(records, f)
-        os.replace(tmp, self._manifest)
+        publish_json(self._manifest, records)
 
     def _update(self, query_id: str, **fields) -> dict:
         with self._lock:

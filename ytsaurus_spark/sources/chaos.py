@@ -36,13 +36,12 @@ independently readable storage on its own cluster.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ytsaurus_spark.sources.tx_table import LogTxTable
+from ytsaurus_spark.jsonio import load_json, publish_json
+from ytsaurus_spark.sources.tx_table import LogTxTable, ship_segments
 
 SYNC = "sync"
 ASYNC = "async"
@@ -89,14 +88,10 @@ class ChaosReplicatedTable:
         return os.path.join(self.card_dir, "_replication_card.json")
 
     def get_replication_card(self) -> dict:
-        with open(self._card_path()) as f:
-            return json.load(f)
+        return load_json(self._card_path())
 
     def _save_card(self, card: dict) -> None:
-        tmp = self._card_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(card, f, indent=1)
-        os.replace(tmp, self._card_path())
+        publish_json(self._card_path(), card)
 
     def _bump_era(self, card: dict, rid: str, mode: str, state: str) -> None:
         """Any mode/state change advances the era and appends a history
@@ -185,49 +180,6 @@ class ChaosReplicatedTable:
             ),
         )
 
-    def _ship_segments(self, src: LogTxTable, dst: LogTxTable) -> int:
-        """Ship missing log segments src→dst, with ERA FENCING: if dst
-        holds a segment version whose manifest entry differs from the
-        source's (a write from a dead era — e.g. the lost tail of a
-        demoted sync replica), dst's log is truncated back to the common
-        prefix before shipping, so the replica converges on the new
-        era's history (the reference fences stale-era writes through the
-        replication card's era checks)."""
-        src_segs = src._segments()
-        dst_map = {s["v"]: s for s in dst._segments()}
-        # first divergent version, if any
-        cut = None
-        for s in src_segs:
-            d = dst_map.get(s["v"])
-            if d is not None and d != s:
-                cut = s["v"]
-                break
-        if cut is not None:
-            kept = [s for s in dst._segments() if s["v"] < cut]
-            for s in dst._segments():
-                if s["v"] >= cut:
-                    shutil.rmtree(
-                        os.path.join(dst.path, f"s{s['v']}"), ignore_errors=True
-                    )
-            manifest = {"segments": kept}
-            tmp = dst._log_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-            os.replace(tmp, dst._log_path)
-            dst_map = {s["v"]: s for s in kept}
-        shipped = 0
-        for s in src_segs:
-            if s["v"] in dst_map:
-                continue
-            sdir = os.path.join(src.path, f"s{s['v']}")
-            ddir = os.path.join(dst.path, f"s{s['v']}")
-            if os.path.exists(ddir):
-                shutil.rmtree(ddir)
-            shutil.copytree(sdir, ddir)
-            dst._publish(dict(s))
-            shipped += 1
-        return shipped
-
     def _catch_up(self, rid: str, card: dict | None = None) -> int:
         card = card or self.get_replication_card()
         info = card["replicas"][rid]
@@ -236,7 +188,9 @@ class ChaosReplicatedTable:
         src_rid = self._source_for_catch_up(card, rid)
         if src_rid is None:
             return 0
-        return self._ship_segments(self._table(src_rid), self._table(rid))
+        # era-fenced shipping (tx_table.ship_segments): a replica holding a
+        # dead era's tail is truncated to the common prefix first
+        return ship_segments(self._table(src_rid), self._table(rid))
 
     def tick(self) -> dict[str, int]:
         """Replicator loop: every enabled async replica (data or queue)

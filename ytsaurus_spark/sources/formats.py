@@ -37,6 +37,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ytsaurus_spark.jsonio import load_json, publish_json
+
 # Per-block compression in the reference (~60 codecs, Snappy/Lz4/Brotli/
 # Zlib/Zstd levels — yt/yt/core/compression/public.h:17-60) maps to
 # parquet codec selection; levels collapse to the codec's default.
@@ -87,16 +89,11 @@ def write_sorted_table(
 
 
 def table_attributes(path: str) -> dict:
-    p = os.path.join(path, "_yt_attrs.json")
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return {}
+    return load_json(os.path.join(path, "_yt_attrs.json"), {})
 
 
 def _write_attrs(path: str, attrs: dict) -> None:
-    with open(os.path.join(path, "_yt_attrs.json"), "w") as f:
-        json.dump(attrs, f)
+    publish_json(os.path.join(path, "_yt_attrs.json"), attrs)
 
 
 def merge_tables(
@@ -279,13 +276,9 @@ def concatenate(paths: list[str], dest: str, append: bool = False) -> None:
     late-appended members show up, exactly like chunk-list composition."""
     os.makedirs(dest, exist_ok=True)
     manifest = os.path.join(dest, "_yt_concat.json")
-    members: list[str] = []
-    if append and os.path.exists(manifest):
-        with open(manifest) as f:
-            members = json.load(f)["members"]
+    members = load_json(manifest, {"members": []})["members"] if append else []
     members += [os.path.abspath(p) for p in paths]
-    with open(manifest, "w") as f:
-        json.dump({"members": members}, f)
+    publish_json(manifest, {"members": members})
 
 
 def read_concatenated(spark: SparkSession, dest: str, fmt: str = "parquet") -> DataFrame:
@@ -293,9 +286,7 @@ def read_concatenated(spark: SparkSession, dest: str, fmt: str = "parquet") -> D
     scan plans per-member predicate pushdown + column pruning as usual;
     nothing was ever copied). Members written as plain files or as
     directories both resolve."""
-    manifest = os.path.join(dest, "_yt_concat.json")
-    with open(manifest) as f:
-        members = json.load(f)["members"]
+    members = load_json(os.path.join(dest, "_yt_concat.json"))["members"]
     dfs = [read_table(spark, p, fmt) for p in members]
     out = dfs[0]
     for d in dfs[1:]:

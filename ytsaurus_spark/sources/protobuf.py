@@ -46,7 +46,6 @@ from __future__ import annotations
 
 import datetime
 import decimal
-import json
 import os
 import struct
 import uuid
@@ -79,6 +78,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ytsaurus_spark.jsonio import load_json, publish_json
 from ytsaurus_spark.sources import yson
 
 SIDECAR = "_proto_schema.json"
@@ -388,10 +388,9 @@ class ProtoDataSource(DataSource):
         return path
 
     def schema(self) -> StructType:
-        sidecar = os.path.join(self._path(), SIDECAR)
-        if os.path.exists(sidecar):
-            with open(sidecar) as fh:
-                return StructType.fromJson(json.load(fh))
+        schema = load_json(os.path.join(self._path(), SIDECAR), None)
+        if schema is not None:
+            return StructType.fromJson(schema)
         raise ValueError(
             f"no {SIDECAR} sidecar under {self._path()}; pass .schema(...) explicitly"
         )
@@ -410,8 +409,7 @@ class ProtoDataSource(DataSource):
         if overwrite and os.path.isdir(path):
             shutil.rmtree(path)
         os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, SIDECAR), "w") as fh:
-            json.dump(schema.jsonValue(), fh)
+        publish_json(os.path.join(path, SIDECAR), schema.jsonValue())
         return _ProtoWriter(path, schema)
 
 

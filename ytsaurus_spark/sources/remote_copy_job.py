@@ -41,6 +41,7 @@ from typing import Iterable
 
 from ytsaurus_spark.functions.xdelta import murmur32
 from ytsaurus_spark.sources.formats import _write_attrs, table_attributes
+from ytsaurus_spark.sources.tx_table import is_log_table
 
 
 class RemoteCopyError(RuntimeError):
@@ -59,8 +60,8 @@ def _chunk_files(table_dir: str) -> list[str]:
 
 
 def _is_dynamic(table_dir: str) -> bool:
-    return bool(table_attributes(table_dir).get("dynamic")) or os.path.exists(
-        os.path.join(table_dir, "_log.json")
+    return bool(table_attributes(table_dir).get("dynamic")) or is_log_table(
+        table_dir
     )
 
 

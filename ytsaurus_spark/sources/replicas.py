@@ -17,13 +17,11 @@ readable storage (not a view over the main table).
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ytsaurus_spark.sources.tx_table import LogTxTable
+from ytsaurus_spark.sources.tx_table import LogTxTable, ship_segments
 
 
 class Replica:
@@ -71,24 +69,9 @@ class ReplicatedTable:
     # -- replication: segment shipping ---------------------------------
 
     def _catch_up(self, r: Replica) -> int:
-        """Ship the main log's missing segments to the replica: copy each
-        segment's parquet dir, then publish the same manifest entries
-        (atomic os.replace, so a concurrent replica read never sees a
-        half-applied state). Returns segments shipped."""
-        main_segs = self.main._segments()
-        have = {s["v"] for s in r.table._segments()}
-        shipped = 0
-        for s in main_segs:
-            if s["v"] in have:
-                continue
-            src = os.path.join(self.main.path, f"s{s['v']}")
-            dst = os.path.join(r.table.path, f"s{s['v']}")
-            if os.path.exists(dst):
-                shutil.rmtree(dst)
-            shutil.copytree(src, dst)
-            r.table._publish(dict(s))
-            shipped += 1
-        return shipped
+        """Ship the main log's missing segments to the replica
+        (tx_table.ship_segments). Returns segments shipped."""
+        return ship_segments(self.main, r.table)
 
     def tick(self) -> dict[str, int]:
         """Background replication step: async replicas catch up. Returns

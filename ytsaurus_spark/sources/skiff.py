@@ -47,7 +47,6 @@ from __future__ import annotations
 
 import datetime
 import decimal
-import json
 import os
 import struct
 import uuid
@@ -80,6 +79,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ytsaurus_spark.jsonio import load_json, publish_json
 from ytsaurus_spark.sources import yson
 
 SIDECAR = "_skiff_schema.json"
@@ -441,11 +441,10 @@ class SkiffDataSource(DataSource):
         return int(v) if v is not None else None
 
     def _multi_schemas(self) -> list[StructType] | None:
-        sidecar = os.path.join(self._path(), SIDECAR_MULTI)
-        if os.path.exists(sidecar):
-            with open(sidecar) as fh:
-                return [StructType.fromJson(s) for s in json.load(fh)["tables"]]
-        return None
+        multi = load_json(os.path.join(self._path(), SIDECAR_MULTI), None)
+        if multi is None:
+            return None
+        return [StructType.fromJson(s) for s in multi["tables"]]
 
     def schema(self) -> StructType:
         idx = self._table_index()
@@ -453,10 +452,9 @@ class SkiffDataSource(DataSource):
             multi = self._multi_schemas()
             if multi is not None:
                 return multi[idx]
-        sidecar = os.path.join(self._path(), SIDECAR)
-        if os.path.exists(sidecar):
-            with open(sidecar) as fh:
-                return StructType.fromJson(json.load(fh))
+        schema = load_json(os.path.join(self._path(), SIDECAR), None)
+        if schema is not None:
+            return StructType.fromJson(schema)
         raise ValueError(
             f"no {SIDECAR} sidecar under {self._path()}; pass .schema(...) explicitly"
         )
@@ -482,8 +480,7 @@ class SkiffDataSource(DataSource):
             shutil.rmtree(path)
         os.makedirs(path, exist_ok=True)
         if idx is None:
-            with open(os.path.join(path, SIDECAR), "w") as fh:
-                json.dump(schema.jsonValue(), fh)
+            publish_json(os.path.join(path, SIDECAR), schema.jsonValue())
         # multi-table writes: write_skiff_multi commits the multi sidecar
         # up front on the driver; per-table appends just tag their rows.
         return _SkiffWriter(path, schema, table_index=idx or 0)
@@ -529,8 +526,10 @@ def write_skiff_multi(dfs: list[DataFrame], path: str) -> None:
     if os.path.isdir(path):
         shutil.rmtree(path)
     os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, SIDECAR_MULTI), "w") as fh:
-        json.dump({"tables": [df.schema.jsonValue() for df in dfs]}, fh)
+    publish_json(
+        os.path.join(path, SIDECAR_MULTI),
+        {"tables": [df.schema.jsonValue() for df in dfs]},
+    )
     for i, df in enumerate(dfs):
         (
             df.write.format("skiff")
@@ -567,9 +566,7 @@ def read_skiff_multi_all(spark: SparkSession, path: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    sidecar = os.path.join(path, SIDECAR_MULTI)
-    with open(sidecar) as fh:
-        n = len(json.load(fh)["tables"])
+    n = len(load_json(os.path.join(path, SIDECAR_MULTI))["tables"])
     parts = [
         read_skiff_multi(spark, path, i).withColumn("__table_index", F.lit(i))
         for i in range(n)

@@ -8,77 +8,39 @@ Spark-side shape — write-ahead intent + presumed roll-forward:
 
 1. **Prepare**: every staged write lands as an UNPUBLISHED segment
    (`LogTxTable._stage_segment` — readers are manifest-driven, so staged
-   parquet stays invisible).
+   parquet stays invisible). Staging passes the table's mount gate, so a
+   frozen participant aborts the transaction here.
 2. **Intent**: one JSON record listing every (table path, manifest entry)
-   is written atomically (os.replace). THIS is the commit point: before
-   it, a crash leaves only invisible orphan files; after it, the
-   transaction is durably decided.
-3. **Publish**: each participant's manifest gains its entry (idempotent —
-   an entry already present is skipped, so re-running after a crash is
-   safe). 4. The intent is removed.
+   is published atomically (`jsonio.publish_json`). THIS is the commit
+   point: before it, a crash leaves only invisible orphan files; after
+   it, the transaction is durably decided.
+3. **Publish**: each participant's manifest gains its entry through
+   `tx_table.publish_entry` (idempotent — this transaction's entry
+   already present is skipped, so re-running after a crash is safe).
+   4. The intent is removed.
 
 `recover(coordinator_dir)` rolls every decided-but-unfinished intent
 FORWARD (pure JSON manipulation — no Spark needed), which is the
 presumed-commit half of 2PC; a pre-intent failure inside `commit()`
 removes its own staged dirs. Single writer per table is assumed (the reference's
 tablet write path serializes through the tablet cell leader the same
-way); `_publish_entry` still verifies the staged version is the next
+way); `publish_entry` still verifies the staged version is the next
 version and raises on a conflicting interleaved commit rather than
-corrupting the log.
+corrupting the log. The manifest format itself belongs to
+`sources/tx_table.py`.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import tempfile
 import time
 import uuid
 
 from pyspark.sql import DataFrame
 
+from ytsaurus_spark.jsonio import load_json, publish_json
+from ytsaurus_spark.sources import tx_table
 from ytsaurus_spark.sources.tx_table import LogTxTable
-
-
-def _read_manifest(table_path: str) -> list[dict]:
-    p = os.path.join(table_path, "_log.json")
-    if not os.path.exists(p):
-        return []
-    with open(p) as f:
-        return json.load(f)["segments"]
-
-
-def _publish_entry(table_path: str, entry: dict) -> None:
-    """Append one manifest entry, atomically and idempotently. Idempotence
-    is decided by FULL identity — the entry's ``tx`` tag (and kind): only
-    this transaction's own prior publish is skippable. Any other commit
-    occupying the staged version — including another delta — raises, so a
-    concurrent writer landing between stage and publish can never be
-    mistaken for our own work (that would silently drop this
-    transaction's rows for one table while others got theirs)."""
-    segs = _read_manifest(table_path)
-    existing = [s for s in segs if s["v"] == entry["v"]]
-    if existing:
-        if (
-            existing[0]["kind"] != entry["kind"]
-            or existing[0].get("tx") != entry.get("tx")
-        ):
-            raise RuntimeError(
-                f"version {entry['v']} of {table_path} was taken by a "
-                "conflicting commit"
-            )
-        return
-    if segs and entry["v"] != segs[-1]["v"] + 1:
-        raise RuntimeError(
-            f"staged version {entry['v']} is stale for {table_path} "
-            f"(log is at {segs[-1]['v']}): concurrent writer"
-        )
-    manifest = {"segments": segs + [entry]}
-    fd, tmp = tempfile.mkstemp(dir=table_path, suffix=".json.tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(table_path, "_log.json"))
 
 
 class MultiTableTransaction:
@@ -211,8 +173,8 @@ class MultiTableTransaction:
         return os.path.join(self.dir, f"tx_{self.tx_id}.json")
 
     def commit(self) -> None:
-        """Prepare → intent → publish → forget. The os.replace of the
-        intent record is the atomic commit point."""
+        """Prepare → intent → publish → forget. The atomic publish of the
+        intent record is the commit point."""
         self._check_open()
         if not self._ops:
             self._release_locks()
@@ -239,20 +201,16 @@ class MultiTableTransaction:
                 staged.append({"table_path": table.path, "entry": entry})
                 next_v[table.path] = v + 1
             # phase 2: durable intent = the commit decision
-            fd, tmp = tempfile.mkstemp(dir=self.dir, suffix=".json.tmp")
-            with os.fdopen(fd, "w") as f:
-                json.dump({"tx_id": self.tx_id, "participants": staged}, f)
-            os.replace(tmp, self._intent_path)
+            publish_json(
+                self._intent_path, {"tx_id": self.tx_id, "participants": staged}
+            )
         except Exception:
             for p in staged:
-                shutil.rmtree(
-                    os.path.join(p["table_path"], f"s{p['entry']['v']}"),
-                    ignore_errors=True,
-                )
+                tx_table.remove_segment(p["table_path"], p["entry"]["v"])
             raise
         # phase 3: publish everywhere (idempotent), then forget
         for p in staged:
-            _publish_entry(p["table_path"], p["entry"])
+            tx_table.publish_entry(p["table_path"], p["entry"])
         os.remove(self._intent_path)
         self._release_locks()
         self._state = "committed"
@@ -284,10 +242,8 @@ def recover(coordinator_dir: str) -> int:
         # one damaged/conflicted intent must not block the others: roll
         # forward everything that can be, then report what could not
         try:
-            with open(path) as f:
-                intent = json.load(f)
-            for p in intent["participants"]:
-                _publish_entry(p["table_path"], p["entry"])
+            for p in load_json(path)["participants"]:
+                tx_table.publish_entry(p["table_path"], p["entry"])
             os.remove(path)
             n += 1
         except Exception as e:
@@ -312,18 +268,11 @@ def _locks_path(table_path: str) -> str:
 
 
 def _read_locks(table_path: str) -> list[dict]:
-    p = _locks_path(table_path)
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)["locks"]
-    return []
+    return load_json(_locks_path(table_path), {"locks": []})["locks"]
 
 
 def _write_locks(table_path: str, locks: list[dict]) -> None:
-    fd, tmp = tempfile.mkstemp(dir=table_path, suffix=".locks.tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump({"locks": locks}, f)
-    os.replace(tmp, _locks_path(table_path))
+    publish_json(_locks_path(table_path), {"locks": locks})
 
 
 def clear_locks(table_path: str, older_than: float | None = None) -> int:

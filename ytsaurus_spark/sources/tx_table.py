@@ -1,45 +1,52 @@
-"""Durable transactional keyed table: versioned parquet snapshots with an
-atomic commit log — the on-disk backing for dynamic tables.
+"""Durable transactional keyed table: a log of versioned parquet segments
+with an atomic manifest — the on-disk backing for dynamic tables.
 
 Reference semantics being reproduced: dynamic tables are ACID key-value
 stores with timestamped reads (SURVEY §1.5); our in-memory ``KeyedTable``
-gives the algebra (upsert/fold/delete), this module gives the durability:
+gives the algebra (upsert/fold/delete), this module gives the durability.
+``LogTxTable`` is log-structured (the reference's LSM design,
+sorted_dynamic_store.h dynamic stores + chunk stores; same shape as
+Delta's deltas+checkpoints): each commit appends ONLY the changed rows as
+a delta segment — O(changes) writes; reads merge base + deltas on the fly
+(merge-on-read), and ``compact()`` folds the log into a new base segment
+(the reference's store compaction,
+yt/yt/server/node/tablet_node/store_compactor.cpp). Every commit gets a
+wall-clock timestamp, so ``read(timestamp=...)`` is the read-at-timestamp
+contract (client_dynamic_tables_impl.cpp:1599-1603) at commit granularity.
+With Delta jars on the classpath this module would collapse to MERGE INTO
++ time travel; the public API is shaped for that swap.
 
-- each commit writes a full snapshot ``v{N}/`` + appends a manifest line;
-- the manifest (``_log.json``) is replaced atomically via os.replace, so a
-  reader always sees a complete committed version (no torn reads);
-- ``read(version=...)`` = time travel (Delta ``VERSION AS OF`` analog —
-  with Delta jars on the classpath this module collapses to MERGE INTO +
-  time travel; the public API is shaped for that swap).
+This module is the only owner of the on-disk format: the ``_log.json``
+manifest (replaced atomically through ``jsonio.publish_json``, so a
+reader always sees a complete committed version), the ``s{v}/`` segment
+directories and the ``_yt_state.json`` tablet state. Cross-table
+transactions (``sources/transactions.py``), replication
+(``replicas.py``, ``chaos.py``) and RemoteCopy reach them only through
+the module-level functions below, which need no Spark session, so
+``transactions.recover()`` runs before one exists.
 
-Two implementations share the commit/manifest protocol:
-
-- ``TxTable``: full snapshot per commit — O(table) writes, zero read
-  amplification. Fine for small control tables.
-- ``LogTxTable``: log-structured (the reference's LSM design,
-  sorted_dynamic_store.h dynamic stores + chunk stores; same shape as
-  Delta's deltas+checkpoints): each commit appends ONLY the changed rows
-  as a delta segment — O(changes) writes; reads merge base + deltas on
-  the fly (merge-on-read), and ``compact()`` folds the log into a new
-  base segment (the reference's store compaction,
-  yt/yt/server/node/tablet_node/store_compactor.cpp). Every commit gets
-  a wall-clock timestamp, so ``read(timestamp=...)`` is the
-  read-at-timestamp contract (client_dynamic_tables_impl.cpp:1599-1603)
-  at commit granularity.
+One gate: every operation that changes a table's files — staging a
+segment, publishing a manifest entry, trimming history, shipping
+segments — first calls ``_check_mounted``, before it touches any file.
+A frozen table therefore rejects a write without leaving an orphan
+segment, a transaction on a frozen participant aborts before its intent
+is written, and a decided intent whose table was frozen after the
+decision rolls forward in ``recover()`` once the table is unfrozen.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import tempfile
+import shutil
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ytsaurus_spark.catalog import read_parquet, record_parquet_schema
-from ytsaurus_spark.operators.keyed_tables import KeyedTable, _AGG_FOLDS, _check_folds
+from ytsaurus_spark.jsonio import load_json, publish_json
+from ytsaurus_spark.operators.keyed_tables import _check_folds
 
 
 class FrozenTabletError(RuntimeError):
@@ -47,91 +54,121 @@ class FrozenTabletError(RuntimeError):
     freeze_table semantics: reads OK, mutations rejected)."""
 
 
-class TxTable:
-    """Versioned keyed table rooted at a directory."""
+# -- on-disk format (module level: usable without a Spark session) ---------
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        key_cols: list[str],
-        aggregates: dict[str, str] | None = None,
-    ) -> None:
-        self.spark = spark
-        self.path = path
-        self.key_cols = key_cols
-        self.aggregates = aggregates or {}
-        os.makedirs(path, exist_ok=True)
 
-    # -- commit log ---------------------------------------------------------
+def _manifest_path(table_path: str) -> str:
+    return os.path.join(table_path, "_log.json")
 
-    @property
-    def _log_path(self) -> str:
-        return os.path.join(self.path, "_log.json")
 
-    def _versions(self) -> list[int]:
-        if not os.path.exists(self._log_path):
-            return []
-        with open(self._log_path) as f:
-            return json.load(f)["versions"]
+def _state_path(table_path: str) -> str:
+    return os.path.join(table_path, "_yt_state.json")
 
-    def current_version(self) -> int:
-        vs = self._versions()
-        return vs[-1] if vs else -1
 
-    def _commit(self, df: DataFrame) -> int:
-        new_v = self.current_version() + 1
-        snap_dir = os.path.join(self.path, f"v{new_v}")
-        df.write.mode("overwrite").parquet(snap_dir)
-        record_parquet_schema(self.spark, snap_dir, df.schema)
-        manifest = {"versions": self._versions() + [new_v]}
-        fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".json.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._log_path)  # atomic publish
-        return new_v
+def _segment_dir(table_path: str, v: int) -> str:
+    return os.path.join(table_path, f"s{v}")
 
-    # -- reads --------------------------------------------------------------
 
-    def read(self, version: int | None = None) -> DataFrame:
-        vs = self._versions()
-        if not vs:
-            raise FileNotFoundError(f"no committed version in {self.path}")
-        v = vs[-1] if version is None else version
-        if v not in vs:
-            raise ValueError(f"version {v} not in committed set {vs}")
-        return read_parquet(self.spark, os.path.join(self.path, f"v{v}"))
+def is_log_table(table_path: str) -> bool:
+    return os.path.exists(_manifest_path(table_path))
 
-    def lookup_rows(self, keys: DataFrame) -> DataFrame:
-        return self._keyed().lookup_rows(keys)
 
-    # -- writes -------------------------------------------------------------
+def read_segments(table_path: str) -> list[dict]:
+    return load_json(_manifest_path(table_path), {"segments": []})["segments"]
 
-    def init(self, df: DataFrame) -> int:
-        """First commit (empty or seeded)."""
-        return self._commit(df)
 
-    def insert_rows(self, rows: DataFrame) -> int:
-        """Upsert with aggregate-column folding, durably committed."""
-        return self._commit(self._keyed().insert_rows(rows).df)
+def _write_manifest(table_path: str, segs: list[dict]) -> None:
+    publish_json(_manifest_path(table_path), {"segments": segs})
 
-    def delete_rows(self, keys: DataFrame) -> int:
-        return self._commit(self._keyed().delete_rows(keys).df)
 
-    def merge_rows(self, source: DataFrame, **merge_kwargs) -> int:
-        """SQL:2003 MERGE INTO this table (operators/merge.py): one
-        full-outer join on the key columns, multi-clause update / delete /
-        insert, durably committed as the next version — the Delta
-        ``MERGE INTO`` analog over the parquet-snapshot layout."""
-        from ytsaurus_spark.operators.merge import merge_into
+def _tablet_state(table_path: str) -> str:
+    return load_json(_state_path(table_path), {"state": "mounted"})["state"]
 
-        merge_kwargs.setdefault("on", list(self.key_cols))
-        return self._commit(merge_into(self.read(), source, **merge_kwargs))
 
-    def _keyed(self) -> KeyedTable:
-        return KeyedTable(
-            df=self.read(), key_cols=self.key_cols, aggregates=self.aggregates
+def _check_mounted(table_path: str) -> None:
+    """The gate every file-changing operation passes first."""
+    if _tablet_state(table_path) == "frozen":
+        raise FrozenTabletError(
+            f"table {table_path} is frozen: writes and compaction are "
+            "rejected until unfreeze()"
         )
+
+
+def publish_entry(table_path: str, entry: dict) -> None:
+    """Append one staged segment's manifest entry: the commit point of
+    every write, and the participant publish of a cross-table
+    transaction. Idempotence is decided by FULL identity — the entry's
+    ``tx`` tag (and kind): only this transaction's own prior publish is
+    skippable. Any other commit occupying the staged version — including
+    another delta — raises, so a concurrent writer landing between stage
+    and publish can never be mistaken for our own work (that would
+    silently drop this transaction's rows for one table while others got
+    theirs); a staged version that is not exactly next raises as stale."""
+    _check_mounted(table_path)
+    segs = read_segments(table_path)
+    existing = [s for s in segs if s["v"] == entry["v"]]
+    if existing:
+        if (
+            existing[0]["kind"] != entry["kind"]
+            or existing[0].get("tx") != entry.get("tx")
+        ):
+            raise RuntimeError(
+                f"version {entry['v']} of {table_path} was taken by a "
+                "conflicting commit"
+            )
+        return
+    if segs and entry["v"] != segs[-1]["v"] + 1:
+        raise RuntimeError(
+            f"staged version {entry['v']} is stale for {table_path} "
+            f"(log is at {segs[-1]['v']}): concurrent writer"
+        )
+    _write_manifest(table_path, segs + [entry])
+
+
+def remove_segment(table_path: str, v: int) -> None:
+    """Delete segment ``v``'s directory (a staged segment that will never
+    be published, or one a manifest swap has just retired)."""
+    shutil.rmtree(_segment_dir(table_path, v), ignore_errors=True)
+
+
+def ship_segments(src: "LogTxTable", dst: "LogTxTable") -> int:
+    """Replicate src's log to dst by segment shipping: copy each missing
+    segment's parquet dir, then publish the same manifest entries in one
+    manifest swap, so a concurrent replica read never sees a half-applied
+    state. Returns the number of segments shipped.
+
+    ERA FENCING: if dst holds a segment version whose manifest entry
+    differs from the source's (a write from a dead era — e.g. the lost
+    tail of a demoted sync replica), dst's log is truncated back to the
+    common prefix first, so the replica converges on the new era's
+    history (the reference fences stale-era writes through the
+    replication card's era checks). No stale-version check: a lagging
+    replica legitimately receives a post-``trim_history`` base after a
+    gap in versions."""
+    _check_mounted(dst.path)
+    src_segs = read_segments(src.path)
+    dst_segs = read_segments(dst.path)
+    dst_map = {s["v"]: s for s in dst_segs}
+    cut = next(
+        (s["v"] for s in src_segs if dst_map.get(s["v"], s) != s), None
+    )
+    if cut is not None:
+        kept = [s for s in dst_segs if s["v"] < cut]
+        _write_manifest(dst.path, kept)
+        for s in dst_segs:
+            if s["v"] >= cut:
+                remove_segment(dst.path, s["v"])
+                dst._seg_cache.pop(s["v"], None)
+        dst_segs, dst_map = kept, {s["v"]: s for s in kept}
+    shipped = [dict(s) for s in src_segs if s["v"] not in dst_map]
+    for s in shipped:
+        remove_segment(dst.path, s["v"])  # an unpublished leftover
+        shutil.copytree(
+            _segment_dir(src.path, s["v"]), _segment_dir(dst.path, s["v"])
+        )
+    if shipped:
+        _write_manifest(dst.path, dst_segs + shipped)
+    return len(shipped)
 
 
 class LogTxTable:
@@ -139,16 +176,17 @@ class LogTxTable:
 
     On-disk layout under ``path``::
 
-        _log.json                    # atomic manifest (os.replace)
+        _log.json                    # atomic manifest (jsonio.publish_json)
+        _yt_state.json               # tablet state, absent = mounted
         s0/ s1/ s2/ ...              # one parquet dir per committed segment
 
     Manifest entry per segment: ``{"v": N, "kind": "base"|"delta",
     "ts": wall_clock, "range": [key_min, key_max] | null}``. A delta holds
     only the rows written by that commit, each tagged ``__op`` ('u' upsert
     / 'd' delete); a base is a fully-resolved state (the initial seed, or
-    a ``compact()`` output). ``range`` is the first key column's min/max
-    lifted from the segment's parquet footers at commit time (no extra
-    pass); ranged reads and lookups use it to skip whole segments before
+    a ``compact()`` / ``merge_rows()`` output). ``range`` is the first key
+    column's min/max lifted from the segment's parquet footers at commit
+    time (no extra pass); ranged reads and lookups use it to skip whole segments before
     any parquet IO — CHYT's granule min-max pruning
     (yt/chyt/server/granule_min_max_filter.cpp:24-83) at segment
     granularity, which is the LSM read-amplification fix at scale.
@@ -193,18 +231,12 @@ class LogTxTable:
         self.aggregates = aggregates or {}
         _check_folds(self.aggregates)
         os.makedirs(path, exist_ok=True)
+        self._seg_cache: dict[int, DataFrame] = {}
 
     # -- manifest -------------------------------------------------------
 
-    @property
-    def _log_path(self) -> str:
-        return os.path.join(self.path, "_log.json")
-
     def _segments(self) -> list[dict]:
-        if not os.path.exists(self._log_path):
-            return []
-        with open(self._log_path) as f:
-            return json.load(f)["segments"]
+        return read_segments(self.path)
 
     def current_version(self) -> int:
         segs = self._segments()
@@ -212,50 +244,30 @@ class LogTxTable:
 
     # -- tablet state (mount/freeze lifecycle) --------------------------
 
-    @property
-    def _state_path(self) -> str:
-        return os.path.join(self.path, "_yt_state.json")
-
     def tablet_state(self) -> str:
         """'mounted' (default) or 'frozen' — the reference's tablet
         lifecycle subset that matters for a single-host layout
         (freeze_table/unfreeze_table: frozen tablets serve reads but
         reject writes and suspend background compaction)."""
-        if os.path.exists(self._state_path):
-            with open(self._state_path) as f:
-                return json.load(f)["state"]
-        return "mounted"
+        return _tablet_state(self.path)
 
     def freeze(self) -> None:
-        with open(self._state_path, "w") as f:
-            json.dump({"state": "frozen"}, f)
+        publish_json(_state_path(self.path), {"state": "frozen"})
 
     def unfreeze(self) -> None:
-        with open(self._state_path, "w") as f:
-            json.dump({"state": "mounted"}, f)
-
-    def _publish(self, entry: dict) -> None:
-        if self.tablet_state() == "frozen":
-            raise FrozenTabletError(
-                f"table {self.path} is frozen: writes and compaction are "
-                "rejected until unfreeze()"
-            )
-        manifest = {"segments": self._segments() + [entry]}
-        fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".json.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._log_path)  # atomic publish
+        publish_json(_state_path(self.path), {"state": "mounted"})
 
     def _stage_segment(self, df: DataFrame, kind: str, v: int | None = None) -> dict:
         """Write a segment's parquet WITHOUT publishing it: readers are
         manifest-driven, so a staged ``s{v}`` directory stays invisible
-        until `_publish` lands its entry. This is the participant half of
-        the cross-table two-phase commit (`sources/transactions.py`),
-        which passes an explicit ``v`` when stacking several deltas on
-        one table inside a transaction."""
+        until `publish_entry` lands its entry. This is the participant
+        half of the cross-table two-phase commit
+        (`sources/transactions.py`), which passes an explicit ``v`` when
+        stacking several deltas on one table inside a transaction."""
+        _check_mounted(self.path)
         if v is None:
             v = self.current_version() + 1
-        seg_dir = os.path.join(self.path, f"s{v}")
+        seg_dir = _segment_dir(self.path, v)
         df.write.mode("overwrite").parquet(seg_dir)
         record_parquet_schema(self.spark, seg_dir, df.schema)
         return {"v": v, "kind": kind, "ts": time.time(),
@@ -263,7 +275,7 @@ class LogTxTable:
 
     def _write_segment(self, df: DataFrame, kind: str) -> int:
         entry = self._stage_segment(df, kind)
-        self._publish(entry)
+        publish_entry(self.path, entry)
         return entry["v"]
 
     def _footer_key_range(self, seg_dir: str):
@@ -317,6 +329,42 @@ class LogTxTable:
         if any(r is None or None in r for r in ranges):
             return None
         return min(r[0] for r in ranges), max(r[1] for r in ranges)
+
+    def _key_bounds(self, keys: DataFrame) -> tuple:
+        """(min, max) of the first key column over ``keys``: one tiny job."""
+        k0 = self.key_cols[0]
+        b = keys.agg(F.min(k0).alias("lo"), F.max(k0).alias("hi")).first()
+        return b["lo"], b["hi"]
+
+    def _keyed_segments(
+        self, segs: list[dict], keys: DataFrame, key_bounds: tuple | None = None
+    ) -> tuple[list[dict], DataFrame]:
+        """The segments of ``segs`` that can hold a key of ``keys``, and the
+        union of their rows semi-joined to ``keys``. ``key_bounds``: the
+        first key column's (min, max) over ``keys`` when the caller knows
+        them, else one ``_key_bounds`` job computes them.
+
+        Segment pruning is a CONTRACT, not just an optimization: a segment
+        whose manifest range cannot contain any requested key is never
+        opened (test_log_tx_table_segment_range_pruning proves it
+        file-level). A chain-length threshold once skipped the bounds job
+        on short chains and broke that guarantee, so the job runs whenever
+        anything is potentially prunable (more than one segment with a
+        usable range). The key semi-join then applies to every surviving
+        segment BEFORE the merge, so footer min/max pruning bounds IO
+        within them — the reference's per-store key lookup."""
+        if len(segs) > 1 and any(s.get("range") is not None for s in segs):
+            lo, hi = key_bounds if key_bounds is not None else self._key_bounds(keys)
+            segs = [s for s in segs if self._overlaps(s, lo, hi)]
+        keyset = F.broadcast(keys.select(*self.key_cols))
+        return segs, self._union(
+            [self._seg_df(s).join(keyset, self.key_cols, "left_semi") for s in segs]
+        )
+
+    def _union(self, parts: list[DataFrame]) -> DataFrame:
+        """unionByName of segment frames in order; the empty log frame when
+        every segment was pruned."""
+        return reduce(DataFrame.unionByName, parts) if parts else self._empty_log_df()
 
     @staticmethod
     def _overlaps(seg: dict, lo, hi) -> bool:
@@ -426,6 +474,7 @@ class LogTxTable:
         """
         from concurrent.futures import ThreadPoolExecutor
 
+        _check_mounted(self.path)  # before any of the concurrent stagings
         v0 = self.current_version() + 1
         deltas = []
         for op, df in ops:
@@ -444,7 +493,7 @@ class LogTxTable:
             )
         for e in entries:
             e["ts"] = time.time()  # commit time = publish time
-            self._publish(e)
+            publish_entry(self.path, e)
         return [e["v"] for e in entries]
 
     def compact(self, retention_timestamp: float | None = None) -> int:
@@ -456,6 +505,21 @@ class LogTxTable:
         if retention_timestamp is not None:
             self.trim_history(retention_timestamp)
         return v
+
+    def merge_rows(self, source: DataFrame, **merge_kwargs) -> int:
+        """SQL:2003 MERGE INTO this table (operators/merge.py): one
+        full-outer join on the key columns, multi-clause update / delete /
+        insert, committed as a new base segment — a full-state commit of
+        the same shape as ``compact()`` (the Delta ``MERGE INTO`` analog).
+        Earlier versions stay readable; like a compaction base, the merge
+        base is a derived state, so ``versioned_lookup`` does not list it
+        as a write."""
+        from ytsaurus_spark.operators.merge import merge_into
+
+        merge_kwargs.setdefault("on", list(self.key_cols))
+        return self._write_segment(
+            merge_into(self.read(), source, **merge_kwargs), "base"
+        )
 
     def trim_history(self, retention_timestamp: float) -> int:
         """Drop row history committed before ``retention_timestamp`` —
@@ -475,8 +539,7 @@ class LogTxTable:
         (client_dynamic_tables_impl.cpp:1599-1603). Returns the number of
         segments reclaimed; metadata-only except the directory removal —
         no data pass, O(segments) not O(rows)."""
-        import shutil
-
+        _check_mounted(self.path)
         segs = self._segments()
         bases = [s for s in segs if s["kind"] == "base"]
         if not bases:
@@ -487,16 +550,9 @@ class LogTxTable:
         ]
         if not retire:
             return 0
-        keep = [s for s in segs if s not in retire]
-        manifest = {"segments": keep}
-        fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".json.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._log_path)
+        _write_manifest(self.path, [s for s in segs if s not in retire])
         for s in retire:
-            shutil.rmtree(
-                os.path.join(self.path, f"s{s['v']}"), ignore_errors=True
-            )
+            remove_segment(self.path, s["v"])
         return len(retire)
 
     # -- reads ------------------------------------------------------------
@@ -542,11 +598,10 @@ class LogTxTable:
         """Parquet relation for segment ``v``, memoized: committed segments
         are immutable, and re-resolving the same directory is a driver
         round trip per read that multiplies across the merge chain."""
-        cache = self.__dict__.setdefault("_seg_cache", {})
-        df = cache.get(v)
+        df = self._seg_cache.get(v)
         if df is None:
-            df = read_parquet(self.spark, os.path.join(self.path, f"s{v}"))
-            cache[v] = df
+            df = read_parquet(self.spark, _segment_dir(self.path, v))
+            self._seg_cache[v] = df
         return df
 
     def _seg_df(self, s: dict) -> DataFrame:
@@ -603,12 +658,7 @@ class LogTxTable:
         chain = self._chain(version)
         lo, hi = key_range if key_range is not None else (None, None)
         chain = [s for s in chain if self._overlaps(s, lo, hi)]
-        if not chain:
-            u = self._empty_log_df()
-        else:
-            u = self._seg_df(chain[0])
-            for s in chain[1:]:
-                u = u.unionByName(self._seg_df(s))
+        u = self._union([self._seg_df(s) for s in chain])
         if key_range is not None:
             u = u.filter(F.col(self.key_cols[0]).between(lo, hi))
         if len(chain) == 1 and chain[0]["kind"] == "base" and not with_timestamps:
@@ -627,12 +677,11 @@ class LogTxTable:
         (the reference's timestamped LookupRows contract,
         client_dynamic_tables_impl.cpp:1599-1603).
 
-        Two pruning levels: (1) the manifest's per-segment key ranges drop
-        whole segments that cannot contain any requested key — no parquet
-        IO at all for them (one tiny min/max job on the key set buys it);
-        (2) the key semi-join applies to every surviving segment BEFORE
-        the merge, so footer min/max pruning bounds IO within them — the
-        reference's per-store key lookup.
+        Two pruning levels (``_keyed_segments``): the manifest's
+        per-segment key ranges drop whole segments that cannot contain any
+        requested key — no parquet IO at all for them (one tiny min/max
+        job on the key set buys it); the key semi-join bounds IO within
+        the surviving ones.
 
         ``key_bounds=(lo, hi)``: caller-supplied min/max of the first key
         column over ``keys`` — skips the bounds job when the caller
@@ -640,33 +689,7 @@ class LogTxTable:
         two versions and computes the bounds once); pruning behavior is
         identical."""
         version = self._resolve_version(version, timestamp)
-        chain = self._chain(version)
-        k0 = self.key_cols[0]
-        # The key-bounds pre-pass costs one tiny Spark job, but segment
-        # pruning is a CONTRACT, not just an optimization: a segment whose
-        # manifest range cannot contain any requested key is never opened
-        # (test_log_tx_table_segment_range_pruning proves it file-level) —
-        # a chain-length threshold here once skipped the pre-pass on short
-        # chains and broke that guarantee, so it runs whenever anything is
-        # potentially prunable (more than one segment with a usable range).
-        if len(chain) > 1 and any(s.get("range") is not None for s in chain):
-            if key_bounds is None:
-                b = keys.agg(F.min(k0).alias("lo"), F.max(k0).alias("hi")).first()
-                key_bounds = (b["lo"], b["hi"])
-            chain = [
-                s for s in chain
-                if self._overlaps(s, key_bounds[0], key_bounds[1])
-            ]
-        keyset = F.broadcast(keys.select(*self.key_cols))
-        parts = [
-            self._seg_df(s).join(keyset, self.key_cols, "left_semi")
-            for s in chain
-        ]
-        if not parts:
-            parts = [self._empty_log_df()]
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
+        chain, u = self._keyed_segments(self._chain(version), keys, key_bounds)
         if (
             len(chain) == 1
             and chain[0]["kind"] == "base"
@@ -687,26 +710,10 @@ class LogTxTable:
         segs = self._segments()
         if not segs:
             raise FileNotFoundError(f"no committed version in {self.path}")
-        k0 = self.key_cols[0]
-        writes = [s for s in segs if s["kind"] != "base" or s["v"] == 0]
         # deltas + the seed only: compaction bases are derived states, not
-        # writes. Same pruning CONTRACT as lookup_rows: a segment whose
-        # manifest range cannot contain any requested key is never opened,
-        # so the bounds pre-pass runs whenever anything is potentially
-        # prunable (more than one segment with a usable range).
-        if len(writes) > 1 and any(s.get("range") is not None for s in writes):
-            b = keys.agg(F.min(k0).alias("lo"), F.max(k0).alias("hi")).first()
-            writes = [s for s in writes if self._overlaps(s, b["lo"], b["hi"])]
-        keyset = F.broadcast(keys.select(*self.key_cols))
-        parts = [
-            self._seg_df(s).join(keyset, self.key_cols, "left_semi")
-            for s in writes
-        ]
-        if not parts:
-            parts = [self._empty_log_df()]
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
+        # writes
+        writes = [s for s in segs if s["kind"] != "base" or s["v"] == 0]
+        _, u = self._keyed_segments(writes, keys)
         return (
             u.withColumn("__write_ts", self._gen_ts_col())
             .orderBy(*self.key_cols, F.col("__gen").desc(), F.col("__sub").desc())
@@ -753,20 +760,12 @@ class LogTxTable:
             if not in_range:
                 touched = self._empty_log_df().select(*self.key_cols)
             else:
-                parts = [self._seg_df(s) for s in in_range]
-                u = parts[0]
-                for p_ in parts[1:]:
-                    u = u.unionByName(p_)
+                u = self._union([self._seg_df(s) for s in in_range])
                 # O(changes)-sized by contract; materialize once — the two
                 # lookups below (and every downstream consumer of the
                 # diff) otherwise re-derive the distinct-union per action
                 touched = u.select(*self.key_cols).distinct().localCheckpoint()
-            bounds = self._delta_key_bounds(in_range)
-            if bounds is None:
-                k0 = self.key_cols[0]
-                b = touched.agg(F.min(k0).alias("lo"),
-                                F.max(k0).alias("hi")).first()
-                bounds = (b["lo"], b["hi"])
+            bounds = self._delta_key_bounds(in_range) or self._key_bounds(touched)
             new_state = self.lookup_rows(touched, version=v2, key_bounds=bounds)
             old_state = self.lookup_rows(touched, version=v1, key_bounds=bounds)
         newer = new_state.select(

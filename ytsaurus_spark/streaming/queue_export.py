@@ -20,8 +20,8 @@ DurableQueue`'s manifest already carries one entry per flushed segment
 is a driver-side metadata pass over that manifest — grouping segment
 ENTRIES, never rows — followed by one distributed parquet write per
 populated slot (the segments' union; no data moves through the driver).
-Progress lives in an atomic manifest in the export directory (the same
-``os.replace`` protocol as the queue itself), so a crashed task re-runs
+Progress lives in an atomic manifest in the export directory (published
+through ``jsonio.publish_json``, like the queue's own), so a crashed task re-runs
 its incomplete slot and already-created tables raise — the reference's
 create-conflict-then-retry discipline (config.h:82-84).
 
@@ -33,12 +33,11 @@ and the manifest pass is O(segments since last export).
 from __future__ import annotations
 
 import datetime
-import json
 import os
-import tempfile
 import uuid
 
 from ytsaurus_spark.catalog import read_parquet
+from ytsaurus_spark.jsonio import load_json, publish_json
 from ytsaurus_spark.streaming.queues import DurableQueue
 
 __all__ = ["QueueStaticExporter", "format_export_table_name"]
@@ -89,7 +88,7 @@ class QueueStaticExporter:
         if not client.exists(self.export_directory):
             client.create("map_node", self.export_directory, recursive=True)
 
-    # -- progress manifest (atomic, tx_table.py protocol) ----------------
+    # -- progress manifest (atomic, jsonio.publish_json) -----------------
 
     @property
     def _progress_path(self) -> str:
@@ -99,18 +98,14 @@ class QueueStaticExporter:
     def get_export_progress(self) -> dict:
         """TQueueExportProgress analog: last exported slot ts + per-table
         row counts."""
-        if not os.path.exists(self._progress_path):
-            return {"last_export_unix_ts": 0, "tables": {},
-                    "last_successful_task_instant": None}
-        with open(self._progress_path) as f:
-            return json.load(f)
+        return load_json(
+            self._progress_path,
+            {"last_export_unix_ts": 0, "tables": {},
+             "last_successful_task_instant": None},
+        )
 
     def _publish(self, progress: dict) -> None:
-        d = os.path.dirname(self._progress_path)
-        fd, tmp = tempfile.mkstemp(dir=d, suffix=".json.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(progress, f)
-        os.replace(tmp, self._progress_path)
+        publish_json(self._progress_path, progress)
 
     # -- the export task --------------------------------------------------
 

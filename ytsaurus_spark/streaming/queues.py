@@ -18,15 +18,14 @@ which is replay-from-anywhere by design.
 
 from __future__ import annotations
 
-import json
 import os
-import tempfile
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ytsaurus_spark.catalog import read_parquet, record_parquet_schema
+from ytsaurus_spark.jsonio import load_json, publish_json
 
 
 @dataclass
@@ -145,8 +144,8 @@ class DurableQueue:
     retried pushes exactly-once.
 
     Spark re-expression: segments are append-only parquet directories named
-    by the row-index range they cover; the atomic ``os.replace`` manifest
-    (same protocol as sources/tx_table.py) carries the segment list, the
+    by the row-index range they cover; the atomically published manifest
+    (``jsonio.publish_json``) carries the segment list, the
     next ``$row_index``, and per-session ``{epoch, last_seq}`` state. Reads
     union the manifested segments — a pull with a row-index range prunes to
     the overlapping segments via the manifest before any parquet IO, the
@@ -162,23 +161,20 @@ class DurableQueue:
         self.path = path
         os.makedirs(path, exist_ok=True)
 
-    # -- manifest (atomic publish, tx_table.py protocol) ---------------
+    # -- manifest (atomic publish, jsonio.publish_json) ----------------
 
     @property
     def _manifest_path(self) -> str:
         return os.path.join(self.path, self.MANIFEST)
 
     def _state(self) -> dict:
-        if not os.path.exists(self._manifest_path):
-            return {"segments": [], "next_row_index": 0, "sessions": {}}
-        with open(self._manifest_path) as f:
-            return json.load(f)
+        return load_json(
+            self._manifest_path,
+            {"segments": [], "next_row_index": 0, "sessions": {}},
+        )
 
     def _publish(self, state: dict) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".json.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self._manifest_path)
+        publish_json(self._manifest_path, state)
 
     # -- producer sessions ---------------------------------------------
 
