@@ -678,7 +678,14 @@ def _register_flavour(s: SparkSession, sf_dir: str | None,
     - ``star``, ``star_uncached``: the TPC-DS star views, persisted or
       not (``yql._star_session``);
     - ``star_wide``: the persisted star views with AQE off.
+
+    Every flavour registers the part-file formats, so every clone has
+    them: Spark looks a Python data source up on the JVM's active session,
+    and a statement's ``createDataFrame`` leaves its clone active.
     """
+    from ytsaurus_spark.sources import part_files
+
+    part_files.register(s)
     if flavour.startswith("star"):
         from ytsaurus_spark.yql.tpcds_star import register_star_views
 

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ytsaurus_spark.sources import part_files
+
 # Confs chosen for scale-readiness, not just the local test rig:
 # - AQE coalescing replaces the reference's auto-merge of small chunks
 #   (yt/yt/server/controller_agent/auto_merge_task.cpp).
@@ -76,7 +78,8 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     execution). Any entry point that receives a foreign session — the
     driver harness passes its own — must call this before reading parquet.
     All of these are runtime-settable SQL confs; failures on a restricted
-    session are tolerated per-conf rather than aborting.
+    session are tolerated per-conf rather than aborting. The session also
+    gets the part-file formats (``sources.part_files.register``).
     """
     confs = dict(_RUNTIME_CONFS)
     # A foreign session defaults to 200 shuffle partitions — far too many
@@ -88,6 +91,7 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:
             pass
+    part_files.register(spark)
     return spark
 
 
@@ -114,4 +118,5 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    part_files.register(spark)
     return spark

@@ -11,6 +11,5 @@ from ytsaurus_spark.sources.formats import (  # noqa: F401
 )
 from ytsaurus_spark.sources.skiff import (  # noqa: F401
     read_skiff,
-    register_skiff,
     write_skiff,
 )

@@ -1,4 +1,4 @@
-"""Arrow IPC files as a Spark Python DataSource (reader + writer).
+"""Arrow IPC files: the codec behind the ``ytarrow`` part-file source.
 
 The reference ships Arrow as a first-class I/O format (``EFormatType::
 Arrow``, yt/yt/client/formats/public.h:49-62; writer/parser in
@@ -11,9 +11,11 @@ random-access format: pa.ipc.new_file). Unlike the Skiff/Protobuf row
 codecs, nothing here is per-row Python: the reader yields
 ``pyarrow.RecordBatch`` objects straight into Spark's Arrow lane, and the
 writer receives Arrow batches from Spark — both directions stay columnar
-end to end. One task per file on read, one file per partition on write;
-files are self-describing (the IPC footer carries the schema), so no
-sidecar is needed.
+end to end. The table layout is the one part-file DataSource of
+:mod:`ytsaurus_spark.sources.part_files`: one task per ``*.arrow`` file on
+read, one file per partition on write. Files are self-describing (the IPC
+footer carries the schema), so no sidecar is needed: the first part's
+footer is the table's schema.
 
 At scale this is the zero-copy interchange path: batches move
 Arrow→Arrow with no transposition, so throughput is bounded by IO, and
@@ -22,52 +24,30 @@ a directory of IPC files parallelizes exactly like a parquet directory.
 
 from __future__ import annotations
 
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    InputPartition,
-    WriterCommitMessage,
-)
-from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema, to_arrow_type
 from pyspark.sql.types import StructType
 
-
-class _ArrowFilePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
+from ytsaurus_spark.sources import part_files
 
 
-def _ipc_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".arrow")
-        )
-    return [path]
+def _recorded_schema(directory: str, parts: list[str], options) -> StructType | None:
+    """The IPC footer schema of the first part file."""
+    import pyarrow as pa
+
+    if not parts:
+        return None
+    with pa.ipc.open_file(parts[0]) as reader:
+        return from_arrow_schema(reader.schema)
 
 
-class _ArrowReader(DataSourceReader):
-    def __init__(self, path: str, schema: StructType):
-        self._path = path
-        self._spark_schema = schema
+def _decoder(directory: str, schema: StructType, options):
+    target = to_arrow_schema(schema)
 
-    def partitions(self):
-        files = _ipc_files(self._path)
-        return [_ArrowFilePartition(f) for f in files] or [_ArrowFilePartition("")]
-
-    def read(self, partition: _ArrowFilePartition):
-        if not partition.path:
-            return
+    def decode(data: bytes):
         import pyarrow as pa
 
-        target = to_arrow_schema(self._spark_schema)
-        with pa.ipc.open_file(partition.path) as reader:
+        with pa.ipc.open_file(pa.py_buffer(data)) as reader:
             for i in range(reader.num_record_batches):
                 batch = reader.get_batch(i)
                 # Column-prune + cast to the requested Spark schema so a
@@ -78,96 +58,43 @@ class _ArrowReader(DataSourceReader):
                 ]
                 yield pa.RecordBatch.from_arrays(cols, schema=target)
 
-
-class _ArrowCommit(WriterCommitMessage):
-    pass
+    return decode
 
 
-class _ArrowWriter(DataSourceArrowWriter):
-    def __init__(self, path: str, schema: StructType):
-        self._path = path
-        self._schema = schema
+def _encoder(directory: str, schema: StructType, options):
+    target = to_arrow_schema(schema)
 
-    def write(self, iterator):
+    def encode(batches, fh) -> None:
         import pyarrow as pa
 
-        os.makedirs(self._path, exist_ok=True)
-        out_path = os.path.join(self._path, f"part-{uuid.uuid4().hex}.arrow")
-        target = to_arrow_schema(self._schema)
-        writer = None
-        try:
-            for batch in iterator:
-                if writer is None:
-                    writer = pa.ipc.new_file(out_path, target)
+        # an empty partition still writes a valid file
+        with pa.ipc.new_file(fh, target) as writer:
+            for batch in batches:
                 writer.write_batch(
                     pa.RecordBatch.from_arrays(
                         [c.cast(f.type) for c, f in zip(batch.columns, target)],
                         schema=target,
                     )
                 )
-            if writer is None:  # empty partition still writes a valid file
-                writer = pa.ipc.new_file(out_path, target)
-        finally:
-            if writer is not None:
-                writer.close()
-        return _ArrowCommit()
+
+    return encode
 
 
-class ArrowDataSource(DataSource):
-    """``spark.read.format("ytarrow")`` / ``df.write.format("ytarrow")``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "ytarrow"
-
-    def _path(self) -> str:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("ytarrow datasource requires a path")
-        return path
-
-    def schema(self) -> StructType:
-        import pyarrow as pa
-
-        files = _ipc_files(self._path())
-        if not files or not os.path.exists(files[0]):
-            raise ValueError(
-                f"no .arrow files under {self._path()}; pass .schema(...) explicitly"
-            )
-        with pa.ipc.open_file(files[0]) as reader:
-            return from_arrow_schema(reader.schema)
-
-    def reader(self, schema: StructType) -> DataSourceReader:
-        return _ArrowReader(self._path(), schema)
-
-    def writer(self, schema: StructType, overwrite: bool):
-        import shutil
-
-        path = self._path()
-        if overwrite and os.path.isdir(path):
-            shutil.rmtree(path)
-        os.makedirs(path, exist_ok=True)
-        return _ArrowWriter(path, schema)
-
-
-def register_arrow(spark: SparkSession) -> None:
-    """Idempotently register the ytarrow format on a session."""
-    try:
-        spark.dataSource.register(ArrowDataSource)
-    except Exception:  # already registered
-        pass
+YTARROW = part_files.PartFormat(
+    name="ytarrow",
+    suffix="arrow",
+    check=to_arrow_type,
+    decoder=_decoder,
+    encoder=_encoder,
+    recorded_schema=_recorded_schema,
+)
 
 
 def write_arrow(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    register_arrow(df.sparkSession)
-    df.write.format("ytarrow").mode(mode).save(path)
+    part_files.write(df, "ytarrow", path, mode)
 
 
 def read_arrow(
-    spark: SparkSession, path: str, schema: StructType | None = None
+    spark: SparkSession, path: str, schema: StructType | str | None = None
 ) -> DataFrame:
-    register_arrow(spark)
-    reader = spark.read.format("ytarrow")
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(path)
+    return part_files.read(spark, "ytarrow", path, schema)

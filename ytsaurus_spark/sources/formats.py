@@ -10,11 +10,12 @@ Mapping:
 - TSKV (tab-separated key=value, YT's YamredDsv cousin) → one-column text
   read + ``str_to_map`` — stays JVM-side, no Python parsing.
 - SchemafulDsv → csv with an explicit schema, no header.
-- Skiff → REAL reader+writer via the Spark 4 Python DataSource API
-  (``sources/skiff.py``): the reference's binary job-I/O wire format,
-  one task per part-file, sidecar-self-describing.
-- Protobuf → lenval wire rows as a second Python DataSource
-  (``sources/protobuf.py``), reusing the Skiff task layout.
+- Skiff, Protobuf, Arrow → one part-file Spark 4 Python DataSource
+  (``sources/part_files.py``: one task per part-file, one file per write
+  partition, schema-checked appends) with a codec each: Skiff, the
+  reference's binary job-I/O wire format (``sources/skiff.py``), lenval
+  proto2 wire rows (``sources/protobuf.py``), Arrow IPC files
+  (``sources/arrow.py``).
 - YAMR / YamredDsv → tab-framed key/subkey/value text lines
   (``read_yamr``/``write_yamr``/``read_yamred_dsv``): limit-split stays
   JVM-side, the value map parses with ``str_to_map``.

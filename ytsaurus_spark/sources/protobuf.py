@@ -1,4 +1,4 @@
-"""Protobuf wire rows as a Spark Python DataSource (reader + writer).
+"""Protobuf wire rows: the codec behind the ``ytproto`` part-file source.
 
 The reference's protobuf job-I/O format (``EFormatType::Protobuf``,
 ``yt/yt/client/formats/public.h:49-62``; YTsaurus docs "Protobuf format")
@@ -33,31 +33,20 @@ Unknown field numbers are skipped on read by wire type, the standard
 proto2 forward-compatibility rule, so readers tolerate writer-side schema
 extensions.
 
-Same Spark-first shape as :mod:`ytsaurus_spark.sources.skiff` (which see
-for the rationale): a Spark 4 Python DataSource —
-``spark.read.format("ytproto")`` / ``df.write.format("ytproto")`` — one
-task per part-file on read, one file per partition on write; interchange
-format, so the per-row Python codec is acceptable and analytics stays on
-parquet. A ``_proto_schema.json`` sidecar makes written dirs
-self-describing.
+``spark.read.format("ytproto")`` / ``df.write.format("ytproto")`` go
+through the one part-file DataSource of
+:mod:`ytsaurus_spark.sources.part_files`, as Skiff does (which see for the
+rationale): one task per ``*.pb`` part-file on read, one file per
+partition on write; interchange format, so the per-row Python codec is
+acceptable and analytics stays on parquet. A ``_proto_schema.json``
+sidecar makes written dirs self-describing.
 """
 
 from __future__ import annotations
 
-import datetime
-import decimal
-import os
 import struct
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    InputPartition,
-    WriterCommitMessage,
-)
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -78,13 +67,10 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ytsaurus_spark.jsonio import load_json, publish_json
-from ytsaurus_spark.sources import yson
+from ytsaurus_spark.sources import part_files, yson
+from ytsaurus_spark.sources.yson import _read_uvarint, _write_uvarint
 
 SIDECAR = "_proto_schema.json"
-
-_EPOCH_DATE = datetime.date(1970, 1, 1)
-_EPOCH_TS = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
 
 # proto2 wire types
 _VARINT, _FIXED64, _LENDELIM = 0, 1, 2
@@ -92,8 +78,9 @@ _VARINT, _FIXED64, _LENDELIM = 0, 1, 2
 
 def wire_kind_for(dtype: DataType) -> str:
     """Column type → codec kind (fails fast on unsupported types)."""
-    if isinstance(dtype, (LongType, IntegerType, ShortType, ByteType)):
-        return "int64"
+    if isinstance(dtype, (LongType, IntegerType, ShortType, ByteType, DateType,
+                          TimestampType, TimestampNTZType)):
+        return "int64"  # dates and timestamps as their part_files.to_wire_value
     if isinstance(dtype, DecimalType) and dtype.scale == 0:
         return "uint64"
     if isinstance(dtype, (DoubleType, FloatType)):
@@ -104,57 +91,13 @@ def wire_kind_for(dtype: DataType) -> str:
         return "string"
     if isinstance(dtype, BinaryType):
         return "bytes"
-    if isinstance(dtype, DateType):
-        return "date"
-    if isinstance(dtype, (TimestampType, TimestampNTZType)):
-        return "timestamp"
     if isinstance(dtype, (ArrayType, MapType, StructType)):
         return "yson"
     raise TypeError(f"no protobuf wire mapping for Spark type {dtype}")
 
 
-def _uvarint(out: bytearray, n: int) -> None:
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
-
-
-def _read_uvarint(data: bytes, pos: int) -> tuple[int, int]:
-    shift = result = 0
-    while True:
-        b = data[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return result, pos
-        shift += 7
-
-
 def _key(out: bytearray, field_no: int, wire: int) -> None:
-    _uvarint(out, (field_no << 3) | wire)
-
-
-def _nested_to_plain(value, dtype: DataType):
-    """Row/dict containers → YSON-encodable plain Python (shared contract
-    with the Skiff codec's yson32 columns)."""
-    if value is None:
-        return None
-    if isinstance(dtype, ArrayType):
-        return [_nested_to_plain(v, dtype.elementType) for v in value]
-    if isinstance(dtype, MapType):
-        return {k: _nested_to_plain(v, dtype.valueType) for k, v in value.items()}
-    if isinstance(dtype, StructType):
-        d = value.asDict(recursive=False) if hasattr(value, "asDict") else dict(value)
-        return {
-            f.name: _nested_to_plain(d.get(f.name), f.dataType)
-            for f in dtype.fields
-        }
-    return value
+    _write_uvarint(out, (field_no << 3) | wire)
 
 
 def encode_rows_pb(rows, schema: StructType) -> bytes:
@@ -170,43 +113,29 @@ def encode_rows_pb(rows, schema: StructType) -> bytes:
             fno = i + 1
             if kind == "int64":
                 _key(msg, fno, _VARINT)
-                _uvarint(msg, int(v) & 0xFFFFFFFFFFFFFFFF)
+                iv = int(part_files.to_wire_value(v, dtypes[i]))
+                _write_uvarint(msg, iv & 0xFFFFFFFFFFFFFFFF)
             elif kind == "uint64":
                 _key(msg, fno, _VARINT)
                 iv = int(v)
                 if iv < 0:
                     raise ValueError(f"uint64 column got negative {iv}")
-                _uvarint(msg, iv)
+                _write_uvarint(msg, iv)
             elif kind == "bool":
                 _key(msg, fno, _VARINT)
-                _uvarint(msg, 1 if v else 0)
+                _write_uvarint(msg, 1 if v else 0)
             elif kind == "double":
                 _key(msg, fno, _FIXED64)
                 msg += struct.pack("<d", float(v))
-            elif kind == "string":
-                b = v.encode("utf-8")
+            else:  # len-delimited: string, bytes or a yson container
+                if kind == "string":
+                    b = v.encode("utf-8")
+                elif kind == "bytes":
+                    b = bytes(v)
+                else:
+                    b = yson.dumps(part_files.nested_to_plain(v, dtypes[i]))
                 _key(msg, fno, _LENDELIM)
-                _uvarint(msg, len(b))
-                msg += b
-            elif kind == "bytes":
-                b = bytes(v)
-                _key(msg, fno, _LENDELIM)
-                _uvarint(msg, len(b))
-                msg += b
-            elif kind == "date":
-                _key(msg, fno, _VARINT)
-                _uvarint(msg, (v - _EPOCH_DATE).days & 0xFFFFFFFFFFFFFFFF)
-            elif kind == "timestamp":
-                tv = v if v.tzinfo is not None else v.replace(
-                    tzinfo=datetime.timezone.utc
-                )
-                us = round((tv - _EPOCH_TS).total_seconds() * 1_000_000)
-                _key(msg, fno, _VARINT)
-                _uvarint(msg, us & 0xFFFFFFFFFFFFFFFF)
-            else:  # yson container
-                b = yson.dumps(_nested_to_plain(v, dtypes[i]))
-                _key(msg, fno, _LENDELIM)
-                _uvarint(msg, len(b))
+                _write_uvarint(msg, len(b))
                 msg += b
         out += struct.pack("<I", len(msg))
         out += msg
@@ -240,23 +169,14 @@ def decode_stream_pb(data: bytes, schema: StructType):
                 raw, pos = _read_uvarint(data, pos)
                 if known:
                     kind = kinds[idx]
-                    if kind in ("int64",):
-                        values[idx] = _to_signed64(raw)
+                    if kind == "int64":
+                        values[idx] = part_files.from_wire_value(
+                            _to_signed64(raw), dtypes[idx]
+                        )
                     elif kind == "uint64":
-                        values[idx] = decimal.Decimal(raw)
+                        values[idx] = part_files.from_wire_value(raw, dtypes[idx])
                     elif kind == "bool":
                         values[idx] = bool(raw)
-                    elif kind == "date":
-                        values[idx] = _EPOCH_DATE + datetime.timedelta(
-                            days=_to_signed64(raw)
-                        )
-                    elif kind == "timestamp":
-                        dt = _EPOCH_TS + datetime.timedelta(
-                            microseconds=_to_signed64(raw)
-                        )
-                        if isinstance(dtypes[idx], TimestampNTZType):
-                            dt = dt.replace(tzinfo=None)
-                        values[idx] = dt
                     else:
                         raise ValueError(
                             f"field {fno}: varint wire for {kind} column"
@@ -279,7 +199,7 @@ def decode_stream_pb(data: bytes, schema: StructType):
                     elif kind == "bytes":
                         values[idx] = raw_b
                     elif kind == "yson":
-                        values[idx] = _yson_to_spark(
+                        values[idx] = part_files.nested_to_plain(
                             yson.loads(raw_b), dtypes[idx]
                         )
                     else:
@@ -295,142 +215,25 @@ def decode_stream_pb(data: bytes, schema: StructType):
         yield tuple(values)
 
 
-def _yson_to_spark(value, dtype: DataType):
-    if value is None:
-        return None
-    if isinstance(dtype, ArrayType):
-        return [_yson_to_spark(v, dtype.elementType) for v in value]
-    if isinstance(dtype, MapType):
-        return {k: _yson_to_spark(v, dtype.valueType) for k, v in value.items()}
-    if isinstance(dtype, StructType):
-        return {
-            f.name: _yson_to_spark(value.get(f.name), f.dataType)
-            for f in dtype.fields
-        }
-    return value
-
-
-class _ProtoFilePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
-
-
-class _ProtoReader(DataSourceReader):
-    def __init__(self, path: str, schema: StructType):
-        self._path = path
-        self._schema = schema
-
-    def partitions(self):
-        if os.path.isdir(self._path):
-            files = sorted(
-                os.path.join(self._path, f)
-                for f in os.listdir(self._path)
-                if f.endswith(".pb")
-            )
-        else:
-            files = [self._path]
-        return [_ProtoFilePartition(f) for f in files] or [_ProtoFilePartition("")]
-
-    def read(self, partition: _ProtoFilePartition):
-        if not partition.path:
-            return iter(())
-        with open(partition.path, "rb") as fh:
-            data = fh.read()
-        return decode_stream_pb(data, self._schema)
-
-
-class _ProtoCommit(WriterCommitMessage):
-    pass
-
-
-class _ProtoWriter(DataSourceArrowWriter):
-    def __init__(self, path: str, schema: StructType):
-        self._path = path
-        self._schema = schema
-
-    def write(self, iterator):
-        os.makedirs(self._path, exist_ok=True)
-        out_path = os.path.join(self._path, f"part-{uuid.uuid4().hex}.pb")
-        chunks = []
-        for batch in iterator:
-            rows = zip(
-                *(
-                    [
-                        _arrow_cell_to_py(col.to_pylist(), field.dataType)
-                        for col, field in zip(batch.columns, self._schema.fields)
-                    ]
-                    or [[]]
-                )
-            )
-            chunks.append(encode_rows_pb(rows, self._schema))
-        with open(out_path, "wb") as fh:
-            fh.writelines(chunks)
-        return _ProtoCommit()
-
-
-def _arrow_cell_to_py(values: list, dtype: DataType) -> list:
-    if isinstance(dtype, MapType):
-        return [dict(v) if v is not None else None for v in values]
-    return values
-
-
-class ProtoDataSource(DataSource):
-    """``spark.read.format("ytproto")`` / ``df.write.format("ytproto")``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "ytproto"
-
-    def _path(self) -> str:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("ytproto datasource requires a path")
-        return path
-
-    def schema(self) -> StructType:
-        schema = load_json(os.path.join(self._path(), SIDECAR), None)
-        if schema is not None:
-            return StructType.fromJson(schema)
-        raise ValueError(
-            f"no {SIDECAR} sidecar under {self._path()}; pass .schema(...) explicitly"
-        )
-
-    def reader(self, schema: StructType) -> DataSourceReader:
-        for field in schema.fields:
-            wire_kind_for(field.dataType)
-        return _ProtoReader(self._path(), schema)
-
-    def writer(self, schema: StructType, overwrite: bool):
-        import shutil
-
-        path = self._path()
-        for field in schema.fields:
-            wire_kind_for(field.dataType)
-        if overwrite and os.path.isdir(path):
-            shutil.rmtree(path)
-        os.makedirs(path, exist_ok=True)
-        publish_json(os.path.join(path, SIDECAR), schema.jsonValue())
-        return _ProtoWriter(path, schema)
-
-
-def register_proto(spark: SparkSession) -> None:
-    """Idempotently register the ytproto format on a session."""
-    try:
-        spark.dataSource.register(ProtoDataSource)
-    except Exception:  # already registered
-        pass
+YTPROTO = part_files.PartFormat(
+    name="ytproto",
+    suffix="pb",
+    check=wire_kind_for,
+    decoder=lambda directory, schema, options: (
+        lambda data: decode_stream_pb(data, schema)
+    ),
+    encoder=lambda directory, schema, options: part_files.row_encoder(
+        schema, lambda rows: encode_rows_pb(rows, schema)
+    ),
+    sidecar=SIDECAR,
+)
 
 
 def write_proto(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    register_proto(df.sparkSession)
-    df.write.format("ytproto").mode(mode).save(path)
+    part_files.write(df, "ytproto", path, mode)
 
 
 def read_proto(
     spark: SparkSession, path: str, schema: StructType | None = None
 ) -> DataFrame:
-    register_proto(spark)
-    reader = spark.read.format("ytproto")
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(path)
+    return part_files.read(spark, "ytproto", path, schema)
