@@ -28,3 +28,13 @@ def sf_dir() -> str:
 def rows_set(df):
     """Order-insensitive row tuples."""
     return {tuple(r) for r in df.collect()}
+
+
+def jobs_started(spark, fn) -> int:
+    """Spark jobs the scheduler started while ``fn`` ran, on any thread:
+    the DAG scheduler's job-id counter, which every job and map-stage
+    submission advances synchronously."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first = dag.nextJobId()
+    fn()
+    return dag.nextJobId() - first

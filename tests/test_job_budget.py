@@ -4,7 +4,12 @@ gates plan shapes. Each isolated YQL/CHYT statement runs in a clone of a
 template that registered the fixture views (and the YSON UDFs) once
 (``catalog.statement_session``): a warm statement registers nothing, and
 a template (re)build reads each fixture schema from the process memo
-with no Spark job."""
+with no Spark job.
+
+A build's count is every job the scheduler started while it ran, on any
+thread, and each of those jobs must carry the caller's job group: work a
+build hands to a thread pool runs under ``inheritable_thread_target``, so
+a traced run attributes it to the query."""
 
 from __future__ import annotations
 
@@ -13,27 +18,37 @@ import uuid
 import pytest
 from pyspark.sql.udf import UDFRegistration
 
+from tests.conftest import jobs_started
 from ytsaurus_spark.catalog import Catalog, load_tables
 from ytsaurus_spark.queries import all_queries
 
-# query -> Spark jobs its build may run on the main thread once the
-# schema memo and the statement templates are warm
+# query -> Spark jobs its build may run, on all threads, once the schema
+# memo and the statement templates are warm
 BUILD_JOB_BUDGET = {
     "chyt_agg_report": 0,
     "yql_text_reduce": 0,
-    "pipeline_cdc_replica": 32,
+    "pipeline_cdc_replica": 22,
 }
 
 
 def _count_jobs(spark, fn) -> int:
+    """Jobs started while ``fn`` ran; fails if one of them ran outside
+    the job group set around it."""
     sc = spark.sparkContext
     group = f"job-budget-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
-        fn()
+        started = jobs_started(spark, fn)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    grouped = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert grouped == started, (
+        f"{started - grouped} of {started} jobs ran outside the caller's "
+        "job group"
+    )
+    return started
 
 
 def test_child_session_load_runs_no_jobs(spark, sf_dir):

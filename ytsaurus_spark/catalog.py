@@ -434,6 +434,45 @@ def record_parquet_schema(spark: SparkSession, path: str, schema) -> None:
         _memo_put(keys[0], _as_nullable(schema))
 
 
+def parquet_footers(directory: str) -> list:
+    """Footer metadata of every parquet file a write left in the local
+    ``directory``: a driver-side read of each file's tail, no Spark job.
+    ``sum(md.num_rows for md in footers)`` is the row count written."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    return [pq.read_metadata(f)
+            for f in sorted(glob.glob(os.path.join(directory, "*.parquet")))]
+
+
+def footer_min_max(footers: list, column: str) -> list | None:
+    """``[min, max]`` of top-level ``column`` from the row-group statistics
+    in ``footers``. None when there is no row group, when a footer lacks
+    the column or its statistics, or when the values are not JSON scalars.
+    String statistics may be truncated in the safe direction (prefix
+    min ≤ true min, bumped max ≥ true max), which only widens the range."""
+    lo = hi = None
+    for md in footers:
+        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+        if column not in idx:
+            return None
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(idx[column]).statistics
+            if st is None or not st.has_min_max:
+                return None
+            mn, mx = st.min, st.max
+            if isinstance(mn, bytes) or isinstance(mx, bytes):
+                mn, mx = mn.decode("utf-8", "replace"), mx.decode(
+                    "utf-8", "replace"
+                )
+            if not isinstance(mn, (int, float, str, bool)):
+                return None
+            lo = mn if lo is None else min(lo, mn)
+            hi = mx if hi is None else max(hi, mx)
+    return None if lo is None else [lo, hi]
+
+
 @dataclass
 class Catalog:
     """Registers every ``<name>.parquet`` under ``root`` as a temp view.

@@ -801,12 +801,16 @@ def pipeline_cdc_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, os.path.join(root, "replica"), key_cols=["c_custkey"]
         )
         # the two seed commits land on INDEPENDENT tables: overlap the
-        # tiny write jobs (guide §2.6) — each table's manifest is its own
+        # tiny write jobs (guide §2.6) — each table's manifest is its own;
+        # the pool threads carry the caller's job group
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
+        in_group = inheritable_thread_target(spark)
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_src = pool.submit(source.init, cust)
-            f_rep = pool.submit(replica.init, cust)
+            f_src = pool.submit(in_group(source.init), cust)
+            f_rep = pool.submit(in_group(replica.init), cust)
             v0 = f_src.result()
             f_rep.result()
         bump = cust.filter(F.col("c_custkey") <= 10).withColumn(

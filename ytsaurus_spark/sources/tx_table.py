@@ -44,7 +44,12 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ytsaurus_spark.catalog import read_parquet, record_parquet_schema
+from ytsaurus_spark.catalog import (
+    footer_min_max,
+    parquet_footers,
+    read_parquet,
+    record_parquet_schema,
+)
 from ytsaurus_spark.jsonio import load_json, publish_json
 from ytsaurus_spark.operators.keyed_tables import _check_folds
 
@@ -159,6 +164,9 @@ def ship_segments(src: "LogTxTable", dst: "LogTxTable") -> int:
             if s["v"] >= cut:
                 remove_segment(dst.path, s["v"])
                 dst._seg_cache.pop(s["v"], None)
+        dst._diff_cache = {
+            r: d for r, d in dst._diff_cache.items() if r[1] < cut
+        }
         dst_segs, dst_map = kept, {s["v"]: s for s in kept}
     shipped = [dict(s) for s in src_segs if s["v"] not in dst_map]
     for s in shipped:
@@ -232,6 +240,12 @@ class LogTxTable:
         _check_folds(self.aggregates)
         os.makedirs(path, exist_ok=True)
         self._seg_cache: dict[int, DataFrame] = {}
+        # (v1, v2) -> the last materialized changes_between diff. Committed
+        # versions are immutable (an era-fencing truncation in
+        # ship_segments drops the entry it invalidates). One entry: a
+        # replay asks for the range just published, and keeping every
+        # range would pin each diff's blocks for the table's lifetime.
+        self._diff_cache: dict[tuple[int, int], DataFrame] = {}
 
     # -- manifest -------------------------------------------------------
 
@@ -284,37 +298,12 @@ class LogTxTable:
         Spark job. Stored in the manifest so readers can skip whole
         segments (CHYT's granule pruning, granule_min_max_filter.cpp:24-83
         — there from chunk meta, here from footer statistics). ``None`` =
-        unprunable (stats missing / non-JSON key type); footer string
-        stats may be safe-direction truncated (prefix min ≤ true min,
-        bumped max ≥ true max), which only widens the range."""
-        import glob as _glob
-
-        import pyarrow.parquet as _pq
-
-        col = self.key_cols[0]
-        lo = hi = None
+        unprunable (stats missing / non-JSON key type, see
+        ``catalog.footer_min_max``)."""
         try:
-            for f in _glob.glob(os.path.join(seg_dir, "*.parquet")):
-                md = _pq.ParquetFile(f).metadata
-                idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-                if col not in idx:
-                    return None
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx[col]).statistics
-                    if st is None or not st.has_min_max:
-                        return None
-                    mn, mx = st.min, st.max
-                    if isinstance(mn, bytes) or isinstance(mx, bytes):
-                        mn, mx = mn.decode("utf-8", "replace"), mx.decode(
-                            "utf-8", "replace"
-                        )
-                    if not isinstance(mn, (int, float, str, bool)):
-                        return None
-                    lo = mn if lo is None else min(lo, mn)
-                    hi = mx if hi is None else max(hi, mx)
+            return footer_min_max(parquet_footers(seg_dir), self.key_cols[0])
         except Exception:
             return None
-        return None if lo is None else [lo, hi]
 
     @staticmethod
     def _delta_key_bounds(segs: list[dict]):
@@ -472,7 +461,15 @@ class LogTxTable:
         fill-in read depends on the prior commit's state). Returns the
         committed versions, in order.
         """
+        return self._publish_staged(self._stage_many(ops))
+
+    def _stage_many(self, ops: list[tuple[str, DataFrame]]) -> list[dict]:
+        """Stage ``ops``' deltas concurrently at the next versions, in
+        order; nothing is published. The pool threads carry the caller's
+        job group and tags, so their jobs are attributed to the caller."""
         from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark import inheritable_thread_target
 
         _check_mounted(self.path)  # before any of the concurrent stagings
         v0 = self.current_version() + 1
@@ -484,13 +481,14 @@ class LogTxTable:
                 deltas.append(self._delete_delta(df))
             else:
                 raise ValueError(f"unknown op {op!r} (expected 'u' or 'd')")
+        stage = inheritable_thread_target(self.spark)(
+            lambda iv: self._stage_segment(iv[1], "delta", v0 + iv[0])
+        )
         with ThreadPoolExecutor(max_workers=max(1, len(deltas))) as pool:
-            entries = list(
-                pool.map(
-                    lambda iv: self._stage_segment(iv[1], "delta", v0 + iv[0]),
-                    enumerate(deltas),
-                )
-            )
+            return list(pool.map(stage, enumerate(deltas)))
+
+    def _publish_staged(self, entries: list[dict]) -> list[int]:
+        """Publish staged entries in list order; returns their versions."""
         for e in entries:
             e["ts"] = time.time()  # commit time = publish time
             publish_entry(self.path, e)
@@ -745,11 +743,25 @@ class LogTxTable:
         The full table state is never scanned unless a compaction base
         landed inside the range (the base rewrites history, so the diff
         falls back to a full outer join of the two resolved states —
-        still one shuffle)."""
+        still one shuffle).
+
+        The diff is materialized once (one ``localCheckpoint``) and the
+        last one is memoized per resolved ``(from, to)`` on this instance:
+        committed versions are immutable, so a repeated call — the
+        exactly-once replay of ``publish_changes`` — runs no Spark job."""
         v1 = self._resolve_version(from_version, from_timestamp)
         v2 = self._resolve_version(to_version, to_timestamp)
         if v2 < v1:
             raise ValueError(f"to-version {v2} precedes from-version {v1}")
+        self._chain(v1)  # a from-state trimmed away raises, memo or not
+        diff = self._diff_cache.get((v1, v2))
+        if diff is None:
+            diff = self._net_diff(v1, v2).localCheckpoint()
+            self._diff_cache = {(v1, v2): diff}
+        return diff
+
+    def _net_diff(self, v1: int, v2: int) -> DataFrame:
+        """The lazy ``changes_between`` plan for resolved versions."""
         val_cols = [c for c in self._schema_cols() if c not in self.key_cols]
         in_range = [s for s in self._segments() if v1 < s["v"] <= v2]
         if any(s["kind"] == "base" for s in in_range):
@@ -757,14 +769,12 @@ class LogTxTable:
             # set is unknowable from deltas, diff the two resolved states.
             new_state, old_state = self.read(version=v2), self.read(version=v1)
         else:
-            if not in_range:
-                touched = self._empty_log_df().select(*self.key_cols)
-            else:
-                u = self._union([self._seg_df(s) for s in in_range])
-                # O(changes)-sized by contract; materialize once — the two
-                # lookups below (and every downstream consumer of the
-                # diff) otherwise re-derive the distinct-union per action
-                touched = u.select(*self.key_cols).distinct().localCheckpoint()
+            # the raw key column of the deltas: both lookups semi-join a
+            # broadcast of it, so duplicates cost nothing and no distinct
+            # (or its materialization) is needed
+            touched = self._union(
+                [self._seg_df(s) for s in in_range]
+            ).select(*self.key_cols)
             bounds = self._delta_key_bounds(in_range) or self._key_bounds(touched)
             new_state = self.lookup_rows(touched, version=v2, key_bounds=bounds)
             old_state = self.lookup_rows(touched, version=v1, key_bounds=bounds)
@@ -825,31 +835,29 @@ class LogTxTable:
         ]
         # One localCheckpoint pins the (possibly lazily-built) diff before
         # the first commit mutates this table's manifest; both splits then
-        # derive from the materialized rows (formerly two checkpoints +
-        # two count jobs, each re-running the diff plan).
+        # derive from the materialized rows.
         changes = changes.localCheckpoint()
         upserts = changes.filter(F.col("change").isin("insert", "update")).select(
             *self.key_cols,
             *[F.col(f"new_{c}").alias(c) for c in val_cols],
         )
-        all_keys = changes.select(*self.key_cols)
-        counts = changes.agg(
-            F.count("*").alias("n_all"),
-            F.count(
-                F.when(F.col("change").isin("insert", "update"), 1)
-            ).alias("n_up"),
-        ).first()
         # Same commits in the same order as the sequential path (tombstone
-        # version first, image version second) — commit_many overlaps the
-        # two tiny segment writes (guide §2.6) without reordering publishes.
-        ops: list[tuple[str, DataFrame]] = []
-        if int(counts["n_all"]):
-            ops.append(("d", all_keys))
-        if int(counts["n_up"]):
-            ops.append(("u", upserts))
-        if not ops:
-            return None
-        return self.commit_many(ops)[-1]
+        # version first, image version second), both staged concurrently.
+        # Their footers' row counts decide what is published, with no
+        # count job: the tombstone holds every changed key, so an empty
+        # tombstone is an empty diff and an empty image a delete-only one
+        # — the published entries are always a prefix of the staged ones.
+        staged = self._stage_many(
+            [("d", changes.select(*self.key_cols)), ("u", upserts)]
+        )
+        keep = [
+            e for e in staged
+            if sum(md.num_rows
+                   for md in parquet_footers(_segment_dir(self.path, e["v"])))
+        ]
+        for e in staged[len(keep):]:
+            remove_segment(self.path, e["v"])
+        return self._publish_staged(keep)[-1] if keep else None
 
     # -- merge-on-read resolution ------------------------------------------
 

@@ -19,12 +19,20 @@ which is replay-from-anywhere by design.
 from __future__ import annotations
 
 import os
+import shutil
+import time
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ytsaurus_spark.catalog import read_parquet, record_parquet_schema
+from ytsaurus_spark.catalog import (
+    footer_min_max,
+    parquet_footers,
+    read_parquet,
+    record_parquet_schema,
+)
 from ytsaurus_spark.jsonio import load_json, publish_json
 
 
@@ -129,6 +137,11 @@ class ZombieEpochError(RuntimeError):
 class InvalidRowSequenceNumbersError(ValueError):
     """Sequence numbers inside one push batch must be strictly increasing
     (InvalidRowSequenceNumbers 3103, public.h:16)."""
+
+
+# raised by the segment-write task that meets a repeated sequence number,
+# and recognised in the failed write's error
+_DUPLICATE_SEQ = "duplicate sequence numbers within one push batch"
 
 
 class DurableQueue:
@@ -241,6 +254,20 @@ class ProducerSession:
         The batch is one producer flush (BatchOptions, producer_client.h:
         22-28) — bounded, so the seq ordering window below runs over one
         flush's rows, not the queue; segment data is written distributed.
+
+        No Spark job runs before the segment write: one
+        single-partition window ordered by sequence number gives each
+        fresh row its ``$row_index`` (the running count of fresh rows) and
+        flags a sequence number equal to the previous row's (two NULLs
+        included; one NULL is allowed and, like every stale row, not
+        written). A flagged row fails its task through ``raise_error``,
+        the way Delta Lake enforces CHECK constraints inside the write; the
+        staged directory is then removed and InvalidRowSequenceNumbersError
+        raised. On a cluster the failing task is retried up to
+        ``spark.task.maxFailures`` times before the push fails. The row
+        count and the new high-water sequence number come from the written
+        footers; a push that writes no row removes its staged directory
+        and returns 0, leaving the manifest and ``last_seq`` unchanged.
         """
         from pyspark.sql import Window as W
 
@@ -258,46 +285,56 @@ class ProducerSession:
                 seq_col,
                 F.row_number().over(w).cast("long") + self.last_seq,
             )
-            stats = rows.agg(
-                F.count("*").alias("n"), F.max(seq_col).alias("hi_seq")
-            ).first()
         else:
-            # One aggregate job answers all three pre-write questions
-            # (batch size, duplicate check, fresh count/high-water) —
-            # formerly count() + distinct().count() + a fresh agg, each
-            # of which re-executed the caller's (possibly expensive,
-            # lazily-built) batch plan end to end. NULL sequence numbers
-            # count as one distinct value, exactly like the old
-            # distinct().count(); fresh excludes them, exactly like the
-            # old `seq > last_seq` filter.
             rows = rows.withColumn(seq_col, F.col(seq_col).cast("long"))
-            is_fresh = F.col(seq_col) > self.last_seq
-            st = rows.agg(
-                F.count("*").alias("n_all"),
-                F.count_distinct(F.col(seq_col)).alias("n_distinct"),
-                F.max(F.col(seq_col).isNull().cast("int")).alias("has_null"),
-                F.count(F.when(is_fresh, 1)).alias("n"),
-                F.max(F.when(is_fresh, F.col(seq_col))).alias("hi_seq"),
-            ).first()
-            if int(st["n_distinct"]) + int(st["has_null"] or 0) != int(st["n_all"]):
-                raise InvalidRowSequenceNumbersError(
-                    "duplicate sequence numbers within one push batch"
-                )
-            stats = st
-        fresh = rows.filter(F.col(seq_col) > self.last_seq)
-        idx = W.orderBy(seq_col)
-        fresh = fresh.withColumn(
-            "$row_index",
-            F.row_number().over(idx).cast("long") + state["next_row_index"] - 1,
-        )
-        n = int(stats["n"])
-        if n == 0:
-            return 0
+        # The write answers every pre-write question: the window flags
+        # repeated sequence numbers (the task raises) and numbers the
+        # fresh rows; its footers give the row count and high-water.
         lo = state["next_row_index"]
+        seq = F.col(seq_col)
+        is_fresh = seq > self.last_seq  # NULL for a NULL sequence number
+        by_seq = W.orderBy(seq_col)
+        running = by_seq.rowsBetween(W.unboundedPreceding, W.currentRow)
+        fresh = (
+            rows.withColumn(
+                "$row_index",
+                F.count(F.when(is_fresh, 1)).over(running) + (lo - 1),
+            )
+            .withColumn(
+                "__dup",
+                (F.row_number().over(by_seq) > 1)
+                & seq.eqNullSafe(F.lag(seq).over(by_seq)),
+            )
+            .filter(
+                F.when(F.col("__dup"), F.raise_error(F.lit(_DUPLICATE_SEQ)))
+                .otherwise(is_fresh)
+            )
+            .drop("__dup")
+        )
+        staged = os.path.join(self.queue.path, f"_staged_{uuid.uuid4().hex}")
+        try:
+            fresh.write.mode("overwrite").parquet(staged)
+            footers = parquet_footers(staged)
+        except Exception as e:
+            shutil.rmtree(staged, ignore_errors=True)
+            if _DUPLICATE_SEQ in str(e):
+                raise InvalidRowSequenceNumbersError(_DUPLICATE_SEQ) from e
+            raise
+        n = sum(md.num_rows for md in footers)
+        seq_range = footer_min_max(footers, seq_col)
+        if n == 0 or seq_range is None:
+            shutil.rmtree(staged, ignore_errors=True)
+            if n:
+                raise RuntimeError(
+                    f"the pushed segment's footers have no {seq_col} "
+                    "statistics"
+                )
+            return 0
         hi = lo + n - 1
         seg_dir = f"seg_{lo}_{hi}"
         seg_path = os.path.join(self.queue.path, seg_dir)
-        fresh.write.mode("overwrite").parquet(seg_path)
+        shutil.rmtree(seg_path, ignore_errors=True)  # an unpublished leftover
+        os.rename(staged, seg_path)
         record_parquet_schema(self.queue.spark, seg_path, fresh.schema)
         # Re-check the fence AFTER the (slow) write, right before publish:
         # a writer fenced mid-write must not land its manifest entry.
@@ -307,14 +344,12 @@ class ProducerSession:
             raise ZombieEpochError(
                 f"session {self.session_id!r} fenced during push"
             )
-        import time as _time
-
         latest["segments"].append({
             "dir": seg_dir, "lo": lo, "hi": hi,
-            "ts": float(commit_ts if commit_ts is not None else _time.time()),
+            "ts": float(commit_ts if commit_ts is not None else time.time()),
         })
         latest["next_row_index"] = hi + 1
-        self.last_seq = int(stats["hi_seq"])
+        self.last_seq = int(seq_range[1])
         latest["sessions"][self.session_id] = {
             "epoch": self.epoch,
             "last_seq": self.last_seq,
@@ -379,9 +414,5 @@ def publish_changes(
         "$sequence_number",
         (F.lit(int(v2) * (1 << 32)) + F.row_number().over(w)).cast("long"),
     )
-    # O(changes) rows by the one-flush contract; materialize once so the
-    # session's pre-write aggregate and the segment write don't each
-    # re-derive the diff (two resolved lookups + a full-outer join).
-    records = records.localCheckpoint()
     session = queue.create_session(session_id)
     return session.push_batch(records, seq_col="$sequence_number")
