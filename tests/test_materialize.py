@@ -2,13 +2,22 @@
 ``operators.materialize``, and a registry query owns what its build
 materialized (``operators.owned``) — the caches live exactly as long as
 the returned frame. Counts are CacheManager entries
-(``numCachedEntries``), the unit an uncache removes."""
+(``numCachedEntries``), the unit an uncache removes.
+
+Scratch storage has the other lifetime: every engine directory comes
+from ``operators.scratch_dir``, under one root per process that is
+removed when the process exits, so a frame derived from a released
+result still finds its files."""
 
 from __future__ import annotations
 
 import gc
 import os
 import re
+import subprocess
+import sys
+import tempfile
+import textwrap
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,8 +25,8 @@ from pyspark.sql import functions as F
 from ytsaurus_spark.operators import materialize, owned
 from ytsaurus_spark.queries import all_queries
 
-ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                    "ytsaurus_spark")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.join(REPO, "ytsaurus_spark")
 
 
 def _entries(spark) -> int:
@@ -116,10 +125,15 @@ def test_existing_identical_entry_keeps_its_owner(spark):
         mine.unpersist()
 
 
-def test_derived_frame_outliving_the_result_keeps_its_rows(spark, sf_dir):
+# the last two read their tables' files lazily from scratch dirs
+@pytest.mark.parametrize(
+    "name",
+    ["graph_label_propagation", "dyn_changes_between", "pipeline_cdc_replica"],
+)
+def test_derived_frame_outliving_the_result_keeps_its_rows(spark, sf_dir, name):
     before = _entries(spark)
-    res = all_queries()["graph_label_propagation"](spark, sf_dir)
-    derived = res.filter(F.col("node").isNotNull())
+    res = all_queries()[name](spark, sf_dir)
+    derived = res.filter(F.col(res.columns[0]).isNotNull())
     expected = sorted(res.collect())
     del res
     assert _dropped(spark, before)
@@ -136,13 +150,9 @@ def test_outside_a_scope_materialize_is_a_plain_persist(spark):
         df.unpersist()
 
 
-def test_every_engine_cache_goes_through_materialize():
-    call = re.compile(r"\.(persist\(|cache\(\))")
-    allowed = {
-        os.path.join(ROOT, "operators", "__init__.py"),  # the helper itself
-        # the star-template views belong to catalog.statement_session
-        os.path.join(ROOT, "yql", "tpcds_star.py"),
-    }
+def _offenders(pattern, allowed):
+    """``file:line`` of every engine source line matching ``pattern``,
+    outside the files in ``allowed``."""
     offenders = []
     for dirpath, _dirs, files in os.walk(ROOT):
         for f in files:
@@ -151,6 +161,57 @@ def test_every_engine_cache_goes_through_materialize():
                 continue
             with open(path, encoding="utf-8") as fh:
                 for i, line in enumerate(fh, 1):
-                    if call.search(line):
+                    if pattern.search(line):
                         offenders.append(f"{os.path.relpath(path, ROOT)}:{i}")
+    return offenders
+
+
+def test_every_engine_cache_goes_through_materialize():
+    call = re.compile(r"\.(persist\(|cache\(\))")
+    allowed = {
+        os.path.join(ROOT, "operators", "__init__.py"),  # the helper itself
+        # the star-template views belong to catalog.statement_session
+        os.path.join(ROOT, "yql", "tpcds_star.py"),
+    }
+    offenders = _offenders(call, allowed)
     assert not offenders, offenders
+
+
+def test_every_engine_scratch_dir_goes_through_scratch_dir():
+    helper = os.path.join(ROOT, "operators", "__init__.py")
+    offenders = _offenders(re.compile(r"mkdtemp\("), {helper})
+    assert not offenders, offenders
+
+
+_EXIT_SCRIPT = textwrap.dedent(
+    """
+    import os, sys
+    sys.path.insert(0, {repo!r})
+    from ytsaurus_spark import operators
+    from ytsaurus_spark.queries import all_queries
+    from ytsaurus_spark.session import get_spark
+
+    spark = get_spark("scratch-exit", master="local[2]", shuffle_partitions=2)
+    df = all_queries()["dyn_changes_between"](spark, {sf_dir!r})
+    rows = df.collect()
+    root = operators._SCRATCH_ROOT
+    print("SCRATCH", root, len(os.listdir(root)), len(rows), flush=True)
+    """
+)
+
+
+def test_scratch_root_is_removed_at_exit(sf_dir):
+    proc = subprocess.run(
+        [sys.executable, "-c", _EXIT_SCRIPT.format(repo=REPO, sf_dir=sf_dir)],
+        capture_output=True, text=True, timeout=600, cwd=REPO,
+    )
+    line = next(
+        (ln for ln in proc.stdout.splitlines() if ln.startswith("SCRATCH ")), None
+    )
+    assert line is not None and proc.returncode == 0, (
+        f"stdout:\n{proc.stdout[-2000:]}\nstderr:\n{proc.stderr[-2000:]}"
+    )
+    _, root, n_dirs, n_rows = line.split()
+    assert os.path.dirname(root) == tempfile.gettempdir()
+    assert int(n_dirs) == 1 and int(n_rows) > 0
+    assert not os.path.exists(root)

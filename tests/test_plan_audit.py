@@ -19,12 +19,20 @@ dropped, the CacheManager must hold exactly the entries it held before
 the query was built (``operators.owned`` releases what the build
 materialized). The persisted star-view templates belong to the catalog
 (``catalog.statement_session``), so they are built before the loop.
+
+It is also the scratch-storage leak gate: a query makes its directories
+with ``operators.scratch_dir``, under the process's one scratch root, so
+no build may leave a new engine directory directly in the temp dir.
 """
 
 from __future__ import annotations
 
 import gc
+import os
+import re
+import tempfile
 
+from ytsaurus_spark import operators
 from ytsaurus_spark.catalog import statement_session
 from ytsaurus_spark.plans import (
     ALLOWED_CARTESIAN,
@@ -32,6 +40,12 @@ from ytsaurus_spark.plans import (
     plan_audit_findings,
 )
 from ytsaurus_spark.queries import all_queries
+
+ENGINE_DIR = re.compile(r"(ytspark|yql|chyt)_")
+
+
+def _engine_dirs() -> set[str]:
+    return {e for e in os.listdir(tempfile.gettempdir()) if ENGINE_DIR.match(e)}
 
 
 def test_registry_plan_audit(spark, sf_dir):
@@ -41,6 +55,7 @@ def test_registry_plan_audit(spark, sf_dir):
     failures = []
     for name, fn in sorted(all_queries().items()):
         before = cache.numCachedEntries()
+        dirs_before = _engine_dirs()
         try:
             df = fn(spark, sf_dir)
             findings = plan_audit_findings(
@@ -59,9 +74,14 @@ def test_registry_plan_audit(spark, sf_dir):
         leaked = cache.numCachedEntries() - before
         if leaked:
             failures.append(f"{name}: {leaked} cache entries outlive the frame")
+        root = os.path.basename(operators._SCRATCH_ROOT or "")
+        stray = _engine_dirs() - dirs_before - {root}
+        if stray:
+            failures.append(f"{name}: dirs outside the scratch root: {sorted(stray)}")
     assert not failures, (
         "plan audit flagged queries (fix the plan or, for a dim-sized "
         "global window, add to plans.ALLOWED_GLOBAL_WINDOWS with the "
         "bounded-input contract; release every cache the build "
-        "creates):\n" + "\n".join(failures)
+        "creates; make every directory with operators.scratch_dir):\n"
+        + "\n".join(failures)
     )

@@ -31,7 +31,6 @@ import datetime
 import json
 import os
 import sys
-import tempfile
 import time
 from decimal import Decimal
 
@@ -1326,10 +1325,9 @@ def _expected_rows(expected):
 def run_case(spark, case) -> dict:
     from ytsaurus_spark.chyt import chyt_execute
     from ytsaurus_spark.client import YtClient
+    from ytsaurus_spark.operators import scratch_dir
 
-    client = YtClient(
-        root=tempfile.mkdtemp(prefix="chyt_conf_"), spark=spark
-    )
+    client = YtClient(root=scratch_dir("chyt_conf_"), spark=spark)
     client.create("map_node", "//tmp")
     for path, spec in case.get("tables", {}).items():
         ddl, rows = spec[0], spec[1]

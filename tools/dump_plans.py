@@ -149,11 +149,12 @@ Project [est_union, est_intersect, k_overlap, jaccard]
 def normalise_plan(plan: str) -> str:
     """Drop what differs between two runs of an unchanged plan: expression
     ids, RDD ids, exchange plan ids (a process-wide counter) and the random
-    suffix of the query's temp directories."""
+    suffix of the query's scratch directories (and of their root)."""
     plan = re.sub(r"#\d+L?", "#", plan)
     plan = re.sub(r"RDD\[\d+\]", "RDD[#]", plan)
     plan = re.sub(r"plan_id=\d+", "plan_id=#", plan)
-    return re.sub(re.escape(tempfile.gettempdir()) + r"/[\w.-]+", "<tmp>", plan)
+    tmp = re.escape(tempfile.gettempdir())
+    return re.sub(tmp + r"(/ytspark_scratch_\w+)?/[\w.-]+", "<tmp>", plan)
 
 
 def dump_labelled(spark, sf_dir: str, label: str, tag: str,

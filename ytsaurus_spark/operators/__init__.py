@@ -3,6 +3,10 @@ LLM-data-pipeline operators, all expressed as DataFrame transforms."""
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+import threading
 import weakref
 from contextvars import ContextVar
 
@@ -11,6 +15,28 @@ from pyspark.sql import DataFrame
 # the open owner scope: JVM handles of the cache entries ``materialize``
 # created in it, in creation order; None outside every scope
 _OWNED: ContextVar[list | None] = ContextVar("materialize_owner", default=None)
+
+# the process's scratch root, made on first use (``scratch_dir``)
+_SCRATCH_ROOT: str | None = None
+_SCRATCH_LOCK = threading.Lock()
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory for a scenario's files (tables, queues, tracker
+    results): the engine's one way to make scratch storage.
+
+    Every such directory lives under one root per process, created on
+    first use — so a ``TMPDIR`` or ``tempfile.tempdir`` set before then is
+    honoured — and removed with everything in it when the process exits.
+    Never earlier: a frame derived from a query's result keeps no
+    reference to that result, so the files must outlive every frame the
+    process can still hold (SCALE.md, "fold, push, or persist")."""
+    global _SCRATCH_ROOT
+    with _SCRATCH_LOCK:
+        if _SCRATCH_ROOT is None:
+            _SCRATCH_ROOT = tempfile.mkdtemp(prefix="ytspark_scratch_")
+            atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
 
 def materialize(df: DataFrame) -> DataFrame:

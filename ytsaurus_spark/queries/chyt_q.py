@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ytsaurus_spark.operators import scratch_dir
 from ytsaurus_spark.queries import register
 
 _AGG_TEXT = """
@@ -260,12 +261,10 @@ def chyt_udf_lambda(spark, sf_dir):
     `(x, k, b) -> k*x + b` definition is inlined at the call site —
     the aggregated expression stays a JVM built-in chain (whole-stage
     codegen), never a Python UDF."""
-    import tempfile
-
     from ytsaurus_spark.chyt import chyt_execute
     from ytsaurus_spark.client import YtClient
 
-    client = YtClient(root=tempfile.mkdtemp(prefix="chyt_udf_"), spark=spark)
+    client = YtClient(root=scratch_dir("chyt_udf_"), spark=spark)
     chyt_execute(
         spark,
         "create function linear_equation as (x, k, b) -> k*x + b",

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ytsaurus_spark.catalog import load_tables
+from ytsaurus_spark.operators import scratch_dir
 from ytsaurus_spark.operators.keyed_tables import KeyedTable
 from ytsaurus_spark.operators.secondary_index import build_index, query_with_index
 from ytsaurus_spark.operators.select_rows import select_rows
@@ -339,8 +340,6 @@ def dyn_mvcc_timestamped_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     VersionedLookupRows, client_dynamic_tables_impl.cpp:1599-1603,
     versioned_row.h). The oracle reconstructs all four facets from the
     untouched customer parquet."""
-    import shutil
-    import tempfile
     import time
 
     from ytsaurus_spark.sources.tx_table import LogTxTable
@@ -351,54 +350,48 @@ def dyn_mvcc_timestamped_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_custkey") <= 40)
         .select("c_custkey", "c_acctbal")
     )
-    path = tempfile.mkdtemp(prefix="ytspark_mvcc_")
-    try:
-        t = LogTxTable(spark, path, key_cols=["c_custkey"])
-        t.init(cust)
-        t1 = time.time()
-        # same two commits (upsert v1, tombstone v2) as sequential
-        # insert_rows + delete_rows, but the two tiny segment writes run
-        # as overlapping Spark jobs (guide §2.6); publish order and the
-        # publish-time commit stamps keep every read facet identical
-        t.commit_many(
-            [
-                (
-                    "u",
-                    cust.filter(F.col("c_custkey") <= 15).withColumn(
-                        "c_acctbal", F.col("c_acctbal") + 100
-                    ),
+    t = LogTxTable(spark, scratch_dir("ytspark_mvcc_"), key_cols=["c_custkey"])
+    t.init(cust)
+    t1 = time.time()
+    # same two commits (upsert v1, tombstone v2) as sequential
+    # insert_rows + delete_rows, but the two tiny segment writes run
+    # as overlapping Spark jobs (guide §2.6); publish order and the
+    # publish-time commit stamps keep every read facet identical
+    t.commit_many(
+        [
+            (
+                "u",
+                cust.filter(F.col("c_custkey") <= 15).withColumn(
+                    "c_acctbal", F.col("c_acctbal") + 100
                 ),
-                (
-                    "d",
-                    cust.filter(F.col("c_custkey").between(30, 40)).select(
-                        "c_custkey"
-                    ),
+            ),
+            (
+                "d",
+                cust.filter(F.col("c_custkey").between(30, 40)).select(
+                    "c_custkey"
                 ),
-            ]
+            ),
+        ]
+    )
+    old = t.read(timestamp=t1).select(
+        "c_custkey", F.round("c_acctbal", 2).alias("bal_t1")
+    )
+    now = t.read().select(
+        "c_custkey", F.round("c_acctbal", 2).alias("bal_now")
+    )
+    hist = (
+        t.versioned_lookup(cust.select("c_custkey"))
+        .groupBy("c_custkey")
+        .agg(
+            F.sum(F.when(F.col("__op") == "u", 1).otherwise(0)).alias("n_writes"),
+            F.sum(F.when(F.col("__op") == "d", 1).otherwise(0)).alias("n_deletes"),
         )
-        old = t.read(timestamp=t1).select(
-            "c_custkey", F.round("c_acctbal", 2).alias("bal_t1")
-        )
-        now = t.read().select(
-            "c_custkey", F.round("c_acctbal", 2).alias("bal_now")
-        )
-        hist = (
-            t.versioned_lookup(cust.select("c_custkey"))
-            .groupBy("c_custkey")
-            .agg(
-                F.sum(F.when(F.col("__op") == "u", 1).otherwise(0)).alias("n_writes"),
-                F.sum(F.when(F.col("__op") == "d", 1).otherwise(0)).alias("n_deletes"),
-            )
-        )
-        result = (
-            old.join(now, "c_custkey", "left")
-            .join(hist, "c_custkey")
-            .orderBy("c_custkey")
-        )
-        rows = result.collect()
-        return local_result(spark, rows, result.schema)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    )
+    return (
+        old.join(now, "c_custkey", "left")
+        .join(hist, "c_custkey")
+        .orderBy("c_custkey")
+    )
 
 
 @register(
@@ -456,8 +449,6 @@ def dyn_subcommit_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     transaction (versioned_row.h write-timestamp lists), which commit-level
     generations alone cannot express. The oracle recomputes the same
     last-write-wins + fold directly from the events parquet."""
-    import tempfile
-
     from ytsaurus_spark.sources.tx_table import LogTxTable
 
     cat = load_tables(spark, sf_dir)
@@ -472,7 +463,7 @@ def dyn_subcommit_order(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_id"),
         )
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="ytspark_sub_"), "t")
+    path = os.path.join(scratch_dir("ytspark_sub_"), "t")
     t = LogTxTable(
         spark, path, key_cols=["user_id"], aggregates={"n_events": "sum"}
     )
@@ -483,8 +474,6 @@ def dyn_subcommit_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     t.insert_rows(ev, seq_col="event_id")
-    # the returned plan reads the segment files lazily — they must outlive
-    # this call (same contract as the skiff roundtrip queries)
     return t.read().select("user_id", "last_value", "last_type", "n_events")
 
 
@@ -517,8 +506,6 @@ def dyn_replica_failover(spark: SparkSession, sf_dir: str) -> DataFrame:
     replicator tick ships the missing segments; in-sync reads prefer
     replicas with fallback. All three observable states hash-match an
     oracle that recomputes them from the untouched customer parquet."""
-    import tempfile
-
     from ytsaurus_spark.sources.replicas import ReplicatedTable
 
     cat = load_tables(spark, sf_dir)
@@ -529,7 +516,7 @@ def dyn_replica_failover(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rt = ReplicatedTable(
         spark,
-        tempfile.mkdtemp(prefix="ytspark_repl_"),
+        scratch_dir("ytspark_repl_"),
         key_cols=["c_custkey"],
     )
     rt.init(base)
@@ -577,8 +564,6 @@ def dyn_multi_table_tx(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined post-commit state must equal the oracle's closed-form CASE.
     Exercises stage → intent → publish across both logs (plus a pre-read
     proving invisibility before commit); balances flow as exact cents."""
-    import tempfile
-
     from ytsaurus_spark.sources.transactions import MultiTableTransaction
     from ytsaurus_spark.sources.tx_table import LogTxTable
 
@@ -591,7 +576,7 @@ def dyn_multi_table_tx(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("c_acctbal") * 100, 0).cast("long").alias("bal_tt"),
         )
     )
-    root = tempfile.mkdtemp(prefix="ytspark_mtx_")
+    root = scratch_dir("ytspark_mtx_")
     a = LogTxTable(spark, f"{root}/a", ["k"])
     b = LogTxTable(spark, f"{root}/b", ["k"])
     a.init(cust)
@@ -688,9 +673,6 @@ def dyn_changes_between(spark: SparkSession, sf_dir: str) -> DataFrame:
     is consulted just for the touched keys via pruned lookup_rows. The
     oracle reconstructs all three change kinds from the untouched
     parquet."""
-    import shutil
-    import tempfile
-
     from ytsaurus_spark.sources.tx_table import LogTxTable
 
     cat = load_tables(spark, sf_dir)
@@ -699,38 +681,30 @@ def dyn_changes_between(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_custkey") <= 40)
         .select("c_custkey", "c_acctbal")
     )
-    path = tempfile.mkdtemp(prefix="ytspark_cdc_")
-    try:
-        t = LogTxTable(spark, path, key_cols=["c_custkey"])
-        v0 = t.init(cust)
-        bump = cust.filter(F.col("c_custkey") <= 10).withColumn(
-            "c_acctbal", F.col("c_acctbal") + 100
-        )
-        rewrite_same = cust.filter(F.col("c_custkey").between(11, 15))
-        fresh = spark.range(1001, 1004).select(
-            F.col("id").cast("long").alias("c_custkey"),
-            (F.col("id") * 1.5).alias("c_acctbal"),
-        )
-        # same two commits as sequential insert_rows + delete_rows;
-        # commit_many overlaps the tiny segment writes (guide §2.6)
-        t.commit_many(
-            [
-                ("u", bump.unionByName(rewrite_same).unionByName(fresh)),
-                (
-                    "d",
-                    cust.filter(F.col("c_custkey").between(21, 25)).select(
-                        "c_custkey"
-                    ),
+    t = LogTxTable(spark, scratch_dir("ytspark_cdc_"), key_cols=["c_custkey"])
+    v0 = t.init(cust)
+    bump = cust.filter(F.col("c_custkey") <= 10).withColumn(
+        "c_acctbal", F.col("c_acctbal") + 100
+    )
+    rewrite_same = cust.filter(F.col("c_custkey").between(11, 15))
+    fresh = spark.range(1001, 1004).select(
+        F.col("id").cast("long").alias("c_custkey"),
+        (F.col("id") * 1.5).alias("c_acctbal"),
+    )
+    # same two commits as sequential insert_rows + delete_rows;
+    # commit_many overlaps the tiny segment writes (guide §2.6)
+    t.commit_many(
+        [
+            ("u", bump.unionByName(rewrite_same).unionByName(fresh)),
+            (
+                "d",
+                cust.filter(F.col("c_custkey").between(21, 25)).select(
+                    "c_custkey"
                 ),
-            ]
-        )
-        return (
-            t.changes_between(from_version=v0)
-            .orderBy("c_custkey")
-            .localCheckpoint()  # materialize before the temp dir is removed
-        )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+            ),
+        ]
+    )
+    return t.changes_between(from_version=v0).orderBy("c_custkey")
 
 
 @register(
@@ -775,9 +749,6 @@ def pipeline_cdc_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys, pruned lookups give both images); the queue ships only change
     records; the apply is two O(changes) commits. The source state is
     never rescanned end-to-end."""
-    import shutil
-    import tempfile
-
     from ytsaurus_spark.sources.tx_table import LogTxTable
     from ytsaurus_spark.streaming.queues import (
         DurableQueue,
@@ -792,86 +763,82 @@ def pipeline_cdc_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_custkey") <= 40)
         .select("c_custkey", "c_acctbal")
     )
-    root = tempfile.mkdtemp(prefix="ytspark_cdc_pipe_")
-    try:
-        source = LogTxTable(
-            spark, os.path.join(root, "source"), key_cols=["c_custkey"]
-        )
-        replica = LogTxTable(
-            spark, os.path.join(root, "replica"), key_cols=["c_custkey"]
-        )
-        # the two seed commits land on INDEPENDENT tables: overlap the
-        # tiny write jobs (guide §2.6) — each table's manifest is its own;
-        # the pool threads carry the caller's job group
-        from concurrent.futures import ThreadPoolExecutor
+    root = scratch_dir("ytspark_cdc_pipe_")
+    source = LogTxTable(
+        spark, os.path.join(root, "source"), key_cols=["c_custkey"]
+    )
+    replica = LogTxTable(
+        spark, os.path.join(root, "replica"), key_cols=["c_custkey"]
+    )
+    # the two seed commits land on INDEPENDENT tables: overlap the
+    # tiny write jobs (guide §2.6) — each table's manifest is its own;
+    # the pool threads carry the caller's job group
+    from concurrent.futures import ThreadPoolExecutor
 
-        from pyspark import inheritable_thread_target
+    from pyspark import inheritable_thread_target
 
-        in_group = inheritable_thread_target(spark)
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_src = pool.submit(in_group(source.init), cust)
-            f_rep = pool.submit(in_group(replica.init), cust)
-            v0 = f_src.result()
-            f_rep.result()
-        bump = cust.filter(F.col("c_custkey") <= 10).withColumn(
-            "c_acctbal", F.col("c_acctbal") + 100
-        )
-        rewrite_same = cust.filter(F.col("c_custkey").between(11, 15))
-        fresh = spark.range(1001, 1004).select(
-            F.col("id").cast("long").alias("c_custkey"),
-            (F.col("id") * 1.5).alias("c_acctbal"),
-        )
-        # same two commits (upsert then tombstone) as sequential
-        # insert_rows + delete_rows — commit_many overlaps the segment
-        # writes, publish order and versions are identical
-        source.commit_many(
-            [
-                ("u", bump.unionByName(rewrite_same).unionByName(fresh)),
-                (
-                    "d",
-                    cust.filter(F.col("c_custkey").between(21, 25)).select(
-                        "c_custkey"
-                    ),
-                ),
-            ]
-        )
-        queue = DurableQueue(spark, os.path.join(root, "queue"))
-        appended = publish_changes(source, queue, "repl", from_version=v0)
-        if appended <= 0:
-            raise AssertionError("first publish shipped no change records")
-        replayed = publish_changes(source, queue, "repl", from_version=v0)
-        if replayed != 0:
-            raise AssertionError(
-                f"replayed publish appended {replayed} records (expected 0)"
-            )
-        consumer = QueueConsumer(name="replica_sync")
-        changes = pull_and_advance(
-            queue.read(), consumer, "$row_index", max_rows=1 << 30
-        ).drop("$row_index", "$sequence_number")
-        replica.apply_changes(changes)
-        rep = replica.read()
-        src = source.read().select(
-            F.col("c_custkey").alias("s_key"),
-            F.col("c_acctbal").alias("s_bal"),
-        )
-        return (
-            rep.join(src, rep.c_custkey == src.s_key, "full")
-            .select(
-                F.coalesce(F.col("c_custkey"), F.col("s_key")).alias(
+    in_group = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_src = pool.submit(in_group(source.init), cust)
+        f_rep = pool.submit(in_group(replica.init), cust)
+        v0 = f_src.result()
+        f_rep.result()
+    bump = cust.filter(F.col("c_custkey") <= 10).withColumn(
+        "c_acctbal", F.col("c_acctbal") + 100
+    )
+    rewrite_same = cust.filter(F.col("c_custkey").between(11, 15))
+    fresh = spark.range(1001, 1004).select(
+        F.col("id").cast("long").alias("c_custkey"),
+        (F.col("id") * 1.5).alias("c_acctbal"),
+    )
+    # same two commits (upsert then tombstone) as sequential
+    # insert_rows + delete_rows — commit_many overlaps the segment
+    # writes, publish order and versions are identical
+    source.commit_many(
+        [
+            ("u", bump.unionByName(rewrite_same).unionByName(fresh)),
+            (
+                "d",
+                cust.filter(F.col("c_custkey").between(21, 25)).select(
                     "c_custkey"
                 ),
-                "c_acctbal",
-                (
-                    F.col("c_custkey").isNotNull()
-                    & F.col("s_key").isNotNull()
-                    & F.col("c_acctbal").eqNullSafe(F.col("s_bal"))
-                ).alias("matches_source"),
-            )
-            .orderBy("c_custkey")
-            .localCheckpoint()  # materialize before the temp dir is removed
+            ),
+        ]
+    )
+    queue = DurableQueue(spark, os.path.join(root, "queue"))
+    appended = publish_changes(source, queue, "repl", from_version=v0)
+    if appended <= 0:
+        raise AssertionError("first publish shipped no change records")
+    replayed = publish_changes(source, queue, "repl", from_version=v0)
+    if replayed != 0:
+        raise AssertionError(
+            f"replayed publish appended {replayed} records (expected 0)"
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    consumer = QueueConsumer(name="replica_sync")
+    changes = pull_and_advance(
+        queue.read(), consumer, "$row_index", max_rows=1 << 30
+    ).drop("$row_index", "$sequence_number")
+    replica.apply_changes(changes)
+    rep = replica.read()
+    src = source.read().select(
+        F.col("c_custkey").alias("s_key"),
+        F.col("c_acctbal").alias("s_bal"),
+    )
+    return (
+        rep.join(src, rep.c_custkey == src.s_key, "full")
+        .select(
+            F.coalesce(F.col("c_custkey"), F.col("s_key")).alias(
+                "c_custkey"
+            ),
+            "c_acctbal",
+            (
+                F.col("c_custkey").isNotNull()
+                & F.col("s_key").isNotNull()
+                & F.col("c_acctbal").eqNullSafe(F.col("s_bal"))
+            ).alias("matches_source"),
+        )
+        .orderBy("c_custkey")
+    )
 
 
 # --- ReshardTable with explicit pivot keys ---------------------------------
@@ -1131,8 +1098,6 @@ def dyn_chaos_failover(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ERA-FENCES its divergent tail — the oracle's expected state is
     exactly "initial ∪ post-failover writes, lost-era batch absent",
     read from the RECOVERED cluster's data replica."""
-    import tempfile
-
     from ytsaurus_spark.client import YtClient
     from ytsaurus_spark.sources.chaos import ASYNC, SYNC, ChaosReplicatedTable
 
@@ -1150,7 +1115,7 @@ def dyn_chaos_failover(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("k"), (cents + 2).alias("v")
     ).coalesce(1)
 
-    base = tempfile.mkdtemp(prefix="ytspark_chaos_")
+    base = scratch_dir("ytspark_chaos_")
     clusters = {
         "primary": YtClient(root=os.path.join(base, "primary"), spark=spark),
         "backup": YtClient(root=os.path.join(base, "backup"), spark=spark),

@@ -11,12 +11,12 @@ original parquet, so a hash match proves the roundtrip lossless end-to-end.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ytsaurus_spark.catalog import load_tables
+from ytsaurus_spark.operators import scratch_dir
 from ytsaurus_spark.queries import register
 from ytsaurus_spark.sources.skiff import read_skiff, write_skiff
 
@@ -45,8 +45,7 @@ def fmt_skiff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exercises int64, double, string32 and a variant8-optional column on the
     wire (nulls from the CASE), then proves losslessness by hash-matching
     the aggregate DuckDB computes from the untouched parquet. The write
-    lands in a fresh temp dir (the returned plan reads it lazily, so the
-    files must outlive this call).
+    lands in a fresh scratch dir.
     """
     cat = load_tables(spark, sf_dir)
     slice_df = (
@@ -61,7 +60,7 @@ def fmt_skiff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="ytspark_skiff_"), "orders")
+    path = os.path.join(scratch_dir("ytspark_skiff_"), "orders")
     write_skiff(slice_df, path)
     back = read_skiff(spark, path)
     return (
@@ -115,7 +114,7 @@ def fmt_skiff_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_custkey") % 10 == 0)
         .select("c_custkey", "c_name", "c_acctbal")
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="ytspark_skiffm_"), "stream")
+    path = os.path.join(scratch_dir("ytspark_skiffm_"), "stream")
     write_skiff_multi([orders, customer], path)
     back_o = read_skiff_multi(spark, path, 0)
     back_c = read_skiff_multi(spark, path, 1)
@@ -169,7 +168,7 @@ def fmt_proto_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="ytspark_proto_"), "orders")
+    path = os.path.join(scratch_dir("ytspark_proto_"), "orders")
     write_proto(slice_df, path)
     back = read_proto(spark, path)
     return (
@@ -216,7 +215,7 @@ def fmt_yamr_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_name").alias("value"),
         )
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="ytspark_yamr_"), "customer")
+    path = os.path.join(scratch_dir("ytspark_yamr_"), "customer")
     write_yamr(slice_df, path)
     back = read_yamr(spark, path, has_subkey=True)
     return (
@@ -278,7 +277,7 @@ def fmt_arrow_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.to_date("l_shipdate").alias("ship_date"),
         )
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="ytspark_arrow_"), "lineitem")
+    path = os.path.join(scratch_dir("ytspark_arrow_"), "lineitem")
     write_arrow(slice_df, path)
     back = read_arrow(spark, path)
     return (
@@ -313,13 +312,11 @@ def layout_zorder_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-D box query from the clustered copy. Every output file covers a
     hyper-rectangle, so row-group stats prune BOTH predicates; the
     oracle proves the rewritten layout returns byte-identical results."""
-    import tempfile
-
     from ytsaurus_spark.operators.layout import layout_zorder
 
     cat = load_tables(spark, sf_dir)
     ev = cat.read("events")
-    path = os.path.join(tempfile.mkdtemp(prefix="ytspark_zorder_"), "events")
+    path = os.path.join(scratch_dir("ytspark_zorder_"), "events")
     layout_zorder(ev, ["user_id", "value"], path, n_files=8)
     z = spark.read.parquet(path)
     return (
@@ -352,7 +349,7 @@ def fmt_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cat = load_tables(spark, sf_dir)
     part = cat.read("part")
-    root = tempfile.mkdtemp(prefix="ytspark_codec_")
+    root = scratch_dir("ytspark_codec_")
     outs = []
     for codec in ("zstd", "gzip", "snappy"):
         p = os.path.join(root, codec)
@@ -399,7 +396,7 @@ def fmt_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cat = load_tables(spark, sf_dir)
     part = cat.read("part")
-    root = tempfile.mkdtemp(prefix="ytspark_orc_")
+    root = scratch_dir("ytspark_orc_")
     p = os.path.join(root, "part_orc")
     write_table(part, p, fmt="orc", compression="zlib")
     back = read_table(spark, p, fmt="orc")
@@ -452,7 +449,7 @@ def fmt_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     bug breaks the hash."""
     cat = load_tables(spark, sf_dir)
     docs = cat.read("documents")
-    root = tempfile.mkdtemp(prefix="ytspark_evo_")
+    root = scratch_dir("ytspark_evo_")
     old = docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang")
     new = docs.filter(F.col("doc_id") % 2 == 1).select(
         "doc_id", "lang", "source", "n_chars"

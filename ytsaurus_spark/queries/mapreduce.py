@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ytsaurus_spark.catalog import load_tables
-from ytsaurus_spark.operators import map_reduce as mr
+from ytsaurus_spark.operators import map_reduce as mr, scratch_dir
 from ytsaurus_spark.queries import register
 
 
@@ -377,7 +377,6 @@ def op_concatenate(spark: SparkSession, sf_dir: str) -> DataFrame:
     link time — the master-side chunk-list merge), then scanned as a
     union with per-member pushdown. Append mode extends the link."""
     import os
-    import tempfile
 
     from ytsaurus_spark.sources.formats import (
         concatenate,
@@ -387,7 +386,7 @@ def op_concatenate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cat = load_tables(spark, sf_dir)
     orders = cat.read("orders")
-    base = tempfile.mkdtemp(prefix="ytspark_concat_")
+    base = scratch_dir("ytspark_concat_")
     h1, h2, dest = (os.path.join(base, n) for n in ("h1", "h2", "linked"))
     write_table(orders.filter(F.col("o_orderkey") % 2 == 0), h1)
     write_table(orders.filter(F.col("o_orderkey") % 2 == 1), h2)
@@ -422,12 +421,10 @@ def client_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     select_rows over the cypress path. Every hop goes through the
     reference call-site surface (client.py); the oracle is the plain
     relational equivalent."""
-    import tempfile
-
     from ytsaurus_spark.client import YtClient
 
     cat = load_tables(spark, sf_dir)
-    client = YtClient(root=tempfile.mkdtemp(prefix="ytspark_client_"), spark=spark)
+    client = YtClient(root=scratch_dir("ytspark_client_"), spark=spark)
     client.create("map_node", "//warehouse")
     client.write_table("//warehouse/orders", cat.read("orders"))
     client.run_sort("//warehouse/orders", sort_by=["o_orderkey"])
@@ -465,14 +462,12 @@ def op_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     disabled inside the run so the demonstration is the merge-join path
     the shape exists for (at fact-×-fact scale broadcast is off the
     table anyway); the conf is restored after."""
-    import tempfile
-
     from ytsaurus_spark.sources.bucketed import BucketedPair
 
     cat = load_tables(spark, sf_dir)
     orders = cat.read("orders").select("o_orderkey", "o_orderstatus")
     li = cat.read("lineitem").select("l_orderkey", "l_extendedprice")
-    root = tempfile.mkdtemp(prefix="ytspark_bucketed_")
+    root = scratch_dir("ytspark_bucketed_")
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -622,12 +617,11 @@ def op_remote_copy(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-established on s_nationkey), then aggregate FROM THE COPY — the
     oracle over the source proves copy fidelity."""
     import os
-    import tempfile
 
     from ytsaurus_spark.sources import formats as fmts
 
     src = os.path.join(sf_dir, "supplier.parquet")
-    dst = os.path.join(tempfile.mkdtemp(prefix="ytspark_rcopy_"), "supplier")
+    dst = os.path.join(scratch_dir("ytspark_rcopy_"), "supplier")
     fmts.remote_copy(spark, src, dst, partition_by=["s_nationkey"])
     copied = fmts.read_table(spark, dst)
     return copied.groupBy(F.col("s_nationkey").cast("long").alias("s_nationkey")).agg(
@@ -754,13 +748,12 @@ def op_sorted_attr_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     and pick the sorted-merge path; the chosen mode is asserted and
     pinned in the output."""
     import os
-    import tempfile
 
     from ytsaurus_spark.sources import formats as fmts
 
     cat = load_tables(spark, sf_dir)
     orders = cat.read("orders")
-    root = tempfile.mkdtemp(prefix="ytspark_sattr_")
+    root = scratch_dir("ytspark_sattr_")
     p_even = os.path.join(root, "even")
     p_odd = os.path.join(root, "odd")
     fmts.write_sorted_table(
@@ -807,12 +800,10 @@ def op_remote_copy_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks byte-verbatim (murmur-checksummed per chunk, mapInPandas
     chunk-parallel, atomic commit) and the aggregate runs FROM THE COPY
     — the oracle over the source proves end-to-end fidelity."""
-    import tempfile
-
     from ytsaurus_spark.client import YtClient
 
-    src = YtClient(root=tempfile.mkdtemp(prefix="ytspark_rcsrc_"), spark=spark)
-    dst = YtClient(root=tempfile.mkdtemp(prefix="ytspark_rcdst_"), spark=spark)
+    src = YtClient(root=scratch_dir("ytspark_rcsrc_"), spark=spark)
+    dst = YtClient(root=scratch_dir("ytspark_rcdst_"), spark=spark)
     supplier = spark.read.parquet(os.path.join(sf_dir, "supplier.parquet"))
     src.write_table("//home/supplier", supplier.repartition(8))
     dst.run_remote_copy("//home/supplier", "//pulled/supplier", source_client=src)
@@ -846,13 +837,11 @@ def op_erasure_repair_copy(spark: SparkSession, sf_dir: str) -> DataFrame:
     RemoteCopy with in-flight repair to cluster B, aggregate from the
     HEALED copy — the oracle over the untouched source proves the
     reconstruction is exact."""
-    import tempfile
-
     from ytsaurus_spark.client import YtClient
     from ytsaurus_spark.sources import erasure as E
 
-    src = YtClient(root=tempfile.mkdtemp(prefix="ytspark_ersrc_"), spark=spark)
-    dst = YtClient(root=tempfile.mkdtemp(prefix="ytspark_erdst_"), spark=spark)
+    src = YtClient(root=scratch_dir("ytspark_ersrc_"), spark=spark)
+    dst = YtClient(root=scratch_dir("ytspark_erdst_"), spark=spark)
     supplier = spark.read.parquet(os.path.join(sf_dir, "supplier.parquet"))
     tdir = src._fs("//home/supplier_e")
     os.makedirs(os.path.dirname(tdir), exist_ok=True)

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ytsaurus_spark.catalog import load_tables, read_parquet
+from ytsaurus_spark.operators import scratch_dir
 from ytsaurus_spark.queries import local_result, register
 from ytsaurus_spark.streaming.queues import QueueConsumer, pull_and_advance
 
@@ -356,9 +357,6 @@ def stream_queue_to_logtable(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the algebra; this one proves the durability layer at
     O(changes) commit cost (client_dynamic_tables_impl.cpp:1599-1603
     read-at-timestamp contract at commit granularity)."""
-    import shutil
-    import tempfile
-
     from ytsaurus_spark.sources.tx_table import LogTxTable
 
     cat = load_tables(spark, sf_dir)
@@ -368,28 +366,20 @@ def stream_queue_to_logtable(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1).cast("long").alias("n_events"),
         F.col("value").alias("total"),
     )
-    path = tempfile.mkdtemp(prefix="ytspark_logtx_")
-    try:
-        table = LogTxTable(
-            spark,
-            path,
-            key_cols=["user_id"],
-            aggregates={"n_events": "sum", "total": "sum"},
-        )
-        table.init(deltas_of(ev).filter(F.lit(False)))
-        consumer = QueueConsumer("incremental_agg_durable")
-        for _ in range(3):
-            batch = pull_and_advance(ev, consumer, "event_id", 300)
-            table.insert_rows(deltas_of(batch))
-        result = table.read().select(
-            "user_id", "n_events", F.round("total", 4).alias("total")
-        )
-        # Materialize before the log dir is removed; the merged state is
-        # one row per user — tiny relative to the log it folds.
-        rows = result.collect()
-        return local_result(spark, rows, result.schema)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    table = LogTxTable(
+        spark,
+        scratch_dir("ytspark_logtx_"),
+        key_cols=["user_id"],
+        aggregates={"n_events": "sum", "total": "sum"},
+    )
+    table.init(deltas_of(ev).filter(F.lit(False)))
+    consumer = QueueConsumer("incremental_agg_durable")
+    for _ in range(3):
+        batch = pull_and_advance(ev, consumer, "event_id", 300)
+        table.insert_rows(deltas_of(batch))
+    return table.read().select(
+        "user_id", "n_events", F.round("total", 4).alias("total")
+    )
 
 
 @register(
@@ -416,41 +406,32 @@ def stream_producer_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     the resumed session: only [200, 400) lands. If any dedup or fence
     leaked, counts/sums would double somewhere and the oracle hash over
     plain ``events WHERE event_id < 400`` would catch it."""
-    import shutil
-    import tempfile
-
     from ytsaurus_spark.streaming.queues import DurableQueue, ZombieEpochError
 
     cat = load_tables(spark, sf_dir)
     ev = cat.read("events").select("event_id", "user_id", "value")
-    path = tempfile.mkdtemp(prefix="ytspark_queue_")
+    q = DurableQueue(spark, scratch_dir("ytspark_queue_"))
+    s1 = q.create_session("pipeline-a")
+    batch1 = ev.filter(F.col("event_id") < 200)
+    s1.push_batch(batch1, seq_col="event_id")
+    replayed = s1.push_batch(batch1, seq_col="event_id")
+    assert replayed == 0, "replay must append nothing"
+    s2 = q.create_session("pipeline-a")  # fences s1, resumes last_seq
     try:
-        q = DurableQueue(spark, path)
-        s1 = q.create_session("pipeline-a")
-        batch1 = ev.filter(F.col("event_id") < 200)
         s1.push_batch(batch1, seq_col="event_id")
-        replayed = s1.push_batch(batch1, seq_col="event_id")
-        assert replayed == 0, "replay must append nothing"
-        s2 = q.create_session("pipeline-a")  # fences s1, resumes last_seq
-        try:
-            s1.push_batch(batch1, seq_col="event_id")
-            raise AssertionError("fenced session must not push")
-        except ZombieEpochError:
-            pass
-        overlap = ev.filter((F.col("event_id") >= 100) & (F.col("event_id") < 400))
-        s2.push_batch(overlap, seq_col="event_id")
-        result = (
-            q.read()
-            .groupBy("user_id")
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.round(F.sum("value"), 4).alias("total"),
-            )
+        raise AssertionError("fenced session must not push")
+    except ZombieEpochError:
+        pass
+    overlap = ev.filter((F.col("event_id") >= 100) & (F.col("event_id") < 400))
+    s2.push_batch(overlap, seq_col="event_id")
+    return (
+        q.read()
+        .groupBy("user_id")
+        .agg(
+            F.count("*").alias("n_rows"),
+            F.round(F.sum("value"), 4).alias("total"),
         )
-        rows = result.collect()
-        return local_result(spark, rows, result.schema)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    )
 
 
 @register(
@@ -700,7 +681,7 @@ def pipeline_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_user").alias("user_id"),
         F.round(F.col("p_value") * 10000, 0).cast("long").alias("amount_tt"),
     )
-    root = tempfile.mkdtemp(prefix="ytspark_attr_")
+    root = scratch_dir("ytspark_attr_")
     table = LogTxTable(
         spark,
         os.path.join(root, "attribution"),
@@ -769,13 +750,12 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     incrementally as state expires — no end-of-stream buffering."""
     import os
     import shutil
-    import tempfile
 
     load_tables(spark, sf_dir)
     src_file = os.path.join(sf_dir, "events.parquet")
     raw_schema = spark.read.parquet(src_file).schema
 
-    stage = tempfile.mkdtemp(prefix="ytspark_ssleft_")
+    stage = scratch_dir("ytspark_ssleft_")
     shutil.copy(src_file, os.path.join(stage, "events.parquet"))
     max_ts = spark.read.parquet(src_file).agg(F.max("ts")).collect()[0][0]
     # one sentinel per SIDE: each must survive its branch's event_type
@@ -842,13 +822,10 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("purchase_id").cast("long").alias("purchase_id"),
         F.round("p_value", 4).alias("amount"),
     )
-    try:
-        return _drain_to_memory(
-            spark, "stream_stream_left_join_out", lambda: joined, [stage],
-            read=lambda sink: sink.filter(F.col("user_id") != -1),
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    return _drain_to_memory(
+        spark, "stream_stream_left_join_out", lambda: joined, [stage],
+        read=lambda sink: sink.filter(F.col("user_id") != -1),
+    )
 
 
 # --- Flow pipeline: persistent source → map chain → persistent sink --------
@@ -872,13 +849,12 @@ def stream_flow_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-stage materialization); restart-resume semantics are pinned by
     test_flow_pipeline_batch_and_stream_resume."""
     import os
-    import tempfile
 
     from ytsaurus_spark.streaming.flow import FlowPipeline
 
     load_tables(spark, sf_dir)
     raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    base = tempfile.mkdtemp(prefix="ytspark_flow_")
+    base = scratch_dir("ytspark_flow_")
     sink, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
 
     pipe = (
@@ -1093,12 +1069,11 @@ def stream_consumer_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset 120 clamps a trim-to-300 request, so the queue retains exactly
     the rows the oracle predicts."""
     import os as _os
-    import tempfile
 
     from ytsaurus_spark.client import YtClient
     from ytsaurus_spark.streaming import consumer_registry as cr
 
-    c = YtClient(root=tempfile.mkdtemp(prefix="ytspark_creg_"), spark=spark)
+    c = YtClient(root=scratch_dir("ytspark_creg_"), spark=spark)
     q = (
         spark.read.parquet(_os.path.join(sf_dir, "events.parquet"))
         .filter(F.col("event_id") < 500)
@@ -1152,48 +1127,41 @@ def stream_queue_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     lower-bound naming: tables '900-300' and '1200-300' (%UNIX_TS-
     %PERIOD). The oracle recomputes both tables' row counts and value
     sums from the same event slices."""
-    import shutil
-    import tempfile
-
     from ytsaurus_spark.client import YtClient
     from ytsaurus_spark.streaming.queue_export import QueueStaticExporter
     from ytsaurus_spark.streaming.queues import DurableQueue
 
     cat = load_tables(spark, sf_dir)
     ev = cat.read("events").select("event_id", "user_id", "value")
-    qpath = tempfile.mkdtemp(prefix="ytspark_qexp_")
-    try:
-        q = DurableQueue(spark, qpath)
-        s = q.create_session("exporter-feed")
-        s.push_batch(ev.filter(F.col("event_id") < 100),
-                     seq_col="event_id", commit_ts=905)
-        s.push_batch(ev.filter((F.col("event_id") >= 100)
-                               & (F.col("event_id") < 200)),
-                     seq_col="event_id", commit_ts=1120)
-        s.push_batch(ev.filter((F.col("event_id") >= 200)
-                               & (F.col("event_id") < 300)),
-                     seq_col="event_id", commit_ts=1450)
+    qpath = scratch_dir("ytspark_qexp_")
+    q = DurableQueue(spark, qpath)
+    s = q.create_session("exporter-feed")
+    s.push_batch(ev.filter(F.col("event_id") < 100),
+                 seq_col="event_id", commit_ts=905)
+    s.push_batch(ev.filter((F.col("event_id") >= 100)
+                           & (F.col("event_id") < 200)),
+                 seq_col="event_id", commit_ts=1120)
+    s.push_batch(ev.filter((F.col("event_id") >= 200)
+                           & (F.col("event_id") < 300)),
+                 seq_col="event_id", commit_ts=1450)
 
-        client = YtClient(root=tempfile.mkdtemp(prefix="ytspark_qexp_c_"),
-                          spark=spark)
-        exp = QueueStaticExporter(q, client, "//exports/q", 300)
-        assert exp.export_task(now=1190) == []  # no slot has closed yet
-        created = exp.export_task(now=1620)
-        assert [p.rsplit("/", 1)[-1] for p in created] == [
-            "900-300", "1200-300"]
-        assert exp.export_task(now=1620) == []  # idempotent re-run
+    client = YtClient(root=scratch_dir("ytspark_qexp_c_"), spark=spark)
+    exp = QueueStaticExporter(q, client, "//exports/q", 300)
+    assert exp.export_task(now=1190) == []  # no slot has closed yet
+    created = exp.export_task(now=1620)
+    assert [p.rsplit("/", 1)[-1] for p in created] == [
+        "900-300", "1200-300"]
+    assert exp.export_task(now=1620) == []  # idempotent re-run
 
-        rows = []
-        for p in created:
-            t = client.read_table(p)
-            agg = t.agg(
-                F.count("*").cast("long").alias("n"),
-                F.sum(F.round(F.col("value") * 100).cast("long"))
-                 .cast("long").alias("cents"),
-            ).first()
-            rows.append((p.rsplit("/", 1)[-1], agg["n"], agg["cents"]))
-        return local_result(
-            spark, rows, "tbl string, n_rows bigint, sum_cents bigint"
-        ).orderBy("tbl")
-    finally:
-        shutil.rmtree(qpath, ignore_errors=True)
+    rows = []
+    for p in created:
+        t = client.read_table(p)
+        agg = t.agg(
+            F.count("*").cast("long").alias("n"),
+            F.sum(F.round(F.col("value") * 100).cast("long"))
+             .cast("long").alias("cents"),
+        ).first()
+        rows.append((p.rsplit("/", 1)[-1], agg["n"], agg["cents"]))
+    return local_result(
+        spark, rows, "tbl string, n_rows bigint, sum_cents bigint"
+    ).orderBy("tbl")

@@ -19,7 +19,7 @@ from ytsaurus_spark.operators.multimodal import (
     image_tile_stats,
     synthesize_png,
 )
-from ytsaurus_spark.queries import local_result, register
+from ytsaurus_spark.queries import register
 
 
 # --- math functions --------------------------------------------------------
@@ -1420,31 +1420,22 @@ def qt_async_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     worker thread inside a cancellable Spark job group, and the result is
     read back from the tracker's persisted parquet — the exact submission
     surface the reference's TPC-DS harness drives (SURVEY §3.3)."""
-    import shutil
-    import tempfile
-
     from ytsaurus_spark.query_tracker import QueryTracker
 
     cat = load_tables(spark, sf_dir)
     cat.register_all()
-    root = tempfile.mkdtemp(prefix="ytspark_qt_")
-    try:
-        qt = QueryTracker(spark, root)
-        qid = qt.start_query(
-            "sql",
-            """
-            SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-                   round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
-            FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-            """,
-        )
-        rec = qt.wait(qid)
-        assert rec["state"] == "completed", rec
-        result = qt.read_query_result(qid)
-        rows = result.collect()
-        return local_result(spark, rows, result.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    qt = QueryTracker(spark)
+    qid = qt.start_query(
+        "sql",
+        """
+        SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
+               round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
+        FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
+        """,
+    )
+    rec = qt.wait(qid)
+    assert rec["state"] == "completed", rec
+    return qt.read_query_result(qid)
 
 
 # --- SQL-standard JSON functions (YQL JSON_VALUE / JSON_EXISTS / JSON_QUERY)

@@ -79,6 +79,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ytsaurus_spark.operators import scratch_dir
 from ytsaurus_spark.queries import register
 
 _BENCH_DIR = "/root/reference/yt/benchmarks/run/queries"
@@ -607,13 +608,12 @@ def _events_log_root(spark: SparkSession, sf_dir: str) -> str:
     root = _LOG_DIRS.get(sf_dir)
     if root is not None:
         return root
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from ytsaurus_spark.client import YtClient
 
-    root = tempfile.mkdtemp(prefix="yql_logs_")
+    root = scratch_dir("yql_logs_")
     client = YtClient(root=root, spark=spark)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
         "__d", F.date_format("ts", "yyyy-MM-dd")
@@ -715,14 +715,12 @@ def yql_text_flatten_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     expands it pre-translation into Spark's ``struct.*`` projection —
     a zero-shuffle projection change. The struct table is derived from
     documents; the oracle computes the same aggregate flat."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ytsaurus_spark.client import YtClient
     from ytsaurus_spark.yql import yql_execute
 
-    root = tempfile.mkdtemp(prefix="yql_structs_")
+    root = scratch_dir("yql_structs_")
     client = YtClient(root=root, spark=spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     client.write_table(
@@ -910,12 +908,10 @@ def yql_text_define_action(spark: SparkSession, sf_dir: str) -> DataFrame:
     statements into the script — here two INSERT-appending snapshots,
     then a read-back. Writes go through a throwaway YtClient root; the
     oracle states the equivalent one-pass aggregate."""
-    import tempfile
-
     from ytsaurus_spark.client import YtClient
     from ytsaurus_spark.yql import yql_execute
 
-    client = YtClient(root=tempfile.mkdtemp(prefix="yql_act_"), spark=spark)
+    client = YtClient(root=scratch_dir("yql_act_"), spark=spark)
     return yql_execute(spark, _DEFINE_ACTION_TEXT, client=client,
                        sf_dir=sf_dir)
 
@@ -946,12 +942,10 @@ def yql_text_evaluate_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded family of writes. The unroll count is the LIST length (a
     calendar/config constant), never data volume, so the lowering holds
     at any scale."""
-    import tempfile
-
     from ytsaurus_spark.client import YtClient
     from ytsaurus_spark.yql import yql_execute
 
-    client = YtClient(root=tempfile.mkdtemp(prefix="yql_eval_"), spark=spark)
+    client = YtClient(root=scratch_dir("yql_eval_"), spark=spark)
     return yql_execute(spark, _EVAL_FOR_TEXT, client=client, sf_dir=sf_dir)
 
 
@@ -1088,12 +1082,10 @@ def yql_text_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     LogTxTable MVCC write path — a new version per statement, never an
     in-place rewrite, which is what makes the read-while-write safe on
     a real cluster."""
-    import tempfile
-
     from ytsaurus_spark.client import YtClient
     from ytsaurus_spark.yql import yql_execute
 
-    client = YtClient(root=tempfile.mkdtemp(prefix="yql_dml_"), spark=spark)
+    client = YtClient(root=scratch_dir("yql_dml_"), spark=spark)
     cust = (
         spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
         .filter(F.col("c_custkey") <= 500)

@@ -39,7 +39,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 import threading
 import time
 import traceback
@@ -49,6 +48,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ytsaurus_spark.jsonio import load_json, publish_json
+from ytsaurus_spark.operators import scratch_dir
 
 STATES = (
     "draft",
@@ -76,7 +76,7 @@ class QueryTracker:
 
     def __init__(self, spark: SparkSession, root: str | None = None):
         self.spark = spark
-        self.root = root or tempfile.mkdtemp(prefix="ytspark_qt_")
+        self.root = root or scratch_dir("ytspark_qt_")
         os.makedirs(os.path.join(self.root, "results"), exist_ok=True)
         self._lock = threading.Lock()
         self._threads: dict[str, threading.Thread] = {}

@@ -416,9 +416,9 @@ def assemble_erasure_table(spark, table_dir: str, out_dir: str) -> dict:
 def read_erasure_table(spark, table_dir: str):
     """Read an erasure-coded table, transparently repairing erased parts
     (reassembles into a scratch dir, then a plain parquet scan)."""
-    import tempfile
+    from ytsaurus_spark.operators import scratch_dir
 
-    out = tempfile.mkdtemp(prefix="ytspark_erasure_read_")
+    out = scratch_dir("ytspark_erasure_read_")
     assemble_erasure_table(spark, table_dir, out)
     return spark.read.parquet(out)
 
