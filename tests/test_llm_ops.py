@@ -200,6 +200,68 @@ def test_kmeans_deterministic_and_improves(spark):
     del math
 
 
+def _round6(x: float) -> float:
+    """Spark's round(double, 6): HALF_UP on the double's decimal form."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def test_pq_codebook_refine_matches_a_numpy_lloyd_step(spark):
+    import numpy as np
+
+    # dim 4 = 2 subspaces of 2; exemplars ids 0, 10, 20 seed codes 0, 1, 2
+    vecs = {
+        0: [0.0, 0.0, 0.0, 0.0],
+        10: [2.0, 0.0, 4.0, 4.0],
+        # sub 1 slice equals code 1's: its tie at distance 0 goes to code 1,
+        # so code 2 of sub 1 is an empty cell
+        20: [8.0, 8.0, 4.0, 4.0],
+        # sub 0: d2 1.0000002 (code 0) vs 0.9999998 (code 1) — a tie once
+        # rounded to 6 digits, which breaks to the smaller code
+        1: [1.0000001, 0.0, 1.0, 1.0],
+        2: [1.0, 0.0, 3.0, 5.0],  # exact ties: sub 0 codes 0/1, sub 1 codes 1/2
+        3: [7.0, 9.0, 5.0, 3.0],
+        30: [2.5, 0.5, 0.25, 0.5],
+    }
+    m, dsub, ksub, stride = 2, 2, 3, 10
+    emb = spark.createDataFrame(
+        sorted(vecs.items()), "vec_id bigint, embedding array<double>"
+    )
+    got = {
+        (r.sub, r.code): r.cbslice
+        for r in similarity.pq_codebook(
+            emb, m, ksub, 4, stride, refine_iterations=1
+        ).collect()
+    }
+
+    want = {}
+    for sub in range(m):
+        seeds = {
+            c: vecs[c * stride][sub * dsub:(sub + 1) * dsub] for c in range(ksub)
+        }
+        cells = {}
+        for v in vecs.values():
+            sl = v[sub * dsub:(sub + 1) * dsub]
+            d2 = {
+                c: _round6(sum((x - y) * (x - y) for x, y in zip(sl, cb)))
+                for c, cb in seeds.items()
+            }
+            best = min(d2, key=lambda c: (d2[c], c))
+            cells.setdefault(best, []).append(sl)
+        for c, members in cells.items():
+            want[(sub, c)] = list(np.mean(members, axis=0))
+    # the data exercises what it claims: the rounded tie and the empty cell
+    raw = [sum((x - y) ** 2 for x, y in zip(vecs[1][:2], vecs[c * stride][:2]))
+           for c in (0, 1)]
+    assert raw[1] < raw[0] and _round6(raw[0]) == _round6(raw[1])
+    assert (1, 2) not in want and len(want) == m * ksub - 1
+
+    assert sorted(got) == sorted(want)
+    for key, cb in want.items():
+        assert got[key] == pytest.approx(cb, rel=1e-12, abs=1e-12), key
+
+
 def test_multiprobe_recall_beats_single_probe(spark):
     """The measure→tune loop: multi-probe must strictly improve recall@k
     over single-probe on the real fixture embeddings."""

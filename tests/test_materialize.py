@@ -11,6 +11,7 @@ result still finds its files."""
 
 from __future__ import annotations
 
+import ast
 import gc
 import os
 import re
@@ -60,10 +61,11 @@ def test_returned_frame_is_materialized_and_released_on_drop(spark):
 
 @pytest.mark.parametrize("name", ["graph_bfs_layers", "graph_label_propagation"])
 def test_registry_query_releases_on_drop(spark, sf_dir, name):
-    # both return a frame their own loop materialized
+    # both cache their adjacency and round-0 state; their rounds belong to
+    # operators.iterate, so the returned frame is no owner's cache entry
     before = _entries(spark)
     df = all_queries()[name](spark, sf_dir)
-    assert _cached(df)
+    assert not _cached(df)
     assert _entries(spark) > before
     df.collect()
     del df
@@ -150,19 +152,22 @@ def test_outside_a_scope_materialize_is_a_plain_persist(spark):
         df.unpersist()
 
 
-def _offenders(pattern, allowed):
-    """``file:line`` of every engine source line matching ``pattern``,
-    outside the files in ``allowed``."""
+def _offenders(pattern, allowed, root=ROOT, scope=None):
+    """``file:line`` of every engine source line under ``root`` matching
+    ``pattern``, outside the files in ``allowed``; with ``scope``, only
+    the lines in ``scope(source)`` count."""
     offenders = []
-    for dirpath, _dirs, files in os.walk(ROOT):
+    for dirpath, _dirs, files in os.walk(root):
         for f in files:
             path = os.path.join(dirpath, f)
             if not f.endswith(".py") or path in allowed:
                 continue
             with open(path, encoding="utf-8") as fh:
-                for i, line in enumerate(fh, 1):
-                    if pattern.search(line):
-                        offenders.append(f"{os.path.relpath(path, ROOT)}:{i}")
+                source = fh.read()
+            lines = None if scope is None else scope(source)
+            for i, line in enumerate(source.splitlines(), 1):
+                if pattern.search(line) and (lines is None or i in lines):
+                    offenders.append(f"{os.path.relpath(path, ROOT)}:{i}")
     return offenders
 
 
@@ -174,6 +179,35 @@ def test_every_engine_cache_goes_through_materialize():
         os.path.join(ROOT, "yql", "tpcds_star.py"),
     }
     offenders = _offenders(call, allowed)
+    assert not offenders, offenders
+
+
+def _loop_lines(source) -> set:
+    """Lines of every ``for``/``while`` statement, except those of the
+    helpers that own a loop: ``iterate`` (rounds) and ``_release`` (an
+    owner scope's entries)."""
+    lines = set()
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            if isinstance(child, (ast.For, ast.While)) and fn not in (
+                "iterate", "_release"
+            ):
+                lines.update(range(child.lineno, child.end_lineno + 1))
+            visit(child, fn)
+
+    visit(ast.parse(source), None)
+    return lines
+
+
+def test_every_driver_side_loop_runs_through_iterate():
+    cut = re.compile(r"\b(localCheckpoint|checkpoint|unpersist|materialize)\b")
+    offenders = _offenders(
+        cut, set(), root=os.path.join(ROOT, "operators"), scope=_loop_lines
+    )
     assert not offenders, offenders
 
 

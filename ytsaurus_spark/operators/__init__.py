@@ -4,6 +4,8 @@ LLM-data-pipeline operators, all expressed as DataFrame transforms."""
 from __future__ import annotations
 
 import atexit
+import itertools
+import re
 import shutil
 import tempfile
 import threading
@@ -96,6 +98,53 @@ def owned(build, *args):
     if entries:
         weakref.finalize(out, _release, entries).atexit = False
     return out
+
+
+_ROUND = itertools.count()
+
+
+def iterate(state: DataFrame, step, rounds: int, until=None) -> DataFrame:
+    """``rounds`` applications of ``step`` (state frame -> next state
+    frame): the engine's one driver-side loop, the chain of operations a
+    YTsaurus controller resubmits round after round.
+
+    One policy, read from each round's analysed plan. ``step`` gets the
+    state under a unique alias; a round that reads it more than once (a
+    union with it, two joins) would double its plan and its recomputation
+    every round, so it is cut eagerly with ``localCheckpoint``, and the
+    previous round's cut is released once the new one is filled (the cut
+    lineage no longer reaches it). A round that reads its state once stays
+    lazy: its chain grows by one round and consumers share its exchanges.
+    The last cut is left to Spark's ContextCleaner, not to an owner scope:
+    a frame derived from the result keeps no reference to it.
+
+    ``until(new, old)`` runs after every round (one scalar job) and stops
+    the loop at the first round it returns True; if no round does, the
+    loop raises. A step that returns the frame it was handed stops the
+    loop at no cost (nothing left to do)."""
+    cut = None  # the last round this call checkpointed (its JVM RDD)
+    for _ in range(rounds):
+        tag = f"__iterate_{next(_ROUND)}"
+        arg = state.alias(tag)
+        nxt = step(arg)
+        if nxt is arg:
+            return state
+        plan = nxt._jdf.queryExecution().analyzed().toString()
+        fresh = None
+        if len(re.findall(rf"SubqueryAlias {tag}$", plan, re.M)) > 1:
+            nxt = nxt.localCheckpoint()
+            fresh = nxt._jdf.logicalPlan().rdd()
+        done = until is not None and until(nxt, state)
+        if fresh is not None:
+            if cut is not None:
+                cut.unpersist(False)
+            cut = fresh
+        state = nxt
+        if done:
+            return state
+    if until is not None:
+        raise RuntimeError(f"no convergence within {rounds} rounds")
+    return state
 
 
 def conf_bytes(spark, key: str, default: int) -> int:

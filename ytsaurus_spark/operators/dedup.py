@@ -255,48 +255,14 @@ def cluster_pairs(
     Each node's label starts as its own id; every iteration each node takes
     the minimum label among itself and its neighbors. ``iterations`` bounds
     the propagation diameter — near-dup clusters are dense (close to
-    cliques from LSH banding), so a small constant converges; this is the
-    standard large-graph CC recipe as iterated joins (no driver loop, no
-    graph library). Returns (doc_id, cluster_id=min reachable id within
-    ``iterations`` hops).
+    cliques from LSH banding), so a small constant converges. The
+    recurrence is ``graph.connected_components``'s; returns (doc_id,
+    cluster_id=min reachable id within ``iterations`` hops).
     """
-    edges = pairs.select(
-        F.col(a_col).alias("u"), F.col(b_col).alias("v")
-    )
-    # undirected: both directions + self-loop keeps isolated improvement.
-    # Persist the invariant edge list: every round reads it, and without
-    # the cut each round's lazy plan re-embeds the pair-mining pipeline.
-    # pre-partitioned on v, the key every propagation round joins on, so
-    # the edge-scale exchange happens once at build instead of per round
-    # (guide §2.4; same move as operators/graph._symmetrize). Width is
-    # byte-derived: an unpinned repartition(col) would fix the cache at
-    # the session shuffle width where AQE cannot coalesce it.
-    from ytsaurus_spark.operators import keyed_cache_width
+    from ytsaurus_spark.operators.graph import connected_components
 
-    sym = edges.union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).repartition(keyed_cache_width(pairs), F.col("v")).transform(materialize)
-    labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    for _ in range(iterations):
-        neighbor_labels = (
-            sym.join(labels, sym.v == labels.node)
-            .select(F.col("u").alias("node"), "label")
-        )
-        labels = (
-            labels.unionByName(neighbor_labels)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            # label frame is node-scale; checkpointing it truncates the
-            # lineage that otherwise DOUBLES per round (labels appears
-            # twice in each round's plan), values unchanged
-            .localCheckpoint()
-        )
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
+    return connected_components(pairs, iterations, a_col, b_col).select(
+        F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id")
     )
 
 
@@ -492,7 +458,7 @@ def semantic_dedup(
     # re-derives the whole chained-Lloyd assignment. Measured at bench
     # scale: 3.5-6.4s → ~2.2s. A lazy persist keeps one-job exchange
     # reuse intact — the EAGER checkpoint tried earlier defeated it and
-    # was ~1.7× slower (see kmeans_iterations note). Values unchanged:
+    # was ~1.7× slower. Values unchanged:
     # same plan, materialized once per invocation.
     withn = withc.withColumn("_nn", F.expr(_dot("v", "v"))).transform(materialize)
     withc = withn.drop("_nn")

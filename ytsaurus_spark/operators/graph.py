@@ -15,24 +15,14 @@ shuffles per iteration at any scale, dominated by the edge list — the
 canonical distributed PageRank plan. Dangling mass (nodes without
 out-edges) redistributes uniformly, so total rank stays 1.
 
-Cache ownership: these operators cache their loop-invariant inputs
-(edge lists, adjacency) through ``operators.materialize`` because every
-propagation round re-reads them. A registry query owns every cache its
-build creates (``operators.owned``) and releases them all when the
-caller drops the returned frame. The only releases written here are
-the per-round unpersists of label_propagation and kcore, each dropping
-the previous iterate; connected_components and _min_plus_rounds keep
-every round cached until the owner releases them (see
-_min_plus_rounds). Called directly, outside a registry query, an
-operator's caches are the caller's to release; the cache is an
-optimization, never a correctness dependency."""
+Every loop runs through ``operators.iterate``, which owns its rounds."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ytsaurus_spark.operators import materialize
+from ytsaurus_spark.operators import iterate, materialize
 
 __all__ = ["pagerank", "connected_components", "triangle_count", "bfs_layers"]
 
@@ -100,7 +90,8 @@ def pagerank(
     ranks = nodes.crossJoin(F.broadcast(n_nodes)).select(
         "node", (F.lit(1.0) / F.col("n")).alias("rank")
     )
-    for _ in range(iterations):
+
+    def step(ranks):
         with_deg = ranks.join(outdeg, "node", "left")
         # mass sent along edges by nodes that have out-edges
         contrib = (
@@ -118,7 +109,7 @@ def pagerank(
             with_deg.filter(F.col("deg").isNull())
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
         )
-        ranks = (
+        return (
             nodes.join(contrib, "node", "left")
             .crossJoin(F.broadcast(n_nodes))
             .crossJoin(F.broadcast(dangling))
@@ -130,16 +121,9 @@ def pagerank(
                     * (F.coalesce(F.col("recv"), F.lit(0.0)) + F.col("dm") / F.col("n"))
                 ).alias("rank"),
             )
-            # truncate the lineage each pass: the chained plan otherwise
-            # deepens multiplicatively (each pass embeds the previous one
-            # plus two broadcast subtrees), and consumers re-plan — and
-            # with no cache, re-run — the whole chain per materialization.
-            # The rank frame is node-scale (graph-aggregate size), so the
-            # materialization is cheap; values are unchanged (guide §3.3 /
-            # §5: checkpoint to cut very large plans).
-            .localCheckpoint()
         )
-    return ranks
+
+    return iterate(ranks, step, iterations)
 
 
 def _symmetrize(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
@@ -201,13 +185,9 @@ def connected_components(
         .select("node", F.col("node").alias("comp"))
         .transform(materialize)
     )
-    # converge mode: the cap must exceed the graph diameter (min-label
-    # propagation needs ~diameter rounds); raise rather than silently
-    # return a k-hop minimum if it is ever hit.
-    rounds = iterations if not converge else max(iterations, 64)
-    converged = not converge
-    for i in range(rounds):
-        nxt = (
+
+    def step(labels):
+        return (
             labels.select("node", "comp")
             .union(
                 sym.join(labels, sym.u == labels.node)
@@ -216,34 +196,20 @@ def connected_components(
             .groupBy("node")
             .agg(F.min("comp").alias("comp"))
         )
-        if converge:
-            # truncate lineage every round: without this the logical plan
-            # doubles per iteration and an O(diameter) loop overflows the
-            # 2 GiB plan-string limit long before data is the problem.
-            # localCheckpoint materializes to executor-local storage; a
-            # restart-tolerant production run would use a reliable
-            # checkpoint dir instead (same call shape).
-            nxt = nxt.localCheckpoint()
-        else:
-            # kept until the owner releases it, see _min_plus_rounds
-            nxt = materialize(nxt)
-        if converge:
-            changed = (
-                nxt.join(labels.withColumnRenamed("comp", "old"), "node")
-                .filter(F.col("comp") != F.col("old"))
-                .count()
-            )
-            if changed == 0:
-                labels = nxt
-                converged = True
-                break
-        labels = nxt
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge within {rounds} rounds "
-            f"(graph diameter exceeds the cap); pass a larger `iterations`"
-        )
-    return labels
+
+    if not converge:
+        return iterate(labels, step, iterations)
+
+    def unchanged(new, old):
+        return (
+            new.join(old.withColumnRenamed("comp", "old"), "node")
+            .filter(F.col("comp") != F.col("old"))
+            .count()
+        ) == 0
+
+    # the cap must exceed the graph diameter (min-label propagation needs
+    # ~diameter rounds); iterate raises rather than return a k-hop minimum
+    return iterate(labels, step, max(iterations, 64), until=unchanged)
 
 
 def triangle_count(
@@ -327,32 +293,28 @@ def bfs_layers(
     return _min_plus_rounds(sym, sources, rounds, F.col("dist") + F.lit(1))
 
 
-def _min_plus_rounds(sym, sources, rounds: int, step) -> DataFrame:
+def _min_plus_rounds(sym, sources, rounds: int, step_col) -> DataFrame:
     """Shared bounded min-plus relaxation loop behind ``bfs_layers``
-    (step = dist + 1) and ``sssp_weighted`` (step = dist + w): each
-    synchronous round is one node-keyed equi-join + one min-aggregate
-    over the persisted adjacency ``sym`` (columns u, v, and whatever
-    ``step`` references), |V|+|E| rows per round. Every round's frontier
-    stays cached until the query's owner releases them all: releasing
-    the previous round first would replan the not-yet-filled next round
-    from source, and a round reads its input twice (the union), so the
-    recomputation doubles per round."""
+    (step_col = dist + 1) and ``sssp_weighted`` (step_col = dist + w):
+    each synchronous round is one node-keyed equi-join + one
+    min-aggregate over the persisted adjacency ``sym`` (columns u, v, and
+    whatever ``step_col`` references), |V|+|E| rows per round."""
     dist = sources.select(F.col(sources.columns[0]).alias("node")).distinct().select(
         "node", F.lit(0).cast("long").alias("dist")
     ).transform(materialize)
-    for _ in range(rounds):
-        nxt = (
+
+    def step(dist):
+        return (
             dist.select("node", "dist")
             .union(
                 sym.join(dist, sym.u == dist.node)
-                .select(F.col("v").alias("node"), step.cast("long").alias("dist"))
+                .select(F.col("v").alias("node"), step_col.cast("long").alias("dist"))
             )
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .transform(materialize)
         )
-        dist = nxt
-    return dist
+
+    return iterate(dist, step, rounds)
 
 
 def sssp_weighted(
@@ -420,8 +382,7 @@ def label_propagation(
     argmax window PARTITIONED on node whose partition size is the
     node's distinct-neighbor-label count — bounded by degree, never
     global. The symmetrized edge list is persisted once and reused
-    every round; labels re-persist per round and unpersist the previous
-    iterate. Returns (node, label)."""
+    every round. Returns (node, label)."""
     sym = _symmetrize(edges, src_col, dst_col)
     labels = (
         sym.select(F.col("u").alias("node"))
@@ -432,8 +393,9 @@ def label_propagation(
     pick_w = Window.partitionBy("node").orderBy(
         F.col("c").desc(), F.col("label")
     )
-    for _ in range(iterations):
-        nxt = (
+
+    def step(labels):
+        return (
             sym.join(labels, sym.u == labels.node)
             .select(F.col("v").alias("node"), "label")
             .groupBy("node", "label")
@@ -441,13 +403,9 @@ def label_propagation(
             .withColumn("__rk", F.row_number().over(pick_w))
             .filter(F.col("__rk") == 1)
             .select("node", "label")
-            .transform(materialize)
         )
-        # a round reads labels once, so the replan this uncache causes
-        # stays linear; measured flat against keeping every round
-        labels.unpersist()
-        labels = nxt
-    return labels
+
+    return iterate(labels, step, iterations)
 
 
 def jaccard_link_prediction(
@@ -552,11 +510,7 @@ def kcore(
     Per round: ONE node-keyed equi-join of the symmetric edge list
     against the alive set (both endpoints must survive) + one count
     aggregate — |E|+|V| rows per round, never materializing the induced
-    subgraph. The symmetric edge list persists once. Each round's
-    node-sized alive frame is filled by one count before the previous
-    round's cache is dropped: left lazy, the rounds run no build job but
-    their work moves into the action, which then takes twice as long
-    (SCALE.md, "fold, push, or persist", 2026-10-18).
+    subgraph. The symmetric edge list persists once.
 
     Returns (node, deg) for nodes alive after ``rounds`` peels; deg is
     measured in the last peel's input subgraph (the round-``rounds``
@@ -565,24 +519,20 @@ def kcore(
     if rounds < 1:
         raise ValueError(f"kcore requires rounds >= 1, got {rounds}")
     sym = _symmetrize(edges, src_col, dst_col)
-    alive = sym.select(F.col("u").alias("node")).distinct()
-    out = prev = None
-    for _ in range(rounds):
+
+    def step(alive):
         au = alive.select(F.col("node").alias("u"))
         av = alive.select(F.col("node").alias("v"))
-        deg = (
+        return (
             sym.join(au, "u")
             .join(av, "v")
             .groupBy(F.col("u").alias("node"))
             .agg(F.count(F.lit(1)).cast("long").alias("deg"))
+            .filter(F.col("deg") >= k)
         )
-        out = materialize(deg.filter(F.col("deg") >= k))
-        out.count()  # materialize before dropping the prior round's cache
-        if prev is not None:
-            prev.unpersist()
-        prev = out
-        alive = out.select("node")
-    return out.select("node", "deg")
+
+    alive = sym.select(F.col("u").alias("node")).distinct()
+    return iterate(alive, step, rounds).select("node", "deg")
 
 
 def modularity(

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ytsaurus_spark.operators import materialize, spread_scan
+from ytsaurus_spark.operators import iterate, materialize, spread_scan
 
 # Deterministic pseudo-random hyperplane coefficient for (plane h, dim d):
 # integer formula, identical in any engine. Values in [-3, 3].
@@ -550,9 +550,7 @@ def _lloyd_refine(
     ``kmeans_iterations``: broadcast centroids, rounded-distance argmin
     (engine-deterministic), posexplode element-wise means; no driver-side
     data. ``vecs`` must be (id, v) with v array<double>."""
-    from pyspark.sql import Window as W
-
-    for _ in range(iterations):
+    def step(centroids):
         # scan-stage argmin fold over the broadcast centroid array — same
         # rounded-d2/cell-tiebreak selection as the former per-vector
         # window, without the vec × cells explode + exchange + sort
@@ -565,7 +563,7 @@ def _lloyd_refine(
         flat = vecs.join(assign, id_col).select(
             "cell", F.posexplode("v").alias("i", "e")
         )
-        centroids = (
+        return (
             flat.groupBy("cell", "i")
             .agg(F.avg("e").alias("m"))
             .groupBy("cell")
@@ -575,7 +573,8 @@ def _lloyd_refine(
                 ).alias(cent_col)
             )
         )
-    return centroids
+
+    return iterate(centroids, step, iterations)
 
 
 def ivf_assign(
@@ -818,8 +817,6 @@ def kmeans_iterations(
     level last-ulp noise cannot flip assignments. Returns the final
     (vec_id, cell) assignment.
     """
-    from pyspark.sql import Window as W
-
     vecs = spread_scan(
         emb.select(
             F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
@@ -832,35 +829,17 @@ def kmeans_iterations(
         (F.col(id_col) / centroid_stride).cast("int").alias("cell"),
         F.col("v").alias("cv"),
     )
-    assign = None
-    for _ in range(iterations):
-        # scan-stage argmin fold (see _cell_argmin_expr): same rounded-d2 /
-        # cell-tiebreak selection as the former window, no N×k explode
-        assign = _with_cell(
-            vecs,
-            centroids.select("cell", F.col("cv").alias("centv")),
-            "v",
-            round_digits=dist_round,
-        ).select(id_col, "cell")
-        # recompute centroids: element-wise mean per cell (posexplode keyed
-        # on (cell, dim) — the scalable wide-vector shape)
-        flat = vecs.join(assign, id_col).select(
-            "cell", F.posexplode("v").alias("i", "e")
-        )
-        centroids = (
-            flat.groupBy("cell", "i")
-            .agg(F.avg("e").alias("m"))
-            .groupBy("cell")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(i, m))), x -> x.m)"
-                ).alias("cv")
-            )
-        )
-    # NOT checkpointed: measured at bench scale, an eager cut here made
-    # SemDeDup ~1.7x slower — the bounded 2-3 step chain re-derives
-    # cheaply and the lazy form lets consumers share exchange reuse
-    return assign
+    # the assignment made from the centroids after iterations - 1 updates
+    centroids = _lloyd_refine(
+        vecs, centroids, iterations - 1, id_col, cent_col="cv",
+        dist_round=dist_round,
+    )
+    return _with_cell(
+        vecs,
+        centroids.select("cell", F.col("cv").alias("centv")),
+        "v",
+        round_digits=dist_round,
+    ).select(id_col, "cell")
 
 
 def ann_topk_lsh_multiprobe(
@@ -984,7 +963,8 @@ def pq_codebook(
         "(x - y) * (x - y)), 0D, (acc, d) -> acc + d), 6)"
     )
     w = W.partitionBy(id_col, "sub").orderBy(F.col("d2").asc(), F.col("code"))
-    for _ in range(refine_iterations):
+
+    def step(codebook):
         assign = (
             vslices.join(F.broadcast(codebook), "sub")
             .withColumn("d2", F.expr(d2))
@@ -995,7 +975,7 @@ def pq_codebook(
         flat = vslices.join(assign, [id_col, "sub"]).select(
             "sub", "code", F.posexplode("vslice").alias("i", "e")
         )
-        codebook = (
+        return (
             flat.groupBy("sub", "code", "i")
             .agg(F.avg("e").alias("m"))
             .groupBy("sub", "code")
@@ -1005,7 +985,8 @@ def pq_codebook(
                 ).alias("cbslice")
             )
         )
-    return codebook
+
+    return iterate(codebook, step, refine_iterations)
 
 
 _SLICE_D2 = (

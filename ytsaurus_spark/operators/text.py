@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ytsaurus_spark.operators import materialize
+from ytsaurus_spark.operators import iterate, materialize
 
 # Tiny function-word list for the ratio features (synthetic corpus is
 # English-like; real pipelines plug in per-language lists).
@@ -237,7 +237,8 @@ def bpe_learn_merges(
         f"ELSE array() END"
     )
     merges = []
-    for step in range(1, n_merges + 1):
+
+    def merge_top(seq):
         counts = (
             seq.select(
                 F.expr(f"split(btrim(s, {S}), {S} || {S})").alias("l"), "freq"
@@ -248,12 +249,12 @@ def bpe_learn_merges(
         )
         head = counts.orderBy(F.col("cnt").desc(), "pair").limit(1).collect()
         if not head:
-            break  # corpus exhausted (every word is a single symbol)
+            return seq  # corpus exhausted (every word is a single symbol)
         top = head[0]
         a, b = top.pair.split("\x01")
-        merges.append((step, a, b, a + b, top.cnt))
+        merges.append((len(merges) + 1, a, b, a + b, top.cnt))
         sep = "\x1f"
-        seq = seq.select(
+        return seq.select(
             F.replace(
                 F.col("s"),
                 F.lit(sep + a + sep + sep + b + sep),
@@ -261,6 +262,9 @@ def bpe_learn_merges(
             ).alias("s"),
             "freq",
         )
+
+    iterate(seq, merge_top, n_merges)
+
     # vocab-sized local rows: slice by SIZE (one slice per 64k rows, like
     # queries.local_result) — a bare createDataFrame parallelizes into
     # defaultParallelism Python-backed slices and every downstream action

@@ -2958,11 +2958,7 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("node").alias("tok"), F.round("rank", 6).alias("rank")
     ).withColumn(
         "rm", F.floor(F.col("rank") * F.lit(1e6) + F.lit(0.5)).cast("long")
-    ).localCheckpoint()  # vocab-sized; hist + the final join both read it.
-    # localCheckpoint (not persist): it also TRUNCATES the 3-pass pagerank
-    # lineage, whose nested broadcast subtrees otherwise re-plan (and,
-    # before the cache warms, re-run) under every downstream consumer —
-    # measured 12s of the query's former 20s cold time.
+    )  # hist and the final join both read pagerank's last (cut) round
     hist = (
         ranked.groupBy("rm")
         .agg(F.count(F.lit(1)).alias("c"))

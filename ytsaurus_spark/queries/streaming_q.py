@@ -11,6 +11,7 @@ batch oracle.
 from __future__ import annotations
 
 from contextlib import contextmanager
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1153,15 +1154,12 @@ def stream_queue_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         "900-300", "1200-300"]
     assert exp.export_task(now=1620) == []  # idempotent re-run
 
-    rows = []
-    for p in created:
-        t = client.read_table(p)
-        agg = t.agg(
-            F.count("*").cast("long").alias("n"),
+    return reduce(DataFrame.unionByName, [
+        client.read_table(p).agg(
+            F.lit(p.rsplit("/", 1)[-1]).alias("tbl"),
+            F.count("*").cast("long").alias("n_rows"),
             F.sum(F.round(F.col("value") * 100).cast("long"))
-             .cast("long").alias("cents"),
-        ).first()
-        rows.append((p.rsplit("/", 1)[-1], agg["n"], agg["cents"]))
-    return local_result(
-        spark, rows, "tbl string, n_rows bigint, sum_cents bigint"
-    ).orderBy("tbl")
+             .cast("long").alias("sum_cents"),
+        )
+        for p in created
+    ]).orderBy("tbl")
