@@ -13,6 +13,35 @@ import pytest
 from tests.conftest import jobs_started
 
 
+# -- DurableQueue.pull: offsets from the manifest ----------------------------
+
+
+def test_durable_queue_pull_advances_from_the_manifest(spark, tmp_path):
+    """A pull returns ``[offset, min(offset + max_rows, next_row_index))``,
+    advances the consumer past the rows returned (a short pull included),
+    runs no Spark job, and leaves a consumer at the queue's end in place."""
+    from ytsaurus_spark.streaming.queues import DurableQueue, QueueConsumer
+
+    q = DurableQueue(spark, str(tmp_path / "q"))
+    s = q.create_session("p")
+    s.push_batch(spark.createDataFrame([(i,) for i in range(5)], "v bigint"))
+    s.push_batch(spark.createDataFrame([(i,) for i in range(5, 8)], "v bigint"))
+    c = QueueConsumer("c")
+    batches = []
+
+    def pull(n):
+        batches.append(q.pull(c, n))
+
+    for n, offset in ((3, 3), (4, 7), (4, 8), (4, 8)):
+        assert jobs_started(spark, lambda: pull(n)) == 0
+        assert c.offset() == offset
+    got = [sorted(r["$row_index"] for r in b.collect()) for b in batches]
+    assert got == [[0, 1, 2], [3, 4, 5, 6], [7], []]
+    assert [sorted(r.v for r in b.collect()) for b in batches[:3]] == [
+        [0, 1, 2], [3, 4, 5, 6], [7],
+    ]
+
+
 # -- push_batch against a pure-Python model ----------------------------------
 
 

@@ -27,7 +27,7 @@ from ytsaurus_spark.queries import all_queries
 BUILD_JOB_BUDGET = {
     "chyt_agg_report": 0,
     "yql_text_reduce": 0,
-    "pipeline_cdc_replica": 17,
+    "pipeline_cdc_replica": 15,
     "dyn_changes_between": 7,
     "dyn_mvcc_timestamped_read": 5,
     "stream_producer_exactly_once": 6,

@@ -170,3 +170,97 @@ def test_all_rows_per_match(spark):
     assert got[(1, 4)] == (2, "c", 1)
     assert got[(1, 5)] == (2, "p", 2)
     assert (1, 3) not in got and len(out) == 4  # key 2 has no match
+
+
+@pytest.fixture()
+def null_part_df(spark):
+    # the same "ab" sequence in the NULL partition and in partition 'u'
+    return spark.createDataFrame(
+        [(None, 1, "a"), (None, 2, "b"), ("u", 1, "a"), ("u", 2, "b")],
+        "u string, o bigint, t string",
+    )
+
+
+def AB():
+    return [("a", F.col("t") == "a"), ("b", F.col("t") == "b")]
+
+
+def test_measures_keep_the_null_partition(spark, null_part_df):
+    out = match_recognize_measures(
+        null_part_df, ["u"], ["o"], AB(), "ab",
+        {"n": ("count", None), "lo": ("first", "o")},
+        "u string, match_no bigint, classifier string, n bigint, lo bigint",
+    )
+    assert sorted(map(tuple, out.collect()), key=repr) == [
+        ("u", 1, "ab", 2, 1), (None, 1, "ab", 2, 1),
+    ]
+
+
+def test_all_rows_keep_the_null_partition(spark, null_part_df):
+    from ytsaurus_spark.operators.match_recognize import match_recognize_rows
+
+    out = match_recognize_rows(
+        null_part_df, ["u"], ["o"], AB(), "ab", ["o"],
+        "u string, o bigint, match_no bigint, classifier string, "
+        "row_in_match bigint",
+    )
+    assert sorted(map(tuple, out.collect()), key=repr) == [
+        ("u", 1, 1, "a", 1), ("u", 2, 1, "b", 2),
+        (None, 1, 1, "a", 1), (None, 2, 1, "b", 2),
+    ]
+
+
+def test_yql_text_keeps_the_null_partition(spark, null_part_df):
+    from ytsaurus_spark.yql.match_recognize_text import expand_match_recognize
+
+    s2 = spark.newSession()
+    s2.createDataFrame(null_part_df.rdd, null_part_df.schema) \
+        .createOrReplaceTempView("mr_null_src")
+    for mode, cols in (("ONE ROW PER MATCH", "n"),
+                       ("ALL ROWS PER MATCH", "row_in_match")):
+        text = expand_match_recognize(s2, f"""
+            select u, {cols} from mr_null_src MATCH_RECOGNIZE (
+                PARTITION BY u ORDER BY o
+                MEASURES count(*) AS n
+                {mode}
+                PATTERN (A B)
+                DEFINE A AS t = 'a', B AS t = 'b'
+            )
+        """)
+        got = {r.u for r in s2.sql(text).collect()}
+        assert got == {None, "u"}, (mode, got)
+
+
+def test_stream_rejects_an_empty_matching_pattern(spark):
+    from ytsaurus_spark.operators.match_recognize import match_recognize_stream
+
+    src = spark.readStream.format("rate").load().select(
+        (F.col("value") % 3).alias("k"), F.col("value").alias("o")
+    )
+    with pytest.raises(ValueError, match="empty"):
+        match_recognize_stream(
+            src, ["k"], "o", [("a", F.col("o") % 2 == 0)], "a*"
+        )
+
+
+def test_measure_aggregates_follow_sql(spark):
+    """avg runs (it raised AttributeError: pandas has no Series.avg), a
+    sum over only NULLs is NULL (pandas gives 0), and count(col) counts
+    non-NULL values while count(*) counts rows."""
+    df = spark.createDataFrame(
+        [(1, 1, "a", None), (1, 2, "b", None), (1, 3, "b", 4)],
+        "k bigint, o bigint, t string, v bigint",
+    )
+    out = match_recognize_measures(
+        df, ["k"], ["o"], AB(), "ab+",
+        {
+            "av": ("avg", "v"),
+            "sa": ("sum", "v", "a"),
+            "sb": ("sum", "v", "b"),
+            "nv": ("count", "v"),
+            "n": ("count", None),
+        },
+        "k bigint, match_no bigint, classifier string, av double, "
+        "sa bigint, sb bigint, nv bigint, n bigint",
+    ).collect()
+    assert [tuple(r) for r in out] == [(1, 1, "abb", 4.0, None, 4, 1, 3)]

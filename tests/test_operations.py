@@ -74,6 +74,55 @@ def test_run_reduce_secondary_sort(spark, grp):
     assert rows_set(out) == {(1, "y"), (2, "x"), (3, "q")}
 
 
+def _small_batches(spark):
+    """A clone of the test session whose Arrow batches hold two rows, so a
+    key group of three rows straddles a batch boundary."""
+    from pyspark.sql import SparkSession
+
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    clone.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    return clone
+
+
+NAN = float("nan")
+
+
+@pytest.mark.parametrize(
+    "ddl, keys, want",
+    [
+        ("k bigint", [1, 1, None, None, None, 2], {1: 2, None: 3, 2: 1}),
+        # pandas -> Arrow turns the reducer's NaN key into NULL on the way
+        # out (from_pandas), so the whole NaN group reads back as k=None
+        ("k double", [1.0, 1.0, NAN, NAN, NAN, 2.0], {1.0: 2, None: 3, 2.0: 1}),
+        ("k string", ["a", "a", None, None, None, "b"], {"a": 2, None: 3, "b": 1}),
+    ],
+    ids=["null_bigint", "nan_double", "null_string"],
+)
+def test_null_and_nan_keys_reach_the_reducer_whole(spark, ddl, keys, want):
+    """NULL equals NULL and NaN equals NaN in the carry's key test, as in
+    Spark's grouping: a three-row NULL/NaN group split over two-row Arrow
+    batches is reduced once, whole (pandas ``==`` reduced it twice)."""
+    df = _small_batches(spark).createDataFrame(
+        [(k, i) for i, k in enumerate(keys)], f"{ddl}, v bigint"
+    )
+    schema = f"{ddl}, n bigint"
+
+    def reducer(g: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame({"k": [g["k"].iloc[0]], "n": [len(g)]})
+
+    def batch_reducer(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pdf.groupby("k", sort=False, dropna=False).size().rename(
+            "n").reset_index()
+
+    for out in (
+        mr.run_reduce(df, ["k"], reducer, schema, num_partitions=1),
+        mr.run_reduce_batched(df, ["k"], batch_reducer, schema,
+                              num_partitions=1),
+    ):
+        got = [tuple(r) for r in out.collect()]
+        assert len(got) == len(want) and dict(got) == want, got
+
+
 def test_run_reduce_sort_by_must_extend_reduce_by(spark, grp):
     with pytest.raises(ValueError):
         mr.run_reduce(grp, ["a"], lambda p: p, "a bigint", sort_by=["b"])

@@ -34,6 +34,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -128,18 +129,13 @@ def run_reduce(
     Secondary sort: ``sort_by`` must extend ``reduce_by`` (spec rule,
     operation.h:978-983); rows arrive at the reducer sorted by it.
 
-    Execution rides the SortedReduce shape (run_reduce_batched): the former
-    ``groupBy().applyInPandas`` paid one Python call + Arrow exchange PER
-    KEY GROUP — ~1 ms each, ruinous for many small keys (measured: the
-    15k-customer JoinReduce query spent 13-20 s on round trips alone).
-    Here the keyed repartition + partition sort delivers multi-group Arrow
-    batches and the per-key ``reducer`` runs on each key's slice INSIDE
-    the batch — the identical per-key contract (whole key per call, rows
-    sorted by ``sort_by``; within-key tie order is unspecified in both
-    forms) at a per-key cost of a pandas slice instead of an exchange.
+    Execution rides the SortedReduce shape (run_reduce_batched): the
+    ``reducer`` runs on each key's slice inside multi-group Arrow batches,
+    at the cost of a pandas slice per key. ``groupBy().applyInPandas`` paid
+    a Python call + Arrow exchange per key (~1 ms; the 15k-customer
+    JoinReduce query spent 13-20 s on round trips alone). Within-key tie
+    order is unspecified.
     """
-    if sort_by and sort_by[: len(reduce_by)] != reduce_by:
-        raise ValueError("sort_by must have reduce_by as prefix")
 
     def batch_apply(pdf: pd.DataFrame) -> pd.DataFrame:
         outs = [
@@ -179,11 +175,14 @@ def run_reduce_batched(
     ``pdf.groupby`` — thousands of groups per Python call). A carry buffer
     keeps the trailing (possibly batch-split) key group for the next batch,
     so every key is still seen exactly once, whole — the key guarantee at
-    batch granularity.
+    batch granularity. The carry's key test is null-safe, as Spark groups,
+    so a NULL or NaN key group also arrives whole (group it with
+    ``dropna=False``); pandas holds a float NULL as NaN, so a NULL and a
+    NaN group in one batch look like one group. This is the engine's one
+    sorted-key pass: ``run_reduce`` and MATCH_RECOGNIZE run on it.
     """
-    if sort_by:
-        if sort_by[: len(reduce_by)] != reduce_by:
-            raise ValueError("sort_by must have reduce_by as prefix")
+    if sort_by and sort_by[: len(reduce_by)] != reduce_by:
+        raise ValueError("sort_by must have reduce_by as prefix")
     sort_cols = sort_by or reduce_by
     # keyed repartition WITHOUT a pinned count unless the caller asks:
     # REPARTITION_BY_NUM disables AQE coalescing, so a fixed 32 would be a
@@ -207,8 +206,7 @@ def run_reduce_batched(
                 carry = None
             if len(pdf) == 0:
                 continue
-            last_key = tuple(pdf[reduce_by].iloc[-1])
-            mask = (pdf[reduce_by] == last_key).all(axis=1)
+            mask = _last_key_rows(pdf, reduce_by)
             complete, carry = pdf[~mask], pdf[mask]
             if len(complete):
                 yield batch_reducer(complete)
@@ -216,6 +214,20 @@ def run_reduce_batched(
             yield batch_reducer(carry)
 
     return arranged.mapInPandas(runner, output_schema)
+
+
+def _last_key_rows(pdf: pd.DataFrame, key_cols: list[str]) -> np.ndarray:
+    """Mask of the rows whose key equals the last row's, NULL and NaN
+    included (Spark's grouping equality, not pandas ``==``)."""
+    mask = np.ones(len(pdf), dtype=bool)
+    for c in key_cols:
+        col = pdf[c]
+        last = col.iloc[-1]
+        if pd.api.types.is_scalar(last) and pd.isna(last):
+            mask &= col.isna().to_numpy()
+        else:
+            mask &= (col == last).to_numpy()
+    return mask
 
 
 def run_reduce_multi_input(

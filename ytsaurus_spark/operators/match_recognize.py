@@ -26,15 +26,18 @@ Per-row navigation (PREV/NEXT inside DEFINE) comes from
 Scale: state per partition key is the encoded symbol string (1 byte/row) —
 bounded by per-key sequence length, the same bound the reference's
 streaming matcher carries. ``match_recognize`` is one groupBy shuffle;
-``match_recognize_measures`` runs on the SortedReduce shape (repartition +
-sortWithinPartitions + batched mapInPandas) so millions of small keys cost
-one shuffle and a streaming pandas pass, not a Python call per key.
+``match_recognize_measures`` and ``match_recognize_rows`` run on
+``map_reduce.run_reduce_batched`` (one keyed exchange, one sort, one
+batched pandas pass), so millions of small keys cost one shuffle, not a
+Python call per key. Each key's rows arrive whole, a NULL or NaN key
+included, and a NULL partition is matched like any other, as in the
+count form and the stream. Every Python form scans with ``_scan_matches``;
+``_compile_pattern`` rejects a PATTERN that matches no rows, in all forms.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
 import pandas as pd
 
@@ -68,6 +71,7 @@ def match_recognize(
     Returns (partition_by..., n_matches, matches) where ``matches`` is the
     comma-joined matched symbol substrings in order — enough to measure
     match lengths and classifier sequences downstream."""
+    _compile_pattern(pattern)
     sym = encode_symbols(df, symbols).alias("__sym")
     seq = (
         df.select(*partition_by, *order_by, sym)
@@ -97,6 +101,15 @@ def match_recognize(
 #: row); the rest are plain aggregates over the matched rows.
 _MEASURE_KINDS = ("first", "last", "min", "max", "sum", "count", "avg")
 
+#: the plain aggregates as SQL computes them: NULLs skipped, and NULL (not
+#: pandas' 0) for the sum of no non-NULL value
+_AGGREGATES = {
+    "min": pd.Series.min,
+    "max": pd.Series.max,
+    "sum": lambda v: v.sum(min_count=1),
+    "avg": pd.Series.mean,
+}
+
 
 def _validate_after_match_skip(after_match_skip) -> None:
     """Reject malformed AFTER MATCH SKIP specs up front — a bad value
@@ -112,6 +125,16 @@ def _validate_after_match_skip(after_match_skip) -> None:
     )
     if not (valid_scalar or valid_to_sym):
         raise ValueError(f"unsupported AFTER MATCH SKIP {after_match_skip!r}")
+
+
+def _compile_pattern(pattern: str) -> "re.Pattern[str]":
+    """The PATTERN as a regex over symbol chars. A pattern that matches
+    the empty row sequence (``a*``) is rejected: it matches zero rows
+    everywhere, which no skip policy can advance past."""
+    rx = re.compile(pattern)
+    if rx.search("") is not None:
+        raise ValueError("PATTERN must not match the empty row sequence")
+    return rx
 
 
 def _scan_matches(
@@ -157,6 +180,36 @@ def _scan_matches(
     return out
 
 
+def _partition_matches(pdf: pd.DataFrame, partition_by: list[str], rx, skip):
+    """(key, rows, symbol string, match spans) per partition key of a
+    batch of whole, ordered partitions; a NULL key is a partition too."""
+    for key, g in pdf.groupby(partition_by, sort=False, dropna=False):
+        s = "".join(g["__sym"])
+        yield (
+            key if isinstance(key, tuple) else (key,), g, s,
+            _scan_matches(rx, s, skip),
+        )
+
+
+def _per_partition(df, partition_by, order_by, cols, symbols, emit,
+                   output_schema) -> DataFrame:
+    """Run ``emit`` over each partition key's rows in ``order_by`` order,
+    with their ``__sym`` column, on the sorted-key pass. The width is
+    ``python_stage_width``: the pass is per-key Python, which AQE's byte
+    coalescing misprices (None, a non-local source, leaves AQE sizing)."""
+    from ytsaurus_spark.operators import python_stage_width
+    from ytsaurus_spark.operators.map_reduce import run_reduce_batched
+
+    arranged = df.select(
+        *partition_by, *order_by, *cols, encode_symbols(df, symbols).alias("__sym")
+    )
+    return run_reduce_batched(
+        arranged, partition_by, emit, output_schema,
+        sort_by=[*partition_by, *order_by],
+        num_partitions=python_stage_width(df),
+    )
+
+
 def match_recognize_measures(
     df: DataFrame,
     partition_by: list[str],
@@ -172,17 +225,18 @@ def match_recognize_measures(
 
     ``measures`` maps output column → (kind, source column) or
     (kind, source column, symbol); kinds are first/last/min/max/sum/
-    count/avg (count ignores the source column). The 3-tuple form scopes
-    the aggregate to the rows matched by that DEFINE symbol within the
-    match — SQL-text ``LAST(A.ts)`` navigation (sql_match_recognize.cpp
-    MEASURES grammar). Every match emits one row: (partition_by...,
+    count/avg. ``count`` with no source column counts rows (``count(*)``),
+    with one its non-NULL values; the other aggregates skip NULLs, as in
+    SQL. The 3-tuple form scopes the aggregate to the rows matched by that
+    DEFINE symbol within the match — SQL-text ``LAST(A.ts)`` navigation
+    (sql_match_recognize.cpp MEASURES grammar). Every match emits one row: (partition_by...,
     match_no, classifier, measures...) — ONE ROW PER MATCH semantics.
     ``output_schema`` is the DDL string for exactly those columns.
 
-    Execution: symbols encode JVM-side; rows shuffle once on the partition
-    key and sort within partitions by (key, order); a streaming pandas pass
-    walks each key's ordered rows, regex-scans the symbol string under the
-    skip policy, and aggregates each match's row slice vectorized.
+    Execution: symbols encode JVM-side; ``run_reduce_batched`` shuffles
+    rows once on the partition key, sorts them by (key, order) and hands
+    whole keys to a pandas pass, which regex-scans each key's symbol
+    string under the skip policy and aggregates each match's row slice.
     """
     _validate_after_match_skip(after_match_skip)
     # normalize 2-tuples to (kind, src, sym=None)
@@ -193,84 +247,47 @@ def match_recognize_measures(
     for name, (kind, _src, _sym) in measures.items():
         if kind not in _MEASURE_KINDS:
             raise ValueError(f"unsupported measure {kind!r} for {name}")
-    rx = re.compile(pattern)
-    if rx.search("") is not None:
-        raise ValueError("PATTERN must not match the empty row sequence")
-
+    rx = _compile_pattern(pattern)
     need_cols = sorted(
         {src for (_k, src, _s) in measures.values() if src is not None}
         - set(partition_by)
         - set(order_by)
     )
-    from ytsaurus_spark.operators import python_stage_width
-
-    sym = encode_symbols(df, symbols).alias("__sym")
-    # width floor (python_stage_width): the emit pass is per-KEY Python
-    # (regex scan + measure aggregation per match), which AQE's byte
-    # coalescing misprices — a few MB of rows collapse to one partition
-    # and the whole pass runs on one core (same finding as the reduce
-    # family's wave-17 fix; byte term takes over at scale). None (input
-    # size unknowable — non-local source) means do NOT pin: the unpinned
-    # keyed repartition keeps AQE sizing instead of holding
-    # total_bytes/cores per partition at scale.
-    width = python_stage_width(df)
-    arranged = df.select(*partition_by, *order_by, *need_cols, sym)
-    arranged = (
-        arranged.repartition(width, *partition_by) if width is not None
-        else arranged.repartition(*partition_by)
-    ).sortWithinPartitions(*partition_by, *order_by)
-    skip = after_match_skip
     mlist = list(measures.items())
+    cols = [*partition_by, "match_no", "classifier", *measures]
 
-    def runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
+    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = []
+        for key, g, s, spans in _partition_matches(
+            pdf, partition_by, rx, after_match_skip
+        ):
+            for match_no, (lo, hi) in enumerate(spans, 1):
+                sl = g.iloc[lo:hi]
+                cls = s[lo:hi]
+                rec = dict(zip(partition_by, key))
+                rec["match_no"] = match_no
+                rec["classifier"] = cls
+                for name, (kind, src, sym) in mlist:
+                    sel = sl
+                    if sym is not None:
+                        # scope to the rows this DEFINE symbol matched
+                        sel = sl[[c == sym for c in cls]]
+                    if kind == "count":
+                        rec[name] = len(sel) if src is None else sel[src].count()
+                    elif len(sel) == 0:
+                        rec[name] = None
+                    elif kind == "first":
+                        rec[name] = sel[src].iloc[0]
+                    elif kind == "last":
+                        rec[name] = sel[src].iloc[-1]
+                    else:
+                        rec[name] = _AGGREGATES[kind](sel[src])
+                rows.append(rec)
+        return pd.DataFrame(rows, columns=cols)
 
-        def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = []
-            for key, g in pdf.groupby(partition_by, sort=False):
-                key = key if isinstance(key, tuple) else (key,)
-                s = "".join(g["__sym"])
-                for match_no, (lo, hi) in enumerate(_scan_matches(rx, s, skip), 1):
-                    sl = g.iloc[lo:hi]
-                    cls = s[lo:hi]
-                    rec = dict(zip(partition_by, key))
-                    rec["match_no"] = match_no
-                    rec["classifier"] = cls
-                    for name, (kind, src, sym) in mlist:
-                        sel = sl
-                        if sym is not None:
-                            # scope to the rows this DEFINE symbol matched
-                            mask = [c == sym for c in cls]
-                            sel = sl[mask]
-                        if kind == "count":
-                            rec[name] = len(sel)
-                        elif len(sel) == 0:
-                            rec[name] = None
-                        elif kind == "first":
-                            rec[name] = sel[src].iloc[0]
-                        elif kind == "last":
-                            rec[name] = sel[src].iloc[-1]
-                        else:
-                            rec[name] = getattr(sel[src], kind)()
-                    rows.append(rec)
-            cols = [*partition_by, "match_no", "classifier", *measures]
-            return pd.DataFrame(rows, columns=cols)
-
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            last_key = tuple(pdf[partition_by].iloc[-1])
-            mask = (pdf[partition_by] == last_key).all(axis=1)
-            complete, carry = pdf[~mask], pdf[mask]
-            if len(complete):
-                yield emit(complete)
-        if carry is not None and len(carry):
-            yield emit(carry)
-
-    return arranged.mapInPandas(runner, output_schema)
+    return _per_partition(
+        df, partition_by, order_by, need_cols, symbols, emit, output_schema
+    )
 
 
 def match_recognize_rows(
@@ -294,81 +311,44 @@ def match_recognize_rows(
     (partition_by..., keep_cols..., match_no, classifier, row_in_match).
     Under overlapping skip policies a source row can appear in several
     matches (once per match), exactly as the standard specifies.
-    Same execution shape as the measures form: one shuffle, sorted
-    partitions, a streaming pandas pass.
+    Same execution as the measures form (``run_reduce_batched``).
     """
     _validate_after_match_skip(after_match_skip)
-    rx = re.compile(pattern)
-    if rx.search("") is not None:
-        raise ValueError("PATTERN must not match the empty row sequence")
-    from ytsaurus_spark.operators import python_stage_width
-
-    sym = encode_symbols(df, symbols).alias("__sym")
-    need = [c for c in keep_cols if c not in partition_by]
-    # same per-key-Python width floor as the measures form (wave 17);
-    # None (non-local source, size unknowable) = do not pin
-    width = python_stage_width(df)
-    arranged = df.select(
-        *partition_by, *order_by, *[c for c in need if c not in order_by], sym
-    )
-    arranged = (
-        arranged.repartition(width, *partition_by) if width is not None
-        else arranged.repartition(*partition_by)
-    ).sortWithinPartitions(*partition_by, *order_by)
-    skip = after_match_skip
+    rx = _compile_pattern(pattern)
     out_keep = [*partition_by, *[c for c in keep_cols if c not in partition_by]]
+    cols = [*out_keep, "match_no", "classifier", "row_in_match"]
 
-    def runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-
-        def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-            frames = []
-            for _key, g in pdf.groupby(partition_by, sort=False):
-                s = "".join(g["__sym"])
-                # one gather per GROUP, not per match: collect every
-                # match's row indices/annotations first, then a single
-                # iloc + three column assigns (the former per-match
-                # slice+copy+concat allocated one frame per match —
-                # tens of thousands of tiny frames per batch). Row
-                # order is identical: matches in scan order, rows in
-                # match order; duplicate indices (overlapping skip
-                # policies) gather once per appearance as before.
-                idx: list[int] = []
-                mnos: list[int] = []
-                rims: list[int] = []
-                cls: list[str] = []
-                for match_no, (lo, hi) in enumerate(_scan_matches(rx, s, skip), 1):
-                    idx.extend(range(lo, hi))
-                    mnos.extend([match_no] * (hi - lo))
-                    rims.extend(range(1, hi - lo + 1))
-                    cls.extend(s[lo:hi])
-                if not idx:
-                    continue
-                sl = g.iloc[idx][out_keep].copy()
-                sl["match_no"] = mnos
-                sl["classifier"] = cls
-                sl["row_in_match"] = rims
-                frames.append(sl)
-            cols = [*out_keep, "match_no", "classifier", "row_in_match"]
-            if not frames:
-                return pd.DataFrame(columns=cols)
-            return pd.concat(frames, ignore_index=True)[cols]
-
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
+    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
+        frames = []
+        for _key, g, s, spans in _partition_matches(
+            pdf, partition_by, rx, after_match_skip
+        ):
+            # one gather per partition key, not per match: overlapping
+            # skip policies gather a row once per match it appears in
+            idx: list[int] = []
+            mnos: list[int] = []
+            rims: list[int] = []
+            cls: list[str] = []
+            for match_no, (lo, hi) in enumerate(spans, 1):
+                idx.extend(range(lo, hi))
+                mnos.extend([match_no] * (hi - lo))
+                rims.extend(range(1, hi - lo + 1))
+                cls.extend(s[lo:hi])
+            if not idx:
                 continue
-            last_key = tuple(pdf[partition_by].iloc[-1])
-            mask = (pdf[partition_by] == last_key).all(axis=1)
-            complete, carry = pdf[~mask], pdf[mask]
-            if len(complete):
-                yield emit(complete)
-        if carry is not None and len(carry):
-            yield emit(carry)
+            sl = g.iloc[idx][out_keep].copy()
+            sl["match_no"] = mnos
+            sl["classifier"] = cls
+            sl["row_in_match"] = rims
+            frames.append(sl)
+        if not frames:
+            return pd.DataFrame(columns=cols)
+        return pd.concat(frames, ignore_index=True)[cols]
 
-    return arranged.mapInPandas(runner, output_schema)
+    need = [c for c in keep_cols if c not in partition_by and c not in order_by]
+    return _per_partition(
+        df, partition_by, order_by, need, symbols, emit, output_schema
+    )
 
 
 def match_recognize_stream(
@@ -442,7 +422,7 @@ def match_recognize_stream(
         ]
     )
     state_schema = T.StructType([T.StructField("bufs", T.BinaryType())])
-    rx = re.compile(pattern)
+    rx = _compile_pattern(pattern)
     out_cols = [*partition_by, "match_seq", "match_n"]
 
     def _norm(v):
@@ -452,41 +432,27 @@ def match_recognize_stream(
 
     def fn(key, pdfs, state):
         bufs = pickle.loads(state.get[0]) if state.exists else {}
-        chunks = [pdf for pdf in pdfs]
-        rows = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else (chunks[0] if chunks else None)
-        )
+        chunks = list(pdfs)
+        rows = pd.concat(chunks, ignore_index=True) if chunks else None
         keys_out: list[tuple] = []
         seqs: list[str] = []
         ns: list[int] = []
         if rows is not None and len(rows):
             order = rows["__ord"].to_numpy().argsort(kind="stable")
             rows = rows.iloc[order]
-            # groupby preserves row order within each key, so each key sees
-            # its rows in __ord order — identical to the per-key grouping.
-            # Only the __sym Series is sliced per key (the full sub-frame
-            # was never read), and matches gather into flat lists with ONE
-            # frame built per bucket call — the former per-key DataFrame
-            # construction dominated the state function (measured 0.46 →
-            # 0.06 s per 100k-row batch); emission order (keys in group
-            # order, matches in scan order) and the per-key recurrence are
-            # identical.
+            # groupby keeps each key's rows in __ord order; only __sym is
+            # sliced per key and ONE frame is built per bucket call (a
+            # frame per key dominated the state function: 0.46 → 0.06 s
+            # per 100k-row batch)
             for ukey, syms in rows.groupby(
                 partition_by, sort=False, dropna=False
             )["__sym"]:
                 ukey = ukey if isinstance(ukey, tuple) else (ukey,)
                 ukey = tuple(_norm(v) for v in ukey)
                 buf = bufs.get(ukey, "") + "".join(syms)
-                matches = []
-                last_end = 0
-                for m in rx.finditer(buf):
-                    if m.end() == m.start():  # zero-width: avoid infinite loop
-                        break
-                    matches.append(m.group(0))
-                    last_end = m.end()
-                bufs[ukey] = buf[last_end:][-max_buffer:]
+                spans = _scan_matches(rx, buf, "past_last_row")
+                matches = [buf[lo:hi] for lo, hi in spans]
+                bufs[ukey] = buf[spans[-1][1] if spans else 0:][-max_buffer:]
                 if matches:
                     keys_out.extend([ukey] * len(matches))
                     seqs.extend(matches)

@@ -754,7 +754,6 @@ def pipeline_cdc_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
         DurableQueue,
         QueueConsumer,
         publish_changes,
-        pull_and_advance,
     )
 
     cat = load_tables(spark, sf_dir)
@@ -815,9 +814,9 @@ def pipeline_cdc_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"replayed publish appended {replayed} records (expected 0)"
         )
     consumer = QueueConsumer(name="replica_sync")
-    changes = pull_and_advance(
-        queue.read(), consumer, "$row_index", max_rows=1 << 30
-    ).drop("$row_index", "$sequence_number")
+    changes = queue.pull(consumer, max_rows=1 << 30).drop(
+        "$row_index", "$sequence_number"
+    )
     replica.apply_changes(changes)
     rep = replica.read()
     src = source.read().select(

@@ -341,7 +341,7 @@ def write_erasure_table(
     )
     manifest = spark.createDataFrame(
         [(os.path.join(table_dir, f),) for f in chunks], "chunk string"
-    ).repartition(min(len(chunks), 32))
+    ).repartition(min(len(chunks), spark.sparkContext.defaultParallelism))
     cname = codec
 
     def encode_chunks(batches):
@@ -384,7 +384,7 @@ def assemble_erasure_table(spark, table_dir: str, out_dir: str) -> dict:
     manifest = spark.createDataFrame(
         [(os.path.join(table_dir, c), os.path.join(out_dir, c)) for c in chunks],
         "src string, dst string",
-    ).repartition(min(len(chunks), 32))
+    ).repartition(min(len(chunks), spark.sparkContext.defaultParallelism))
 
     def rebuild(batches):
         cdc = get_codec(name)

@@ -100,7 +100,7 @@ def _remote_copy_erasure(
     manifest = spark.createDataFrame(
         [(os.path.join(src_dir, c), os.path.join(staging, c)) for c in chunks],
         "src string, dst string",
-    ).repartition(min(len(chunks), 32))
+    ).repartition(min(len(chunks), spark.sparkContext.defaultParallelism))
 
     def copy_repair(batches):
         cdc = get_codec(codec_name)
@@ -221,7 +221,7 @@ def run_remote_copy(
 
     spark = dst_client.spark
     manifest = spark.createDataFrame(jobs, "src string, dst string").repartition(
-        min(len(jobs), 32)
+        min(len(jobs), spark.sparkContext.defaultParallelism)
     )
 
     def copy_chunks(batches: Iterable) -> Iterable:

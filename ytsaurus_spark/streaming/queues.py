@@ -208,7 +208,9 @@ class DurableQueue:
     def read(self, lo: int | None = None, hi: int | None = None) -> DataFrame:
         """Union of manifested segments; a [lo, hi) row-index range prunes
         non-overlapping segments from the manifest before any parquet IO."""
-        segs = self._state()["segments"]
+        return self._read(self._state()["segments"], lo, hi)
+
+    def _read(self, segs: list[dict], lo: int | None, hi: int | None) -> DataFrame:
         if lo is not None:
             segs = [s for s in segs if s["hi"] >= lo]
         if hi is not None:
@@ -222,6 +224,20 @@ class DurableQueue:
         if hi is not None:
             df = df.filter(F.col("$row_index") < hi)
         return df
+
+    def pull(self, consumer: QueueConsumer, max_rows: int) -> DataFrame:
+        """PullQueueConsumer + AdvanceConsumer on this queue: the rows in
+        ``[offset, min(offset + max_rows, next_row_index))``. ``$row_index``
+        is dense, so the manifest alone gives the new offset (the returned
+        rows' max index + 1) and the pull runs no Spark job; a consumer at
+        the end of the queue gets an empty frame and stays put."""
+        state = self._state()
+        lo = consumer.offset()
+        hi = min(lo + max_rows, state["next_row_index"])
+        batch = self._read(state["segments"], lo, hi)
+        if hi > lo:
+            consumer.advance(hi)
+        return batch
 
 
 @dataclass
