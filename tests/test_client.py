@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -103,6 +105,43 @@ def test_run_sort_merge_erase_and_operation(client, spark):
     from ytsaurus_spark.sources.formats import read_concatenated
 
     assert read_concatenated(spark, client._fs("//linked")).count() == 3
+
+
+def test_overwrite_may_read_its_own_table(client, spark):
+    # the frame's scan runs during the write: an overwrite in place must
+    # not delete the files it is still reading, and keeps the attributes
+    client.write_table("//t", spark.range(10).toDF("k"))
+    client.set("//t/@owner", "etl")
+    client.write_table("//t", client.read_table("//t").filter(F.col("k") < 5))
+    assert sorted(r.k for r in client.read_table("//t").collect()) == [0, 1, 2, 3, 4]
+    assert client.get("//t/@owner") == "etl"
+    assert os.listdir(client.root) == ["t"]  # no staged copy left behind
+
+
+def test_merge_and_map_into_their_own_input(client, spark):
+    client.write_table("//m", spark.createDataFrame([(1,), (2,)], "k bigint"))
+    client.run_merge(["//m"], "//m")
+    assert sorted(r.k for r in client.read_table("//m").collect()) == [1, 2]
+    client.run_merge(["//m", "//m"], "//m")
+    assert client.row_count("//m") == 4
+    client.run_operation({
+        "operation_type": "map",
+        "input_table_paths": ["//m"],
+        "output_table_path": "//m",
+        "mapper": {
+            "command": lambda batches: (
+                pdf.assign(k=pdf["k"] * 10) for pdf in batches),
+            "output_schema": "k bigint",
+        },
+    })
+    assert sorted(r.k for r in client.read_table("//m").collect()) == [10, 10, 20, 20]
+
+
+def test_erase_keeps_rows_whose_predicate_is_null(client, spark):
+    client.write_table("//e", spark.createDataFrame([(1,), (5,), (None,)], "k bigint"))
+    client.run_erase("//e", "k < 3")
+    got = [r.k for r in client.read_table("//e").collect()]
+    assert sorted(got, key=lambda k: (k is None, k)) == [5, None]
 
 
 def test_check_permission_acl_walk(client, spark):

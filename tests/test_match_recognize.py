@@ -231,6 +231,16 @@ def test_yql_text_keeps_the_null_partition(spark, null_part_df):
         assert got == {None, "u"}, (mode, got)
 
 
+def test_yql_execute_runs_match_recognize(spark, sf_dir):
+    # both YQL entry points share one pre-translation expansion
+    from ytsaurus_spark.queries.yql_q import _MR_TEXT
+    from ytsaurus_spark.yql import yql_execute, yql_select
+
+    want = yql_select(spark, _MR_TEXT, sf_dir=sf_dir, star=False).collect()
+    got = yql_execute(spark, _MR_TEXT, sf_dir=sf_dir).collect()
+    assert want and sorted(map(tuple, got), key=repr) == sorted(map(tuple, want), key=repr)
+
+
 def test_stream_rejects_an_empty_matching_pattern(spark):
     from ytsaurus_spark.operators.match_recognize import match_recognize_stream
 

@@ -36,7 +36,6 @@ def test_json_documents_go_through_one_publish():
     # the only other replaces: directory swaps and a byte payload
     allowed = [
         ("client.py", 'os.replace(tmp, os.path.join(p, "_yt_file_data"))'),
-        ("client.py", "os.replace(tmp, p)"),
         (os.path.join("sources", "remote_copy_job.py"), "os.replace(staging, dst_dir)"),
         (os.path.join("sources", "remote_copy_job.py"), "os.replace(staging, dst_dir)"),
     ]

@@ -5,6 +5,8 @@ micro-fixtures, mirroring the reference's controller integration tests
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -152,6 +154,11 @@ def test_run_erase(spark, grp):
     assert rows_set(out.select("a")) == {(1,), (3,)}
 
 
+def test_run_erase_keeps_rows_whose_predicate_is_null(spark):
+    df = spark.createDataFrame([(1,), (5,), (None,)], "k bigint")
+    assert rows_set(mr.run_erase(df, F.col("k") < 3)) == {(5,), (None,)}
+
+
 def test_input_query_pushdown(spark, grp):
     out = mr.apply_input_query(grp, "SELECT a, b FROM __input WHERE b > 6")
     assert rows_set(out) == {(1, 30), (1, 10), (2, 7)}
@@ -289,11 +296,41 @@ def test_run_operation_spec_sort_erase_merge(spark, sf_dir):
          "erase_predicate": F.col("n_regionkey") == 0},
     )
     assert e.filter(F.col("n_regionkey") == 0).count() == 0
+    # the documented spec key also takes SQL text
+    e = mr.run_operation(
+        cat,
+        {"operation_type": "erase", "input_table_paths": ["nation"],
+         "erase_predicate": "n_regionkey = 0"},
+    )
+    assert e.filter(F.col("n_regionkey") == 0).count() == 0
+    assert e.count() == cat.read("nation").count() - 5
     m = mr.run_operation(
         cat,
         {"operation_type": "merge", "input_table_paths": ["nation", "nation"]},
     )
     assert m.count() == 2 * cat.read("nation").count()
+
+
+def test_run_operation_maps_a_catalog_table_in_place(spark, tmp_path):
+    import glob
+
+    from ytsaurus_spark.catalog import Catalog
+
+    cat = Catalog(spark, str(tmp_path))
+    cat.create_table("t", spark.createDataFrame([(1,), (2,)], "k bigint"))
+    out = mr.run_operation(cat, {
+        "operation_type": "map",
+        "input_table_paths": ["t"],
+        "output_table_path": "t",
+        "mapper": {
+            "command": lambda batches: (
+                pdf.assign(k=pdf["k"] * 10) for pdf in batches),
+            "output_schema": "k bigint",
+        },
+    })
+    assert rows_set(out) == {(10,), (20,)}
+    assert glob.glob(str(tmp_path / "t.parquet" / "*.parquet"))
+    assert sorted(os.listdir(tmp_path)) == ["t.parquet"]
 
 
 def test_run_operation_spec_vanilla(spark, sf_dir):

@@ -127,6 +127,21 @@ def test_yql_engine_lifecycle(spark, qt, sf_dir):
     assert [r.c_custkey for r in rows] == [0, 1]
 
 
+def test_chyt_engine_runs_the_whole_resolve_chain(spark, qt):
+    # the tracker's CHYT engine settles toTypeName and boolean arithmetic
+    # the way chyt_query does
+    spark.createDataFrame([(1, True), (None, False)], "a bigint, b boolean") \
+        .createOrReplaceTempView("qt_chyt_v")
+    for q, want in (
+        ("select a, toTypeName(a) as t from qt_chyt_v",
+         {(1, "Nullable(Int64)"), (None, "Nullable(Int64)")}),
+        ("select a, 2 * b as x from qt_chyt_v", {(1, 2), (None, 0)}),
+    ):
+        rec = qt.wait(qt.start_query("chyt", q))
+        assert rec["state"] == "completed", rec["error"]
+        assert {tuple(r) for r in qt.read_query_result(rec["id"]).collect()} == want
+
+
 def test_yql_explain(spark, sf_dir):
     from ytsaurus_spark.yql import yql_explain
 

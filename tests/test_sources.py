@@ -76,6 +76,17 @@ def test_compact_table(spark, tmp):
     assert spark.read.parquet(path).count() == 1000
 
 
+def test_compact_table_keeps_sorted_by(spark, tmp):
+    from ytsaurus_spark.sources.formats import table_attributes, write_sorted_table
+
+    path = os.path.join(tmp, "sorted")
+    df = spark.range(100).withColumnRenamed("id", "k").repartition(8)
+    write_sorted_table(df, path, ["k"])
+    compact_table(spark, path, target_files=1)
+    assert table_attributes(path)["sorted_by"] == ["k"]
+    assert [r.k for r in spark.read.parquet(path).collect()] == list(range(100))
+
+
 def test_read_table_bad_format(spark):
     with pytest.raises(ValueError):
         read_table(spark, "/nope", fmt="yson")

@@ -1574,6 +1574,21 @@ def test_yql_module_function_breadth_r11(spark, sf_dir):
                "AS e").e is False
 
 
+def test_alter_table_keeps_the_table_attributes(spark, tmp_path):
+    from ytsaurus_spark.client import YtClient
+    from ytsaurus_spark.yql import yql_execute
+
+    c = YtClient(root=str(tmp_path), spark=spark)
+    c.write_table("//st/t", spark.createDataFrame([(2, "b"), (1, "a")], "k bigint, s string"))
+    c.run_sort("//st/t", sort_by=["k"])
+    c.set("//st/t/@owner", "etl")
+    yql_execute(spark, "ALTER TABLE `//st/t` ADD COLUMN extra Double", client=c)
+    assert (c.get("//st/t/@owner"), c.get("//st/t/@sorted_by")) == ("etl", ["k"])
+    assert [r.k for r in c.read_table("//st/t").collect()] == [1, 2]
+    with pytest.raises(ValueError, match="key column k"):
+        yql_execute(spark, "ALTER TABLE `//st/t` DROP COLUMN k", client=c)
+
+
 def test_yql_ddl_and_insert_modes(spark, tmp_path):
     """CREATE TABLE (SQLv1Antlr4.g.in:646 — PRIMARY KEY -> sorted
     dynamic, plain columns -> static), ALTER TABLE ADD/DROP COLUMN

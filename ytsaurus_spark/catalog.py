@@ -604,9 +604,10 @@ class Catalog:
         """Create (write) a table node under the catalog root — Cypress
         `create table` + commit. ``mode='error'`` refuses to clobber,
         matching the reference's default create semantics."""
+        from ytsaurus_spark.sources.formats import write_table
+
         path = self.table_path(name)
-        df.write.mode(mode).parquet(path)
-        record_parquet_schema(df.sparkSession, path, df.schema)
+        write_table(df, path, mode=mode)
         self._df_cache.pop(name, None)  # relation (file listing) changed
         self._nanos_cache.pop(name, None)
         read_parquet(df.sparkSession, path).createOrReplaceTempView(name)

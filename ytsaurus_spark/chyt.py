@@ -2188,14 +2188,20 @@ def chyt_query(spark, text: str, client=None, sf_dir: str | None = None,
                     .withColumn("__table_name", F.lit(base))
                 )
             df.createOrReplaceTempView(_view_name(p))
-    sql = translate_chyt(text, resolve=_view_name)
-    sql = _resolve_totypename(s2, sql)
-    sql = resolve_if_defaults(sql, analyze=_spark_analyze(s2))
-    sql = resolve_bool_arithmetic(sql, s2)
-    sql = resolve_join_left_bias(sql, s2)
-    sql = resolve_tuple_positional(sql, s2)
-    sql = resolve_length(sql, analyze=_spark_analyze(s2))
-    return s2.sql(sql)
+    return s2.sql(resolve_chyt(s2, translate_chyt(text, resolve=_view_name)))
+
+
+def resolve_chyt(spark, sql: str) -> str:
+    """The post-translation passes, in order, that settle what the text
+    alone cannot: each asks ``spark`` for the types of the translated
+    SQL (toTypeName, *If defaults, boolean arithmetic, join-side bias,
+    tuple positions, length)."""
+    sql = _resolve_totypename(spark, sql)
+    sql = resolve_if_defaults(sql, analyze=_spark_analyze(spark))
+    sql = resolve_bool_arithmetic(sql, spark)
+    sql = resolve_join_left_bias(sql, spark)
+    sql = resolve_tuple_positional(sql, spark)
+    return resolve_length(sql, analyze=_spark_analyze(spark))
 
 
 # --- write statements (CHYT mutations / DDL) ---------------------------------
@@ -2486,26 +2492,7 @@ def chyt_execute(spark, text: str, client, sf_dir: str | None = None,
                         "Overriding dynamic tables is not supported")
                 client.insert_rows(path, df)
                 return None
-        if not append and client.exists(path):
-            # INSERT <append=%false> may SELECT from the table it
-            # overwrites. Stage to a sibling path and atomically swap —
-            # O(disk), unlike localCheckpoint which pins the whole
-            # inserted dataset in executor storage memory (OOM at scale).
-            from ytsaurus_spark.sources.formats import (
-                table_attributes, _write_attrs,
-            )
-
-            staging = f"{path}.__chyt_staging"
-            if client.exists(staging):
-                client.remove(staging, recursive=True, force=True)
-            prior = dict(table_attributes(client._fs(path)))
-            client.write_table(staging, df, append=False)
-            if prior:
-                _write_attrs(client._fs(staging), prior)
-            client.remove(path, recursive=True)
-            client.move(staging, path)
-        else:
-            client.write_table(path, df, append=append)
+        client.write_table(path, df, append=append)
         return None
 
     return chyt_query(spark, stmt, client=client, sf_dir=sf_dir,

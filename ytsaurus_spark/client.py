@@ -261,16 +261,16 @@ class YtClient:
     # -- static tables -----------------------------------------------------
 
     def write_table(self, ypath: str, df: DataFrame, append: bool | None = None) -> None:
+        """Write ``df`` to the table at ``ypath``: append with ``append``
+        (or an ``<append=%true>`` path attribute), else overwrite. An
+        overwrite may read the table it replaces, and the table's
+        attributes carry over (``sources/formats.write_table``)."""
         prefix, ypath = self._split_attrs(ypath)
         path, rich = self._split_rich(ypath)
         if append is None:
             append = (bool(prefix.get("append"))
                       or "append=%true" in rich or "append=true" in rich)
-        p = self._fs(path)
-        prior = dict(table_attributes(p)) if os.path.exists(p) else {}
-        _write_fmt(df, p, mode="append" if append else "overwrite")
-        if prior:
-            _write_attrs(p, prior)
+        _write_fmt(df, self._fs(path), mode="append" if append else "overwrite")
 
     # -- file nodes (reference: write_file/read_file over Cypress file
     # nodes — job attachments, the UDF registry's bitcode blobs) ----------
@@ -507,26 +507,12 @@ class YtClient:
 
         return _run_op(_Adapter(), spec, tracker=tracker)
 
-    def _rewrite(self, p: str, df: DataFrame, extra_attrs: dict | None = None) -> None:
-        """Overwrite a table IN PLACE from a plan that reads it: stage to a
-        sibling dir, then swap — Spark's lazy scan would otherwise read
-        files the overwrite is deleting (the reference never has this
-        problem because outputs are new chunk lists; the swap recreates
-        that write-new-then-repoint discipline)."""
-        prior = dict(table_attributes(p)) if os.path.exists(p) else {}
-        prior.update(extra_attrs or {})
-        tmp = p + ".rewrite_tmp"
-        _write_fmt(df, tmp, mode="overwrite")
-        shutil.rmtree(p, ignore_errors=True)
-        os.replace(tmp, p)
-        if prior:
-            _write_attrs(p, prior)
-
     def run_sort(self, src: str, dst: str | None = None, sort_by: list[str] | None = None) -> None:
         from ytsaurus_spark.operators.map_reduce import run_sort
 
-        out = run_sort(self.read_table(src), sort_by or [])
-        self._rewrite(self._fs(dst or src), out, {"sorted_by": sort_by or []})
+        dst = dst or src
+        self.write_table(dst, run_sort(self.read_table(src), sort_by or []))
+        self.set(dst + "/@sorted_by", sort_by or [])
 
     def run_merge(self, sources: list[str], dst: str, mode: str = "unordered") -> None:
         from ytsaurus_spark.operators.map_reduce import run_merge
@@ -563,12 +549,10 @@ class YtClient:
         )
 
     def run_erase(self, ypath: str, predicate: str) -> None:
-        from pyspark.sql import functions as F
-
         from ytsaurus_spark.operators.map_reduce import run_erase
 
         path, _ = self._split_rich(ypath)
-        self._rewrite(self._fs(path), run_erase(self.read_table(path), F.expr(predicate)))
+        self.write_table(path, run_erase(self.read_table(path), predicate))
 
     # -- ACLs (cypress access control subset) ------------------------------
 

@@ -369,9 +369,13 @@ def run_erase(
     df: DataFrame,
     predicate,
 ) -> DataFrame:
-    """Erase: delete rows matching the predicate by rewriting the complement
-    (ordered_controller.cpp erase path does exactly this at chunk level)."""
-    return df.filter(~predicate)
+    """Erase: delete rows matching the predicate (a Column or SQL text) by
+    rewriting the complement (ordered_controller.cpp erase path does
+    exactly this at chunk level). A row whose predicate is NULL is not
+    matched and stays, as with SQL ``DELETE ... WHERE``."""
+    if isinstance(predicate, str):
+        predicate = F.expr(predicate)
+    return df.filter(~F.coalesce(predicate, F.lit(False)))
 
 
 def apply_input_query(df: DataFrame, query: str, view_name: str = "__input") -> DataFrame:

@@ -111,14 +111,9 @@ class QueryTracker:
         """CHYT engine: ClickHouse-dialect text (double-quoted cypress
         paths, PREWHERE, *If combinators — ytsaurus_spark/chyt.py)
         against the tracker session's registered views."""
-        from ytsaurus_spark.chyt import (
-            _spark_analyze, resolve_if_defaults, resolve_length,
-            translate_chyt,
-        )
+        from ytsaurus_spark.chyt import resolve_chyt, translate_chyt
 
-        sql = resolve_if_defaults(translate_chyt(q), analyze=_spark_analyze(spark))
-        sql = resolve_length(sql, analyze=_spark_analyze(spark))
-        return spark.sql(sql)
+        return spark.sql(resolve_chyt(spark, translate_chyt(q)))
 
     # -- record store (atomic manifest, jsonio.publish_json) ------------
 

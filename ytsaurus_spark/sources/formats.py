@@ -34,6 +34,8 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,12 +69,55 @@ def read_table(spark: SparkSession, path: str, fmt: str = "parquet", schema=None
 
 
 def write_table(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwrite", partition_by: list[str] | None = None, **opts) -> None:
+    """Write ``df`` as the table directory ``path``.
+
+    ``mode="overwrite"`` is the engine's one way to replace a table, and
+    ``df`` may read the table it replaces (an in-place sort, merge, erase,
+    ``INSERT <append=%false>`` or ALTER): the frame is written into a
+    hidden sibling directory, the table's ``_yt_attrs.json`` sidecar is
+    carried into it, and it is swapped into place. The live copy is
+    removed only after the staged one is complete, as the reference
+    writes new chunks and then repoints the table. Other modes write in
+    place. A parquet write of a whole table records its schema for
+    ``catalog.read_parquet``.
+    """
+    final = path.rstrip("/")
     writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     for k, v in opts.items():
         writer = writer.option(k, v)
-    getattr(writer, fmt)(path)
+    if mode != "overwrite":
+        getattr(writer, fmt)(final)
+    else:
+        parent, name = os.path.split(final)
+        staged = os.path.join(parent, f".{name}.{uuid.uuid4().hex}")
+        sidecar = os.path.join(final, "_yt_attrs.json")
+        try:
+            getattr(writer, fmt)(staged)
+            if os.path.isfile(sidecar):
+                shutil.copy2(sidecar, staged)
+        except BaseException:
+            shutil.rmtree(staged, ignore_errors=True)
+            raise
+        _swap_into_place(staged, final)
+    if fmt == "parquet" and not partition_by and mode not in ("append", "ignore"):
+        from ytsaurus_spark.catalog import record_parquet_schema
+
+        record_parquet_schema(df.sparkSession, final, df.schema)
+
+
+def _swap_into_place(staged: str, path: str) -> None:
+    """Make the complete directory ``staged`` the table ``path``: the live
+    copy is renamed aside, the staged one renamed in, and only then is
+    the old copy deleted, so the disk never holds neither."""
+    if not os.path.exists(path):
+        os.rename(staged, path)
+        return
+    old = staged + ".old"
+    os.rename(path, old)
+    os.rename(staged, path)
+    shutil.rmtree(old) if os.path.isdir(old) else os.remove(old)
 
 
 def write_sorted_table(
@@ -167,14 +212,7 @@ def compact_table(
     """Auto-merge analog (auto_merge_task.cpp): rewrite a table's many small
     files into ``target_files`` — coalesce avoids a shuffle; the continuous
     version of this is AQE's coalescePartitions on every write."""
-    df = read_table(spark, path, fmt)
-    tmp = path.rstrip("/") + ".compact.tmp"
-    write_table(df.coalesce(target_files), tmp, fmt)
-    # atomic-ish swap via filesystem rename (local/dbfs semantics)
-    import shutil
-
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
+    write_table(read_table(spark, path, fmt).coalesce(target_files), path, fmt)
 
 
 def read_yamr(spark: SparkSession, path: str, has_subkey: bool = False) -> DataFrame:

@@ -224,6 +224,5 @@ def trim_queue_safe(
         partition_col=partition_col,
         partition=partition,
     )
-    # stage-and-swap: the trimmed frame READS the table it replaces
-    client._rewrite(client._fs(queue_path), trimmed)
+    client.write_table(queue_path, trimmed)
     return effective

@@ -89,6 +89,33 @@ def _resolve_source_schema(src: str, s2, client):
     return s2.table(src).schema
 
 
+def _expand(text: str, s2, client) -> str:
+    """The context-aware expansions that run before translation, in
+    order: table path functions (RANGE/CONCAT/EACH/LIKE/REGEXP/FILTER —
+    yql_yt_io_discovery.cpp:101, served by ``client``), MATCH_RECOGNIZE
+    (no single-SQL form: the DataFrame operator materializes each item
+    into a temp view of ``s2``, yql/match_recognize_text.py) and FLATTEN
+    COLUMNS (needs the source schema)."""
+    if re.search(r"(?i)\b(range|concat|each|like|regexp|filter)\s*\(\s*[`']//",
+                 text):
+        from ytsaurus_spark.yql.table_functions import expand_table_functions
+
+        text = expand_table_functions(text, client, s2)
+    if re.search(r"(?i)\bmatch_recognize\b", text):
+        from ytsaurus_spark.yql.match_recognize_text import (
+            expand_match_recognize,
+        )
+
+        text = expand_match_recognize(s2, text)
+    if re.search(r"(?i)\bflatten\s+columns\b", text):
+        from ytsaurus_spark.yql.table_functions import expand_flatten_columns
+
+        text = expand_flatten_columns(
+            text, lambda src: _resolve_source_schema(src, s2, client)
+        )
+    return text
+
+
 def yql_select(spark, text: str, sf_dir: str | None = None,
                star: bool = True, pragmas: bool = True,
                params: dict | None = None, client=None):
@@ -116,28 +143,7 @@ def yql_select(spark, text: str, sf_dir: str | None = None,
         exec_client = YtClient(root=client.root, spark=s2)
     else:
         exec_client = None
-    if re.search(r"(?i)\b(range|concat|each|like|regexp|filter)\s*\(\s*[`']//",
-                 text):
-        from ytsaurus_spark.yql.table_functions import expand_table_functions
-
-        text = expand_table_functions(text, exec_client, s2)
-    if re.search(r"(?i)\bmatch_recognize\b", text):
-        # FROM <src> MATCH_RECOGNIZE (...) has no single-SQL form: the
-        # DataFrame operator materializes each item into a temp view
-        # first (yql/match_recognize_text.py), then the statement
-        # translates normally.
-        from ytsaurus_spark.yql.match_recognize_text import (
-            expand_match_recognize,
-        )
-
-        text = expand_match_recognize(s2, text)
-    if re.search(r"(?i)\bflatten\s+columns\b", text):
-        from ytsaurus_spark.yql.table_functions import expand_flatten_columns
-
-        text = expand_flatten_columns(
-            text, lambda src: _resolve_source_schema(src, s2, None)
-        )
-    tq = translate_yql(text, params=params)
+    tq = translate_yql(_expand(text, s2, exec_client), params=params)
     if pragmas:
         apply_pragmas(s2, tq.pragmas)
     return s2.sql(tq.sql)
@@ -191,22 +197,7 @@ def yql_execute(spark, text: str, client=None, sf_dir: str | None = None,
     else:
         exec_client = None
 
-    # context-aware pre-translation expansions: table path functions
-    # (RANGE/CONCAT/EACH/LIKE/REGEXP — yql_yt_io_discovery.cpp:101) and
-    # FLATTEN COLUMNS (needs the source schema)
-    if re.search(r"(?i)\b(range|concat|each|like|regexp|filter)\s*\(\s*[`']//",
-                 text):
-        from ytsaurus_spark.yql.table_functions import expand_table_functions
-
-        text = expand_table_functions(text, exec_client, s2)
-    if re.search(r"(?i)\bflatten\s+columns\b", text):
-        from ytsaurus_spark.yql.table_functions import expand_flatten_columns
-
-        text = expand_flatten_columns(
-            text, lambda src: _resolve_source_schema(src, s2, exec_client)
-        )
-
-    parts = translate_yql_script(text, params=params)
+    parts = translate_yql_script(_expand(text, s2, exec_client), params=params)
     apply_pragmas(s2, parts[0].pragmas if parts else {})
 
     def register_client_paths(stmt):
@@ -275,19 +266,15 @@ def yql_execute(spark, text: str, client=None, sf_dir: str | None = None,
                     if name not in df.columns:
                         raise ValueError(
                             f"ALTER TABLE: no such column {name}")
+                    if name in (attrs.get("sorted_by") or []):
+                        # the table's attributes carry over the rewrite
+                        raise ValueError(
+                            f"ALTER TABLE: cannot drop key column {name}")
                     df = df.drop(name)
                     schema = [c for c in schema if c.get("name") != name]
-            # the rewrite reads the table it replaces: stage + swap
-            staging = stmt.target + ".__alter_staging"
-            if exec_client.exists(staging):
-                exec_client.remove(staging, recursive=True)
-            exec_client.write_table(staging, df, append=False)
-            exec_client.remove(stmt.target, recursive=True)
-            exec_client.move(staging, stmt.target)
-            new_attrs = dict(table_attributes(p))
+            exec_client.write_table(stmt.target, df, append=False)
             if schema:
-                new_attrs["schema"] = schema
-            _write_attrs(p, new_attrs)
+                _write_attrs(p, {**attrs, "schema": schema})
             last = None
             continue
         if stmt.kind == "drop":
